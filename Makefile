@@ -1,9 +1,11 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test parity-sf001 parity-sf01 bench
+.PHONY: test parity-sf001 parity-sf01 bench perf-ingest
 
+# The ROADMAP Tier-1 verify command, verbatim.
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # Local replica of the driver's correctness gate at the default test SF
 # (all oracled entries, order-independent).
@@ -18,3 +20,9 @@ parity-sf01:
 
 bench:
 	python bench.py
+
+# Terraform ingest benchmark at one seed: end-to-end metrics untraced, then
+# the per-layer split traced (see perfbench/run.py).
+perf-ingest:
+	python3 perfbench/run.py --workload tf_ingest --seed 7 --seconds 10 --trace 0
+	python3 perfbench/run.py --workload tf_ingest --seed 7 --seconds 10 --trace 1

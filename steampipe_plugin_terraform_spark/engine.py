@@ -5,17 +5,16 @@ executors, tested on local[N]):
 
 1. **Discovery** (driver): glob lists → concrete (path, kind) file rows
    (sources/discover.py — the tfConfigList analog).
-2. **Read** (executors): ``spark.read.format("binaryFile")`` over the
-   resolved list — works on any Hadoop FS (file:/, s3a:/, hdfs:/) and
-   bin-packs many small files per partition via
-   ``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes``, which is the
-   right scan shape for the small-file-heavy Terraform workload.
-3. **Parse** (executors, narrow): one ``mapInPandas`` stage turns each file
-   into wide rows for every table it feeds (tfcore/rows.py). One parse per
-   file total — vs the reference's parse-per-table-per-query with a global
-   mutex (utils.go:35-36,256-257; SURVEY §4) — and NO shuffle anywhere in
-   the pipeline: file → rows is embarrassingly parallel and scales linearly
-   with executor count.
+2. **Scan**: the discovered local list IS the scan, bin-packed by size into
+   at most ``defaultParallelism`` slices — nothing is listed twice. Only
+   remote ``://`` roots (globs only Hadoop can list) go through
+   ``spark.read.format("binaryFile")``.
+3. **Parse** (executors, narrow): one ``mapInPandas`` stage reads each local
+   file and turns every file into wide rows for every table it feeds
+   (tfcore/rows.py). One parse per file total — vs the reference's
+   parse-per-table-per-query with a global mutex (utils.go:35-36,256-257;
+   SURVEY §4) — and NO shuffle anywhere in the pipeline: file → rows is
+   embarrassingly parallel and scales linearly with executor count.
 4. **Tables**: each of the seven tables is a column projection over the
    cached wide DataFrame; Catalyst prunes columns per query, and a
    ``WHERE path = ...`` filter on any view prunes like the reference's
@@ -29,13 +28,14 @@ since our tables derive from one lineage).
 from __future__ import annotations
 
 import sys
+import uuid
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .sources.discover import discover_files
+from .sources.discover import discover_files, pack_by_size
 from .tfcore.rows import WIDE_COLUMNS, build_rows_for_file
 
 _LONG_COLS = {"count", "start_line", "end_line"}
@@ -108,7 +108,7 @@ def _normalize_path(uri: str) -> str:
 
 def _make_parse_fn(on_error: str, default_kind: str = "config"):
     """Arrow-batched parse stage: (path, content[, file_kind]) batches →
-    wide-row batches.
+    wide-row batches; a NULL ``content`` is a local file the task reads.
 
     Kind arrives as a COLUMN (set per source list before the read), never by
     matching path strings — executor-visible URIs (file:-scheme, expanded
@@ -124,8 +124,13 @@ def _make_parse_fn(on_error: str, default_kind: str = "config"):
             for uri, content, kind in zip(pdf["path"], pdf["content"], kinds):
                 path = _normalize_path(uri)
                 try:
+                    if content is None:
+                        with open(path, "rb") as fh:
+                            content = fh.read()
                     text = bytes(content).decode("utf-8", errors="replace")
                     rows.extend(build_rows_for_file(path, kind, text))
+                except FileNotFoundError:  # vanished since discovery (utils.go:87-90)
+                    continue
                 except Exception as e:  # parse/build failure
                     if on_error == "fail":
                         # name the file, like the reference's
@@ -262,25 +267,31 @@ class TerraformEngine:
 
     # -- core lineage --
 
-    def _files_df(self, files: list[tuple[str, str]] | None = None) -> DataFrame:
-        """One binaryFile read per kind, kind attached as a literal column —
-        robust for remote globs the reader expands itself."""
-        if files is None:
-            files = self.files
-        parts = []
+    def _files_df(self, files: list[tuple[str, str]]) -> DataFrame:
+        """(path, content, file_kind) rows for the parse stage. Local files
+        are a local relation (its row-count size estimate keeps joins
+        broadcastable) with NULL content for the parse task to read, ordered
+        so each slice Spark cuts it into is one size-packed bin. Remote
+        ``://`` roots are globs only Hadoop can list: binaryFile per kind."""
+        import pyarrow as pa
+
+        local = [(p, k) for p, k in files if "://" not in p]
+        n = min(len(local), self.spark.sparkContext.defaultParallelism)
+        rows = [f for b in pack_by_size(local, n, path=lambda f: f[0], even_counts=True) for f in b]
+        # cached plans match by content: a per-build id stops a re-read of
+        # changed files being served an older cached parse of the same paths
+        table = pa.table({"path": [p for p, _ in rows], "content": pa.nulls(len(rows), pa.binary()),
+                          "file_kind": [k for _, k in rows], "build": [uuid.uuid4().hex] * len(rows)})
+        out = self.spark.createDataFrame(table, "path string, content binary, file_kind string, build string")
+        out = out.drop("build")
         for kind in ("config", "plan", "state"):
-            paths = [p for p, k in files if k == kind]
+            paths = [p for p, k in files if k == kind and "://" in p]
             if paths:
-                parts.append(
+                out = out.unionByName(
                     self.spark.read.format("binaryFile")
                     .load(paths)
                     .select("path", "content", F.lit(kind).alias("file_kind"))
                 )
-        if not parts:
-            return self.spark.createDataFrame([], "path string, content binary, file_kind string")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         return out
 
     def _parse(self, files_df: DataFrame) -> DataFrame:
@@ -289,7 +300,7 @@ class TerraformEngine:
     def wide(self) -> DataFrame:
         """The canonical wide DataFrame all seven tables derive from."""
         if self._wide is None:
-            df = self._parse(self._files_df())
+            df = self._parse(self._files_df(self.files))
             if self._cache:
                 df = df.persist()
             self._wide = df
@@ -305,11 +316,10 @@ class TerraformEngine:
         given and a cached wide frame exists, ONLY those files re-parse:
         surviving rows are kept from cache, so a one-file edit in a
         million-file corpus costs one parse + a cheap cached filter, not a
-        full re-scan. Changed-file content is read on the driver (a watch
-        tick touches few files by definition; the bytes never exceed the
-        changed set) specifically to avoid ``refreshByPath``, which would
-        drop the cached wide frame we are reusing. A changed REMOTE object,
-        or ``changed_paths=None``, falls back to a full lazy rebuild.
+        full re-scan. Changed files are read inside the parse task, as on
+        ingest, so no ``refreshByPath`` is needed (it would drop the cached
+        wide frame we are reusing). A changed REMOTE object, or
+        ``changed_paths=None``, falls back to a full lazy rebuild.
 
         Registered temp views are re-registered so ``spark.sql`` callers see
         the refreshed tables without re-calling ``register_views``.
@@ -324,10 +334,10 @@ class TerraformEngine:
             from .sources.discover import apply_s3a_auth
 
             apply_s3a_auth(self.spark, auth)
-        # Spark's shared FileStatusCache pins each file's LENGTH from its
-        # first listing (no TTL by default), so a re-read of a grown file
-        # would silently truncate to the stale length. Drop the listing
-        # cache (metadata only — persisted DataFrames are untouched).
+        # binaryFile (remote roots) lists through Spark's FileStatusCache,
+        # which pins each file's LENGTH from its first listing, so a re-read
+        # of a grown object would truncate. Drop the listing cache
+        # (metadata only — persisted DataFrames are untouched).
         try:
             # the Scala companion object has no static forwarder for this
             # method, so it must be addressed explicitly via $.MODULE$
@@ -359,24 +369,9 @@ class TerraformEngine:
         else:
             keep = old.filter(~F.col("path").isin(list(changed)))
             reparse = [(p, k) for p, k in self.files if p in changed]
-            if reparse:
-                rows = []
-                for p, k in reparse:
-                    try:
-                        with open(p, "rb") as f:
-                            rows.append((p, bytearray(f.read()), k))
-                    except OSError:
-                        # vanished between discovery and read: its old rows
-                        # are already filtered out of `keep`, so treating it
-                        # as deleted is exactly right; the next poll sees a
-                        # stable snapshot
-                        continue
-                fresh = self.spark.createDataFrame(
-                    rows, schema="path string, content binary, file_kind string"
-                )
-                df = keep.unionByName(self._parse(fresh))
-            else:
-                df = keep
+            # a changed file that vanished since discovery parses to zero
+            # rows, which is right: its old rows are already out of `keep`
+            df = keep.unionByName(self._parse(self._files_df(reparse))) if reparse else keep
             df = df.persist()
             df.count()  # materialize from the old cache BEFORE dropping it
             self._wide = df

@@ -60,15 +60,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # The terraform engine passes each discovered file as its own root
-        # path to the binaryFile reader; above this many roots Spark
-        # launches a one-task-per-path listing JOB (observed in the r14
-        # bench tail as 500-task stages per TerraformEngine construction)
-        # whose scheduling overhead dwarfs a driver-side stat of local
-        # files. 1024 keeps ≤1k explicit files on the driver; corpora
-        # beyond that should arrive as directory globs (few roots), where
-        # distributed discovery engages exactly as before.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # local[N] runs all executor threads inside the driver JVM, so the
         # driver heap IS the cluster memory: undersizing it turns execution
         # memory pressure into GC churn (measured: the full bench suite is

@@ -281,6 +281,28 @@ def fetch_remote(url: str) -> tuple[str, str | None]:
     return dest, sub
 
 
+def pack_by_size(files: list, n: int, path=lambda f: f, even_counts: bool = False) -> list[list]:
+    """Largest-first greedy bin-packing of local files into at most ``n``
+    non-empty bins, each file into the lightest, so one large file (a
+    ``.tfstate`` parses ~10× slower than a ``.tf``) cannot straggle a bin of
+    many small ones. ``path`` maps an item to its file (a vanished one weighs
+    0). ``even_counts`` sizes bin ``i`` as the ``i``-th of the contiguous
+    equal-count slices Spark cuts a local collection into."""
+    sized = sorted(
+        ((os.path.getsize(path(f)) if os.path.exists(path(f)) else 0, f) for f in files),
+        reverse=True,
+    )
+    n = max(n, 1)
+    room = [len(files) * (i + 1) // n - len(files) * i // n if even_counts else len(files) for i in range(n)]
+    bins: list[list] = [[] for _ in range(n)]
+    weight = [0] * n
+    for size, f in sized:
+        i = min((j for j in range(n) if len(bins[j]) < room[j]), key=weight.__getitem__)
+        bins[i].append(f)
+        weight[i] += size + 1  # +1 so many zero-byte files still spread
+    return [b for b in bins if b]
+
+
 def discover_files(
     config_paths: list[str] | tuple = (),
     plan_paths: list[str] | tuple = (),

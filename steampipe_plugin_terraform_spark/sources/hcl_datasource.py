@@ -78,7 +78,7 @@ class _HclReader(DataSourceReader):
         self._num_partitions = int(options.get("numpartitions", 0) or 0)
 
     def partitions(self):
-        from .discover import expand_glob
+        from .discover import expand_glob, pack_by_size
 
         files: list[str] = []
         for pat in self._patterns:
@@ -88,18 +88,7 @@ class _HclReader(DataSourceReader):
             # missing-path tolerance: empty scan, no error (utils.go:87-90)
             return [_FilesPartition([])]
         n = self._num_partitions or min(len(files), os.cpu_count() or 8)
-        n = max(n, 1)
-        sized = sorted(
-            ((os.path.getsize(f) if os.path.exists(f) else 0, f) for f in files),
-            reverse=True,
-        )
-        bins: list[list[str]] = [[] for _ in range(n)]
-        weight = [0] * n
-        for size, f in sized:
-            i = weight.index(min(weight))
-            bins[i].append(f)
-            weight[i] += size + 1  # +1 so many zero-byte files still spread
-        return [_FilesPartition(b) for b in bins if b]
+        return [_FilesPartition(b) for b in pack_by_size(files, n)]
 
     def read(self, partition: _FilesPartition):
         from ..functions.jsonenc import canonical_json

@@ -184,25 +184,21 @@ def test_watcher_snapshot_survives_failed_refresh(spark, tmp_path):
 
 
 def test_refresh_tolerates_vanished_file(spark, tmp_path):
-    # a file deleted between discovery and the driver-side read must be
+    # a file deleted between discovery and the in-task read must be
     # treated as deleted, not crash the refresh
-    import os
     from unittest import mock
+
+    from steampipe_plugin_terraform_spark import engine as engine_mod
 
     (tmp_path / "a.tf").write_text('resource "r" "x" { n = 1 }\n')
     (tmp_path / "b.tf").write_text('resource "r" "y" { n = 1 }\n')
     eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
     assert eng.table("terraform_resource").count() == 2
-    (tmp_path / "b.tf").write_text('resource "r" "y" { n = 2 }\n')
+    listed = engine_mod.discover_files(*eng._source_lists)
+    (tmp_path / "b.tf").unlink()
 
-    real_open = open
-
-    def flaky_open(path, *a, **kw):
-        if str(path).endswith("b.tf"):
-            raise FileNotFoundError(path)
-        return real_open(path, *a, **kw)
-
-    with mock.patch("builtins.open", side_effect=flaky_open):
+    # discovery still lists b.tf; the parse task finds it gone
+    with mock.patch.object(engine_mod, "discover_files", return_value=listed):
         eng.refresh([str(tmp_path / "b.tf")])
     # b.tf behaved as deleted: only a.tf's row remains, no exception
     assert eng.table("terraform_resource").count() == 1

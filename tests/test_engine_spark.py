@@ -1,5 +1,6 @@
-"""End-to-end engine tests: discovery → binaryFile read → mapInPandas parse
-→ seven views → documented example queries via spark.sql (SURVEY.md §2.10).
+"""End-to-end engine tests: discovery → mapInPandas parse (local files are
+read inside the parse task; binaryFile lists and reads only remote URLs) →
+seven views → documented example queries via spark.sql (SURVEY.md §2.10).
 """
 
 import json
@@ -113,6 +114,58 @@ def test_path_qual_cold_engine(spark, fixtures_dir):
 def test_missing_path_tolerated(spark):
     eng = TerraformEngine(spark, config_paths=["/does/not/exist/*.tf"], cache=False)
     assert eng.table("terraform_resource").count() == 0
+
+
+def test_on_error_fail_names_file(spark, tmp_path):
+    (tmp_path / "bad.tf").write_text('resource "x" {{{ not hcl')
+    (tmp_path / "good.tf").write_text('output "o" { value = 1 }\n')
+    eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")], cache=False)
+    with pytest.raises(Exception, match="failed to parse file .*bad.tf"):
+        eng.table("terraform_output").collect()
+
+
+def test_on_error_skip_keeps_good_files(spark, tmp_path):
+    (tmp_path / "bad.tf").write_text('resource "x" {{{ not hcl')
+    (tmp_path / "good.tf").write_text('output "o" { value = 1 }\n')
+    eng = TerraformEngine(
+        spark, config_paths=[str(tmp_path / "*.tf")], on_error="skip", cache=False
+    )
+    rows = eng.table("terraform_output").collect()
+    assert [(r["name"], r["path"]) for r in rows] == [("o", str(tmp_path / "good.tf"))]
+
+
+def test_file_vanished_before_ingest_yields_zero_rows(spark, tmp_path):
+    # discovered, then deleted before the parse task reads it: zero rows and
+    # no error, like a missing glob path (utils.go:87-90)
+    (tmp_path / "a.tf").write_text('resource "r" "x" { n = 1 }\n')
+    (tmp_path / "b.tf").write_text('resource "r" "y" { n = 1 }\n')
+    eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
+    assert len(eng.files) == 2
+    (tmp_path / "b.tf").unlink()
+    rows = eng.table("terraform_resource").collect()
+    assert [r["path"] for r in rows] == [str(tmp_path / "a.tf")]
+    eng.unpersist()
+
+
+def test_local_ingest_starts_no_listing_job(spark, tmp_path):
+    # a binaryFile read of more explicit files than
+    # spark.sql.sources.parallelPartitionDiscovery.threshold (1,030 exceeds
+    # any value up to 1,024) launches a one-task-per-path listing job; the
+    # discovered list is the scan instead, so building the lineage starts
+    # no job at all
+    for i in range(1030):
+        (tmp_path / f"f{i}.tf").write_text(f'locals {{ v{i} = {i} }}\n')
+    sc = spark.sparkContext
+    sc.setJobGroup("tf-no-listing", "engine construction and wide()")
+    try:
+        eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
+        wide = eng.wide()
+        assert sc.statusTracker().getJobIdsForGroup("tf-no-listing") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert wide.filter("tf_table = 'terraform_local'").count() == 1030
+    assert wide.rdd.getNumPartitions() <= sc.defaultParallelism
+    eng.unpersist()
 
 
 def test_plan_routing_matrix(spark, engine, fixtures_dir):
