@@ -1,6 +1,6 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test parity-sf001 parity-sf01 bench perf-ingest
+.PHONY: test parity-sf001 parity-sf01 bench perf-ingest perf-query
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
@@ -26,3 +26,9 @@ bench:
 perf-ingest:
 	python3 perfbench/run.py --workload tf_ingest --seed 7 --seconds 10 --trace 0
 	python3 perfbench/run.py --workload tf_ingest --seed 7 --seconds 10 --trace 1
+
+# Terraform query benchmark at one seed, the same way: untraced, then traced
+# (per-query spark.jobs/stages/tasks, engine.wide_partitions, watch.*).
+perf-query:
+	python3 perfbench/run.py --workload tf_query --seed 7 --seconds 10 --trace 0
+	python3 perfbench/run.py --workload tf_query --seed 7 --seconds 10 --trace 1

@@ -66,34 +66,10 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# (appId, sf_dir, name) → prepared scan DataFrame (a LOGICAL PLAN object:
-# resolved file listing + parquet footer schema + the _par_floor decision).
-# NO row data is cached — every execution still reads the parquet files.
-# This is the session-scoped metadata cache the optimization guide (§6)
-# prescribes for repeated scans of the same table (Spark's own
-# filesourcePartitionFileCacheSize covers only the listing; the measured
-# per-call cost here was ~80-150 ms of spark.read.parquet footer/analysis
-# plus ~30-70 ms of .rdd plan-to-RDD conversion in _par_floor — a fixed
-# driver tax EVERY catalog entry paid once per table per invocation).
+# (appId, sf_dir, name) → prepared scan DataFrame: a LOGICAL PLAN, never row
+# data. It saves the ~80-150 ms of parquet footer/analysis every entry paid
+# per table per call (the optimization guide's §6 session metadata cache).
 _TABLE_CACHE: dict = {}
-
-# r15 measurement (OPTIMIZATION_r15.md): the blanket round-robin spread
-# made CHEAP-per-row queries slower, not faster — the exchange serializes
-# the full wide rows from the single scan task (plus the sort-before-
-# repartition pass) only for the first real shuffle (join/groupBy/window)
-# to re-distribute them again (q1 noop-timed 0.838 s with the spread vs
-# 0.221 s scanning 1 partition; partial aggregation parallelizes after
-# the FIRST exchange either way). A documents/embeddings-only variant
-# was measured next and ALSO lost to operator-level spreads (batteries
-# in OPTIMIZATION_r15.md: token_stats 0.47×, bm25 0.53×, media 0.38–0.66×
-# without the table-level spread) — the table reader cannot know whether
-# heavy per-row work precedes the first shuffle, so the spread now lives
-# ONLY where that knowledge is: the gated NARROW-projection repartition
-# inside the per-row-heavy operators (dedup._spread, winnowing,
-# repetition, redact_pii, quantize_int8, multimodal.documents_as_binary).
-# The set is kept (empty) so a future corpus with a genuinely
-# always-heavy table has the hook.
-_SPREAD_TABLES: frozenset = frozenset()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -121,27 +97,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if name in _SPREAD_TABLES:
-        df = _par_floor(df)
     _TABLE_CACHE[key] = df
     return df
-
-
-def _par_floor(df: DataFrame) -> DataFrame:
-    """Gated scan-parallelism floor for toy inputs.
-
-    The sf* test tables are single-row-group parquet files, so the scan is
-    ONE split and every per-row expression (regexp, md5, shingle explode)
-    serializes on one core regardless of cluster size. At real scale the
-    source arrives in hundreds of splits and the gate disqualifies the
-    shuffle — a round-robin repartition there would be a gratuitous full
-    re-distribution (same design as ``operators.dedup._spread``). Column
-    pruning and filter pushdown still reach the scan below the exchange.
-    """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(par // 2, 2):
-        return df
-    return df.repartition(par)
 
 
 # ---------------------------------------------------------------------------
@@ -11963,11 +11920,10 @@ def tf_variable_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, corpus digest) -> persisted per-doc NLL score frame — the
-# perplexity-buckets entry reads it twice (sketch feed, then bucket
-# assignment); persisting makes both passes share ONE execution of the
-# bigram-LM chain, in-session (the production analog: checkpoint the
-# score table between the passes). test_entry_caches pins the reuse.
+# (appId, corpus digest) -> per-doc NLL score frame, read twice by the
+# perplexity-buckets entry (sketch feed, then bucket assignment): an eager
+# localCheckpoint (never .persist(), see _KMEANS_CACHE) runs the bigram-LM
+# chain once per session. test_entry_caches pins the reuse.
 _PPL_SCORE_CACHE: dict = {}
 
 
@@ -11980,7 +11936,7 @@ def _ppl_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "CAST(floor(-mean_logprob * 10000 + 0.5) AS BIGINT)"
             ).alias("nll_e4"),
-        ).persist()
+        ).localCheckpoint(eager=True)
     return _PPL_SCORE_CACHE[key]
 
 
@@ -12032,7 +11988,7 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the score pass is docs_bigram_logprob's vocab-sized joins;
     the sketch feed and the assignment both read it, so the entry
-    PERSISTS the per-doc score frame per (session, corpus) — one
+    CHECKPOINTS the per-doc score frame per (session, corpus) — one
     execution of the LM chain serves both passes (the production
     analog: checkpoint the score table between them); everything after
     is sketch-sized — the bounded-error escape from rank-tertiles'
@@ -16726,8 +16682,7 @@ def docs_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the empty-text NULL guard on n_chars.
 
     Scale: a pure per-row projection — no join, no aggregation, no
-    window; the only exchange in the plan is the gated scan-parallelism
-    repartition (`_par_floor`), and the classifier runs entirely inside
+    window and no exchange; the classifier runs entirely inside
     whole-stage codegen."""
     docs = _t(spark, sf_dir, "documents")
     return _code_flags(docs).select(

@@ -5,10 +5,10 @@ executors, tested on local[N]):
 
 1. **Discovery** (driver): glob lists → concrete (path, kind) file rows
    (sources/discover.py — the tfConfigList analog).
-2. **Scan**: the discovered local list IS the scan, bin-packed by size into
-   at most ``defaultParallelism`` slices — nothing is listed twice. Only
-   remote ``://`` roots (globs only Hadoop can list) go through
-   ``spark.read.format("binaryFile")``.
+2. **Scan**: the discovered local list IS the scan — nothing is listed
+   twice — bin-packed by size into ``min(files, defaultParallelism, bytes
+   // _SLICE_BYTES)`` slices (≥ 1). Only remote ``://`` roots (globs only
+   Hadoop can list) go through ``spark.read.format("binaryFile")``.
 3. **Parse** (executors, narrow): one ``mapInPandas`` stage reads each local
    file and turns every file into wide rows for every table it feeds
    (tfcore/rows.py). One parse per file total — vs the reference's
@@ -18,7 +18,7 @@ executors, tested on local[N]):
 4. **Tables**: each of the seven tables is a column projection over the
    cached wide DataFrame; Catalyst prunes columns per query, and a
    ``WHERE path = ...`` filter on any view prunes like the reference's
-   pushed qual.
+   pushed qual. A small frame is one partition: each query, one task.
 
 The wide frame is persisted on first materialization so repeat queries skip
 the parse (the SDK-cache analog, go.mod:23,35 — but correct by construction
@@ -27,6 +27,7 @@ since our tables derive from one lineage).
 
 from __future__ import annotations
 
+import os
 import sys
 import uuid
 from typing import Iterator
@@ -35,8 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .sources.discover import discover_files, pack_by_size
+from .sources.discover import discover_files, file_size, pack_by_size
 from .tfcore.rows import WIDE_COLUMNS, build_rows_for_file
+
+# local bytes per parse slice: under ~0.2 s of parse (~0.9 µs/byte), less
+# than a cold Python worker plus a shuffle on every later query
+_SLICE_BYTES = 256 * 1024
 
 _LONG_COLS = {"count", "start_line", "end_line"}
 _BOOL_COLS = {"sensitive"}
@@ -171,6 +176,7 @@ class TerraformEngine:
         self.on_error = on_error
         self._cache = cache
         self._wide: DataFrame | None = None
+        self._slices = 1  # local parse slices of the last full build
         self._views_json_as: str | None = None
         self.watcher = None
         self._watch_thread = None
@@ -267,23 +273,25 @@ class TerraformEngine:
 
     # -- core lineage --
 
-    def _files_df(self, files: list[tuple[str, str]]) -> DataFrame:
-        """(path, content, file_kind) rows for the parse stage. Local files
-        are a local relation (its row-count size estimate keeps joins
-        broadcastable) with NULL content for the parse task to read, ordered
-        so each slice Spark cuts it into is one size-packed bin. Remote
-        ``://`` roots are globs only Hadoop can list: binaryFile per kind."""
+    def _files_df(self, files: list[tuple[str, str]]) -> tuple[DataFrame, int]:
+        """(path, content, file_kind) rows for the parse stage, and the local
+        slice count. Local files are a local relation (its row-count size
+        estimate keeps joins broadcastable) with NULL content for the parse
+        task to read, coalesced from the slices Spark cuts into ``min(files,
+        defaultParallelism, bytes // _SLICE_BYTES)`` (≥ 1) size-packed ones.
+        Remote ``://`` roots are globs only Hadoop can list: binaryFile."""
         import pyarrow as pa
 
-        local = [(p, k) for p, k in files if "://" not in p]
-        n = min(len(local), self.spark.sparkContext.defaultParallelism)
-        rows = [f for b in pack_by_size(local, n, path=lambda f: f[0], even_counts=True) for f in b]
+        local = [(p, k, file_size(p)) for p, k in files if "://" not in p]
+        cut = min(len(local), self.spark.sparkContext.defaultParallelism)
+        n = max(1, min(cut, sum(s for _, _, s in local) // _SLICE_BYTES))
+        rows = [f for b in pack_by_size(local, n, size=lambda f: f[2], slices=cut) for f in b]
         # cached plans match by content: a per-build id stops a re-read of
         # changed files being served an older cached parse of the same paths
-        table = pa.table({"path": [p for p, _ in rows], "content": pa.nulls(len(rows), pa.binary()),
-                          "file_kind": [k for _, k in rows], "build": [uuid.uuid4().hex] * len(rows)})
+        table = pa.table({"path": [p for p, _, _ in rows], "content": pa.nulls(len(rows), pa.binary()),
+                          "file_kind": [k for _, k, _ in rows], "build": [uuid.uuid4().hex] * len(rows)})
         out = self.spark.createDataFrame(table, "path string, content binary, file_kind string, build string")
-        out = out.drop("build")
+        out = out.drop("build").coalesce(n)
         for kind in ("config", "plan", "state"):
             paths = [p for p, k in files if k == kind and "://" in p]
             if paths:
@@ -292,7 +300,7 @@ class TerraformEngine:
                     .load(paths)
                     .select("path", "content", F.lit(kind).alias("file_kind"))
                 )
-        return out
+        return out, n
 
     def _parse(self, files_df: DataFrame) -> DataFrame:
         return files_df.mapInPandas(_make_parse_fn(self.on_error), schema=WIDE_SCHEMA)
@@ -300,7 +308,8 @@ class TerraformEngine:
     def wide(self) -> DataFrame:
         """The canonical wide DataFrame all seven tables derive from."""
         if self._wide is None:
-            df = self._parse(self._files_df(self.files))
+            files_df, self._slices = self._files_df(self.files)
+            df = self._parse(files_df)
             if self._cache:
                 df = df.persist()
             self._wide = df
@@ -324,8 +333,6 @@ class TerraformEngine:
         Registered temp views are re-registered so ``spark.sql`` callers see
         the refreshed tables without re-calling ``register_views``.
         """
-        import os
-
         old = self._wide
         cfg, plan, state, qual = self._source_lists
         auth: dict[str, str] = {}
@@ -371,8 +378,8 @@ class TerraformEngine:
             reparse = [(p, k) for p, k in self.files if p in changed]
             # a changed file that vanished since discovery parses to zero
             # rows, which is right: its old rows are already out of `keep`
-            df = keep.unionByName(self._parse(self._files_df(reparse))) if reparse else keep
-            df = df.persist()
+            df = keep.unionByName(self._parse(self._files_df(reparse)[0])) if reparse else keep
+            df = df.coalesce(self._slices).persist()  # bounded: the build's slices
             df.count()  # materialize from the old cache BEFORE dropping it
             self._wide = df
             old.unpersist()
@@ -404,8 +411,6 @@ class TerraformEngine:
             if "://" not in path:
                 # same normalization as discovery, so relative/~ quals match
                 # the absolute form stored in the path column
-                import os
-
                 path = os.path.abspath(os.path.expanduser(path))
             df = df.filter(F.col("path") == path)
         return df

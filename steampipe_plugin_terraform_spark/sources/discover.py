@@ -281,25 +281,31 @@ def fetch_remote(url: str) -> tuple[str, str | None]:
     return dest, sub
 
 
-def pack_by_size(files: list, n: int, path=lambda f: f, even_counts: bool = False) -> list[list]:
+def file_size(path: str) -> int:
+    """Size in bytes of a local file; one that vanished weighs 0."""
+    try:
+        return os.path.getsize(path)
+    except OSError:
+        return 0
+
+
+def pack_by_size(files: list, n: int, size=file_size, slices: int = 0) -> list[list]:
     """Largest-first greedy bin-packing of local files into at most ``n``
     non-empty bins, each file into the lightest, so one large file (a
     ``.tfstate`` parses ~10× slower than a ``.tf``) cannot straggle a bin of
-    many small ones. ``path`` maps an item to its file (a vanished one weighs
-    0). ``even_counts`` sizes bin ``i`` as the ``i``-th of the contiguous
-    equal-count slices Spark cuts a local collection into."""
-    sized = sorted(
-        ((os.path.getsize(path(f)) if os.path.exists(path(f)) else 0, f) for f in files),
-        reverse=True,
-    )
+    many small ones. ``size`` maps an item to its bytes. With ``slices``, the
+    count of equal-count slices Spark cuts a local collection into, bin ``i``
+    holds the ``i``-th contiguous run of them that ``coalesce(n)`` makes."""
+    sized = sorted(((size(f), f) for f in files), reverse=True)
     n = max(n, 1)
-    room = [len(files) * (i + 1) // n - len(files) * i // n if even_counts else len(files) for i in range(n)]
+    edge = [len(files) * (i * slices // n) // slices if slices else i * len(files) for i in range(n + 1)]
+    room = [edge[i + 1] - edge[i] for i in range(n)]
     bins: list[list] = [[] for _ in range(n)]
     weight = [0] * n
-    for size, f in sized:
+    for nbytes, f in sized:
         i = min((j for j in range(n) if len(bins[j]) < room[j]), key=weight.__getitem__)
         bins[i].append(f)
-        weight[i] += size + 1  # +1 so many zero-byte files still spread
+        weight[i] += nbytes + 1  # +1 so many zero-byte files still spread
     return [b for b in bins if b]
 
 

@@ -197,6 +197,43 @@ def test_no_shuffle_in_table_scan(engine):
     assert "Exchange" not in plan
 
 
+def test_small_corpus_served_as_one_shuffle_free_task(spark, engine):
+    # the fixtures are under one parse slice: the cached frame is one
+    # partition, so an aggregate plans no Exchange and runs as one task
+    engine.wide().count()  # only the query, not the cache build, is counted
+    df = spark.sql("SELECT type, count(*) FROM terraform_resource GROUP BY type")
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    sc.setJobGroup("tf-small-serving", "one aggregate over a view")
+    df.collect()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = tracker.getJobIdsForGroup("tf-small-serving")
+    tasks = sum(tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds)
+    assert (len(jobs), tasks) == (1, 1)
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_large_corpus_keeps_parallel_slices_and_refresh_stays_bounded(spark, tmp_path):
+    from steampipe_plugin_terraform_spark.engine import _SLICE_BYTES
+
+    def write(name: str, n_locals: int, size: int) -> str:
+        body = "locals {\n" + "".join(f"  {name}_{j} = {j}\n" for j in range(n_locals)) + "}\n"
+        (tmp_path / f"{name}.tf").write_text(body + "#" * (size - len(body) - 1) + "\n")
+        return str(tmp_path / f"{name}.tf")
+
+    par = spark.sparkContext.defaultParallelism
+    paths = [write(f"f{i}", 1, _SLICE_BYTES // 2 + 1024) for i in range(2 * par)]  # > par slices
+    eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
+    assert eng.wide().rdd.getNumPartitions() == par
+    eng.refresh(changed_paths=[write("f0", 2, 4096)])  # modify
+    eng.refresh(changed_paths=[write("new", 1, 4096)])  # add
+    (tmp_path / "f1.tf").unlink()
+    eng.refresh(changed_paths=[paths[1]])  # delete
+    assert eng.wide().rdd.getNumPartitions() == par
+    counts = dict(eng.table("terraform_local").groupBy("path").count().collect())
+    assert counts == {**{p: 1 for p in paths[2:]}, paths[0]: 2, str(tmp_path / "new.tf"): 1}
+    eng.unpersist()
+
+
 def test_in_list_filter(spark, engine):
     # docs/tables/terraform_resource.md:239 — type in (…)
     rows = spark.sql(

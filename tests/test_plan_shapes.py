@@ -24,10 +24,10 @@ def _plan_df(df) -> str:
 
 @pytest.mark.parametrize("name", ["docs_redact_pii", "emb_quantize_int8", "media_frame_sample", "media_metadata"])
 def test_narrow_ops_have_no_exchange(spark, name):
-    # pure per-row transforms: any KEY shuffle is a regression. The single
-    # round-robin exchange from catalog._par_floor is permitted — the sf*
-    # fixtures are single-row-group files, and the floor is what gives the
-    # per-row work cluster parallelism there (gated off for real inputs).
+    # pure per-row transforms: any KEY shuffle is a regression. An
+    # operator's gated round-robin spread is permitted — it gives per-row
+    # work parallelism on the single-row-group sf* fixtures (gated off for
+    # real inputs).
     assert "Exchange hashpartitioning" not in _plan_df(QUERIES[name](spark, SF))
 
 
@@ -279,8 +279,7 @@ def test_anomaly_single_events_scan(spark):
 
 def test_rp_reduce_stays_narrow(spark):
     """Random projection is one Arrow-batched matmul against a broadcast
-    plane matrix: no key shuffle anywhere (only the gated toy-input
-    round-robin floor from catalog._par_floor is permitted)."""
+    plane matrix: no key shuffle anywhere."""
     plan = _plan(spark, "emb_rp_reduce")
     assert "Exchange hashpartitioning" not in plan
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
@@ -572,8 +571,7 @@ def test_bm25_topk_take_ordered_and_posting_filter(spark):
 
 
 def test_chunk_overlap_stays_narrow(spark):
-    # RAG chunking is pure per-row fan-out: no key shuffle anywhere (the
-    # round-robin floor from catalog._par_floor is permitted on toy input)
+    # RAG chunking is pure per-row fan-out: no key shuffle anywhere
     assert "Exchange hashpartitioning" not in _plan(spark, "docs_chunk_overlap")
     from steampipe_plugin_terraform_spark.operators import text
 
@@ -2017,8 +2015,7 @@ def test_sign_bit_balance_partial_agg_64_keys(spark):
 
 def test_code_detect_pure_projection(spark):
     # the classifier is a per-row projection: no aggregate, no window,
-    # no explode, no join — everything inside whole-stage codegen; the
-    # only permitted exchange is the gated _par_floor round-robin
+    # no explode, no join — everything inside whole-stage codegen
     from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
 
     plan = _plan_df(STAGED_QUERIES["docs_code_detect"](spark, SF))
@@ -2126,9 +2123,8 @@ def test_code_mix_two_spine_sized_exchanges(spark):
 
 def test_ari_readability_pure_projection(spark):
     # the docs_code_detect plan shape: a per-row whole-stage-codegen
-    # projection — no aggregate, no window, no Python; the only
-    # permitted exchange is the gated _par_floor round-robin; column
-    # pruning reaches the scan (doc_id + text only)
+    # projection — no aggregate, no window, no Python; column pruning
+    # reaches the scan (doc_id + text only)
     from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
 
     plan = _plan_df(STAGED_QUERIES["docs_ari_readability"](spark, SF))
