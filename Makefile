@@ -1,6 +1,6 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test parity-sf001 parity-sf01 bench perf-ingest perf-query
+.PHONY: test parity-sf001 parity-sf01 bench perf-ingest perf-query perf-catalog
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
@@ -32,3 +32,9 @@ perf-ingest:
 perf-query:
 	python3 perfbench/run.py --workload tf_query --seed 7 --seconds 10 --trace 0
 	python3 perfbench/run.py --workload tf_query --seed 7 --seconds 10 --trace 1
+
+# Catalog benchmark at one seed, the same way: untraced, then traced
+# (per-entry catalog.*_s, operators.*_s and spark.jobs/stages/tasks per pass).
+perf-catalog:
+	python3 perfbench/run.py --workload catalog_mix --seed 7 --seconds 10 --trace 0
+	python3 perfbench/run.py --workload catalog_mix --seed 7 --seconds 10 --trace 1

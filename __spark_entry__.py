@@ -39,24 +39,54 @@ def entry(spark: SparkSession) -> DataFrame:
 # tests/test_oracle_parity.py (all oracled entries) at sf0.001, and by
 # the sf0.01 sweep (`make parity-sf001 parity-sf01`).
 #
-# Round-16 window (executes the r15 verdict's pinned rotation — the
-# red test_horizon_holds tripwire after CORRECTNESS_r15.json landed):
-# positions 1-32 are the 32 forced r11 leftovers (pinned in
-# docs/OPERATORS.md since r15, named by the tripwire; several of them —
-# funnel, sliding_distinct, open_interval_sweep — were ALSO restructured
-# this round, so rules 1 and the forcing coincide); positions 33-47 are
-# rule 1 — every declared entry whose Spark-side computation was
-# restructured by this optimization round and not already forced (the
-# minhash-posting-checkpoint consumers, the basket/recall/stats
-# restructures, the drain whose state partitioning changed); positions
-# 48-50 are the 3 oldest r12 rows (rule 3; no promotions this round, so
-# rule 2 is vacuous). Catalog 232 → horizon stays ceil(232/50) = 5
-# rounds. After the window: the remaining r12 rows (due r17 — their
-# last green row 12 sits exactly on this round's floor), then r13-,
-# r14-green, and the r15 window rows (newest last).
+# Round-17 window: rules 1 and 2 are vacuous (no entry changed or added,
+# none never checked), so rule 3 fills it. Positions 1-39 are the 39
+# entries whose last green driver row is r12 (the upcoming round's floor
+# is r13), oldest first, ties by name; positions 40-50 and everything
+# after the window keep their previous relative order.
 _VALIDATE_FIRST = [
-    # -- r16 window: the 32 forced r11 leftovers (pinned in
-    # docs/OPERATORS.md since r15) --
+    # -- r17 window: rule 3 — the 39 entries whose last green driver
+    # row is r12, oldest first, ties by name --
+    "docs_bigram_logprob",
+    "docs_bpe_merge_pairs",
+    "docs_chunk_overlap",
+    "docs_k_anonymity",
+    "docs_lang_confusion",
+    "docs_novelty",
+    "emb_dim_stats",
+    "emb_intra_class_outliers",
+    "emb_mmr_rerank",
+    "emb_nearest_centroid_label",
+    "media_ahash_pairs",
+    "q4_priority_late_ship",
+    "q6_forecast_revenue",
+    "q8_market_share",
+    "q_approx_distinct",
+    "q_customer_activity_reconciliation",
+    "q_customer_gini",
+    "q_customer_rfm",
+    "q_events_ab_significance",
+    "q_events_autocorr24",
+    "q_events_cep_pattern",
+    "q_events_duplicate_payments",
+    "q_events_lateness_profile",
+    "q_events_moving_avg",
+    "q_events_seasonal_anomaly",
+    "q_events_top_paths",
+    "q_fulfillment_latency",
+    "q_join_size_cms_estimate",
+    "q_nation_share_of_region",
+    "q_ntile_acctbal_deciles",
+    "q_orders_checksum",
+    "q_orders_cohort_ltv",
+    "q_orders_equidepth_histogram",
+    "q_orders_interval_merge",
+    "stream_countmin_sketch",
+    "stream_foreachbatch_sink",
+    "stream_hopping_counts",
+    "stream_hourly_append_closed",
+    "stream_hourly_topk_types",
+    # -- r17 window: fill, in the previous order --
     "q_customer_skyline",
     "q_customer_supplier_pagerank",
     "q_events_anomaly",
@@ -68,6 +98,7 @@ _VALIDATE_FIRST = [
     "q_events_mad_outliers",
     "q_events_ohlc",
     "q_events_retention_cohorts",
+    # ---- 50-entry window boundary ----
     "q_events_sliding_distinct_users",
     "q_events_theil_sen",
     "q_events_time_weighted_value",
@@ -89,11 +120,6 @@ _VALIDATE_FIRST = [
     "tf_resource_reference_graph",
     "tf_sensitive_output_audit",
     "tf_tags_inheritance_audit",
-    # -- r16 window: rule 1 — entries whose Spark-side computation was
-    # restructured this optimization round (a stale green row proves
-    # nothing about them): the minhash-family consumers of the new
-    # posting checkpoint, the basket/recall/stats restructures, and
-    # the drain whose state partitioning changed --
     "dedup_minhash_lsh",
     "dedup_clusters",
     "docs_curation_pipeline",
@@ -109,51 +135,9 @@ _VALIDATE_FIRST = [
     "dedup_golden_record",
     "dedup_linkage_clusters",
     "dedup_lsh_recall",
-    # -- r16 window: rule 3 fill — the 3 oldest r12 rows --
     "q_events_bitmap_distinct_users",
     "q_lineitem_flag_status_chi2",
     "tf_unused_locals",
-    # ---- 50-entry window boundary ----
-    # -- last driver row r12 (remainder; due r17) --
-    "emb_mmr_rerank",
-    "stream_hourly_topk_types",
-    "docs_bpe_merge_pairs",
-    "q_approx_distinct",
-    "stream_countmin_sketch",
-    "stream_foreachbatch_sink",
-    "stream_hopping_counts",
-    "stream_hourly_append_closed",
-    "docs_bigram_logprob",
-    "docs_chunk_overlap",
-    "docs_k_anonymity",
-    "docs_lang_confusion",
-    "docs_novelty",
-    "emb_dim_stats",
-    "emb_intra_class_outliers",
-    "emb_nearest_centroid_label",
-    "media_ahash_pairs",
-    "q4_priority_late_ship",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q_customer_activity_reconciliation",
-    "q_customer_gini",
-    "q_customer_rfm",
-    "q_events_ab_significance",
-    "q_events_autocorr24",
-    "q_events_cep_pattern",
-    "q_events_duplicate_payments",
-    "q_events_lateness_profile",
-    "q_events_moving_avg",
-    "q_events_seasonal_anomaly",
-    "q_events_top_paths",
-    "q_fulfillment_latency",
-    "q_join_size_cms_estimate",
-    "q_nation_share_of_region",
-    "q_ntile_acctbal_deciles",
-    "q_orders_checksum",
-    "q_orders_cohort_ltv",
-    "q_orders_equidepth_histogram",
-    "q_orders_interval_merge",
     "tf_lifecycle_audit",
     "tf_legacy_interpolation_audit",
     "q_lineitem_mannwhitney_u",

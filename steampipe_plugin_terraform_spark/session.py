@@ -12,6 +12,10 @@ All knobs here are safe at both extremes:
   transfer columnar batches, not pickled rows).
 - Session timezone pinned to UTC so timestamp semantics are deterministic and
   match the DuckDB oracle (which is timezone-naive).
+- Python workers fork from ``daemon.py`` (``spark.python.daemon.module``), not
+  from pyspark's stock daemon: on CPython < 3.13 every task otherwise
+  re-reads pyspark.zip's directory once per imported subpackage (0.2-0.3
+  CPU-s per task), a per-task tax that grows with task count.
 """
 
 from __future__ import annotations
@@ -30,6 +34,10 @@ from pyspark.sql import SparkSession
 ROCKSDB_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+# Python worker daemon that skips re-reading unchanged zip archives on
+# every task (see daemon.py).
+DAEMON_MODULE = "steampipe_plugin_terraform_spark.daemon"
 
 
 def get_spark(
@@ -50,6 +58,13 @@ def get_spark(
     # worker daemon inherits it (executorEnv covers cluster mode).
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    # Spark starts DAEMON_MODULE with `python -m` in the JVM's working
+    # directory, so put this package's parent on the workers' path (the
+    # JVM passes its PYTHONPATH on) for a driver started from elsewhere.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([*paths, root])
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -59,6 +74,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # local[N] runs all executor threads inside the driver JVM, so the
         # driver heap IS the cluster memory: undersizing it turns execution

@@ -11,6 +11,8 @@ def spark():
 
     from pyspark.sql import SparkSession
 
+    from steampipe_plugin_terraform_spark.session import DAEMON_MODULE
+
     # one BLAS thread per Python worker (see session.get_spark): must be
     # in the env before the JVM launches so worker daemons inherit it
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
@@ -22,6 +24,8 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python tasks fork from the same worker daemon as get_spark's
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .getOrCreate()
