@@ -1,11 +1,17 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test parity-sf001 parity-sf01 bench perf-ingest perf-query perf-catalog
+.PHONY: test test-order parity-sf001 parity-sf01 bench perf-ingest perf-query perf-catalog
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# Tier-1 must pass in any test order: run the session-state tests before the
+# plan pins, then after them, so cached state can never change a pin.
+test-order:
+	python -m pytest tests/test_entry_caches.py tests/test_plan_shapes.py -q -p no:cacheprovider
+	python -m pytest tests/test_plan_shapes.py tests/test_entry_caches.py -q -p no:cacheprovider
 
 # Local replica of the driver's correctness gate at the default test SF
 # (all oracled entries, order-independent).

@@ -137,16 +137,10 @@ EXTENDED = [
     "docs_novelty",
     "q_join_size_cms_estimate",
     "dedup_golden_record",
-    # staged in r8, promoted in r9 — timed since staging so promotion
-    # landed with a round-over-round perf baseline instead of a cold
-    # first number
     "emb_two_level_topk",
     "tf_config_state_drift",
     "q_user_scd2_merge",
     "q_quantile_logsketch",
-    # staged in r9, promoted in r10 — timed since staging, so promotion
-    # landed with a round-over-round perf baseline instead of a cold
-    # first number
     "tf_module_pinning_audit",
     "tf_plan_state_drift",
     "emb_ivf_incremental_topk",
@@ -155,32 +149,26 @@ EXTENDED = [
     "stream_quantile_logsketch",
     "tf_unused_variables",
     "docs_benchmark_contamination",
-    # staged in r9/r10, promoted in r11 — timed since staging, so
-    # promotion landed with a round-over-round perf baseline
     "tf_resource_reference_graph",
     "tf_sensitive_output_audit",
     "q_orders_incremental_rollup",
     "emb_matryoshka_prefix_recall",
     "tf_tags_inheritance_audit",
-    # r12-wave staged entries (drafted in r9, behind the r11 wave)
     "q_events_bitmap_distinct_users",
     "q_lineitem_flag_status_chi2",
     "tf_unused_locals",
     "emb_mmr_rerank",
     "stream_hourly_topk_types",
     "docs_bpe_merge_pairs",
-    # r13-wave starter entries (drafted at the end of r9)
     "emb_pq_recall",
     "docs_minhash_estimate_error",
     "stream_bitmap_distinct",
     "tf_undeclared_references",
     "emb_centroid_drift",
-    # r13-wave additions (drafted in r12; the r13 window holds 9 promos)
     "tf_unused_data_sources",
     "q_lineitem_kruskal_wallis",
     "q_supplier_abc_classes",
     "dedup_incremental_batch",
-    # r19/r20-wave additions drafted in r13
     "q_lineitem_spearman",
     "emb_sign_hamming_recall",
     "docs_simpson_diversity",
@@ -189,7 +177,6 @@ EXTENDED = [
     "q_lineitem_trimmed_mean",
     "media_phash_pairs",
     "q_lineitem_brown_forsythe",
-    # r14-wave starter entries (drafted in r10)
     "tf_required_providers_audit",
     "tf_state_lineage_audit",
     "tf_backend_audit",
@@ -197,15 +184,12 @@ EXTENDED = [
     "stream_state_serial_watch",
     "emb_cluster_quality",
     "docs_pipeline_funnel",
-    # r15-wave starter entries (drafted in r10)
     "tf_variable_hygiene",
     "docs_perplexity_buckets",
     "stream_docs_pipeline_funnel",
     "emb_ann_recall_curve",
     "docs_dedup_rate_report",
-    # r16-wave starter (drafted in r10)
     "tf_moved_blocks_audit",
-    # r16/r17-wave entries (drafted in r11)
     "q_supplier_hhi",
     "q_orders_benford",
     "stream_benford_monitor",
@@ -216,42 +200,33 @@ EXTENDED = [
     "q_lineitem_gamma_correlation",
     "stream_cdc_last_value",
     "media_frame_energy",
-    # r18-wave starters (drafted in r11)
     "emb_knn_label_vote",
     "dedup_lsh_band_curve",
     "q_orders_runs_test",
     "tf_count_foreach_expansion",
-    # r18-wave additions (drafted in r14; simulation re-run at 4→6)
     "q_lineitem_mood_median",
     "docs_zipf_slope",
-    # r19/r20-wave additions (drafted in r14; waves grown 9/9 -> 12/11,
-    # simulation re-run)
     "docs_source_drift_chi2",
     "stream_zipf_monitor",
     "emb_cov_top_eigen",
     "stream_source_drift_monitor",
     "q_lineitem_kendall_tau_b",
-    # r19-wave starters (drafted in r12)
     "tf_lifecycle_audit",
     "tf_legacy_interpolation_audit",
     "q_lineitem_mannwhitney_u",
     "q_events_overdispersion",
     "q_events_markov_stationary",
-    # r20-wave starters (drafted in r12)
     "stream_overdispersion_monitor",
     "q_lineitem_ks_test",
     "docs_vocab_growth",
     "emb_ivf_compaction",
     "media_dhash_pairs",
-    # r19/r20-wave additions (drafted in r15; waves grown 12/11 -> 15/14,
-    # simulation re-run)
     "docs_hapax_legomena",
     "emb_sign_bit_balance",
     "docs_code_detect",
     "tf_resource_naming_convention",
     "stream_hapax_monitor",
     "media_ahash_clusters",
-    # late-r15 drafts (waves grown 15/14 -> 18/17, simulation re-run)
     "q_lineitem_cramers_v",
     "emb_norm_buckets",
     "docs_code_mix",

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import state
 from .operators import (
     cluster,
     dedup,
@@ -66,12 +67,6 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# (appId, sf_dir, name) → prepared scan DataFrame: a LOGICAL PLAN, never row
-# data. It saves the ~80-150 ms of parquet footer/analysis every entry paid
-# per table per call (the optimization guide's §6 session metadata cache).
-_TABLE_CACHE: dict = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # NOTE: the two conf sets below deliberately PERSIST on the caller's
     # session — they must be in effect at execution time of the returned
@@ -90,15 +85,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # does when it converts to its microsecond TIMESTAMP. Must be set
         # BEFORE the session's first events read (cache-miss path below).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    _TABLE_CACHE[key] = df
-    return df
+
+    # the cached value is a prepared scan (a plan, never row data): it saves
+    # the ~80-150 ms of parquet footer/analysis per table per call
+    def build() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        return df
+
+    return state.get(spark, "table", (state.corpus_digest(sf_dir), name), build)
 
 
 # ---------------------------------------------------------------------------
@@ -1698,8 +1694,7 @@ def q_basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (overlapping the pair branch, never serializing it) and read by
     # x, y and n. 4 basket evaluations → 2; scans 16 → 4. The tiny
     # output makes the ≥4-reuse break-even moot (materialization is
-    # ~25 rows); lazy + RDD-level storage, never .persist() (the
-    # cache-manager plan-contamination hazard).
+    # ~25 rows); lazy + RDD-level storage (the state.py checkpoint rule).
     baskets = (
         li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
         .groupBy("l_orderkey")
@@ -3717,25 +3712,6 @@ def q_incident_click_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_DB_READY: set = set()
-# (applicationId, corpus-digest) pairs whose bucketed tables are written;
-# repeat invocations for the same corpus probe the existing tables instead
-# of re-shuffling the write (the write-once serving shape)
-_BUCKETED_TABLES_READY: set = set()
-
-
-def _corpus_digest(sf_dir: str) -> str:
-    """Stable 8-hex digest of a corpus directory, for per-corpus object
-    names: two sf_dirs must never share session-global state (a handle
-    created for one corpus would silently read the other's data)."""
-    import hashlib
-    import os as _os
-
-    return hashlib.md5(
-        _os.path.abspath(sf_dir).encode("utf-8")
-    ).hexdigest()[:8]
-
-
 @query(
     "q_bucketed_cokey_join",
     oracle="""
@@ -3759,22 +3735,20 @@ def q_bucketed_cokey_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for another; the bucketed write runs once per (session, corpus) and
     repeat invocations go straight to the existing tables — the same
     write-once/serve-many shape the 100 TB design assumes."""
-    import tempfile
-
     from .operators import storage
 
-    # one database per session: CREATE IF NOT EXISTS pins the FIRST call's
-    # location, so later mkdtemp calls would only leak orphan empty dirs
-    app = spark.sparkContext.applicationId
-    if app not in _BUCKETED_DB_READY:
-        storage.ensure_database(
-            spark, "tf_bucketed", tempfile.mkdtemp(prefix="tf_bucketed_")
-        )
-        _BUCKETED_DB_READY.add(app)
-    dig = _corpus_digest(sf_dir)
+    # one database per session: CREATE IF NOT EXISTS pins the first location
+    state.get(
+        spark, "bucketed_db", "tf_bucketed",
+        lambda: storage.ensure_database(
+            spark, "tf_bucketed", state.temp_root("tf_bucketed_")
+        ),
+    )
+    dig = state.corpus_digest(sf_dir)
     orders_b = f"tf_bucketed.orders_b_{dig}"
     lineitem_b = f"tf_bucketed.lineitem_b_{dig}"
-    if (app, dig) not in _BUCKETED_TABLES_READY:
+
+    def write_tables() -> None:
         storage.write_bucketed(
             _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
             orders_b,
@@ -3787,7 +3761,8 @@ def q_bucketed_cokey_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             lineitem_b,
             "l_orderkey",
         )
-        _BUCKETED_TABLES_READY.add((app, dig))
+
+    state.get(spark, "bucketed_tables", dig, write_tables)
     o = spark.table(orders_b)
     l = spark.table(lineitem_b)
     return (
@@ -3880,30 +3855,18 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, corpus-digest) → z-ordered lineitem store path; written
-# once per session+corpus, removed at interpreter exit (same lifecycle as
-# the IVF store)
-_ZORDER_CACHE: dict = {}
-
-
 def _zorder_store(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from .operators import storage
 
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _ZORDER_CACHE:
+    def build() -> str:
         li = _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"
         )
-        root = tempfile.mkdtemp(prefix="zorder_store_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = root + "/lineitem_z"
+        path = state.temp_root("zorder_store_") + "/lineitem_z"
         storage.write_zordered(li, path, "l_partkey", "l_suppkey", num_files=16)
-        _ZORDER_CACHE[key] = path
-    return _ZORDER_CACHE[key]
+        return path
+
+    return state.get(spark, "zorder_store", state.corpus_digest(sf_dir), build)
 
 
 @query(
@@ -3940,28 +3903,17 @@ def q_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, corpus-digest) → root of the partitioned orders store +
-# months dim; written once per session+corpus, removed at interpreter exit
-# (same lifecycle as the z-order/IVF stores)
-_PARTITIONED_CACHE: dict = {}
-
-
 def _partitioned_store(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
+    """Root of the orders store partitioned by month, plus its months dim."""
     from .operators import storage
 
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _PARTITIONED_CACHE:
+    def build() -> str:
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_totalprice",
             F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
         )
-        root = tempfile.mkdtemp(prefix="partitioned_store_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        root = state.temp_root("partitioned_store_")
         storage.write_partitioned(o, root + "/orders_p", "o_month")
         # the month dim is its own little table (star-schema shape): the
         # DPP filter must live on dim ATTRIBUTES, not the partition column
@@ -3979,8 +3931,9 @@ def _partitioned_store(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(root + "/months_dim")
         )
-        _PARTITIONED_CACHE[key] = root
-    return _PARTITIONED_CACHE[key]
+        return root
+
+    return state.get(spark, "partitioned_store", state.corpus_digest(sf_dir), build)
 
 
 @query(
@@ -5921,25 +5874,18 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_near_dups(_t(spark, sf_dir, "documents"), max_hamming=3)
 
 
-_CLUSTER_MAP_CACHE: dict = {}
-# (appId, corpus-digest) → persisted (doc_id, cluster_id, is_canonical)
-# assignment. THREE entries consume the same minhash→LSH→CC chain
-# (dedup_clusters, docs_curation_pipeline, dedup_golden_record); the
-# session cache computes it once per corpus and each consumer reuses the
-# persisted map — the values are identical by construction, only the
-# recompute disappears (same pattern as _kmeans16 / the PQ training
-# cache; pinned by test_entry_caches).
-
-
 def _dedup_cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _CLUSTER_MAP_CACHE:
+    """The (doc_id, cluster_id, is_canonical) assignment of the
+    minhash→LSH→CC chain, shared by every cluster-map consumer."""
+
+    def build() -> DataFrame:
         docs = _t(spark, sf_dir, "documents")
         pairs = dedup.minhash_lsh_pairs(
             docs, n=5, num_hashes=8, bands=4, threshold=0.8
         )
-        _CLUSTER_MAP_CACHE[key] = cluster.dedup_clusters(docs, pairs).persist()
-    return _CLUSTER_MAP_CACHE[key]
+        return cluster.dedup_clusters(docs, pairs).localCheckpoint(eager=True)
+
+    return state.get(spark, "cluster_map", state.corpus_digest(sf_dir), build)
 
 
 @query(
@@ -6394,13 +6340,6 @@ def emb_rp_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("id", "vec_id")
 
 
-# The deterministic quantizer makes clustering results a pure function of
-# (corpus, k, iters), so entries sharing a corpus share ONE kmeans run per
-# session — the driver gate runs six Lloyd-backed entries; without the
-# cache each would redo the full iteration loop (4 corpus passes + 3
-# driver collects).
-_KMEANS_CACHE: dict = {}
-
 # Cluster-count sizing: k grows with the corpus so per-cluster work stays
 # bounded — k = max(K_MIN, ceil(N / K_TARGET)) keeps the average cluster at
 # ~K_TARGET vectors, which caps the SemDeDup per-cluster O((N/k)^2) matmul
@@ -6445,26 +6384,18 @@ def _kmeans16(spark: SparkSession, sf_dir: str, kind: str):
     sf0.1 — different effective k pinned by tests). The name keeps the
     historical ``16`` as the FLOOR, not the pin.
 
-    The ASSIGNMENT is materialized with an eager localCheckpoint (r15,
-    guide §4/§5): a coarse quantizer's inverted lists are write-once
-    serving state exactly like the sibling ``_PQ_CACHE`` codes and the
-    ``ivf_save`` parquet store — but as a lazy plan every probing entry
-    re-ran the corpus scan + numpy MapInPandas assignment per pass
-    (measured: emb_ivf_pq_topk 1.16 → 0.80 s, emb_ivf_topk 0.72 → 0.47 s,
-    emb_ann_recall_curve 2.18 → 1.63 s, emb_ivf_recall 1.78 → 1.31 s,
-    zero-steal mins). localCheckpoint, NOT .persist(): the cache manager
-    would plan-match the assignment subtree inside SIBLING entries'
-    pinned plans (the CLAUDE.md hazard); the checkpointed plan swaps in
-    only through this returned object. Nine entries share it per session
-    — far past the ≥4-reuse break-even."""
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _KMEANS_CACHE:
+    The assignment (a coarse quantizer's inverted lists) is checkpointed:
+    nine probing entries share it per session, and as a lazy plan each
+    would re-run the corpus scan and the numpy assignment per pass."""
+
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         df = emb if kind == "full" else emb.filter(F.col("vec_id") >= 10)
         k = _effective_k(df.count())
         assigned, centroids = similarity.kmeans_lloyd(df, k=k, iters=3)
-        _KMEANS_CACHE[key] = (assigned.localCheckpoint(eager=True), centroids)
-    return _KMEANS_CACHE[key]
+        return assigned.localCheckpoint(eager=True), centroids
+
+    return state.get(spark, "kmeans", (state.corpus_digest(sf_dir), kind), build)
 
 
 # IVF oracle: the coarse quantizer is similarity.kmeans_lloyd — every step
@@ -6928,21 +6859,18 @@ _PQ_TOPK_SQL = f"""
     """
 
 
-# (applicationId, corpus-digest) → trained PQ (codes persisted, codebooks);
-# train once per session+corpus, serve every query set from the cache —
-# the same write-once lifecycle as _kmeans16 / the IVF store
-_PQ_CACHE: dict = {}
-
-
 def _pq_trained(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _PQ_CACHE:
+    """(checkpointed codes, codebooks): trained once per session and
+    corpus, then every PQ entry serves its query set from them."""
+
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         codes, books = similarity.pq_codebooks_encode(
             emb.filter(F.col("vec_id") >= 10), dim=64, m=4, k=16, iters=2
         )
-        _PQ_CACHE[key] = (codes.persist(), books)
-    return _PQ_CACHE[key]
+        return codes.localCheckpoint(eager=True), books
+
+    return state.get(spark, "pq", state.corpus_digest(sf_dir), build)
 
 
 @query("emb_pq_topk", oracle=_PQ_TOPK_SQL)
@@ -6954,7 +6882,7 @@ def emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     step is the deterministic Lloyd quantizer, so the oracle replays all
     four subspace clusterings, the encoding, and the ADC ranking.
     Training runs once per (session, corpus) — repeat invocations serve
-    from the persisted codes (the PQ deployment shape)."""
+    from the checkpointed codes (the PQ deployment shape)."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.pq_topk(
         emb.filter(F.col("vec_id") >= 10),
@@ -7005,27 +6933,17 @@ def emb_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, corpus-digest) → on-disk IVF store path; written once per
-# session+corpus (like _kmeans16), removed at interpreter exit
-_IVF_STORE_CACHE: dict = {}
-
-
 def _ivf_store_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-and-save the IVF store once per (session, corpus); return the
     cached path on repeat calls so probes hit the existing store."""
-    import atexit
-    import shutil
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _IVF_STORE_CACHE:
+    def build() -> str:
         assigned, centroids = _kmeans16(spark, sf_dir, "ge10")
-        root = tempfile.mkdtemp(prefix="ivf_store_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = root + "/index"
+        path = state.temp_root("ivf_store_") + "/index"
         similarity.ivf_save(assigned, centroids, path)
-        _IVF_STORE_CACHE[key] = path
-    return _IVF_STORE_CACHE[key]
+        return path
+
+    return state.get(spark, "ivf_store", state.corpus_digest(sf_dir), build)
 
 
 @query("emb_ivf_store_topk", oracle=_IVF_TOPK_SQL)
@@ -7292,11 +7210,18 @@ def stream_hourly_append_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, corpus-digest) → (sink root, checkpoint) for the
-# foreachBatch entry; reusing the checkpoint across invocations is the
-# POINT — a restarted availableNow drain over committed source offsets
-# must be a no-op (exactly-once restart semantics)
-_FOREACHBATCH_CACHE: dict = {}
+def _sink_and_checkpoint(
+    spark: SparkSession, sf_dir: str, kind: str, data: str
+) -> tuple[str, str]:
+    """(sink dir, checkpoint dir) of a stream entry, one pair per session
+    and corpus: re-draining on the same checkpoint is a no-op over the
+    committed offsets (the exactly-once restart contract)."""
+
+    def build() -> tuple[str, str]:
+        root = state.temp_root(kind + "_")
+        return f"{root}/{data}", f"{root}/ckpt"
+
+    return state.get(spark, kind, state.corpus_digest(sf_dir), build)
 
 
 @query(
@@ -7317,18 +7242,9 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged — the restart contract this entry exists to pin (also
     pinned by test_entry_caches). The batch aggregate over the sink files
     equals the direct aggregate (the oracle)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .streaming.events import read_events_stream
 
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _FOREACHBATCH_CACHE:
-        root = tempfile.mkdtemp(prefix="febatch_sink_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _FOREACHBATCH_CACHE[key] = (root + "/data", root + "/ckpt")
-    sink, ckpt = _FOREACHBATCH_CACHE[key]
+    sink, ckpt = _sink_and_checkpoint(spark, sf_dir, "febatch_sink", "data")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
@@ -9101,9 +9017,6 @@ def staged_query(name: str, oracle: str | None = None):
     return deco
 
 
-_TWO_LEVEL_CACHE: dict = {}
-
-
 def _two_level44(spark: SparkSession, sf_dir: str):
     """Session-cached two-level quantizer over the vec_id >= 10 corpus —
     k1 = k2 = 4 are CODEBOOK constants like PQ's k_fixed (the oracle
@@ -9112,20 +9025,13 @@ def _two_level44(spark: SparkSession, sf_dir: str):
     √(N/K_TARGET) under the per-level √N cap (SCALE.md "IVF at 100 TB");
     the entry pins the MECHANISM (two-stage routing, grouped cell Lloyd,
     (cell1, cell2) candidate pruning), which is k-independent."""
-    # keyed on the corpus digest like every other session cache (bucketed
-    # tables, IVF store, PQ training). The contract is PER-PATH: the
-    # digest is a stable hash of the normalized directory path (so
-    # ./sf0.001 and an absolute spelling share one entry), NOT of the
-    # data — an in-place overwrite of a corpus mid-session keeps serving
-    # the existing index, exactly like the other *_CACHE stores
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _TWO_LEVEL_CACHE:
+
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         corpus = emb.filter(F.col("vec_id") >= 10)
-        _TWO_LEVEL_CACHE[key] = similarity.kmeans_two_level(
-            corpus, k1=4, k2=4, iters=2
-        )
-    return _TWO_LEVEL_CACHE[key]
+        return similarity.kmeans_two_level(corpus, k1=4, k2=4, iters=2)
+
+    return state.get(spark, "two_level", state.corpus_digest(sf_dir), build)
 
 
 def _two_level_topk_cte() -> str:
@@ -9587,26 +9493,20 @@ def tf_plan_state_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, corpus digest) → (base-corpus IVF assignment, frozen centroids);
-# built once per session+corpus like the other ANN stores, reused by the
-# incremental entry's repeat invocations (pinned in test_entry_caches)
-_IVF_INCR_CACHE: dict = {}
-
-
 def _ivf_incr_base(spark: SparkSession, sf_dir: str):
     """Base IVF index trained ONLY on the seven-eighths 'historical'
     corpus slice (vec_id % 8 <> 7) — the batch eighth never influences
     training, which is what makes the entry an incremental-INGEST
     identity rather than a retrain."""
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _IVF_INCR_CACHE:
+
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         base = emb.filter(
             (F.col("vec_id") >= 10) & (F.col("vec_id") % 8 != 7)
         )
-        k = _effective_k(base.count())
-        _IVF_INCR_CACHE[key] = similarity.kmeans_lloyd(base, k=k, iters=3)
-    return _IVF_INCR_CACHE[key]
+        return similarity.kmeans_lloyd(base, k=_effective_k(base.count()), iters=3)
+
+    return state.get(spark, "ivf_incr_base", state.corpus_digest(sf_dir), build)
 
 
 def _ivf_incr_cte() -> str:
@@ -10884,7 +10784,7 @@ def emb_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier of the ANN stack (2-byte codes), so a deployment must know how
     much ranking quality the compression costs before trusting it.
     Reuses the session-trained PQ (one training per corpus, served from
-    _PQ_CACHE) and the cosine_topk ground-truth device; recall in basis
+    ``_pq_trained``) and the cosine_topk ground-truth device; recall in basis
     points via positive integer division — bit-exact cross-engine.
 
     Shape: both sides are (qid, nid) pair sets (|Q|·k rows); recall is
@@ -11127,24 +11027,18 @@ def tf_undeclared_references(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, corpus digest) → (frozen drift quantizer centroids) — session
-# cache per the repo convention; the reference-slice training runs once
-_DRIFT_CACHE: dict = {}
-
-
 def _drift_quantizer(spark: SparkSession, sf_dir: str):
     """Lloyd trained ONLY on the even-id 'reference' corpus slice — the
     frozen production quantizer a drift monitor compares new traffic
     against (training on the union would hide exactly the shift being
     measured)."""
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _DRIFT_CACHE:
+
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         ref = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") % 2 == 0))
-        k = _effective_k(ref.count())
-        _, cents = similarity.kmeans_lloyd(ref, k=k, iters=3)
-        _DRIFT_CACHE[key] = cents
-    return _DRIFT_CACHE[key]
+        return similarity.kmeans_lloyd(ref, k=_effective_k(ref.count()), iters=3)[1]
+
+    return state.get(spark, "drift_quantizer", state.corpus_digest(sf_dir), build)
 
 
 def _drift_cte() -> str:
@@ -11920,24 +11814,20 @@ def tf_variable_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, corpus digest) -> per-doc NLL score frame, read twice by the
-# perplexity-buckets entry (sketch feed, then bucket assignment): an eager
-# localCheckpoint (never .persist(), see _KMEANS_CACHE) runs the bigram-LM
-# chain once per session. test_entry_caches pins the reuse.
-_PPL_SCORE_CACHE: dict = {}
-
-
 def _ppl_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _PPL_SCORE_CACHE:
+    """Per-doc NLL scores, read twice by the perplexity-buckets entry
+    (sketch feed, then bucket assignment): the bigram-LM chain runs once."""
+
+    def build() -> DataFrame:
         lp = text.bigram_logprob(_t(spark, sf_dir, "documents"))
-        _PPL_SCORE_CACHE[key] = lp.select(
+        return lp.select(
             "doc_id",
             F.expr(
                 "CAST(floor(-mean_logprob * 10000 + 0.5) AS BIGINT)"
             ).alias("nll_e4"),
         ).localCheckpoint(eager=True)
-    return _PPL_SCORE_CACHE[key]
+
+    return state.get(spark, "ppl_scores", state.corpus_digest(sf_dir), build)
 
 
 # the threshold CTE wraps the PROMOTED docs_bigram_logprob oracle verbatim
@@ -12103,12 +11993,9 @@ def emb_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ground truth is ≤ |Q|·k rows by contract (vec_id < 10 queries, k=5)
     # — the documented bounded-collect class: materialize it ONCE
     # driver-side and re-emit as a local frame, so the |Q|·N brute-force
-    # matmul runs once for all three curve points. Deliberately NOT
-    # .persist(): a persisted plan lands in Spark's cache manager, which
-    # plan-matches the IDENTICAL cosine_topk subtree inside
-    # emb_pq_recall and silently rewrites THAT entry's pinned plan
-    # (cross-entry cache contamination — caught by the pq_recall plan
-    # pin when these entries run in one session).
+    # matmul runs once for all three curve points. Not cached in Spark's
+    # cache manager: it would plan-match the identical cosine_topk subtree
+    # inside emb_pq_recall (the state.py rule).
     exact_rows = (
         similarity.cosine_topk(queries, corpus, k=5)
         .select("query_id", "neighbor_id")
@@ -12205,7 +12092,7 @@ def docs_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden-record reuse the same build); the oracle replays the full
     minhash→LSH→verify→CC chain and aggregates it.
 
-    Scale: one pass over the persisted map — a cluster-keyed count then
+    Scale: one pass over the checkpointed map — a cluster-keyed count then
     a one-row counter roll-up; nothing touches document text."""
     m = _dedup_cluster_map(spark, sf_dir)
     cs = m.groupBy("cluster_id").agg(
@@ -12879,12 +12766,6 @@ def q_lineitem_gamma_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, corpus-digest) → (sink root, checkpoint) for the CDC
-# upsert entry; the checkpoint reuse IS the restart contract (committed
-# offsets make a re-drain a no-op and the serving table is unchanged)
-_CDC_SINK_CACHE: dict = {}
-
-
 @staged_query(
     "stream_cdc_last_value",
     # the serving-table oracle: last event per user under the (ts,
@@ -12916,18 +12797,9 @@ def stream_cdc_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a transactional MERGE INTO (Delta/Iceberg) with the identical
     merge predicate — the semantics this entry pins are engine-portable,
     the rewrite is not the 100 TB design and says so."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .streaming.events import read_events_stream
 
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _CDC_SINK_CACHE:
-        root = tempfile.mkdtemp(prefix="cdc_upsert_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _CDC_SINK_CACHE[key] = (root + "/state", root + "/ckpt")
-    state_root, ckpt = _CDC_SINK_CACHE[key]
+    state_root, ckpt = _sink_and_checkpoint(spark, sf_dir, "cdc_upsert", "state")
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         import os
@@ -13171,10 +13043,8 @@ def dedup_lsh_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: signatures are computed from ONE declarative chain, then
     LOCALIZED — ``sig`` and ``truth`` are eagerly `localCheckpoint`ed
-    (executor-side materialization, lineage truncated; deliberately NOT
-    .persist(), whose cache-manager plan-matching silently rewrites
-    sibling entries' identical subtrees — the emb_ann_recall_curve /
-    emb_pq_recall contamination, SCALE.md), so the corpus is scanned
+    (executor-side materialization, lineage truncated; the state.py
+    checkpoint rule), so the corpus is scanned
     once per table and the four layouts each cost only a banding
     projection + a bucket-keyed self-join (uniform md5 keys, no skew)
     + a broadcast pair semi-join against the checkpointed truth set
@@ -14162,11 +14032,6 @@ def docs_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, corpus-digest) → compacted-store path; written once per
-# session+corpus from the SAME tombstone set the delete entry filters by
-_IVF_COMPACT_CACHE: dict = {}
-
-
 def _ivf_compacted_path(spark: SparkSession, sf_dir: str) -> str:
     """Physically rewrite the session IVF store WITHOUT the tombstoned
     eighth (vec_id % 8 == 3 — the same delete set
@@ -14174,21 +14039,15 @@ def _ivf_compacted_path(spark: SparkSession, sf_dir: str) -> str:
     offline compaction job that entry's docstring defers. Centroids are
     carried over UNCHANGED — compaction drops bytes, it never retrains
     or re-assigns."""
-    import atexit
-    import shutil
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _IVF_COMPACT_CACHE:
-        path = _ivf_store_path(spark, sf_dir)
-        loaded, cents = similarity.ivf_load(spark, path)
+    def build() -> str:
+        loaded, cents = similarity.ivf_load(spark, _ivf_store_path(spark, sf_dir))
         survivors = loaded.filter(F.col("vec_id") % 8 != 3)
-        root = tempfile.mkdtemp(prefix="ivf_compact_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        newpath = root + "/index"
-        similarity.ivf_save(survivors, cents, newpath)
-        _IVF_COMPACT_CACHE[key] = newpath
-    return _IVF_COMPACT_CACHE[key]
+        path = state.temp_root("ivf_compact_") + "/index"
+        similarity.ivf_save(survivors, cents, path)
+        return path
+
+    return state.get(spark, "ivf_compact", state.corpus_digest(sf_dir), build)
 
 
 @staged_query(
@@ -14560,26 +14419,16 @@ def q_supplier_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, corpus-digest) → (buckets path, sets path) for the
-# incremental-dedup entry: the OLD-corpus LSH artifacts (band buckets +
-# shingle-hash sets) written once per session+corpus — the production
-# signature store an ingest pipeline maintains so arriving batches never
-# re-tokenize the existing corpus
-_LSH_STORE_CACHE: dict = {}
-
-
 def _lsh_store_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import atexit
-    import shutil
-    import tempfile
+    """(band buckets path, shingle sets path) of the OLD corpus: the
+    signature store an ingest pipeline maintains so arriving batches never
+    re-tokenize the existing corpus."""
 
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _LSH_STORE_CACHE:
+    def build() -> tuple[str, str]:
         old = _t(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 10 != 7
         )
-        root = tempfile.mkdtemp(prefix="lsh_store_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        root = state.temp_root("lsh_store_")
         bpath, spath = root + "/buckets", root + "/sets"
         dedup.minhash_band_buckets(
             old, n=5, num_hashes=8, bands=4
@@ -14587,8 +14436,9 @@ def _lsh_store_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         dedup.shingle_sets(old, n=5, df_max=None).write.mode(
             "overwrite"
         ).parquet(spath)
-        _LSH_STORE_CACHE[key] = (bpath, spath)
-    return _LSH_STORE_CACHE[key]
+        return bpath, spath
+
+    return state.get(spark, "lsh_store", state.corpus_digest(sf_dir), build)
 
 
 # The incremental-ingest oracle replays the CORPUS-WIDE banding (the
@@ -14823,9 +14673,7 @@ def q_lineitem_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x", "y")
         .agg(F.count("*").cast("long").alias("n"))
-        # eager localCheckpoint, NEVER .persist() (cache-manager
-        # plan-matching contaminates sibling entries' pinned plans)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # the state.py checkpoint rule
     )
     wall = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -15100,15 +14948,6 @@ def docs_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simpson_report(tc)
 
 
-# (applicationId, corpus-digest) → (sink root, checkpoint) for the
-# streaming ingest-dedup leg; checkpoint reuse across invocations makes
-# a restarted availableNow drain a no-op over committed offsets, and
-# each micro-batch overwrites its own batch_id dir (idempotent writes ×
-# checkpointed offsets = exactly-once — the stream_foreachbatch_sink
-# device pointed at the dedup gate)
-_STREAM_DEDUP_CACHE: dict = {}
-
-
 @staged_query("stream_incremental_dedup", oracle=_INCR_DEDUP_ORACLE)
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest-dedup gate AS A STREAM — the production deployment of
@@ -15138,19 +14977,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all — the gate is stateless given the store), so an indefinitely
     running deployment holds ZERO in-flight aggregation state and the
     sink grows with verdicts, not with corpus rescans."""
-    import atexit
-    import shutil
-    import tempfile
-
-    # ensure the frozen store exists (built once per session+corpus by
-    # the batch entry's cache — shared, never rebuilt here)
+    # the frozen store is shared with the batch entry, never rebuilt here
     bpath, spath = _lsh_store_paths(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, _corpus_digest(sf_dir))
-    if key not in _STREAM_DEDUP_CACHE:
-        root = tempfile.mkdtemp(prefix="stream_dedup_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _STREAM_DEDUP_CACHE[key] = (root + "/verdicts", root + "/ckpt")
-    sink, ckpt = _STREAM_DEDUP_CACHE[key]
+    sink, ckpt = _sink_and_checkpoint(spark, sf_dir, "stream_dedup", "verdicts")
 
     src = (
         spark.readStream.schema("doc_id long, text string")
@@ -16074,10 +15903,8 @@ def docs_source_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "lang")
         .groupBy("source", "lang")
         .agg(F.count("*").cast("long").alias("o"))
-        # eager localCheckpoint, NEVER .persist() (cache-manager
-        # plan-matching contaminates sibling entries' pinned plans);
-        # 4 reuses (both margins, the total, the spine join) — at the
-        # measured break-even
+        # 4 reuses (both margins, the total, the spine join): at the
+        # state.py checkpoint break-even
         .localCheckpoint(eager=True)
     )
     return _source_drift_report(grid)

@@ -196,7 +196,9 @@ class TerraformEngine:
         deleted files trigger an incremental ``refresh`` (only changed files
         re-parse) and registered views re-register. Poll-based (see
         ``TerraformWatcher``), driver-only, daemon thread — a failed refresh
-        leaves the snapshot untouched so the delta retries next tick.
+        leaves the snapshot untouched so the delta retries next tick, and
+        the watcher records it in ``last_error`` and
+        ``consecutive_failures`` (reset by the next successful poll).
         Returns the watcher; idempotent while already running.
         """
         import threading
@@ -205,18 +207,21 @@ class TerraformEngine:
 
         if self._watch_thread is not None:
             return self.watcher
-        self.watcher = TerraformWatcher(self)
+        watcher = self.watcher = TerraformWatcher(self)
         stop = self._watch_stop = threading.Event()
 
-        # closure holds the Event directly: stop_watch() nulls the attribute
-        # after a join timeout, and a loop reading self._watch_stop would
+        # closure holds the Event and watcher directly: stop_watch() nulls
+        # the attributes after a join timeout, and a loop reading them would
         # die on AttributeError mid-poll instead of exiting cleanly
         def _loop() -> None:
             while not stop.wait(interval):
                 try:
-                    self.watcher.poll()
-                except Exception:  # keep watching; poll retries the delta
-                    pass
+                    watcher.poll()
+                except Exception as e:  # keep watching; poll retries the delta
+                    watcher.last_error = e
+                    watcher.consecutive_failures += 1
+                else:
+                    watcher.consecutive_failures = 0
 
         self._watch_thread = threading.Thread(
             target=_loop, daemon=True, name="terraform-watch"

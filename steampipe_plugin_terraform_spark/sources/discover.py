@@ -25,13 +25,13 @@ silently matching zero local files.
 
 from __future__ import annotations
 
-import atexit
 import glob as _glob
 import os
 import shutil
 import re
 import subprocess
-import tempfile
+
+from .. import state
 
 _REMOTE_SCHEME_RE = re.compile(r"^(s3a?|wasbs?|abfss?|gs|hdfs)://")
 _GIT_RE = re.compile(r"^(git::|git@|github\.com/|gitlab\.com/|bitbucket\.org/|https://github\.com/|https://gitlab\.com/|https://bitbucket\.org/)")
@@ -261,8 +261,7 @@ def fetch_remote(url: str) -> tuple[str, str | None]:
     raw, sub = _split_git_subpath(raw)
     if "://" not in raw and not raw.startswith("git@"):
         raw = "https://" + raw
-    dest = tempfile.mkdtemp(prefix="tf_git_")
-    atexit.register(shutil.rmtree, dest, ignore_errors=True)
+    dest = state.temp_root("tf_git_")
     try:
         cmd = ["git", "clone", "--depth", "1"]
         if ref:

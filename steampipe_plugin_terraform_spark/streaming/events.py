@@ -14,6 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import state
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -27,13 +30,6 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-# (appId, sf_dir) → probed ts dtype string: the probe is a full
-# spark.read.parquet footer/analysis pass (~100 ms of driver time) that
-# every stream_* invocation repaid for an immutable file property; same
-# session-scoped metadata-cache rationale as catalog._TABLE_CACHE (r15).
-_TS_DTYPE_CACHE: dict = {}
-
-
 def probe_events_ts_dtype(spark: SparkSession, sf_dir: str) -> str:
     """Driver-side footer probe of the events table's ``ts`` physical type.
 
@@ -42,14 +38,13 @@ def probe_events_ts_dtype(spark: SparkSession, sf_dir: str) -> str:
     ``legacy.parquet.nanosAsLong``), ``timestamp_ntz``/``timestamp`` for
     ordinary µs files. Setting the legacy conf first is safe — it only
     affects genuine nanos columns and deliberately persists on the session
-    (same contract as ``catalog._t``)."""
+    (same contract as ``catalog._t``). The probe is a footer/analysis pass
+    (~100 ms of driver time), so it runs once per session and corpus."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TS_DTYPE_CACHE:
-        _TS_DTYPE_CACHE[key] = dict(
-            spark.read.parquet(f"{sf_dir}/events.parquet").dtypes
-        ).get("ts", "")
-    return _TS_DTYPE_CACHE[key]
+    return state.get(
+        spark, "events_ts_dtype", state.corpus_digest(sf_dir),
+        lambda: dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts", ""),
+    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -77,6 +77,9 @@ class TerraformWatcher:
     def __init__(self, engine):
         self.engine = engine
         self._snap = self._scan()
+        # health of the background loop (``engine.start_watch``)
+        self.last_error: Exception | None = None
+        self.consecutive_failures = 0
 
     def _scan(self) -> dict[str, tuple[int, int]]:
         cfg, plan, state, qual = self.engine._source_lists

@@ -237,3 +237,37 @@ def test_watch_flag_autostarts_watcher(spark, tmp_path):
     eng.start_watch(interval=0.1)
     eng.start_watch(interval=0.1)
     eng.stop_watch()
+
+
+def test_watch_loop_records_failures_and_recovers(spark, tmp_path, monkeypatch):
+    """A poll that raises keeps the background loop alive and is visible on
+    the watcher: ``last_error`` holds the exception and
+    ``consecutive_failures`` counts it until the next successful poll."""
+    import threading
+    import time
+
+    (tmp_path / "a.tf").write_text('resource "r" "x" { n = 1 }\n')
+    seen, done = [], threading.Event()
+
+    def poll(self):
+        seen.append((self.consecutive_failures, self.last_error))
+        if len(seen) <= 2:
+            raise RuntimeError(f"boom {len(seen)}")
+        done.set()
+        return set()
+
+    monkeypatch.setattr(TerraformWatcher, "poll", poll)
+    eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
+    watcher = eng.start_watch(interval=0.01)
+    try:
+        assert done.wait(30), "loop stopped polling after a failure"
+        deadline = time.time() + 30
+        while watcher.consecutive_failures and time.time() < deadline:
+            time.sleep(0.01)
+    finally:
+        eng.stop_watch()
+    assert seen[0] == (0, None)
+    assert seen[1][0] == 1 and str(seen[1][1]) == "boom 1"
+    assert seen[2][0] == 2 and str(seen[2][1]) == "boom 2"
+    assert watcher.consecutive_failures == 0, "a successful poll resets the count"
+    assert str(watcher.last_error) == "boom 2"

@@ -1,17 +1,24 @@
-"""Session-scoped caches behind catalog entries.
+"""Session state behind catalog entries (``state.py``).
 
-Two entries persist derived on-disk state (the bucketed-join tables and
-the IVF serving store). These tests pin the round-6 contract: state is
-written ONCE per (session, corpus), repeat invocations reuse it, and a
-handle created for one corpus keeps reading that corpus even after the
-entry is invoked for another sf_dir (per-corpus object names — the
-stale-handle hazard called out in round 5's review).
+State is built ONCE per (session, corpus) and repeat invocations reuse it;
+it is per-corpus, so a handle created for one corpus keeps reading that
+corpus after the entry runs for another sf_dir; it is readable
+(``state.stats``), clearable (``state.clear``) and never held in Spark's
+cache manager.
 """
 
-import pytest
+import glob
+import os
+import pathlib
+import subprocess
+import sys
 
-from steampipe_plugin_terraform_spark import catalog
-from steampipe_plugin_terraform_spark.catalog import QUERIES
+import pytest
+from pyspark.sql import DataFrame
+
+from steampipe_plugin_terraform_spark import catalog, state
+from steampipe_plugin_terraform_spark.catalog import QUERIES, STAGED_QUERIES
+from steampipe_plugin_terraform_spark.operators import dedup, similarity, storage, text
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -21,402 +28,216 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_ivf_store_written_once_per_corpus(spark, monkeypatch):
-    from steampipe_plugin_terraform_spark.operators import similarity
+def _entry(name):
+    return QUERIES.get(name) or STAGED_QUERIES[name]
 
+
+def _counting(monkeypatch, module, fn):
     calls = []
-    real_save = similarity.ivf_save
-    monkeypatch.setattr(
-        catalog.similarity, "ivf_save", lambda *a, **k: (calls.append(1), real_save(*a, **k))[1]
-    )
-    # drop any store built by earlier tests in this session
-    for key in [k for k in catalog._IVF_STORE_CACHE if k[0] == spark.sparkContext.applicationId]:
-        catalog._IVF_STORE_CACHE.pop(key)
-    first = _rows(QUERIES["emb_ivf_store_topk"](spark, SF_A))
-    assert calls == [1], "first invocation builds the store"
-    second = _rows(QUERIES["emb_ivf_store_topk"](spark, SF_A))
-    assert calls == [1], "second invocation must probe the existing store"
-    assert first == second
+    real = getattr(module, fn)
+    monkeypatch.setattr(module, fn, lambda *a, **k: (calls.append(1), real(*a, **k))[1])
+    return calls
 
 
-def test_bucketed_tables_written_once_and_reused(spark, monkeypatch):
-    from steampipe_plugin_terraform_spark.operators import storage
+# (entry, kind, patched module, builder function, builder calls per build)
+BUILT_ONCE = [
+    ("emb_ivf_store_topk", "ivf_store", similarity, "ivf_save", 1),
+    ("q_bucketed_cokey_join", "bucketed_tables", storage, "write_bucketed", 2),
+    ("emb_pq_topk", "pq", similarity, "pq_codebooks_encode", 1),
+    ("q_zorder_pruned_scan", "zorder_store", storage, "write_zordered", 1),
+    ("q_partition_pruned_join", "partitioned_store", storage, "write_partitioned", 1),
+    ("dedup_golden_record", "cluster_map", dedup, "minhash_lsh_pairs", 1),
+    ("emb_two_level_topk", "two_level", similarity, "kmeans_two_level", 1),
+    ("emb_ivf_incremental_topk", "ivf_incr_base", similarity, "kmeans_lloyd", 1),
+    ("docs_perplexity_buckets", "ppl_scores", text, "bigram_logprob", 1),
+    ("emb_ivf_compaction", "ivf_compact", similarity, "ivf_save", 1),
+    ("dedup_incremental_batch", "lsh_store", state, "temp_root", 1),
+]
+# other entries that must serve from the same state without building it
+SHARED_WITH = {"cluster_map": ("dedup_clusters", "docs_curation_pipeline")}
 
-    writes = []
-    real_write = storage.write_bucketed
-    # catalog imports the storage module inside the entry, so patching the
-    # module attribute is what the entry sees
-    monkeypatch.setattr(
-        storage,
-        "write_bucketed",
-        lambda *a, **k: (writes.append(a[1]), real_write(*a, **k))[1],
-    )
-    app = spark.sparkContext.applicationId
-    for key in [k for k in catalog._BUCKETED_TABLES_READY if k[0] == app]:
-        catalog._BUCKETED_TABLES_READY.discard(key)
-    first = _rows(QUERIES["q_bucketed_cokey_join"](spark, SF_A))
-    assert len(writes) == 2, "first invocation writes both bucketed tables"
-    second = _rows(QUERIES["q_bucketed_cokey_join"](spark, SF_A))
-    assert len(writes) == 2, "repeat invocation reuses the existing tables"
-    assert first == second
+
+@pytest.mark.parametrize(
+    "entry, kind, module, fn, per_build", BUILT_ONCE, ids=[c[0] for c in BUILT_ONCE]
+)
+def test_state_built_once_and_reused(spark, monkeypatch, entry, kind, module, fn, per_build):
+    run = _entry(entry)
+    run(spark, SF_A)  # every other kind the entry reads is built outside the count
+    state.clear(spark, kind)
+    calls = _counting(monkeypatch, module, fn)
+    first = _rows(run(spark, SF_A))
+    assert len(calls) == per_build, "the first invocation builds"
+    second = _rows(run(spark, SF_A))
+    assert len(calls) == per_build, "a repeat invocation must reuse, never rebuild"
+    for other in SHARED_WITH.get(kind, ()):
+        _entry(other)(spark, SF_A).count()
+    assert len(calls) == per_build, "sibling entries must reuse, never rebuild"
+    kind_stats = state.stats(spark)[kind]
+    assert kind_stats["builds"] == 1 and kind_stats["hits"] >= 1
+    assert first and first == second
 
 
 def test_bucketed_handle_survives_other_corpus_invocation(spark):
-    """The round-5 hazard: a lazy handle for corpus A, executed AFTER the
-    entry ran for corpus B, must still return corpus A's data."""
+    """A lazy handle for corpus A, executed AFTER the entry ran for corpus
+    B, must still return corpus A's data."""
     handle_a = QUERIES["q_bucketed_cokey_join"](spark, SF_A)
     expected_a = _rows(QUERIES["q_bucketed_cokey_join"](spark, SF_A))
     QUERIES["q_bucketed_cokey_join"](spark, SF_B).collect()
     assert _rows(handle_a) == expected_a
     # and the two corpora genuinely landed in distinct tables
-    digs = {catalog._corpus_digest(SF_A), catalog._corpus_digest(SF_B)}
+    digs = {state.corpus_digest(SF_A), state.corpus_digest(SF_B)}
     assert len(digs) == 2
     tables = {t.name for t in spark.catalog.listTables("tf_bucketed")}
     for d in digs:
         assert f"orders_b_{d}" in tables and f"lineitem_b_{d}" in tables
 
 
-def test_pq_trained_once_per_corpus(spark, monkeypatch):
-    from steampipe_plugin_terraform_spark.operators import similarity
+def test_partitioned_handle_survives_other_corpus_invocation(spark, monkeypatch):
+    """Running the entry for corpus B builds B its own store and must not
+    redirect the still-lazy corpus-A handle."""
+    state.clear(spark, "partitioned_store")
+    handle_a = QUERIES["q_partition_pruned_join"](spark, SF_A)
+    expected_a = _rows(QUERIES["q_partition_pruned_join"](spark, SF_A))
+    writes = _counting(monkeypatch, storage, "write_partitioned")
+    QUERIES["q_partition_pruned_join"](spark, SF_B).collect()
+    assert len(writes) == 1, "a second corpus gets its own store"
+    assert _rows(handle_a) == expected_a
 
-    calls = []
-    real = similarity.pq_codebooks_encode
-    monkeypatch.setattr(
-        catalog.similarity,
-        "pq_codebooks_encode",
-        lambda *a, **k: (calls.append(1), real(*a, **k))[1],
-    )
-    for key in [k for k in catalog._PQ_CACHE if k[0] == spark.sparkContext.applicationId]:
-        catalog._PQ_CACHE.pop(key)
-    first = _rows(QUERIES["emb_pq_topk"](spark, SF_A))
-    assert calls == [1], "first invocation trains the codebooks"
-    second = _rows(QUERIES["emb_pq_topk"](spark, SF_A))
-    assert calls == [1], "second invocation must serve from the cache"
+
+def _assert_restart_is_noop(spark, name, files_glob, kind, data):
+    """Restarting an availableNow drain on the same checkpoint must not
+    rewrite its sink (committed offsets → no new batches) and must return
+    identical rows — the exactly-once restart contract."""
+    first = _rows(_entry(name)(spark, SF_A))
+    sink, _ = catalog._sink_and_checkpoint(spark, SF_A, kind, data)
+    files = sorted(glob.glob(f"{sink}/{files_glob}"))
+    assert files, "the first drain must write to the sink"
+    mtimes = {f: os.path.getmtime(f) for f in files}
+    second = _rows(_entry(name)(spark, SF_A))
     assert first == second
-
-
-def test_zorder_store_written_once_per_corpus(spark, monkeypatch):
-    from steampipe_plugin_terraform_spark.operators import storage
-
-    writes = []
-    real = storage.write_zordered
-    monkeypatch.setattr(
-        storage,
-        "write_zordered",
-        lambda *a, **k: (writes.append(1), real(*a, **k))[1],
-    )
-    for key in [k for k in catalog._ZORDER_CACHE if k[0] == spark.sparkContext.applicationId]:
-        catalog._ZORDER_CACHE.pop(key)
-    first = _rows(QUERIES["q_zorder_pruned_scan"](spark, SF_A))
-    assert writes == [1], "first invocation writes the layout"
-    second = _rows(QUERIES["q_zorder_pruned_scan"](spark, SF_A))
-    assert writes == [1], "second invocation must scan the existing layout"
-    assert first == second
+    assert sorted(glob.glob(f"{sink}/{files_glob}")) == files, "restart must not add files"
+    assert all(os.path.getmtime(f) == mtimes[f] for f in files), "restart must not rewrite"
+    return first
 
 
 def test_foreachbatch_restart_is_noop(spark):
-    """Restarting the availableNow drain on the same checkpoint must not
-    rewrite the sink (committed offsets → no new batches) and must return
-    identical results — the exactly-once restart contract."""
-    import glob
-    import os
-
-    for key in [k for k in catalog._FOREACHBATCH_CACHE if k[0] == spark.sparkContext.applicationId]:
-        catalog._FOREACHBATCH_CACHE.pop(key)
-    first = _rows(QUERIES["stream_foreachbatch_sink"](spark, SF_A))
-    sink, _ = next(
-        v for k, v in catalog._FOREACHBATCH_CACHE.items()
-        if k[0] == spark.sparkContext.applicationId
+    state.clear(spark, "febatch_sink")
+    _assert_restart_is_noop(
+        spark, "stream_foreachbatch_sink", "batch_id=*/*.parquet", "febatch_sink", "data"
     )
-    files = sorted(glob.glob(sink + "/batch_id=*/*.parquet"))
-    mtimes = {f: os.path.getmtime(f) for f in files}
-    second = _rows(QUERIES["stream_foreachbatch_sink"](spark, SF_A))
-    assert first == second
-    files2 = sorted(glob.glob(sink + "/batch_id=*/*.parquet"))
-    assert files2 == files, "restart must not add or rewrite batch dirs"
-    assert all(os.path.getmtime(f) == mtimes[f] for f in files)
-
-
-def test_partitioned_store_written_once_and_corpus_safe(spark, monkeypatch):
-    from steampipe_plugin_terraform_spark.operators import storage
-
-    writes = []
-    real_write = storage.write_partitioned
-    monkeypatch.setattr(
-        storage,
-        "write_partitioned",
-        lambda *a, **k: (writes.append(a[1]), real_write(*a, **k))[1],
-    )
-    app = spark.sparkContext.applicationId
-    for key in [k for k in catalog._PARTITIONED_CACHE if k[0] == app]:
-        catalog._PARTITIONED_CACHE.pop(key)
-    first = _rows(QUERIES["q_partition_pruned_join"](spark, SF_A))
-    assert len(writes) == 1, "first invocation writes the partitioned store"
-    handle_a = QUERIES["q_partition_pruned_join"](spark, SF_A)
-    assert len(writes) == 1, "repeat invocation reuses the store"
-    # corpus isolation: running the entry for corpus B must not redirect
-    # the still-lazy corpus-A handle (per-corpus store roots)
-    QUERIES["q_partition_pruned_join"](spark, SF_B).collect()
-    assert len(writes) == 2
-    assert _rows(handle_a) == first
-
-
-def test_cluster_map_computed_once_per_corpus(spark, monkeypatch):
-    """dedup_clusters / docs_curation_pipeline / dedup_golden_record share
-    one per-corpus minhash→CC chain: the second consumer must reuse the
-    persisted map, never re-run the pair mining."""
-    import steampipe_plugin_terraform_spark.catalog as cat
-    from steampipe_plugin_terraform_spark.operators import dedup
-
-    cat._CLUSTER_MAP_CACHE.clear()
-    calls = {"n": 0}
-    real = dedup.minhash_lsh_pairs
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(dedup, "minhash_lsh_pairs", counting)
-    sf = "/root/testdata/sf0.001"
-    n1 = cat.QUERIES["dedup_clusters"](spark, sf).count()
-    n2 = cat.QUERIES["dedup_golden_record"](spark, sf).count()
-    n3 = cat.QUERIES["docs_curation_pipeline"](spark, sf).count()
-    assert n1 > 0 and n2 >= 0 and n3 >= 0
-    assert calls["n"] == 1, f"pair mining ran {calls['n']} times, want 1"
-
-
-def test_two_level_index_built_once_per_corpus(spark, monkeypatch):
-    """The staged emb_two_level_topk entry's _TWO_LEVEL_CACHE must reuse
-    the grouped-Lloyd index on repeat invocations — a regression that
-    drops the cache check would silently re-run both Lloyd levels every
-    driver/parity call (r8 review finding: this was the one session
-    cache without a reuse pin)."""
-    import steampipe_plugin_terraform_spark.catalog as cat
-    from steampipe_plugin_terraform_spark.operators import similarity
-
-    cat._TWO_LEVEL_CACHE.clear()
-    calls = {"n": 0}
-    real = similarity.kmeans_two_level
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(similarity, "kmeans_two_level", counting)
-    sf = "/root/testdata/sf0.001"
-    n1 = cat.QUERIES["emb_two_level_topk"](spark, sf).count()
-    n2 = cat.QUERIES["emb_two_level_topk"](spark, sf).count()
-    assert n1 > 0 and n1 == n2
-    assert calls["n"] == 1, f"two-level build ran {calls['n']} times, want 1"
-
-
-def test_ivf_incremental_base_built_once_per_corpus(spark, monkeypatch):
-    """The emb_ivf_incremental_topk entry's _IVF_INCR_CACHE must
-    reuse the base-slice Lloyd index on repeat invocations — rebuilding
-    it per call would silently turn the incremental-ingest entry into a
-    retrain-per-query (exactly what it exists to avoid)."""
-    import steampipe_plugin_terraform_spark.catalog as cat
-    from steampipe_plugin_terraform_spark.operators import similarity
-
-    cat._IVF_INCR_CACHE.clear()
-    calls = {"n": 0}
-    real = similarity.kmeans_lloyd
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(similarity, "kmeans_lloyd", counting)
-    sf = "/root/testdata/sf0.001"
-    n1 = cat.QUERIES["emb_ivf_incremental_topk"](spark, sf).count()
-    n2 = cat.QUERIES["emb_ivf_incremental_topk"](spark, sf).count()
-    assert n1 > 0 and n1 == n2
-    assert calls["n"] == 1, f"base Lloyd ran {calls['n']} times, want 1"
-
-
-def test_ppl_scores_built_once_per_corpus(spark, monkeypatch):
-    """The docs_perplexity_buckets entry's _PPL_SCORE_CACHE must
-    reuse the persisted per-doc NLL frame on repeat invocations — the
-    bigram-LM chain is the entry's entire cost, and rebuilding it per
-    call (or once per pass) is exactly what the persist exists to
-    avoid."""
-    import steampipe_plugin_terraform_spark.catalog as cat
-    from steampipe_plugin_terraform_spark.operators import text as text_ops
-
-    cat._PPL_SCORE_CACHE.clear()
-    calls = {"n": 0}
-    real = text_ops.bigram_logprob
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(text_ops, "bigram_logprob", counting)
-    # the catalog imported `text` as a module attribute — patch there too
-    monkeypatch.setattr(cat.text, "bigram_logprob", counting)
-    sf = "/root/testdata/sf0.001"
-    n1 = cat.QUERIES["docs_perplexity_buckets"](spark, sf).count()
-    n2 = cat.QUERIES["docs_perplexity_buckets"](spark, sf).count()
-    assert n1 > 0 and n1 == n2
-    assert calls["n"] == 1, f"LM chain built {calls['n']} times, want 1"
 
 
 def test_cdc_upsert_restart_is_noop(spark):
-    """stream_cdc_last_value reuses its checkpoint + state root per
-    (session, corpus): a repeat invocation restarts the drain over
-    committed offsets (no new batches), writes NO new state versions,
-    rewrites none of the existing ones, and serves identical rows —
-    the same exactly-once restart contract the foreachBatch sink pins."""
-    import glob
-    import os
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    for key in [
-        k
-        for k in catalog._CDC_SINK_CACHE
-        if k[0] == spark.sparkContext.applicationId
-    ]:
-        catalog._CDC_SINK_CACHE.pop(key)
-    first = _rows(STAGED_QUERIES["stream_cdc_last_value"](spark, SF_A))
-    state_root, _ = next(
-        v
-        for k, v in catalog._CDC_SINK_CACHE.items()
-        if k[0] == spark.sparkContext.applicationId
-    )
-    files = sorted(glob.glob(state_root + "/v=*/*.parquet"))
-    assert files, "first drain must materialize a state version"
-    mtimes = {f: os.path.getmtime(f) for f in files}
-    second = _rows(STAGED_QUERIES["stream_cdc_last_value"](spark, SF_A))
-    assert first == second
-    files2 = sorted(glob.glob(state_root + "/v=*/*.parquet"))
-    assert files2 == files, "restart must not add or rewrite state versions"
-    assert all(os.path.getmtime(f) == mtimes[f] for f in files)
-
-
-def test_ivf_compacted_store_written_once_per_corpus(spark, monkeypatch):
-    """The staged emb_ivf_compaction entry's _IVF_COMPACT_CACHE must
-    reuse the compacted store on repeat invocations — re-running the
-    rewrite per call would turn the one-time-IO compaction job into a
-    rewrite-per-query (exactly the cost model the entry exists to
-    demonstrate the opposite of)."""
-    import steampipe_plugin_terraform_spark.catalog as cat
-    from steampipe_plugin_terraform_spark.operators import similarity
-
-    app = spark.sparkContext.applicationId
-    for key in [k for k in cat._IVF_COMPACT_CACHE if k[0] == app]:
-        cat._IVF_COMPACT_CACHE.pop(key)
-    sf = "/root/testdata/sf0.001"
-    cat._ivf_store_path(spark, sf)  # base store outside the counted region
-    calls = {"n": 0}
-    real = similarity.ivf_save
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(similarity, "ivf_save", counting)
-    n1 = cat.STAGED_QUERIES["emb_ivf_compaction"](spark, sf).count()
-    n2 = cat.STAGED_QUERIES["emb_ivf_compaction"](spark, sf).count()
-    assert n1 > 0 and n1 == n2
-    assert calls["n"] == 1, f"compaction rewrite ran {calls['n']} times, want 1"
-
-
-def test_lsh_store_written_once_per_corpus(spark, monkeypatch):
-    """The dedup_incremental_batch entry's _LSH_STORE_CACHE must
-    reuse the corpus LSH store on repeat invocations — rebuilding it
-    per ingest would re-tokenize the whole corpus per batch, exactly
-    the cost the store exists to avoid."""
-    import steampipe_plugin_terraform_spark.catalog as cat
-
-    app = spark.sparkContext.applicationId
-    for key in [k for k in cat._LSH_STORE_CACHE if k[0] == app]:
-        cat._LSH_STORE_CACHE.pop(key)
-    calls = {"n": 0}
-    real = cat._t
-
-    def counting(*a, **kw):
-        if a[2:3] == ("documents",) or kw.get("name") == "documents":
-            calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(cat, "_t", counting)
-    sf = "/root/testdata/sf0.001"
-    n1 = cat.QUERIES["dedup_incremental_batch"](spark, sf).count()
-    n2 = cat.QUERIES["dedup_incremental_batch"](spark, sf).count()
-    assert n1 > 0 and n1 == n2
-    # 1 store build + 1 per-entry batch read per invocation = 3 reads,
-    # never 4 (a rebuild would add a second store-build read)
-    assert calls["n"] == 3, f"documents loaded {calls['n']} times, want 3"
+    """stream_cdc_last_value: a repeat invocation writes NO new state
+    versions, rewrites none of the existing ones, and serves identical rows."""
+    state.clear(spark, "cdc_upsert")
+    _assert_restart_is_noop(spark, "stream_cdc_last_value", "v=*/*.parquet", "cdc_upsert", "state")
 
 
 def test_stream_incremental_dedup_restart_noop_and_batch_identity(spark):
-    """The streaming ingest-dedup leg: (a) restarting the availableNow
-    drain on the same checkpoint rewrites nothing (committed offsets →
-    no new batch dirs, untouched mtimes) and returns identical rows —
-    the exactly-once contract of the foreachBatch sink device; (b) the
-    drained verdict set equals the one-shot batch entry's result row
-    for row (the stream≡batch identity the frozen store guarantees:
-    every new doc's probe is batching-independent)."""
-    import glob
-    import os
-
-    from steampipe_plugin_terraform_spark import catalog
-
-    sf = SF_A
-    first = _rows(catalog.STAGED_QUERIES["stream_incremental_dedup"](spark, sf))
-    sink, _ = next(
-        v for k, v in catalog._STREAM_DEDUP_CACHE.items()
-        if k[0] == spark.sparkContext.applicationId
+    """The streaming ingest-dedup leg restarts as a no-op, and its drained
+    verdict set equals the one-shot batch entry's result row for row (the
+    frozen store makes every new doc's probe batching-independent)."""
+    first = _assert_restart_is_noop(
+        spark, "stream_incremental_dedup", "batch_id=*/*.parquet", "stream_dedup", "verdicts"
     )
-    files = sorted(glob.glob(sink + "/batch_id=*/*.parquet"))
-    assert files, "drain wrote no batch dirs"
-    mtimes = {f: os.path.getmtime(f) for f in files}
-    second = _rows(catalog.STAGED_QUERIES["stream_incremental_dedup"](spark, sf))
-    assert first == second
-    files2 = sorted(glob.glob(sink + "/batch_id=*/*.parquet"))
-    assert files2 == files, "restart must not add or rewrite batch dirs"
-    assert all(os.path.getmtime(f) == mtimes[f] for f in files)
-    batch = _rows(catalog.QUERIES["dedup_incremental_batch"](spark, sf))
-    assert sorted(first) == sorted(batch)
+    assert first == _rows(QUERIES["dedup_incremental_batch"](spark, SF_A))
 
 
 def test_table_reads_are_plan_cached_never_data_cached(spark):
-    """r15: catalog._t caches the prepared scan DataFrame per
-    (appId, sf_dir, name) — repeat invocations reuse the resolved file
-    listing + footer schema (the guide-§6 metadata cache) but the plan
-    must stay UNPERSISTED: every execution re-reads the parquet bytes."""
-    from steampipe_plugin_terraform_spark import catalog as cat
-
-    a = cat._t(spark, SF_A, "lineitem")
-    b = cat._t(spark, SF_A, "lineitem")
+    """catalog._t caches the prepared scan DataFrame per (corpus, table):
+    repeat invocations reuse the resolved file listing + footer schema,
+    but the plan stays unpersisted — every execution re-reads the bytes."""
+    a = catalog._t(spark, SF_A, "lineitem")
+    b = catalog._t(spark, SF_A, "lineitem")
     assert a is b, "repeat _t calls must hit the session plan cache"
     lvl = a.storageLevel
     assert not (lvl.useMemory or lvl.useDisk), "cached plan must not persist data"
     # distinct corpora never share a cache slot
-    c = cat._t(spark, "/root/testdata/sf0.01", "lineitem")
+    c = catalog._t(spark, SF_B, "lineitem")
     assert c is not a
 
 
 def test_minhash_posting_base_one_checkpoint_per_corpus(spark):
-    """r16: the shared (id, n_sh, s, h) posting checkpoint behind the
-    minhash family is session-cached per (appId, corpus, n) — repeat
-    invocations (and sibling entries) reuse ONE materialized RDD
-    instead of parking a fresh ~70 MB checkpoint in executor storage
-    per pass (the unbounded within-session accumulation the bench
-    session exhibited). appId-keyed like every serving-state cache —
-    rebuilt every run, never cross-run."""
-    from steampipe_plugin_terraform_spark import catalog as cat
-    from steampipe_plugin_terraform_spark.operators import dedup
-
-    dedup._BASE_CACHE.clear()
-    docs = cat._t(spark, SF_A, "documents")
+    """The posting checkpoint behind the minhash family is one RDD per
+    corpus per session, shared by repeat invocations and sibling entries."""
+    state.clear(spark, "minhash_base")
+    docs = catalog._t(spark, SF_A, "documents")
     a = dedup._minhash_posting_base(docs, "doc_id", "text", 5)
     b = dedup._minhash_posting_base(docs, "doc_id", "text", 5)
     assert a is b, "repeat base builds must hit the session cache"
-    keys = list(dedup._BASE_CACHE)
-    assert len(keys) == 1 and keys[0][0] == spark.sparkContext.applicationId
+    assert state.stats(spark)["minhash_base"] == {"entries": 1, "builds": 1, "hits": 1}
     # a different corpus gets its own slot, never a shared one
-    other = cat._t(spark, "/root/testdata/sf0.01", "documents")
+    other = catalog._t(spark, SF_B, "documents")
     c = dedup._minhash_posting_base(other, "doc_id", "text", 5)
-    assert c is not a and len(dedup._BASE_CACHE) == 2
+    assert c is not a and state.stats(spark)["minhash_base"]["entries"] == 2
+
+
+def test_clear_drops_session_state_and_rebuilds(spark, monkeypatch):
+    QUERIES["q_zorder_pruned_scan"](spark, SF_A)
+    assert "zorder_store" in state.stats(spark)
+    state.clear(spark)
+    assert state.stats(spark) == {}
+    writes = _counting(monkeypatch, storage, "write_zordered")
+    QUERIES["q_zorder_pruned_scan"](spark, SF_A).collect()
+    assert writes == [1], "the call after a clear rebuilds"
+    assert state.stats(spark)["zorder_store"] == {"entries": 1, "builds": 1, "hits": 0}
+
+
+def test_failed_build_stores_nothing(spark):
+    def fail():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        state.get(spark, "probe", SF_A, fail)
+    assert "probe" not in state.stats(spark)
+    assert state.get(spark, "probe", SF_A, lambda: 42) == 42, "the next call builds"
+    state.clear(spark, "probe")
+
+
+def _frames(value):
+    if isinstance(value, DataFrame):
+        yield value
+    elif isinstance(value, (tuple, list)):
+        for v in value:
+            yield from _frames(v)
+
+
+def test_registry_holds_nothing_in_the_cache_manager(spark):
+    """After every state-using entry has run, no DataFrame the registry
+    holds is persisted: checkpoints and plans only, so no entry's plan can
+    be rewritten by another entry's cached subtree."""
+    state_entries = [c[0] for c in BUILT_ONCE] + [
+        "emb_ivf_pq_topk",
+        "emb_cluster_balanced_sample",
+        "emb_centroid_drift",
+        "dedup_minhash_lsh",
+        "stream_foreachbatch_sink",
+        "stream_cdc_last_value",
+        "stream_incremental_dedup",
+    ]
+    for name in state_entries:
+        _entry(name)(spark, SF_A)
+    app = spark.sparkContext.applicationId
+    held = [df for (a, _, _), v in state._ENTRIES.items() if a == app for df in _frames(v)]
+    kinds = {k for (a, k, _), v in state._ENTRIES.items() if a == app and any(_frames(v))}
+    assert {"table", "kmeans", "pq", "cluster_map", "ppl_scores", "minhash_base"} <= kinds
+    for df in held:
+        lvl = df.storageLevel
+        assert not (lvl.useMemory or lvl.useDisk), lvl
+
+
+def test_temp_root_removed_at_interpreter_exit():
+    code = (
+        "import os; from steampipe_plugin_terraform_spark import state; "
+        "root = state.temp_root('tf_state_test_'); "
+        "open(os.path.join(root, 'f'), 'w').write('x'); "
+        "print(root, os.path.isfile(os.path.join(root, 'f')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True,
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+    ).stdout.split()
+    assert out[1] == "True", "the directory existed while the process ran"
+    assert not os.path.exists(out[0]), "the directory is removed at exit"

@@ -2195,18 +2195,14 @@ def test_stream_norm_buckets_monitor_drained_report_shape(spark):
 
 
 def test_cluster_size_buckets_reads_shared_map(spark):
-    # the entry ROLLS UP the persisted session cluster map
-    # (InMemoryTableScan — reused, not rebuilt: no Generate/joins from
+    # the entry ROLLS UP the checkpointed session cluster map
+    # (Scan ExistingRDD — reused, not rebuilt: no Generate/joins from
     # the LSH chain appear); past the map it is cluster-keyed count →
     # bucket agg → the share window over the post-agg bucket spine
     from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
 
-    # (the InMemoryTableScan may print its cached LSH subtree inline
-    # when the map is not yet materialized in this session — joins
-    # inside that subtree belong to the map build, so only the
-    # roll-up-stage properties are pinned here)
     plan = _plan_df(STAGED_QUERIES["dedup_cluster_size_buckets"](spark, SF))
-    assert plan.count("InMemoryTableScan") == 1
+    assert plan.count("Scan ExistingRDD") == 1
     assert plan.count("Window") == 1
     assert plan.count("Exchange SinglePartition") == 1
     for node in ("CartesianProduct", "BatchEvalPython"):
@@ -2227,15 +2223,13 @@ def test_stream_simpson_monitor_drained_report_shape(spark):
 
 
 def test_rate_by_source_reads_shared_map(spark):
-    # rolls up the persisted session cluster map (InMemoryTableScan —
+    # rolls up the checkpointed session cluster map (Scan ExistingRDD —
     # reused, not rebuilt) joined to the pruned (doc_id, source)
     # projection; no window, no global stage, no cartesian, no Python
-    # (joins inside the cached subtree's printout belong to the map
-    # build — only roll-up-stage properties are pinned)
     from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
 
     plan = _plan_df(STAGED_QUERIES["dedup_rate_by_source"](spark, SF))
-    assert plan.count("InMemoryTableScan") == 1
+    assert plan.count("Scan ExistingRDD") == 1
     for node in ("CartesianProduct", "BatchEvalPython", "Window",
                  "Exchange SinglePartition"):
         assert node not in plan
