@@ -1,6 +1,6 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test test-order parity-sf001 parity-sf01 bench perf-ingest perf-query perf-catalog
+.PHONY: test test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
@@ -26,6 +26,10 @@ parity-sf01:
 
 bench:
 	python bench.py
+
+# Line count of the package plus tests: the measure "less code" is judged by.
+loc:
+	@git ls-files steampipe_plugin_terraform_spark tests | grep '\.py$$' | xargs cat | wc -l
 
 # Terraform ingest benchmark at one seed: end-to-end metrics untraced, then
 # the per-layer split traced (see perfbench/run.py).

@@ -5655,8 +5655,6 @@ def docs_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.winnow_fingerprints(_t(spark, sf_dir, "documents"), k=8, w=4)
 
 
-
-
 @query(
     "dedup_jaccard_pairs",
     oracle=_SHINGLE_CTE
@@ -6973,7 +6971,6 @@ def _stop_stream(spark: SparkSession, name: str) -> None:
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-
 
 
 def _stream_state_partitions(spark: SparkSession, source_path: str) -> int | None:
@@ -8985,21 +8982,15 @@ def tf_untagged_resources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGING AREA (standing workflow since r8): new entries are drafted as
-# FULL entries (Spark implementation + DuckDB oracle) registered into
-# STAGED_QUERIES/STAGED_ORACLES instead of QUERIES/ORACLES, so the driver
-# surface only grows deliberately while the code is already parity-tested
-# (tests/test_staged_entries.py runs the exact driver compare at sf0.001,
-# and at sf0.01 under SPARK_GRAFT_TEST_SF_DIR like the main sweep), plan-
-# pinned (tests/test_plan_shapes.py), and covered by the anti-pattern
-# scan. Promotion = change ``@staged_query`` to ``@query``, add the name
-# to the FRONT of ``__spark_entry__._VALIDATE_FIRST`` (new entries sort
-# before all checked ones — enforced by tests/test_rotation) and a row to
-# docs/OPERATORS.md's main table. Keep net-new promotions per round ≤
-# 50 − forced-rotation slots so the validation horizon never reopens.
-# The four r8-staged entries (emb_two_level_topk, tf_config_state_drift,
-# q_user_scd2_merge, q_quantile_logsketch) were promoted in r9 after
-# CORRECTNESS_r08 landed 50/50 green; they live below under @query.
+# STAGING AREA: drafts below are FULL entries (Spark implementation +
+# DuckDB oracle) registered into STAGED_QUERIES/STAGED_ORACLES instead of
+# QUERIES/ORACLES, so they stay off the driver surface while
+# tests/test_staged_entries.py parity-runs them (sf0.001, and sf0.01 under
+# SPARK_GRAFT_TEST_SF_DIR), tests/test_plan_shapes.py pins their plans and
+# the anti-pattern scan covers them. No new drafts are added. Promotion =
+# change ``@staged_query`` to ``@query``, add the name to the FRONT of
+# ``__spark_entry__._VALIDATE_FIRST`` (enforced by tests/test_rotation)
+# and move its docs/OPERATORS.md row into the main table.
 # ---------------------------------------------------------------------------
 
 STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -9717,8 +9708,6 @@ def stream_quantile_logsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # Token regexes for the unused-declaration audits, as SQL-string
 # literals (regexp_extract_all sees `var\\.` -> regex `var\.`, a
 # LITERAL dot — tests/test_unused_decls.py pins exactly these constants
@@ -9917,7 +9906,6 @@ def docs_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 @query(
     "tf_resource_reference_graph",
     # golden edges from the dedicated corpus. Pinned behaviors: cross-file
@@ -9992,7 +9980,6 @@ def tf_resource_reference_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src_address", "dst_address")
         .agg(F.count("*").cast("long").alias("n_refs"))
     )
-
 
 
 @query(
@@ -12040,11 +12027,9 @@ def emb_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the chain below reuses the dedup_clusters minhash→CC CTEs (same shared
 # _SHINGLE_CTE/_MINHASH_CAND_CTE constants); `csz` avoids the chain's own
 # `sz` (shingle sizes) CTE name
-# shared prefix: the full minhash→LSH→verify→CC chain down to the
-# per-cluster size frame `csz` (and the doc-level map `alln`) — the
-# rate report and the size-bucket histogram both roll up from here, so
-# the replayed chain exists once
-_DEDUP_CSZ_PREFIX = (
+# the full minhash→LSH→verify→CC chain down to the per-cluster size frame
+# `csz` (and the doc-level map `alln`), then the one-row rate report
+_DEDUP_RATE_SQL = (
     "WITH RECURSIVE "
     + _SHINGLE_CTE.split("WITH", 1)[1]
     + """,
@@ -12062,12 +12047,7 @@ _DEDUP_CSZ_PREFIX = (
     comp AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id FROM reach GROUP BY a),
     alln AS (SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) cid
              FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-    csz AS (SELECT cid, CAST(count(*) AS BIGINT) n FROM alln GROUP BY cid)"""
-)
-
-_DEDUP_RATE_SQL = (
-    _DEDUP_CSZ_PREFIX
-    + """,
+    csz AS (SELECT cid, CAST(count(*) AS BIGINT) n FROM alln GROUP BY cid),
     tot AS (SELECT CAST(count(*) AS BIGINT) nd FROM alln),
     agg AS (SELECT CAST(count(*) AS BIGINT) nc, CAST(max(n) AS BIGINT) mx FROM csz)
     SELECT tot.nd AS n_docs, agg.nc AS n_clusters,
@@ -12173,164 +12153,12 @@ def tf_moved_blocks_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# r16/r17 candidate wave (drafted in r11): same ⧖O contract — full Spark +
-# oracle, parity-run at both SFs, plan-pinned, independent non-oracle check
-# in tests/test_staged_independent.py, promoted only when a future round's
-# budget opens.
-# ---------------------------------------------------------------------------
-
-
-@staged_query(
-    "q_supplier_hhi",
-    # share_bp = rev·10⁴ DIV nation_rev on POSITIVE integers (truncation
-    # ≡ floor — the integer-division-parity device); HUGEINT headroom on
-    # the DuckDB side for the ·10⁴ product and the Σ share² sum, CAST
-    # back to BIGINT (hhi ≤ 10⁸ by construction: Σ share_bp ≤ 10⁴)
-    oracle="""
-    WITH srev AS (
-      SELECT s.s_nationkey, l.l_suppkey,
-             CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount)
-                                 * 100 + 0.5) AS BIGINT)) AS BIGINT) rev_cents
-      FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      GROUP BY 1, 2),
-    ntot AS (
-      SELECT s_nationkey,
-             CAST(sum(rev_cents) AS BIGINT) nation_rev_cents,
-             CAST(count(*) AS BIGINT) n_suppliers
-      FROM srev GROUP BY 1),
-    shares AS (
-      SELECT r.s_nationkey, t.n_suppliers, t.nation_rev_cents,
-             CAST((r.rev_cents::HUGEINT * 10000) // t.nation_rev_cents
-                  AS BIGINT) share_bp
-      FROM srev r JOIN ntot t USING (s_nationkey))
-    SELECT n.n_name, sh.n_suppliers, sh.nation_rev_cents,
-           CAST(sum(sh.share_bp::HUGEINT * sh.share_bp) AS BIGINT) AS hhi_bp2
-    FROM shares sh JOIN nation n ON n.n_nationkey = sh.s_nationkey
-    GROUP BY 1, 2, 3
-    """,
-)
-def q_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl–Hirschman concentration index of supplier revenue per
-    nation — the market-concentration member of the integer-exact
-    statistics family (χ², Gini, Pareto, entropy): per-supplier revenue
-    snaps to cents, each supplier's national share lands on the
-    basis-point grid via share_bp = rev·10⁴ DIV nation_rev (positive
-    integers, so Spark DIV ≡ DuckDB // ≡ floor), and the nation's HHI
-    is Σ share_bp² — 10⁸ = monopoly, →0 = atomized. No float division
-    anywhere; the only IEEE step is the shared cents snap.
-
-    Scale: supplier is a dim — the lineitem→supplier join broadcasts;
-    the single data shuffle is the keyed partial agg to (nation,
-    supplier) grain (~|suppliers| rows). The nation totals come from a
-    window over THAT agg-sized frame partitioned by nation (keyed, no
-    single-partition stage), and the final HHI regroup is nation-sized.
-    Scan prunes to (l_suppkey, l_extendedprice, l_discount)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_suppkey",
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)"
-            " AS BIGINT)"
-        ).alias("cents"),
-    )
-    s = F.broadcast(
-        _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    )
-    n = F.broadcast(
-        _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    )
-    srev = (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy("s_nationkey", "l_suppkey")
-        .agg(F.sum("cents").cast("long").alias("rev_cents"))
-    )
-    w = Window.partitionBy("s_nationkey")
-    shares = (
-        srev.withColumn("nation_rev_cents", F.sum("rev_cents").over(w))
-        .withColumn("n_suppliers", F.count("*").over(w))
-        .withColumn(
-            "share_bp",
-            F.expr(
-                "CAST(CAST(rev_cents AS DECIMAL(38,0)) * 10000"
-                " DIV nation_rev_cents AS BIGINT)"
-            ),
-        )
-    )
-    return (
-        shares.groupBy("s_nationkey", "n_suppliers", "nation_rev_cents")
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(share_bp AS DECIMAL(38,0)) * share_bp)"
-                " AS BIGINT)"
-            ).alias("hhi_bp2")
-        )
-        .join(n, F.col("s_nationkey") == n.n_nationkey)
-        .select("n_name", "n_suppliers", "nation_rev_cents", "hhi_bp2")
-    )
-
-
 # floor(log10(1 + 1/d)·10⁶) for d = 1..9 — fixed public math, literal on
 # BOTH sides so no cross-engine log evaluation ever happens
 _BENFORD_E6 = [301029, 176091, 124938, 96910, 79181, 66946, 57991, 51152, 45757]
 _BENFORD_CASE = "CASE digit " + " ".join(
     f"WHEN {d} THEN {v}" for d, v in enumerate(_BENFORD_E6, start=1)
 ) + " END"
-
-
-@staged_query(
-    "q_orders_benford",
-    # observed share on the millionths grid via cnt·10⁶ DIV total
-    # (positive ints — truncation ≡ floor on both engines); the Benford
-    # expectation is a 9-constant literal CASE, identical on both sides
-    oracle=f"""
-    WITH c AS (SELECT CAST(substring(CAST(CAST(floor(o_totalprice * 100
-                            + 0.5) AS BIGINT) AS VARCHAR), 1, 1) AS INT) digit
-               FROM orders),
-    d AS (SELECT digit, CAST(count(*) AS BIGINT) n FROM c GROUP BY 1),
-    t AS (SELECT digit, n, CAST(sum(n) OVER () AS BIGINT) total FROM d)
-    SELECT digit, n,
-           CAST((n::HUGEINT * 1000000) // total AS BIGINT) AS obs_e6,
-           CAST({_BENFORD_CASE} AS BIGINT) AS benford_e6,
-           CAST((n::HUGEINT * 1000000) // total
-                - {_BENFORD_CASE} AS BIGINT) AS dev_e6
-    FROM t
-    """,
-)
-def q_orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-significant-digit distribution of order totals against
-    Benford's law — the data-quality screen auditors run on financial
-    columns (synthetic or hand-keyed values flunk it; organic
-    multiplicative ones pass). The total snaps to cents, the leading
-    digit comes from the decimal string (identical on both engines for
-    positive integers), observed shares land on the millionths grid via
-    n·10⁶ DIV total, and the Benford expectation floor(log10(1+1/d)·10⁶)
-    is a nine-constant literal CASE — no log evaluated in either engine,
-    so the deviation column is integer-exact.
-
-    Scale: one scan pruned to o_totalprice, one keyed partial agg to the
-    9-row digit frame; the grand-total window runs over those 9 rows —
-    the documented post-agg-tiny-frame exemption. n·10⁶ needs DECIMAL/
-    HUGEINT headroom past ~9·10¹² rows; both sides carry it."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "CAST(substring(CAST(CAST(floor(o_totalprice * 100 + 0.5)"
-            " AS BIGINT) AS STRING), 1, 1) AS INT)"
-        ).alias("digit")
-    )
-    d = o.groupBy("digit").agg(F.count("*").cast("long").alias("n"))
-    t = d.withColumn("total", F.sum("n").over(Window.partitionBy()))
-    return t.select(
-        "digit",
-        "n",
-        F.expr(
-            "CAST(CAST(n AS DECIMAL(38,0)) * 1000000 DIV total AS BIGINT)"
-        ).alias("obs_e6"),
-        F.expr(f"CAST({_BENFORD_CASE} AS BIGINT)").alias("benford_e6"),
-        F.expr(
-            "CAST(CAST(n AS DECIMAL(38,0)) * 1000000 DIV total"
-            f" - {_BENFORD_CASE} AS BIGINT)"
-        ).alias("dev_e6"),
-    )
 
 
 @staged_query(
@@ -12355,10 +12183,9 @@ def q_orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_benford_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford drift monitor AS A STREAM — the production form of the
-    batch entry (`q_orders_benford`): a fraud/quality dashboard keeps a
-    running first-digit histogram per event type and alarms when the
-    deviation drifts. The running state is the (type, digit) count
+    """Benford drift monitor AS A STREAM: a fraud/quality dashboard
+    keeps a running first-digit histogram per event type and alarms
+    when the deviation drifts. The running state is the (type, digit) count
     table — ≤ #types × 9 longs regardless of stream length, so no
     watermark is needed (state cannot grow past the digit space); each
     micro-batch's counts ADD into state exactly like batch partial
@@ -12635,138 +12462,6 @@ def emb_ivf_delete_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @staged_query(
-    "dedup_containment_pairs",
-    # the oracle replays the whole posting-list pipeline over STRING
-    # shingles (the Spark side keys on xxhash64 of the shingle — the
-    # documented 1e-8-grade collision equivalence every shingle-family
-    # oracle already rides); containment on the basis-point grid via
-    # positive-int floor division
-    oracle=_SHINGLE_CTE
-    + """
-    SELECT s.id_a, s.id_b,
-           CAST((s.c * 10000) // least(x.n, y.n) AS BIGINT)
-             AS containment_bp,
-           CASE WHEN x.n < y.n OR (x.n = y.n AND s.id_a < s.id_b)
-                THEN s.id_a ELSE s.id_b END AS contained_id
-    FROM shared s JOIN sz x ON s.id_a = x.doc_id
-                  JOIN sz y ON s.id_b = y.doc_id
-    WHERE (s.c * 10000) // least(x.n, y.n) >= 9000
-    """,
-)
-def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ASYMMETRIC near-dup pairs by shingle containment — the quote/
-    excerpt/boilerplate-wrapper detector the symmetric members of the
-    dedup family dilute: a 200-word doc fully embedded in a 2000-word
-    doc has Jaccard ≈ 0.1 (invisible at any sane threshold) but
-    containment 1.0. Curation pipelines treat these differently from
-    mutual near-dups — the contained doc is the redundant one, so the
-    entry names it (`contained_id`: the smaller shingle set, id_a on
-    ties) rather than leaving the drop choice to the caller.
-
-    Scale: the SAME posting-list trunk as the jaccard entry
-    (`dedup._shared_pairs_with_sizes` — one groupBy shuffle of 8-byte
-    shingle hashes, df-capped so a boilerplate shingle cannot go
-    quadratic, chunked pair emission bounding per-row memory at O(n));
-    the score is shared·10⁴ DIV min(n_a, n_b) on positive ints, exact
-    on both engines. No new corpus pass: an engine running both dedup
-    flavors shares the shingle/posting stages wholesale."""
-    return dedup.shingle_containment_pairs(
-        _t(spark, sf_dir, "documents"), n=5, threshold_bp=9000, df_max=10_000
-    )
-
-
-@staged_query(
-    "q_lineitem_gamma_correlation",
-    # Goodman–Kruskal gamma instead of Kendall tau-b: gamma's
-    # denominator is C+D (no square root), so the whole statistic stays
-    # on the integer grid — conc_share_e6 = C·10⁶ DIV (C+D) on positive
-    # ints, and gamma_e6 ≡ 2·conc_share_e6 − 10⁶ (the SAME snap on both
-    # sides, avoiding a signed division whose floor/truncate semantics
-    # would need the positivity-offset device); HUGEINT pair products
-    oracle="""
-    WITH cells AS (
-      SELECT CAST(l_quantity AS BIGINT) x,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-               // 1000000 y,
-             CAST(count(*) AS BIGINT) n
-      FROM lineitem GROUP BY 1, 2),
-    pairs AS (
-      SELECT CAST(sum(CASE WHEN b.y > a.y THEN a.n::HUGEINT * b.n END)
-                  AS BIGINT) c_pairs,
-             CAST(sum(CASE WHEN b.y < a.y THEN a.n::HUGEINT * b.n END)
-                  AS BIGINT) d_pairs
-      FROM cells a JOIN cells b ON b.x > a.x AND b.y <> a.y)
-    SELECT c_pairs, d_pairs,
-           CAST((c_pairs::HUGEINT * 1000000) // (c_pairs + d_pairs)
-                AS BIGINT) AS conc_share_e6,
-           CAST(2 * ((c_pairs::HUGEINT * 1000000) // (c_pairs + d_pairs))
-                - 1000000 AS BIGINT) AS gamma_e6
-    FROM pairs
-    """,
-)
-def q_lineitem_gamma_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordinal association between quantity and price band — Goodman–
-    Kruskal gamma via the CONTINGENCY-GRID device: a naive Kendall
-    correlation compares all N² row pairs, but over two ordinal axes
-    the concordant/discordant pair counts are grid algebra — C = Σ
-    n_xy·n_x'y' over cell pairs with both axes increasing, D with axes
-    opposed — so after ONE keyed agg to the (quantity × $10k-band)
-    grid (~50×11 cells) the quadratic runs over cells, not rows.
-    Gamma = (C−D)/(C+D) ignores ties by definition; it lands exactly
-    on the millionths grid as 2·(C·10⁶ DIV (C+D)) − 10⁶, positive
-    division only (no signed floor/truncate divergence to manage).
-
-    Scale: one scan pruned to two columns, one keyed partial-agg
-    shuffle to the grid, then the bounded-collect device (the grid is a
-    corpus-INDEPENDENT constant, ≤ |quantity levels|·|price bands| ≈
-    550 rows — the same bounded class as k seed rows and |Q|-bounded
-    query sets): re-emitting the collected grid as two local frames
-    keeps the non-equi self-join grid-sized AND makes the job scan the
-    fact table ONCE — the naive cells-vs-cells join rebuilt the
-    aggregation subtree on both sides of the broadcast and scanned the
-    corpus twice (measured; the plan pin forbids any FileScan in the
-    returned frame). The final one-row aggregate folds from map-side
-    partials. Pair products climb to ~N²/4: BIGINT to ~10⁹ rows,
-    DECIMAL(38)/HUGEINT past that — both sides carry the wide type."""
-    grid = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_quantity").cast("long").alias("x"),
-            F.expr(
-                "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-                " DIV 1000000"
-            ).alias("y"),
-        )
-        .groupBy("x", "y")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    rows = grid.collect()  # bounded: grid-sized, corpus-independent
-    local = spark.createDataFrame(rows, grid.schema)
-    a, b = local.alias("a"), F.broadcast(local.alias("b"))
-    prod = "CAST(a.n AS DECIMAL(38,0)) * b.n"
-    pairs = (
-        a.join(b, (F.col("b.x") > F.col("a.x")) & (F.col("b.y") != F.col("a.y")))
-        .agg(
-            F.expr(
-                f"CAST(sum(CASE WHEN b.y > a.y THEN {prod} END) AS BIGINT)"
-            ).alias("c_pairs"),
-            F.expr(
-                f"CAST(sum(CASE WHEN b.y < a.y THEN {prod} END) AS BIGINT)"
-            ).alias("d_pairs"),
-        )
-    )
-    share = (
-        "CAST(c_pairs AS DECIMAL(38,0)) * 1000000 DIV (c_pairs + d_pairs)"
-    )
-    return pairs.select(
-        "c_pairs",
-        "d_pairs",
-        F.expr(f"CAST({share} AS BIGINT)").alias("conc_share_e6"),
-        F.expr(f"CAST(2 * ({share}) - 1000000 AS BIGINT)").alias("gamma_e6"),
-    )
-
-
-@staged_query(
     "stream_cdc_last_value",
     # the serving-table oracle: last event per user under the (ts,
     # event_id) total order — what any number of merge steps must
@@ -12856,43 +12551,6 @@ def stream_cdc_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @staged_query(
-    "media_frame_energy",
-    # the corpus is pure ASCII (verified by the byte-histogram entry),
-    # so ord(char) == byte value and DuckDB replays the framing and the
-    # integer energy exactly; the activity compare is multiplied out
-    # (energy >= threshold·frame_len) so no division exists anywhere
-    oracle="""
-    WITH ch AS (SELECT doc_id, i,
-                       ord(substring(text, i::INTEGER, 1)) b
-                FROM documents, unnest(range(1, strlen(text) + 1)) r(i)),
-    fr AS (SELECT doc_id, CAST((i - 1) // 256 AS BIGINT) frame_idx,
-                  CAST(sum((b - 128) * (b - 128)) AS BIGINT) energy,
-                  CAST(count(*) AS BIGINT) n
-           FROM ch GROUP BY 1, 2)
-    SELECT doc_id, frame_idx, energy,
-           CAST(energy >= 2000 * n AS BIGINT) AS active
-    FROM fr
-    """,
-)
-def media_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-style frame-ENERGY extraction over opaque payloads — the
-    voice-activity-detection feature an audio-curation pipeline segments
-    on, completing the multimodal quartet's feature side (metadata /
-    histogram / resize / frame-sample / ahash → energy): bytes as
-    unsigned 8-bit PCM, 256-byte frames (tail included), integer energy
-    Σ(b−128)² per frame, activity = energy ≥ 2000·frame_len (the mean-
-    squared threshold multiplied out — no division). The numpy
-    square/reduceat path is exactly where a real PCM decoder drops in.
-
-    Scale: narrow Arrow-batched map, no shuffle, fixed-width rows out,
-    raw bytes never leave the executor — the multimodal contract."""
-    docs = _t(spark, sf_dir, "documents")
-    return multimodal.frame_energy(
-        multimodal.documents_as_binary(docs), frame_bytes=256, threshold=2000
-    )
-
-
-@staged_query(
     "emb_knn_label_vote",
     # replay: the emb_cosine_topk ranking device (quantized cosine,
     # nid tiebreak) extended with the label vote — winner by (count
@@ -12968,255 +12626,6 @@ def emb_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cnt").alias("n_votes"),
             F.expr("CAST(nl = true_label AS BIGINT)").alias("correct"),
         )
-    )
-
-
-def _lsh_band_curve_oracle() -> str:
-    """Replay: the uncapped truth + the shared 8-hash signature chain
-    (_MINHASH_SIG_CTE — its `band` CTE IS the 4-band layout, reused
-    verbatim), plus one band/cand/hit triplet per additional layout;
-    recall mirrors the Spark side's positive-integer floor division
-    (hits·10⁴ DIV truth — Spark DIV ≡ DuckDB // on positive ints)."""
-    parts = [
-        """truth AS (SELECT s.id_a, s.id_b
-              FROM shared s JOIN sz x ON s.id_a = x.doc_id
-                            JOIN sz y ON s.id_b = y.doc_id
-              WHERE s.c * 1.0 / (x.n + y.n - s.c) >= 0.8)""",
-        _MINHASH_SIG_CTE,
-    ]
-    cands = {}
-    for bands in (1, 2, 4, 8):
-        r = 8 // bands
-        if bands == 4:
-            src = "band"  # _MINHASH_SIG_CTE's own 4-band CTE, verbatim
-        else:
-            src = f"band{bands}"
-            parts.append(
-                f"{src} AS (SELECT doc_id, b, "
-                f"md5(array_to_string(sig[{r}*b+1:{r}*b+{r}], '|')) bh "
-                f"FROM sig, unnest(range(0, {bands})) r(b))"
-            )
-        cands[bands] = f"cand{bands}"
-        parts.append(
-            f"cand{bands} AS (SELECT DISTINCT a.doc_id id_a, b.doc_id id_b "
-            f"FROM {src} a JOIN {src} b "
-            f"ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id)"
-        )
-        parts.append(
-            f"hit{bands} AS (SELECT t.id_a FROM truth t JOIN cand{bands} c "
-            f"ON t.id_a = c.id_a AND t.id_b = c.id_b)"
-        )
-    rows = []
-    for bands in (1, 2, 4, 8):
-        r = 8 // bands
-        rows.append(
-            f"SELECT CAST({bands} AS BIGINT) AS bands, "
-            f"CAST({r} AS BIGINT) AS rows_per_band, "
-            f"CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_true, "
-            f"CAST((SELECT count(*) FROM hit{bands}) AS BIGINT) AS n_found, "
-            f"CASE WHEN (SELECT count(*) FROM truth) = 0 "
-            f"THEN CAST(NULL AS BIGINT) "
-            f"ELSE CAST(((SELECT count(*) FROM hit{bands}) * 10000) "
-            f"// (SELECT count(*) FROM truth) AS BIGINT) END AS recall_bp"
-        )
-    return (
-        _SHINGLE_CTE
-        + ",\n    "
-        + ",\n    ".join(parts)
-        + "\n    "
-        + "\n    UNION ALL ".join(rows)
-    )
-
-
-@staged_query("dedup_lsh_band_curve", oracle=_lsh_band_curve_oracle())
-def dedup_lsh_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH band-layout tuning curve — the text-dedup analog of
-    `emb_ann_recall_curve`: recall against the exact-Jaccard ground
-    truth at every way of banding the SAME 8-hash signature (1×8, 2×4,
-    4×2, 8×1). More bands with fewer rows each → more candidate
-    collisions → higher recall and higher verify cost; the curve prices
-    the trade so a deployment picks its layout from measurements, not
-    folklore. The 4×2 row is definitionally `dedup_lsh_recall`'s
-    number (the cross-entry identity the independent test pins), and
-    recall must be non-decreasing in the band count — a monotonicity
-    law of the banding scheme itself.
-
-    Scale: signatures are computed from ONE declarative chain, then
-    LOCALIZED — ``sig`` and ``truth`` are eagerly `localCheckpoint`ed
-    (executor-side materialization, lineage truncated; the state.py
-    checkpoint rule), so the corpus is scanned
-    once per table and the four layouts each cost only a banding
-    projection + a bucket-keyed self-join (uniform md5 keys, no skew)
-    + a broadcast pair semi-join against the checkpointed truth set
-    (measurement-sized here; a run whose truth set is corpus-scale
-    drops the broadcast hint and lets AQE pick the shuffle semi-join).
-    n_true is ONE scalar count over the checkpoint — the documented
-    1-row-scalar bounded class — baked in as a literal, so the final
-    plan has zero FileScans and zero scalar crossJoins (pinned)."""
-    docs = _t(spark, sf_dir, "documents")
-    truth = (
-        dedup.shingle_jaccard_pairs(docs, n=5, threshold=0.8)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
-    n_true = truth.count()
-    sig = dedup.minhash_signatures(docs, n=5, num_hashes=8).localCheckpoint(
-        eager=True
-    )
-    frames = []
-    for bands in (1, 2, 4, 8):
-        bb = dedup.minhash_band_buckets(
-            None, num_hashes=8, bands=bands, sig=sig
-        )
-        x, y = bb.alias("x"), bb.alias("y")
-        cand = (
-            x.join(
-                y,
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.bh") == F.col("y.bh"))
-                & (F.col("x.id") < F.col("y.id")),
-            )
-            .select(
-                F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b")
-            )
-            .distinct()
-        )
-        # |cand ∩ truth| counted from the cand side (both are distinct
-        # pair sets, so the intersection count is side-symmetric)
-        frames.append(
-            cand.join(F.broadcast(truth), ["id_a", "id_b"], "left_semi")
-            .agg(F.count("*").alias("n_found"))
-            .select(
-                F.lit(bands).cast("long").alias("bands"),
-                F.lit(8 // bands).cast("long").alias("rows_per_band"),
-                F.lit(n_true).cast("long").alias("n_true"),
-                "n_found",
-                (
-                    F.expr(f"CAST(n_found * 10000 DIV {n_true} AS BIGINT)")
-                    if n_true > 0
-                    else F.lit(None).cast("long")
-                ).alias("recall_bp"),
-            )
-        )
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
-
-
-@staged_query(
-    "q_orders_runs_test",
-    # lower median by order statistic (rn = (n+1) DIV 2 under the
-    # (rev, day) total order — no interpolation to keep in parity),
-    # ties-with-median dropped per the standard test, expected runs
-    # 2·n1·n2/(n1+n2) + 1 multiplied out to thousandths with HUGEINT
-    # headroom; every division is positive-integer floor
-    oracle="""
-    WITH d AS (SELECT date_trunc('day', o_orderdate) AS dday,
-                      CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-                                    AS BIGINT)) AS BIGINT) rev
-               FROM orders GROUP BY 1),
-    m AS (SELECT rev med FROM
-            (SELECT rev, row_number() OVER (ORDER BY rev, dday) rn,
-                    count(*) OVER () n FROM d)
-          WHERE rn = (n + 1) // 2),
-    s AS (SELECT dday, CASE WHEN rev > (SELECT med FROM m)
-                           THEN 1 ELSE 0 END sgn
-          FROM d WHERE rev <> (SELECT med FROM m)),
-    r AS (SELECT sgn, lag(sgn) OVER (ORDER BY dday) prev FROM s),
-    agg AS (SELECT CAST(sum(sgn) AS BIGINT) n_above,
-                   CAST(count(*) - sum(sgn) AS BIGINT) n_below,
-                   CAST(1 + sum(CASE WHEN prev IS NOT NULL AND sgn <> prev
-                                     THEN 1 ELSE 0 END) AS BIGINT) n_runs
-            FROM r)
-    SELECT n_above, n_below, n_runs,
-           CAST((2000 * n_above::HUGEINT * n_below)
-                // (n_above + n_below) + 1000 AS BIGINT)
-             AS expected_runs_e3,
-           CAST(n_runs * 1000
-                - ((2000 * n_above::HUGEINT * n_below)
-                   // (n_above + n_below) + 1000) AS BIGINT) AS gap_e3
-    FROM agg
-    """,
-)
-def q_orders_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald–Wolfowitz runs test over the daily-revenue sequence — the
-    randomness screen of the integer-exact statistics family: a revenue
-    series that alternates above/below its median too rarely (trend,
-    regime shift) or too often (oscillating instrumentation, dedup
-    failure) is not random, and the runs count against its expectation
-    2·n₁·n₂/(n₁+n₂) + 1 measures exactly that without distributional
-    assumptions. The median is the LOWER order statistic under the
-    (rev, day) total order (no interpolation — interpolation parity is
-    exactly what the percentile entries have to manage), median-tied
-    days drop per the standard test, and the expectation lands on the
-    thousandths grid by positive-integer floor division.
-
-    Scale: one scan pruned to two columns, one keyed partial agg to the
-    DAY grain; every window after that (median rank, lag) runs over the
-    ~date-range-bounded day frame — the documented post-agg-tiny-frame
-    exemption (a day frame is ~2.4k rows per 7 years regardless of
-    order count)."""
-    d = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day"))
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))"
-                " AS BIGINT)"
-            ).alias("rev")
-        )
-    )
-    # r16 (guide §2.4): the median was a filter over the ranked frame
-    # broadcast back onto a SECOND evaluation of d — two orders
-    # scans+aggregations per invocation. The median value now rides the
-    # ranked frame itself as one more whole-frame window (the documented
-    # post-agg-tiny-frame exemption; it reuses the rank window's
-    # single-partition exchange) — one scan, no crossJoin, same value.
-    ranked = d.select(
-        "day",
-        "rev",
-        F.row_number()
-        .over(Window.orderBy(F.col("rev").asc(), F.col("day").asc()))
-        .alias("rn"),
-        F.count("*").over(Window.partitionBy()).alias("n"),
-    )
-    s = (
-        ranked.withColumn(
-            "med",
-            F.max(F.expr("CASE WHEN rn = (n + 1) DIV 2 THEN rev END")).over(
-                Window.partitionBy()
-            ),
-        )
-        .filter(F.col("rev") != F.col("med"))
-        .select(
-            "day",
-            F.expr("CASE WHEN rev > med THEN 1 ELSE 0 END").alias("sgn"),
-        )
-    )
-    r = s.select(
-        "sgn", F.lag("sgn").over(Window.orderBy("day")).alias("prev")
-    )
-    agg = r.agg(
-        F.expr("CAST(sum(sgn) AS BIGINT)").alias("n_above"),
-        F.expr("CAST(count(*) - sum(sgn) AS BIGINT)").alias("n_below"),
-        F.expr(
-            "CAST(1 + sum(CASE WHEN prev IS NOT NULL AND sgn <> prev"
-            " THEN 1 ELSE 0 END) AS BIGINT)"
-        ).alias("n_runs"),
-    )
-    exp_e3 = (
-        "CAST(2000 AS DECIMAL(38,0)) * n_above * n_below"
-        " DIV (n_above + n_below) + 1000"
-    )
-    return agg.select(
-        "n_above",
-        "n_below",
-        "n_runs",
-        F.expr(f"CAST({exp_e3} AS BIGINT)").alias("expected_runs_e3"),
-        F.expr(f"CAST(n_runs * 1000 - ({exp_e3}) AS BIGINT)").alias(
-            "gap_e3"
-        ),
     )
 
 
@@ -13512,8 +12921,8 @@ def q_lineitem_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     populations' quantities — the NONPARAMETRIC two-sample location
     test completing the A/B family (`q_events_ab_significance` is the
     parametric z-test; this one assumes nothing about the quantity
-    distribution). Stated via the CONTINGENCY-GRID device
-    (`q_lineitem_gamma_correlation`): U never needs per-row ranks —
+    distribution). Stated via the CONTINGENCY-GRID device: U never
+    needs per-row ranks —
     2U = 2·Σ nA(q)·nB(q') over q>q' plus the tie cells once — so after
     ONE keyed agg to the (group × quantity) grid (≤ 2·|quantity
     levels| cells) the pair algebra is grid-sized. The normal
@@ -13825,107 +13234,6 @@ def stream_overdispersion_monitor(
 
 
 @staged_query(
-    "q_lineitem_ks_test",
-    # two-sample KS entirely on the integer grid: both empirical CDFs
-    # share the denominator nA·nB, so D's numerator is the integer
-    # dev(q) = |cumA·nB − cumB·nA| maximized over pooled levels;
-    # D_e6 by one positive floor division, and the α=0.05 decision
-    # multiplies Smirnov's c²(0.05) = 1.844164 out to integers
-    # (dev²·10⁶ > 1844164·nA·nB·(nA+nB)) — no sqrt on either side
-    oracle="""
-    WITH grid AS (
-      SELECT CAST(l_quantity AS BIGINT) q,
-             CAST(sum(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END)
-                  AS BIGINT) na,
-             CAST(sum(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END)
-                  AS BIGINT) nb
-      FROM lineitem GROUP BY 1),
-    cum AS (SELECT CAST(sum(na) OVER (ORDER BY q) AS HUGEINT) ca,
-                   CAST(sum(nb) OVER (ORDER BY q) AS HUGEINT) cb,
-                   CAST(sum(na) OVER () AS BIGINT) n_a,
-                   CAST(sum(nb) OVER () AS BIGINT) n_b
-            FROM grid),
-    dev AS (SELECT n_a, n_b, max(abs(ca * n_b - cb * n_a)) dev_max
-            FROM cum GROUP BY 1, 2)
-    SELECT n_a, n_b,
-           CAST(CASE WHEN n_a > 0 AND n_b > 0
-                THEN dev_max * 1000000 // (n_a::HUGEINT * n_b) END
-                AS BIGINT) AS d_e6,
-           CASE WHEN n_a > 0 AND n_b > 0
-                THEN dev_max * dev_max * 1000000
-                     > 1844164::HUGEINT * n_a * n_b * (n_a + n_b)
-                END AS reject_05
-    FROM dev
-    """,
-)
-def q_lineitem_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov test between the linestatus
-    quantity distributions — the DISTRIBUTION-SHAPE companion of the
-    location tests (`q_lineitem_mannwhitney_u` asks "is one shifted?",
-    KS asks "are they the same curve at all?"; together with χ² they
-    complete the classical two-sample battery). The step-CDF supremum
-    is attained at pooled grid points, so D needs no per-row ranks:
-    one keyed agg to the ≤|quantity levels| grid, cumulative-sum
-    windows OVER THAT GRID (the documented post-agg-tiny-frame
-    exemption), and D's numerator stays integer because both CDFs are
-    put over the common denominator nA·nB. The α=0.05 Smirnov decision
-    is sqrt-free by squaring: reject iff dev²·10⁶ > 1844164·nA·nB·
-    (nA+nB) (c(0.05)² = 1.844164 multiplied out) — integer-exact on
-    both engines.
-
-    Scale: one scan pruned to two columns, one partial-agg shuffle to
-    the grid, windows over the grid frame, a 1-row result. dev² fits
-    DECIMAL(38)/HUGEINT to ~10¹² rows per group; past that, evaluate on
-    a sampled slice (the test is sample-based by nature)."""
-    grid = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_quantity").cast("long").alias("q"),
-            F.expr(
-                "CAST(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END"
-                " AS BIGINT)"
-            ).alias("ia"),
-            F.expr(
-                "CAST(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END"
-                " AS BIGINT)"
-            ).alias("ib"),
-        )
-        .groupBy("q")
-        .agg(F.sum("ia").alias("na"), F.sum("ib").alias("nb"))
-    )
-    wq = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = grid.select(
-        F.sum("na").over(wq).cast("decimal(38,0)").alias("ca"),
-        F.sum("nb").over(wq).cast("decimal(38,0)").alias("cb"),
-        F.sum("na").over(wall).cast("long").alias("n_a"),
-        F.sum("nb").over(wall).cast("long").alias("n_b"),
-    )
-    dev = cum.groupBy("n_a", "n_b").agg(
-        F.expr("max(abs(ca * n_b - cb * n_a))").alias("dev_max")
-    )
-    # degenerate guard (mirrored by the oracle's CASE): a missing
-    # linestatus group makes nA·nB = 0 and both the D denominator and
-    # the decision undefined — NULL on both sides, the
-    # q_lineitem_mannwhitney_u device
-    return dev.select(
-        "n_a",
-        "n_b",
-        F.expr(
-            "CAST(CASE WHEN n_a > 0 AND n_b > 0 THEN dev_max * 1000000"
-            " DIV (CAST(n_a AS DECIMAL(38,0)) * n_b) END AS BIGINT)"
-        ).alias("d_e6"),
-        F.expr(
-            "CASE WHEN n_a > 0 AND n_b > 0 THEN dev_max * dev_max * 1000000"
-            " > CAST(1844164 AS DECIMAL(38,0)) * n_a * n_b * (n_a + n_b)"
-            " END"
-        ).alias("reject_05"),
-    )
-
-
-@staged_query(
     "docs_vocab_growth",
     # Heaps-law curve over TRIGRAM vocabulary (the unigram vocabulary of
     # the synthetic corpus saturates in the first quarter — 31 words —
@@ -14092,65 +13400,6 @@ def emb_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query(
-    "media_dhash_pairs",
-    # pure-ASCII corpus: ord(char) == byte value, so DuckDB replays the
-    # 8×9 stub decode + the strictly-brighter-than-left bit rule exactly
-    oracle="""
-    WITH d AS (SELECT doc_id, substring(text, 1, 72) AS p
-               FROM documents WHERE n_chars >= 72),
-    b AS (SELECT doc_id, r, c,
-                 CASE WHEN ord(substring(p, r * 9 + c + 2, 1))
-                         > ord(substring(p, r * 9 + c + 1, 1))
-                      THEN '1' ELSE '0' END AS bit
-          FROM d, unnest(range(0, 8)) rr(r), unnest(range(0, 8)) cc(c)),
-    bits AS (SELECT doc_id, string_agg(bit, '' ORDER BY r, c) AS h
-             FROM b GROUP BY doc_id),
-    bc AS (SELECT h, count(*) c FROM bits GROUP BY 1)
-    SELECT a.doc_id AS doc_id1, c.doc_id AS doc_id2, a.h AS dhash
-    FROM bits a JOIN bits c ON a.h = c.h AND a.doc_id < c.doc_id
-    JOIN bc ON bc.h = a.h
-    WHERE bc.c <= 64
-    """,
-)
-def media_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual near-dup pairs by DIFFERENCE hash (dHash) — the
-    gradient companion of `media_ahash_pairs` and the second standard
-    member of the pHash family: the stub codec grids the first 72
-    payload bytes 8×9 and emits one bit per horizontally adjacent cell
-    pair (1 iff strictly brighter — pure integer comparisons), so the
-    hash encodes LOCAL gradients where aHash thresholds every cell
-    against the GLOBAL mean: a localized brightness patch (spotlight,
-    watermark, vignette) leaves dHash bits outside the patch untouched
-    but drags aHash's mean and flips bits in unrelated cells (the
-    locality property the independent test demonstrates — both hashes
-    are equally invariant to a global uniform shift, where the mean
-    moves with the cells). Pipelines run both and OR the candidate
-    sets.
-
-    Same relational tail as the aHash entry: hash-equality buckets
-    with the deterministic 64-per-bucket cap, pairs within buckets.
-
-    Scale: narrow Arrow-batched hash map (no shuffle, 64 bits out per
-    payload), ONE shuffle on the hash, pair output bounded by
-    O(buckets·cap²) — the blocked-dedup bound class. Hamming-tolerant
-    variants band the 64 bits exactly like `dedup_simhash`."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 72)
-    h = multimodal.dhash64(multimodal.documents_as_binary(docs))
-    wb = Window.partitionBy("dhash")
-    k = h.withColumn("c", F.count("*").over(wb)).filter(F.col("c") <= 64)
-    a, c = k.alias("a"), k.alias("c")
-    return a.join(
-        c,
-        (F.col("a.dhash") == F.col("c.dhash"))
-        & (F.col("a.doc_id") < F.col("c.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_id1"),
-        F.col("c.doc_id").alias("doc_id2"),
-        F.col("a.dhash").alias("dhash"),
-    )
-
-
 _DATA_TOKEN_RE = (
     _TOKEN_LB
     + "data\\\\.([A-Za-z_][A-Za-z0-9_]*\\\\.[A-Za-z_][A-Za-z0-9_-]*)"
@@ -14248,8 +13497,8 @@ def tf_unused_data_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lineitem_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal–Wallis H test of quantity across the THREE returnflag
     populations — the k-sample member completing the nonparametric
-    battery (`q_lineitem_mannwhitney_u` = 2-sample location,
-    `q_lineitem_ks_test` = 2-sample shape, this = k-sample location),
+    battery (`q_lineitem_mannwhitney_u` = 2-sample location, this =
+    k-sample location),
     and like them rank-free in execution: doubled mid-ranks come from a
     cumulative window over the pooled quantity grid (rank2 =
     2·cum_before + t + 1 — integer by construction, no interpolation),
@@ -14586,152 +13835,6 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query(
-    "q_lineitem_spearman",
-    # Spearman via the doubled-mid-rank grid device (the kruskal/
-    # mannwhitney rank2 = 2·cum_before + t + 1 — integer midranks, no
-    # interpolation): center both margins' doubled ranks at nn+1, then
-    # S = Σ n·ax·ay, Dx = Σ t·ax², Dy = Σ t·ay² and ρ = S/√(Dx·Dy) —
-    # reported sqrt-free as sign(S)·(ρ²·10⁸) through the DOCUMENTED
-    # two-stage positive floor division ((S·S // Dx)·10⁶ // Dy, |S|²
-    # is sign-free so the sign multiplies after) — both engines replay
-    # the identical stage order; degenerate margins (a single pooled
-    # level → Dx or Dy = 0) emit NULL on both sides (the r13 guard
-    # device)
-    oracle="""
-    WITH grid AS (
-      SELECT CAST(l_quantity AS BIGINT) x,
-             CAST(floor(l_discount * 100 + 0.5) AS BIGINT) y,
-             CAST(count(*) AS BIGINT) n
-      FROM lineitem GROUP BY 1, 2),
-    tot AS (SELECT CAST(sum(n) AS BIGINT) nn FROM grid),
-    xr AS (SELECT x, t,
-                  2*(CAST(sum(t) OVER (ORDER BY x) AS BIGINT) - t) + t + 1
-                    AS r2
-           FROM (SELECT x, CAST(sum(n) AS BIGINT) t FROM grid GROUP BY 1)),
-    yr AS (SELECT y, t,
-                  2*(CAST(sum(t) OVER (ORDER BY y) AS BIGINT) - t) + t + 1
-                    AS r2
-           FROM (SELECT y, CAST(sum(n) AS BIGINT) t FROM grid GROUP BY 1)),
-    s AS (SELECT CAST(sum(n::HUGEINT * (xr.r2 - (nn+1))
-                          * (yr.r2 - (nn+1))) AS HUGEINT) s
-          FROM grid JOIN xr ON xr.x = grid.x
-                    JOIN yr ON yr.y = grid.y, tot),
-    dx AS (SELECT CAST(sum(t::HUGEINT * (r2-(nn+1)) * (r2-(nn+1)))
-                  AS HUGEINT) dx FROM xr, tot),
-    dy AS (SELECT CAST(sum(t::HUGEINT * (r2-(nn+1)) * (r2-(nn+1)))
-                  AS HUGEINT) dy FROM yr, tot)
-    SELECT nn AS n_rows,
-           CAST(CASE WHEN dx > 0 AND dy > 0
-                THEN (CASE WHEN s < 0 THEN -1 ELSE 1 END)
-                     * (((s * s) // dx) * 100000000 // dy)
-                END AS BIGINT) AS rho2_e8_signed
-    FROM s, dx, dy, tot
-    """,
-)
-def q_lineitem_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation between quantity and discount — the
-    RANK-correlation member completing the association battery
-    (`q_lineitem_gamma_correlation` = ordinal concordance,
-    `q_lineitem_mannwhitney_u`/`q_lineitem_kruskal_wallis` = location,
-    this = monotone-relationship strength): both margins are small
-    integer grids (≤50 quantity levels × ≤11 discount-cent levels), so
-    per-row ranks never exist — doubled mid-ranks (rank2 = 2·cum_before
-    + t + 1, integer by construction) come from cumulative windows over
-    each MARGIN's level frame, and Spearman is the Pearson of centered
-    doubled ranks: S = Σ n·ax·ay over grid cells, Dx/Dy the margin
-    second moments. Reported sqrt-free as sign(S)·⌊ρ²·10⁸⌋ via the
-    documented two-stage positive floor division ((S² // Dx)·10⁸ //
-    Dy — S² is sign-free, the sign multiplies after), replayed in the
-    identical stage order by both engines; a degenerate margin (single
-    pooled level → zero variance) yields NULL on both sides per the
-    r13 guard device. The Spark side casts the stage-1 BIGINT quotient
-    back to DECIMAL(38,0) before the ×10⁸: the quotient is bounded only
-    by Dy (at |ρ|=1), so quotient·10⁸ ≤ 4N³·10⁸ needs decimal headroom
-    — as a BIGINT multiply it would wrap/NULL silently where DuckDB's
-    HUGEINT continues (the r13 failure-mode-divergence class).
-
-    Scale: one scan pruned to two columns, one keyed partial-agg
-    shuffle to the ≤550-cell grid, margin windows over level frames
-    (the post-agg-tiny-frame exemption), a 1-row answer. Headroom —
-    worst-case (|ρ|=1, both margins full-spread) the binding terms are
-    S² ≤ Dx·Dy ≤ 16N⁶ in DECIMAL(38)/HUGEINT and the stage-1 quotient
-    S²//Dx ≤ Dy ≤ 4N³ in BIGINT (Spark DIV yields BIGINT), both exact
-    to N ≈ 10⁶ rows; sf0.1's N = 6×10⁵ fits, and real ρ² ≪ 1 stretches
-    both (S² = ρ⁴·Dx·Dy, quotient = ρ²·Dy). The decimal cast matters at
-    FIXED N: without it the ×10⁸ runs in BIGINT and wraps once
-    quotient > 9.2×10¹⁰ — at sf0.1 that is |ρ| only ~3× the sample's.
-    Beyond ~10⁶ rows evaluate on a sampled slice (sample statistic) or
-    rescale the doubled ranks to a coarser grid before squaring."""
-    grid = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_quantity").cast("long").alias("x"),
-            F.expr(
-                "CAST(floor(l_discount * 100 + 0.5) AS BIGINT)"
-            ).alias("y"),
-        )
-        .groupBy("x", "y")
-        .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=True)  # the state.py checkpoint rule
-    )
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-
-    def margin(col: str) -> DataFrame:
-        lvl = grid.groupBy(col).agg(F.sum("n").cast("long").alias("t"))
-        wc = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-        return lvl.select(
-            col,
-            "t",
-            (2 * (F.sum("t").over(wc) - F.col("t")) + F.col("t") + 1)
-            .cast("long")
-            .alias("r2"),
-            F.sum("t").over(wall).cast("long").alias("nn"),
-        )
-
-    xr, yr = margin("x"), margin("y")
-    s = (
-        grid.join(F.broadcast(xr.select("x", F.col("r2").alias("rx"), "nn")), "x")
-        .join(F.broadcast(yr.select("y", F.col("r2").alias("ry"))), "y")
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(n AS DECIMAL(38,0)) * (rx - (nn+1))"
-                " * (ry - (nn+1))) AS DECIMAL(38,0))"
-            ).alias("s"),
-            F.max("nn").alias("nn"),
-        )
-    )
-    mom = (
-        "CAST(sum(CAST(t AS DECIMAL(38,0)) * (r2-(nn+1)) * (r2-(nn+1)))"
-        " AS DECIMAL(38,0))"
-    )
-    dx = xr.agg(F.expr(mom).alias("dx"))
-    dy = yr.agg(F.expr(mom).alias("dy"))
-    return (
-        s.crossJoin(F.broadcast(dx))
-        .crossJoin(F.broadcast(dy))
-        .select(
-            F.col("nn").alias("n_rows"),
-            # the stage-1 quotient DIV returns BIGINT in Spark; cast it
-            # back to DECIMAL(38,0) BEFORE the *1e8 so the intermediate
-            # (<= Dy*1e8 <= 4N^3*1e8) lives in decimal headroom instead
-            # of wrapping/NULLing a BIGINT multiply at |rho| beyond the
-            # sample's (~3x) or at sf1 — the r13 failure-mode-divergence
-            # class (DuckDB's HUGEINT // continues where non-ANSI Spark
-            # wraps silently); value and stage order unchanged
-            F.expr(
-                "CAST(CASE WHEN dx > 0 AND dy > 0"
-                " THEN (CASE WHEN s < 0 THEN -1 ELSE 1 END)"
-                " * (CAST((s * s) DIV dx AS DECIMAL(38,0))"
-                "    * 100000000 DIV dy)"
-                " END AS BIGINT)"
-            ).alias("rho2_e8_signed"),
-        )
-    )
-
-
 def _sign_words(df: DataFrame) -> DataFrame:
     """1-bit (sign) quantization of the 64-dim embedding into TWO 32-bit
     words carried as BIGINTs (w0 = dims 0-31, w1 = dims 32-63) — two
@@ -14926,7 +14029,7 @@ def docs_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`q_user_entropy` needs logs and a float grid; Simpson's unbiased
     form λ = Σn(n−1)/(N(N−1)) is the probability two tokens drawn
     WITHOUT replacement coincide, and stays integer-exact end to end —
-    the HHI of text, `q_supplier_hhi`'s corpus sibling). High λ = a
+    the Herfindahl–Hirschman index of text). High λ = a
     repetitive, template-dominated language slice; low λ = diverse
     vocabulary — the per-language data-mix screen that pairs with
     `docs_vocab_growth` (corpus saturation) and `docs_repetition`
@@ -15008,605 +14111,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.option("basePath", sink)
         .parquet(sink + "/batch_id=*")
         .select("new_id", "matched_id", "jacc_bp", "status")
-    )
-
-
-@staged_query(
-    "q_orders_dow_chi2",
-    # χ² goodness-of-fit against uniform needs ONE exact division: with
-    # E = N/7, χ² = Σ(7·O_d − N)²/(7N) — multiply out, one positive
-    # floor division onto the millionths grid. Day-of-week = epoch-day
-    # % 7 (integer day index, NOT the engines' dow() functions — Spark
-    # numbers Sunday 1, DuckDB Sunday 0; the modulo device sidesteps
-    # the convention mismatch entirely). A dow class with ZERO orders
-    # is absent from the grouped frame, so its (7·0 − N)² = N² term is
-    # added algebraically via (7 − count(*))·N²; N = 0 emits NULL per
-    # the r13 guard device. Decision constant 12591587 =
-    # ⌊χ²₀.₉₅(df=6)·10⁶⌋, re-derived by the independent test from the
-    # closed-form even-df CDF by bisection (no scipy anywhere)
-    oracle="""
-    WITH d AS (SELECT (epoch_us(o_orderdate) // 86400000000) % 7 AS dow,
-                      CAST(count(*) AS BIGINT) n
-               FROM orders GROUP BY 1),
-    tot AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) nn FROM d),
-    dev AS (SELECT CAST(coalesce(sum((7*n - nn)::HUGEINT * (7*n - nn)), 0)
-                        + (7 - count(*)) * nn::HUGEINT * nn AS HUGEINT) s
-            FROM d, tot GROUP BY nn)
-    SELECT nn AS n_orders,
-           CAST(CASE WHEN nn > 0 THEN s * 1000000 // (7::HUGEINT * nn)
-                END AS BIGINT) AS chi2_e6,
-           CASE WHEN nn > 0
-                THEN s * 1000000 // (7::HUGEINT * nn) > 12591587
-                END AS reject_05
-    FROM dev, tot
-    """,
-)
-def q_orders_dow_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-of-week uniformity χ² GOODNESS-OF-FIT over order dates — the
-    second χ² species (`q_lineitem_flag_status_chi2` tests
-    INDEPENDENCE of two margins; this tests one margin against a fixed
-    uniform null — the seasonality/DQ screen behind "is order volume
-    actually flat across the week, or is the generator/upstream feed
-    skewed?"). Against E = N/7 the statistic collapses to ONE exact
-    division: χ²·10⁶ = Σ(7·O_d − N)²·10⁶ DIV (7N), every factor
-    multiplied out (integer-exact statistics device). Day-of-week is
-    the integer epoch-day % 7 — deliberately NOT dayofweek()/dow():
-    Spark numbers Sunday 1 and DuckDB Sunday 0, and the modulo device
-    removes the convention from the surface entirely (class labels are
-    anonymous residues; uniformity is label-invariant). Zero-count
-    classes contribute N² algebraically; N = 0 yields NULL per the r13
-    guard device. The α=0.05 decision uses ⌊χ²₀.₉₅(6)·10⁶⌋ = 12591587,
-    re-derived from the closed-form even-df χ² CDF by bisection in the
-    independent test (the re-derived-constants device — df = 6 because
-    the week has exactly 7 classes).
-
-    Scale: one scan pruned to one column, one 7-cell keyed agg (counts
-    combine map-side), a 1-row answer. Σ(7O−N)² ≤ 36N² fits
-    DECIMAL(38)/HUGEINT·10⁶ to N ≈ 10¹⁵ orders."""
-    d = (
-        _t(spark, sf_dir, "orders")
-        .select(
-            F.expr(
-                "unix_micros(CAST(o_orderdate AS TIMESTAMP))"
-                " DIV 86400000000 % 7"
-            ).alias("dow")
-        )
-        .groupBy("dow")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    dev = d.select(
-        "n", F.sum("n").over(wall).cast("long").alias("nn")
-    ).groupBy("nn").agg(
-        F.expr(
-            "CAST(coalesce(sum(CAST(7*n - nn AS DECIMAL(38,0))"
-            " * (7*n - nn)), 0)"
-            " + (7 - count(*)) * CAST(nn AS DECIMAL(38,0)) * nn"
-            " AS DECIMAL(38,0))"
-        ).alias("s")
-    )
-    chi = "s * 1000000 DIV (7 * CAST(nn AS DECIMAL(38,0)))"
-    return dev.select(
-        F.col("nn").alias("n_orders"),
-        F.expr(
-            f"CAST(CASE WHEN nn > 0 THEN {chi} END AS BIGINT)"
-        ).alias("chi2_e6"),
-        F.expr(
-            f"CASE WHEN nn > 0 THEN {chi} > 12591587 END"
-        ).alias("reject_05"),
-    )
-
-
-@staged_query(
-    "q_lineitem_trimmed_mean",
-    # the 10 % two-sided trimmed mean from the level grid WITHOUT
-    # sorting rows: each tail's sum is Σ min(t, max(k − cum_before, 0))·q
-    # over levels (the partial-level clamp — the order-statistics device
-    # generalized from "pick the k-th" to "sum the first k"), the
-    # trimmed sum is total − both tails, and the mean takes ONE positive
-    # floor division onto the 1e-4 grid; N − 2k = 0 emits NULL per the
-    # r13 guard device
-    oracle="""
-    WITH g AS (SELECT CAST(l_quantity AS BIGINT) q,
-                      CAST(count(*) AS BIGINT) t
-               FROM lineitem GROUP BY 1),
-    c AS (SELECT q, t,
-                 CAST(sum(t) OVER (ORDER BY q) AS BIGINT) - t AS cb,
-                 CAST(sum(t) OVER () AS BIGINT) nn
-          FROM g),
-    k AS (SELECT nn AS knn, nn // 10 AS tk
-          FROM (SELECT DISTINCT nn FROM c)),
-    tails AS (SELECT max(c.nn) nn, max(tk) tk,
-        CAST(sum(least(t, greatest(tk - cb, 0)) * q::HUGEINT) AS HUGEINT) lo,
-        CAST(sum(least(t, greatest(tk - (c.nn - cb - t), 0)) * q::HUGEINT)
-             AS HUGEINT) hi,
-        CAST(sum(t * q::HUGEINT) AS HUGEINT) tot
-      FROM c, k)
-    SELECT nn AS n_rows, tk AS trim_k,
-           CAST(tot - lo - hi AS BIGINT) AS trimmed_sum,
-           CAST(CASE WHEN nn - 2*tk > 0
-                THEN (tot - lo - hi) * 10000 // (nn - 2*tk)
-                END AS BIGINT) AS trimmed_mean_e4
-    FROM tails
-    """,
-)
-def q_lineitem_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10 % two-sided TRIMMED mean of quantity — the robust-location
-    estimator between the mean (breakdown 0) and the median (breakdown
-    ½), the standard way a metrics pipeline reports a center that
-    survives fat tails without discarding 50 % of the information.
-    Computed from the level grid with NO row sort: k = N DIV 10 rows
-    trim from each side, and each tail's sum is the grid identity
-    Σ min(t, max(k − cum_before, 0))·q — the order-statistics device
-    generalized from "select the k-th" (`q_weighted_median_price`) to
-    "sum the first k", with the boundary level contributing a PARTIAL
-    count via the clamp. Trimmed sum = total − both tails (exact
-    integers), then one positive floor division onto the 1e-4 grid;
-    the degenerate all-trimmed frame (N − 2k = 0) yields NULL per the
-    r13 guard device. The independent test checks the grid algebra
-    against the definitional replay (sort, slice, sum) exactly.
-
-    Scale: one scan pruned to one column, one keyed partial agg to the
-    ≤50-level grid, cumulative windows over that grid (the post-agg
-    tiny-frame exemption), a 1-row answer — the fact table is never
-    sorted, which is the entire point (a row-level 10 % trim at 100 TB
-    would be a global sort; the grid form is one partial-agg
-    shuffle)."""
-    g = (
-        _t(spark, sf_dir, "lineitem")
-        .select(F.col("l_quantity").cast("long").alias("q"))
-        .groupBy("q")
-        .agg(F.count("*").cast("long").alias("t"))
-    )
-    wq = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    c = g.select(
-        "q",
-        "t",
-        (F.sum("t").over(wq) - F.col("t")).cast("long").alias("cb"),
-        F.sum("t").over(wall).cast("long").alias("nn"),
-    ).withColumn("tk", F.expr("nn DIV 10"))
-    tails = c.agg(
-        F.max("nn").alias("nn"),
-        F.max("tk").alias("tk"),
-        F.expr(
-            "CAST(sum(least(t, greatest(tk - cb, 0))"
-            " * CAST(q AS DECIMAL(38,0))) AS DECIMAL(38,0))"
-        ).alias("lo"),
-        F.expr(
-            "CAST(sum(least(t, greatest(tk - (nn - cb - t), 0))"
-            " * CAST(q AS DECIMAL(38,0))) AS DECIMAL(38,0))"
-        ).alias("hi"),
-        F.expr(
-            "CAST(sum(t * CAST(q AS DECIMAL(38,0))) AS DECIMAL(38,0))"
-        ).alias("tot"),
-    )
-    return tails.select(
-        F.col("nn").alias("n_rows"),
-        F.col("tk").alias("trim_k"),
-        F.expr("CAST(tot - lo - hi AS BIGINT)").alias("trimmed_sum"),
-        F.expr(
-            "CAST(CASE WHEN nn - 2*tk > 0"
-            " THEN (tot - lo - hi) * 10000 DIV (nn - 2*tk)"
-            " END AS BIGINT)"
-        ).alias("trimmed_mean_e4"),
-    )
-
-
-def _phash_oracle() -> str:
-    """DuckDB replay of the integer pHash pipeline: the DCT basis is the
-    SAME hard-coded `multimodal.PHASH_DCT` literals rendered as a VALUES
-    table (shared-constants device — the independent test re-derives
-    them from math.cos), the 2-D transform is an integer triple sum,
-    the median is the 32nd-smallest AC order statistic, and the pair
-    tail is the aHash/dHash capped hash-equality bucket join."""
-    cm = ", ".join(
-        f"({u}, {x}, {multimodal.PHASH_DCT[u][x]})"
-        for u in range(8)
-        for x in range(8)
-    )
-    return f"""
-    WITH d AS (SELECT doc_id, substring(text, 1, 64) AS p
-               FROM documents WHERE n_chars >= 64),
-    cm(u, x, c) AS (SELECT * FROM (VALUES {cm})),
-    b AS (SELECT doc_id, r, cl,
-                 CAST(ord(substring(p, r * 8 + cl + 1, 1)) AS BIGINT) v
-          FROM d, unnest(range(0, 8)) rr(r), unnest(range(0, 8)) cc(cl)),
-    dct AS (SELECT b.doc_id, cu.u AS u, cv.u AS v,
-                   CAST(sum(cu.c * b.v * cv.c) AS BIGINT) AS dc
-            FROM b JOIN cm cu ON cu.x = b.r JOIN cm cv ON cv.x = b.cl
-            GROUP BY 1, 2, 3),
-    ac AS (SELECT doc_id, u, v, dc FROM dct WHERE NOT (u = 0 AND v = 0)),
-    med AS (SELECT doc_id, dc AS m FROM (
-              SELECT doc_id, dc, row_number() OVER (PARTITION BY doc_id
-                     ORDER BY dc, u, v) rn FROM ac) WHERE rn = 32),
-    bits AS (SELECT ac.doc_id,
-                    string_agg(CASE WHEN ac.dc > med.m THEN '1' ELSE '0'
-                               END, '' ORDER BY ac.u, ac.v) AS h
-             FROM ac JOIN med ON med.doc_id = ac.doc_id GROUP BY 1),
-    bc AS (SELECT h, count(*) c FROM bits GROUP BY 1)
-    SELECT a.doc_id AS doc_id1, b2.doc_id AS doc_id2, a.h AS phash
-    FROM bits a JOIN bits b2 ON a.h = b2.h AND a.doc_id < b2.doc_id
-    JOIN bc ON bc.h = a.h
-    WHERE bc.c <= 64
-    """
-
-
-@staged_query("media_phash_pairs", oracle=_phash_oracle())
-def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual near-dup pairs by DCT hash (pHash) — the third and
-    most structure-aware member of the perceptual triad
-    (`media_ahash_pairs` = global brightness structure,
-    `media_dhash_pairs` = local gradients, this = which spatial
-    FREQUENCIES carry the energy): the stub codec grids the first 64
-    payload bytes 8×8, applies the fixed-point integer 2-D DCT
-    (`multimodal.PHASH_DCT` — rounded 8192-scale cosines whose u ≥ 1
-    rows sum to EXACTLY zero, so a uniform brightness shift moves only
-    the dropped DC coefficient and the 63 AC bits are invariant by
-    construction), and thresholds each AC coefficient against the
-    low-median order statistic. Production pipelines run all three
-    hashes and OR the candidate sets — each is blind to a different
-    edit class.
-
-    Same relational tail as the aHash/dHash entries: hash-equality
-    buckets with the deterministic 64-per-bucket cap, pairs within
-    buckets.
-
-    Scale: narrow Arrow-batched map (one 8×8 int64 matmul per payload —
-    dense linear algebra, the sanctioned Python path; 63 bits out per
-    payload), ONE shuffle on the hash, pair output bounded by
-    O(buckets·cap²). Hamming-tolerant variants band the 63 bits exactly
-    like `dedup_simhash`."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 64)
-    h = multimodal.phash63(multimodal.documents_as_binary(docs))
-    wb = Window.partitionBy("phash")
-    k = h.withColumn("c", F.count("*").over(wb)).filter(F.col("c") <= 64)
-    a, c = k.alias("a"), k.alias("c")
-    return a.join(
-        c,
-        (F.col("a.phash") == F.col("c.phash"))
-        & (F.col("a.doc_id") < F.col("c.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_id1"),
-        F.col("c.doc_id").alias("doc_id2"),
-        F.col("a.phash").alias("phash"),
-    )
-
-
-@staged_query(
-    "q_lineitem_brown_forsythe",
-    # variance homogeneity as pure integer algebra: z = |q − group LOW
-    # median| lives on the same ≤3×50 grid (medians are order
-    # statistics — cum ≥ (tot+1)//2, no interpolation), and the ANOVA
-    # machine formula keeps every division SMALL: SSB* = Σ(Tᵢ²//nᵢ) −
-    # T²//N (clamped at 0 — the floors can undershoot a true-zero SSB
-    # by < k units) and SSW* = Σn·z² − Σ(Tᵢ²//nᵢ) — per-group floors
-    # replayed identically on both sides (the kruskal device). The
-    # deviations are carried in MILLI-units (z·10³ → sums scale by 10⁶)
-    # because SSB is a catastrophic cancellation of ~Σn·z̄²-sized terms:
-    # unit-scale floors cost ~k on an SSB of ~10² (6 % at sf0.001); the
-    # 10⁶ scale turns that into 6e-8 while the floored quotients
-    # (~nᵢ·z̄²·10⁶) stay far inside BIGINT. The
-    # quotients are ~n·z̄² (NEVER the N²-scaled form: its (N·Tᵢ)²//nᵢ
-    # quotient crosses 2⁶³ already at sf0.1, and Spark's decimal DIV
-    # returns BIGINT — ANSI raises where DuckDB's HUGEINT // sails on,
-    # an engine-divergence the first draft hit). One final snapped
-    # division to the millionths grid; ssw = 0 or a single group emits
-    # NULL per the r13 guard device. The α=0.05
-    # decision uses the large-N χ² approximation (k−1)·F ≈ χ²(k−1):
-    # df = 2 for the three returnflags, the SAME 5991464 constant the
-    # kruskal entry re-derives — emitted only for k = 3 (else NULL)
-    oracle="""
-    WITH grid AS (SELECT l_returnflag g, CAST(l_quantity AS BIGINT) q,
-                         CAST(count(*) AS BIGINT) n
-                  FROM lineitem GROUP BY 1, 2),
-    gm AS (SELECT g, min(q) m FROM (
-             SELECT g, q,
-                    CAST(sum(n) OVER (PARTITION BY g ORDER BY q)
-                         AS BIGINT) cum,
-                    CAST(sum(n) OVER (PARTITION BY g) AS BIGINT) tot
-             FROM grid) WHERE cum >= (tot + 1) // 2 GROUP BY g),
-    z AS (SELECT grid.g, abs(q - m) * 1000 AS z,
-                 CAST(sum(n) AS BIGINT) n
-          FROM grid JOIN gm ON gm.g = grid.g GROUP BY 1, 2),
-    gr AS (SELECT g, CAST(sum(n) AS BIGINT) n_i,
-                  CAST(sum(n::HUGEINT * z) AS HUGEINT) t_i,
-                  CAST(sum(n::HUGEINT * z * z) AS HUGEINT) ss_i
-           FROM z GROUP BY 1),
-    tot AS (SELECT CAST(sum(n_i) AS BIGINT) nn,
-                   CAST(sum(t_i) AS HUGEINT) t,
-                   CAST(count(*) AS BIGINT) k,
-                   CAST(sum(ss_i) AS HUGEINT) ss,
-                   CAST(sum(t_i * t_i // n_i) AS HUGEINT) sb
-            FROM gr),
-    f AS (SELECT nn, k,
-                 greatest(sb - t::HUGEINT * t // nn, 0) AS ssb,
-                 ss - sb AS ssw FROM tot)
-    SELECT CAST(nn AS BIGINT) n_rows, CAST(k AS BIGINT) n_groups,
-           CAST(CASE WHEN k > 1 AND ssw > 0
-                THEN (nn - k) * ssb * 1000000 // ((k - 1) * ssw)
-                END AS BIGINT) AS f_e6,
-           CASE WHEN k = 3 AND ssw > 0
-                THEN (k - 1) * ((nn - k) * ssb * 1000000
-                                // ((k - 1) * ssw)) > 5991464
-                END AS reject_05
-    FROM f
-    """,
-)
-def q_lineitem_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brown–Forsythe variance-homogeneity test across the returnflag
-    quantity populations — the DISPERSION member completing the
-    classical battery (location: Mann–Whitney/Kruskal–Wallis; shape:
-    KS; independence/GoF: the two χ²; correlation: Spearman/gamma;
-    this asks "do the groups SPREAD equally?" — the assumption check
-    every ANOVA and pooled-variance test leans on, in the
-    median-centered robust form that survives non-normality). z =
-    |q − group low median| stays on the ≤3×50 integer grid (medians
-    are order statistics, no interpolation), and the one-way ANOVA of
-    z uses the MACHINE formula so every division stays small: SSB* =
-    Σ(Tᵢ²//nᵢ) − T²//N (clamped at 0), SSW* = Σn·z² − Σ(Tᵢ²//nᵢ) —
-    per-group floors replayed identically on both sides (the kruskal
-    device), quotients ~nᵢ·z̄²·10⁶ (deviations carried in milli-units:
-    SSB is a catastrophic cancellation, and the 10⁶ scale buys 6 guard
-    digits against the floors — verified to 1e-6 against the textbook
-    float form). The N²-scaled form is deliberately NOT
-    used: its (N·Tᵢ)²//nᵢ quotient crosses 2⁶³ already at sf0.1, and
-    Spark's decimal DIV returns BIGINT — ANSI raises where DuckDB's
-    HUGEINT // continues, an engine FAILURE-MODE divergence (the
-    decimal-overflow class). One snapped division to the millionths
-    grid;
-    degenerate inputs (one group, or all z equal) yield NULL per the
-    r13 guard device. The α=0.05 decision applies the large-N χ²
-    approximation (k−1)·F ≈ χ²(k−1) with the SAME re-derived 5991464
-    constant the kruskal entry pins (df = 2; emitted only for k = 3 —
-    the exact F quantile depends on N and is deliberately not
-    hardcoded).
-
-    Scale: one scan pruned to two columns, one keyed partial-agg
-    shuffle to the grid, PER-GROUP windows over the grid frame (keyed,
-    bounded — never a global sort), a 1-row answer. Headroom: Tᵢ² ≈
-    Nᵢ²·z̄²·10⁶ lives in DECIMAL(38)/HUGEINT (fine to Nᵢ ≈ 10¹³ per
-    group), and the floored quotients ~Nᵢ·z̄²·10⁶ stay inside BIGINT to
-    Nᵢ ≈ 5·10¹⁰ — past that drop the milli-unit scale to 10¹·5 on both
-    sides or sample (it is a sample test)."""
-    grid = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_returnflag").alias("g"),
-            F.col("l_quantity").cast("long").alias("q"),
-        )
-        .groupBy("g", "q")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    wg = Window.partitionBy("g").orderBy("q").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wt = Window.partitionBy("g")
-    gm = (
-        grid.select(
-            "g",
-            "q",
-            F.sum("n").over(wg).cast("long").alias("cum"),
-            F.sum("n").over(wt).cast("long").alias("tot"),
-        )
-        .filter(F.expr("cum >= (tot + 1) DIV 2"))
-        .groupBy("g")
-        .agg(F.min("q").alias("m"))
-    )
-    z = (
-        grid.join(F.broadcast(gm), "g")
-        .select(
-            "g", (F.abs(F.col("q") - F.col("m")) * 1000).alias("z"), "n"
-        )
-        .groupBy("g", "z")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-    gr = z.groupBy("g").agg(
-        F.sum("n").cast("long").alias("n_i"),
-        F.expr(
-            "CAST(sum(CAST(n AS DECIMAL(38,0)) * z) AS DECIMAL(38,0))"
-        ).alias("t_i"),
-        F.expr(
-            "CAST(sum(CAST(n AS DECIMAL(38,0)) * z * z) AS DECIMAL(38,0))"
-        ).alias("ss_i"),
-    )
-    # one roll-up computes every scalar, INCLUDING the per-group floored
-    # Tᵢ²//nᵢ (the machine formula keeps the quotients at ~nᵢ·z̄² — the
-    # N²-scaled form's quotients cross 2⁶³ at sf0.1 and Spark's decimal
-    # DIV returns BIGINT, so ANSI raises where DuckDB's HUGEINT //
-    # continues: the engine-divergence this formulation exists to avoid)
-    tot = gr.agg(
-        F.sum("n_i").cast("long").alias("nn"),
-        F.expr("CAST(sum(t_i) AS DECIMAL(38,0))").alias("t"),
-        F.count("*").cast("long").alias("k"),
-        F.expr("CAST(sum(ss_i) AS DECIMAL(38,0))").alias("ss"),
-        F.expr(
-            "CAST(sum(t_i * t_i DIV n_i) AS DECIMAL(38,0))"
-        ).alias("sb"),
-    )
-    fe = "(nn - k) * ssb * 1000000 DIV ((k - 1) * ssw)"
-    return tot.withColumn(
-        "ssb", F.expr("greatest(sb - t * t DIV nn, CAST(0 AS BIGINT))")
-    ).withColumn(
-        "ssw", F.expr("CAST(ss - sb AS DECIMAL(38,0))")
-    ).select(
-        F.col("nn").alias("n_rows"),
-        F.col("k").alias("n_groups"),
-        F.expr(
-            f"CAST(CASE WHEN k > 1 AND ssw > 0 THEN {fe} END AS BIGINT)"
-        ).alias("f_e6"),
-        F.expr(
-            f"CASE WHEN k = 3 AND ssw > 0"
-            f" THEN (k - 1) * ({fe}) > 5991464 END"
-        ).alias("reject_05"),
-    )
-
-
-@staged_query(
-    "q_lineitem_mood_median",
-    # Mood's median test as 2×k contingency algebra: one POOLED low
-    # median from the level grid (order-statistics device), per-group
-    # above-median counts a_j, and the χ² independence statistic
-    # collapses (rows = {>m, ≤m}) to χ² = Σ d_j²/(n_j·A·(N−A)) with
-    # d_j = a_j·N − n_j·A — per-group floors d_j²//n_j replayed
-    # identically on both sides (the kruskal device; d² is sign-free so
-    # truncation ≡ floor), then ONE snapped division by A·(N−A) onto
-    # the millionths grid; A = 0, A = N, or a single group emit NULL
-    # per the r13 guard device, and the α=0.05 decision reuses the
-    # re-derived 5991464 = ⌊χ²₀.₉₅(2)·10⁶⌋ constant (emitted only for
-    # k = 3 — the exact quantile depends on df)
-    oracle="""
-    WITH grid AS (SELECT l_returnflag g, CAST(l_quantity AS BIGINT) q,
-                         CAST(count(*) AS BIGINT) n
-                  FROM lineitem GROUP BY 1, 2),
-    lvl AS (SELECT q, CAST(sum(n) AS BIGINT) t FROM grid GROUP BY 1),
-    c AS (SELECT q, CAST(sum(t) OVER (ORDER BY q) AS BIGINT) cum,
-                 CAST(sum(t) OVER () AS BIGINT) nn
-          FROM lvl),
-    m AS (SELECT min(q) m, max(nn) nn FROM c WHERE cum >= (nn + 1) // 2),
-    pg AS (SELECT g, CAST(sum(n) AS BIGINT) n_j,
-                  CAST(sum(CASE WHEN q > m THEN n ELSE 0 END) AS BIGINT) a_j,
-                  max(nn) nn
-           FROM grid, m GROUP BY g),
-    pg2 AS (SELECT g, n_j, a_j, nn,
-                   CAST(sum(a_j) OVER () AS BIGINT) a FROM pg),
-    terms AS (SELECT n_j, a_j, nn, a,
-                     ((a_j::HUGEINT * nn - n_j::HUGEINT * a)
-                      * (a_j::HUGEINT * nn - n_j::HUGEINT * a)) // n_j
-                       AS term
-              FROM pg2),
-    st AS (SELECT CAST(count(*) AS BIGINT) k, max(nn) nn, max(a) a,
-                  CAST(sum(term) AS HUGEINT) s
-           FROM terms)
-    SELECT nn AS n_rows, k AS n_groups, a AS n_above,
-           CAST(CASE WHEN k >= 2 AND a > 0 AND a < nn
-                THEN s * 1000000 // (a::HUGEINT * (nn - a))
-                END AS BIGINT) AS chi2_e6,
-           CASE WHEN k = 3 AND a > 0 AND a < nn
-                THEN s * 1000000 // (a::HUGEINT * (nn - a)) > 5991464
-                END AS reject_05
-    FROM st
-    """,
-)
-def q_lineitem_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mood's MEDIAN test across the returnflag quantity populations —
-    the k-sample location member that assumes the least (Kruskal–Wallis
-    compares full rank distributions; this only asks "does each group
-    straddle the POOLED median the same way?", the coarsest and most
-    outlier-immune of the location tests — the screen a DQ pipeline
-    runs first because it survives anything with a median). One pooled
-    low median comes off the level grid (order-statistics device, no
-    interpolation and no row sort), the 2×k contingency {> m, ≤ m} ×
-    group collapses algebraically to χ² = Σ_j d_j²/(n_j·A·(N−A)) with
-    d_j = a_j·N − n_j·A (A = total above-median count) — the per-group
-    d_j²//n_j floors are replayed identically on both sides (the
-    kruskal device; d² is sign-free so trunc-toward-zero ≡ floor),
-    then ONE positive snapped division by A·(N−A) onto the millionths
-    grid. Degenerate inputs (single group, or a median so heavy that
-    A = 0 or A = N) yield NULL per the r13 guard device; the α=0.05
-    decision applies the large-N χ²(k−1) quantile via the SAME
-    independently re-derived 5991464 constant the kruskal and
-    brown-forsythe entries pin (df = 2; emitted only for k = 3).
-
-    Scale: one scan pruned to two columns, one keyed partial-agg
-    shuffle to the ≤3×50 grid, cumulative windows over the pooled
-    level frame (post-agg-tiny-frame exemption), a broadcast 1-row
-    median attach, a 1-row answer. Headroom: d_j ≤ n_j·N keeps d_j²
-    ≤ N⁴ inside DECIMAL(38)/HUGEINT to N ≈ 10⁹, and the stage-1
-    BIGINT quotient d_j²//n_j ≤ n_j·N² ≤ N³ binds at N ≈ 2×10⁶
-    worst-case (the spearman class — real d_j ≪ n_j·N stretches it);
-    past that sample (it is a sample test) or coarsen the grid."""
-    grid = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_returnflag").alias("g"),
-            F.col("l_quantity").cast("long").alias("q"),
-        )
-        .groupBy("g", "q")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    # r16 (guide §2.4, the runs_test device): the pooled median came off
-    # a SECOND groupBy(q) evaluation of the grid, broadcast back onto
-    # the first — two lineitem scans+aggregations per invocation. The
-    # cumulative level counts now ride the grid frame itself: a
-    # RANGE-framed sum ordered by q gives each row the pooled count of
-    # quantities ≤ its q (exactly the old lvl cum), nn and the median
-    # are whole-frame windows over the ≤3×50-row grid (post-agg-tiny-
-    # frame exemption) — one scan, no crossJoin, identical values.
-    wq = Window.orderBy("q").rangeBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    g2 = (
-        grid.select(
-            "g",
-            "q",
-            "n",
-            F.sum("n").over(wq).cast("long").alias("cum"),
-            F.sum("n").over(wall).cast("long").alias("nn"),
-        )
-        .withColumn(
-            "m",
-            F.min(
-                F.when(F.expr("cum >= (nn + 1) DIV 2"), F.col("q"))
-            ).over(wall),
-        )
-    )
-    pg = (
-        g2.groupBy("g")
-        .agg(
-            F.sum("n").cast("long").alias("n_j"),
-            F.expr(
-                "CAST(sum(CASE WHEN q > m THEN n ELSE 0 END) AS BIGINT)"
-            ).alias("a_j"),
-            F.max("nn").alias("nn"),
-        )
-        .select(
-            "n_j", "a_j", "nn",
-            F.sum("a_j").over(wall).cast("long").alias("a"),
-        )
-    )
-    # stage-1 per-group floor: d² is DECIMAL(38,0); Spark DIV returns
-    # BIGINT, so the quotient is cast straight back to DECIMAL before
-    # the sum (the r14 spearman device — never let a decimal-scale
-    # intermediate ride a BIGINT multiply/sum)
-    st = pg.select(
-        "n_j", "a_j", "nn", "a",
-        F.expr(
-            "CAST((CAST(a_j AS DECIMAL(38,0)) * nn"
-            " - CAST(n_j AS DECIMAL(38,0)) * a)"
-            " * (CAST(a_j AS DECIMAL(38,0)) * nn"
-            "    - CAST(n_j AS DECIMAL(38,0)) * a)"
-            " DIV n_j AS DECIMAL(38,0))"
-        ).alias("term"),
-    ).agg(
-        # GLOBAL agg (not groupBy on the constant nn/a): one row comes
-        # out even on a degenerate empty input, matching the oracle's
-        # ungrouped aggregate exactly (a grouped agg would emit ZERO
-        # rows on empty where DuckDB's global agg emits one NULL row —
-        # an empty-input row-count divergence)
-        F.max("nn").alias("nn"),
-        F.max("a").alias("a"),
-        F.count("*").cast("long").alias("k"),
-        F.expr("CAST(sum(term) AS DECIMAL(38,0))").alias("s"),
-    )
-    chi = "s * 1000000 DIV (CAST(a AS DECIMAL(38,0)) * (nn - a))"
-    return st.select(
-        F.col("nn").alias("n_rows"),
-        F.col("k").alias("n_groups"),
-        F.col("a").alias("n_above"),
-        F.expr(
-            f"CAST(CASE WHEN k >= 2 AND a > 0 AND a < nn THEN {chi}"
-            f" END AS BIGINT)"
-        ).alias("chi2_e6"),
-        F.expr(
-            f"CASE WHEN k = 3 AND a > 0 AND a < nn"
-            f" THEN {chi} > 5991464 END"
-        ).alias("reject_05"),
     )
 
 
@@ -15875,9 +14379,9 @@ def docs_source_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     contingency — "did some crawl source shift its language mix?", the
     significance test behind the `docs_source_mix` report (the report
     shows shares; this says whether the differences exceed chance).
-    Third χ² species in the battery: `q_lineitem_flag_status_chi2` is
-    2×2 independence with all cells present, `q_orders_dow_chi2` is
-    one-margin goodness-of-fit — this is r×k independence over a spine
+    Another χ² species in the battery: `q_lineitem_flag_status_chi2` is
+    2×2 independence with all cells present — this is r×k independence
+    over a spine
     with genuinely ABSENT cells, priced algebraically via the full
     margin cross (O = 0 → d = −R·C; the synthetic corpus has empty
     (source, lang) cells, so the path is exercised). Per-cell
@@ -16134,138 +14638,6 @@ def emb_cov_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r1 * 10000) // tr if tr > 0 else None,
         )],
         out_schema,
-    )
-
-
-@staged_query(
-    "q_lineitem_kendall_tau_b",
-    # Kendall τ-b completes the rank-association trio (gamma ignores
-    # ties; Spearman mid-ranks them; τ-b CORRECTS for them): C and D
-    # are the gamma entry's grid pair counts VERBATIM, the tie terms
-    # come off the margins (n0 = N(N−1)/2, n1 = Σtₓ(tₓ−1)/2,
-    # n2 = Σt_y(t_y−1)/2 — all exact, t(t−1) is even so //2 is exact),
-    # and the sqrt disappears by squaring: sign(C−D)·(((C−D)² //
-    # (n0−n1))·10⁸ // (n0−n2)) — the spearman sign + two-stage device,
-    # both divisions positive-floor, the stage-1 BIGINT quotient cast
-    # back to DECIMAL before the ×10⁸ (the r14 device); a degenerate
-    # margin (single level → n0 = n1 or n0 = n2) emits NULL per the
-    # r13 guard device
-    oracle="""
-    WITH cells AS (
-      SELECT CAST(l_quantity AS BIGINT) x,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-               // 1000000 y,
-             CAST(count(*) AS BIGINT) n
-      FROM lineitem GROUP BY 1, 2),
-    tot AS (SELECT CAST(sum(n) AS BIGINT) nn FROM cells),
-    tx AS (SELECT CAST(coalesce(sum(t::HUGEINT * (t - 1) // 2), 0)
-                  AS HUGEINT) n1
-           FROM (SELECT CAST(sum(n) AS BIGINT) t FROM cells GROUP BY x)),
-    ty AS (SELECT CAST(coalesce(sum(t::HUGEINT * (t - 1) // 2), 0)
-                  AS HUGEINT) n2
-           FROM (SELECT CAST(sum(n) AS BIGINT) t FROM cells GROUP BY y)),
-    pairs AS (
-      SELECT CAST(coalesce(sum(CASE WHEN b.y > a.y
-                   THEN a.n::HUGEINT * b.n END), 0) AS BIGINT) c_pairs,
-             CAST(coalesce(sum(CASE WHEN b.y < a.y
-                   THEN a.n::HUGEINT * b.n END), 0) AS BIGINT) d_pairs
-      FROM cells a JOIN cells b ON b.x > a.x AND b.y <> a.y),
-    s AS (SELECT c_pairs, d_pairs,
-                 nn::HUGEINT * (nn - 1) // 2 AS n0, n1, n2
-          FROM pairs, tot, tx, ty)
-    SELECT c_pairs, d_pairs,
-           CAST(CASE WHEN n0 - n1 > 0 AND n0 - n2 > 0
-                THEN (CASE WHEN c_pairs < d_pairs THEN -1 ELSE 1 END)
-                     * ((((c_pairs::HUGEINT - d_pairs)
-                          * (c_pairs::HUGEINT - d_pairs))
-                         // (n0 - n1)) * 100000000 // (n0 - n2))
-                END AS BIGINT) AS tau2_e8_signed
-    FROM s
-    """,
-)
-def q_lineitem_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall τ-b between quantity and price band — the third member
-    of the rank-association trio (`q_lineitem_gamma_correlation`
-    IGNORES ties, `q_lineitem_spearman` mid-ranks them; τ-b CORRECTS
-    for them, the standard report when both axes are coarse ordinal
-    grids and tie mass is the story). C and D are the gamma entry's
-    contingency-grid pair counts VERBATIM — same grid, same non-equi
-    cell join, cross-entry-pinned by the independent test — and the
-    tie corrections are margin algebra: n0 = N(N−1)/2, n1 = Σtₓ(tₓ−1)/2
-    over the quantity margin, n2 likewise over the price margin (every
-    term exact — t(t−1) is even, so the halving never floors). τ-b =
-    (C−D)/√((n0−n1)(n0−n2)) reaches the 10⁻⁸ grid sqrt-free by
-    squaring through the spearman sign device: sign(C−D)·(((C−D)² //
-    (n0−n1))·10⁸ // (n0−n2)) — both divisions positive-floor replayed
-    in the same stage order, the stage-1 BIGINT quotient cast back to
-    DECIMAL(38,0) before the ×10⁸ (the r14 spearman lesson, applied at
-    design time). A margin with a single level (n0 = n1 or n0 = n2)
-    yields NULL on both sides per the r13 guard device.
-
-    Scale: identical to gamma — one scan pruned to two columns, one
-    keyed partial-agg shuffle to the ~550-cell grid, the
-    bounded-collect device re-emitting local frames so the non-equi
-    pair join is grid-sized and the fact table is scanned ONCE; the
-    margins fold from the same collected rows as exact Python ints.
-    Headroom: (C−D)² ≤ n0² ≈ N⁴/4 holds DECIMAL(38)/HUGEINT to
-    N ≈ 10⁹ rows, the stage-1 quotient ≤ n0 fits BIGINT to the same
-    point, and quotient·10⁸ rides DECIMAL — past 10⁹ rows evaluate on
-    a sampled slice (it is a sample statistic)."""
-    grid = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_quantity").cast("long").alias("x"),
-            F.expr(
-                "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-                " DIV 1000000"
-            ).alias("y"),
-        )
-        .groupBy("x", "y")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    rows = grid.collect()  # bounded: grid-sized, corpus-independent
-    nn = sum(r["n"] for r in rows)
-    txs: dict = {}
-    tys: dict = {}
-    for r in rows:
-        txs[r["x"]] = txs.get(r["x"], 0) + r["n"]
-        tys[r["y"]] = tys.get(r["y"], 0) + r["n"]
-    n0 = nn * (nn - 1) // 2
-    n1 = sum(t * (t - 1) // 2 for t in txs.values())
-    n2 = sum(t * (t - 1) // 2 for t in tys.values())
-    local = spark.createDataFrame(rows, grid.schema)
-    a, b = local.alias("a"), F.broadcast(local.alias("b"))
-    prod = "CAST(a.n AS DECIMAL(38,0)) * b.n"
-    pairs = (
-        a.join(
-            b, (F.col("b.x") > F.col("a.x")) & (F.col("b.y") != F.col("a.y"))
-        )
-        .agg(
-            F.expr(
-                f"CAST(coalesce(sum(CASE WHEN b.y > a.y THEN {prod} END),"
-                f" 0) AS BIGINT)"
-            ).alias("c_pairs"),
-            F.expr(
-                f"CAST(coalesce(sum(CASE WHEN b.y < a.y THEN {prod} END),"
-                f" 0) AS BIGINT)"
-            ).alias("d_pairs"),
-        )
-    )
-    # degenerate guard mirrored by the oracle's CASE: the margin
-    # scalars are plan-time Python ints, so the branch costs nothing
-    # on healthy inputs
-    if n0 - n1 > 0 and n0 - n2 > 0:
-        tau2 = F.expr(
-            "CAST((CASE WHEN c_pairs < d_pairs THEN -1 ELSE 1 END)"
-            " * (CAST((CAST(c_pairs AS DECIMAL(38,0)) - d_pairs)"
-            "     * (CAST(c_pairs AS DECIMAL(38,0)) - d_pairs)"
-            f"    DIV {n0 - n1} AS DECIMAL(38,0))"
-            f"   * 100000000 DIV {n0 - n2}) AS BIGINT)"
-        )
-    else:
-        tau2 = F.lit(None).cast("long")
-    return pairs.select(
-        "c_pairs", "d_pairs", tau2.alias("tau2_e8_signed")
     )
 
 
@@ -16613,176 +14985,6 @@ def stream_hapax_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = _drain_memory_sink(spark, v, "stream_hapax_monitor", "complete", source_path=f"{sf_dir}/documents.parquet")
     return _hapax_report(t)
-
-
-@staged_query(
-    "media_ahash_clusters",
-    # pure-ASCII corpus: ord(char) == byte value, so DuckDB replays the
-    # stub decode + the v*64 > sum(v) bit rule exactly (the
-    # media_ahash_pairs bits chain verbatim); short payloads carry no
-    # hash and map to themselves
-    oracle="""
-    WITH d AS (SELECT doc_id, substring(text, 1, 64) AS p
-               FROM documents WHERE n_chars >= 64),
-    b AS (SELECT doc_id, i, ord(substring(p, i, 1)) AS v
-          FROM d, unnest(range(1, 65)) r(i)),
-    s AS (SELECT doc_id, CAST(sum(v) AS BIGINT) AS tot FROM b GROUP BY 1),
-    bits AS (SELECT b.doc_id,
-                    string_agg(CASE WHEN v * 64 > tot THEN '1' ELSE '0' END,
-                               '' ORDER BY i) AS h
-             FROM b JOIN s ON b.doc_id = s.doc_id GROUP BY b.doc_id),
-    g AS (SELECT doc_id,
-                 min(doc_id) OVER (PARTITION BY h) AS cluster_id,
-                 count(*) OVER (PARTITION BY h) AS cluster_size
-          FROM bits)
-    SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-           CAST(cluster_size AS BIGINT) AS cluster_size
-    FROM g
-    UNION ALL
-    SELECT doc_id, doc_id AS cluster_id, 1::BIGINT AS cluster_size
-    FROM documents WHERE n_chars < 64
-    """,
-)
-def media_ahash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual near-dup CLUSTER MAP over media payloads — the group
-    view of `media_ahash_pairs` (the media analog of `dedup_clusters`):
-    every payload maps to cluster_id = min doc_id sharing its aHash,
-    with cluster size; payloads too short to hash are their own
-    singletons, so the map covers the whole corpus like the text-side
-    cluster map. Two structural notes the entry exists to pin: (1) hash
-    EQUALITY is transitive, so the clusters are the hash groups
-    themselves — no star-contraction closure needed, unlike the
-    Jaccard-threshold pair graph (similarity is not transitive); (2) the
-    pair view must df-cap huge buckets (pair output is quadratic in
-    bucket size) but the GROUP view has no quadratic hazard — cluster
-    assignment is one window over the hash partition, linear in corpus
-    size — so this map is exact even where the pair list is capped.
-
-    Scale: narrow Arrow hash map (no shuffle), ONE shuffle on the
-    64-bit hash for the two same-partition windows, plus the
-    metadata-cheap singleton union; output is corpus-sized, never
-    pair-sized."""
-    docs = _t(spark, sf_dir, "documents")
-    h = multimodal.ahash64(
-        multimodal.documents_as_binary(docs.filter(F.col("n_chars") >= 64))
-    )
-    wb = Window.partitionBy("ahash")
-    grouped = h.select(
-        "doc_id",
-        F.min("doc_id").over(wb).alias("cluster_id"),
-        F.count(F.lit(1)).over(wb).cast("long").alias("cluster_size"),
-    )
-    singles = docs.filter(F.col("n_chars") < 64).select(
-        "doc_id",
-        F.col("doc_id").alias("cluster_id"),
-        F.lit(1).cast("long").alias("cluster_size"),
-    )
-    return grouped.unionByName(singles)
-
-
-# the cell CTE wraps the PROMOTED q_lineitem_flag_status_chi2 oracle
-# verbatim (composed from ORACLES at module load — zero text
-# duplication, the _PPL_BUCKETS_SQL device — so the grid and the
-# effect-size roll-up cannot drift); sums of contrib_e6 are HUGEINT in
-# DuckDB, CAST back to BIGINT per the standing device
-_CRAMERS_V_SQL = f"""
-    WITH chi AS ({ORACLES["q_lineitem_flag_status_chi2"]}),
-    agg AS (SELECT CAST(coalesce(sum(observed), 0) AS BIGINT) n_tot,
-                   CAST(count(DISTINCT l_returnflag) AS BIGINT) r_levels,
-                   CAST(count(DISTINCT l_linestatus) AS BIGINT) c_levels,
-                   CAST(coalesce(sum(contrib_e6), 0) AS BIGINT) chi2_e6
-            FROM chi),
-    v AS (SELECT n_tot, r_levels, c_levels,
-                 CAST(greatest(r_levels - 1, 0)
-                      * greatest(c_levels - 1, 0) AS BIGINT) AS df,
-                 chi2_e6,
-                 CAST(CASE WHEN n_tot > 0 AND least(r_levels, c_levels) >= 2
-                      THEN chi2_e6 * 100
-                           // (n_tot * (least(r_levels, c_levels) - 1))
-                      END AS BIGINT) AS v2_e8
-          FROM agg)
-    SELECT n_tot, r_levels, c_levels, df, chi2_e6, v2_e8,
-           CASE WHEN v2_e8 IS NULL THEN 'undefined'
-                WHEN v2_e8 < 1000000 THEN 'negligible'
-                WHEN v2_e8 < 9000000 THEN 'small'
-                WHEN v2_e8 < 25000000 THEN 'medium'
-                ELSE 'large' END AS effect
-    FROM v
-"""
-
-
-@staged_query("q_lineitem_cramers_v", oracle=_CRAMERS_V_SQL)
-def q_lineitem_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramér's V effect size for the returnflag × linestatus
-    association — the practical-significance companion the χ² family
-    was missing: at TPC-H row counts *every* dependence is
-    "significant" (χ² grows linearly in N at fixed association), so the
-    dashboards the independence entries feed need the N-normalized
-    V² = χ² / (N · min(r−1, c−1)) to say whether the dependence is
-    worth acting on. One row out: N, level counts, df, the χ²
-    statistic in millionths, V² in 10⁻⁸ units (the spearman
-    near-zero-grid precedent: χ²/N association at warehouse N is tiny
-    — TPC-H's flag×status lands at V² ≈ 3·10⁻⁶, which the e6 grid
-    would snap to single digits; headroom chi2_e6·100 ≤ N·m·10⁸ stays
-    under 2⁶³ past N = 10⁹), and the conventional effect band
-    (negligible < 0.1 ≤ small < 0.3 ≤ medium < 0.5 ≤ large, thresholds
-    squared onto the integer grid so the banding is division-free).
-    The contingency grid and per-cell χ² contributions
-    are the PROMOTED `q_lineitem_flag_status_chi2` frame VERBATIM —
-    both the Spark side (it consumes that entry's DataFrame) and the
-    oracle (its SQL is composed in as a CTE at module load), the
-    kendall-reuses-gamma cross-entry device — so the two entries
-    cannot drift. V² is one all-positive floor division (every
-    contrib_e6 ≥ 0); fewer than two levels on either margin → V
-    undefined → NULL + 'undefined' via the r13 degenerate-guard
-    device, and the empty table emits one zeros row through the
-    global-agg device.
-
-    Scale: everything data-sized is inherited from the promoted entry
-    (one pruned scan, one cell-keyed partial-agg shuffle); this adds a
-    global roll-up over the ≤ |flags|×|statuses| cell frame — the
-    post-agg-tiny-frame exemption — and returns exactly one row at any
-    corpus size."""
-    cells = q_lineitem_flag_status_chi2(spark, sf_dir)
-    agg = cells.agg(
-        F.coalesce(F.sum("observed"), F.lit(0)).cast("long").alias("n_tot"),
-        F.countDistinct("l_returnflag").cast("long").alias("r_levels"),
-        F.countDistinct("l_linestatus").cast("long").alias("c_levels"),
-        F.coalesce(F.sum("contrib_e6"), F.lit(0)).cast("long").alias(
-            "chi2_e6"
-        ),
-    )
-    v = agg.select(
-        "n_tot",
-        "r_levels",
-        "c_levels",
-        F.expr(
-            "CAST(greatest(r_levels - 1, 0)"
-            " * greatest(c_levels - 1, 0) AS BIGINT)"
-        ).alias("df"),
-        "chi2_e6",
-        F.expr(
-            "CAST(CASE WHEN n_tot > 0 AND least(r_levels, c_levels) >= 2"
-            " THEN chi2_e6 * 100"
-            " DIV (n_tot * (least(r_levels, c_levels) - 1))"
-            " END AS BIGINT)"
-        ).alias("v2_e8"),
-    )
-    return v.select(
-        "n_tot",
-        "r_levels",
-        "c_levels",
-        "df",
-        "chi2_e6",
-        "v2_e8",
-        F.expr(
-            "CASE WHEN v2_e8 IS NULL THEN 'undefined'"
-            " WHEN v2_e8 < 1000000 THEN 'negligible'"
-            " WHEN v2_e8 < 9000000 THEN 'small'"
-            " WHEN v2_e8 < 25000000 THEN 'medium'"
-            " ELSE 'large' END"
-        ).alias("effect"),
-    )
 
 
 # per-element milli-quantize in f64 (the c62fc0b device: cast each
@@ -17249,220 +15451,6 @@ def stream_norm_buckets_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _norm_bucket_report(t)
 
 
-@staged_query(
-    "q_part_degree_assortativity",
-    # the SYMMETRIC directed-pair form needs no sqrt: counting every
-    # edge in both directions makes the two endpoint-degree margins
-    # identical, so Pearson r = (M·Σxy − (Σx)²) / (M·Σx² − (Σx)²) is a
-    # ratio of two exact integers (Σx = Σd², Σx² = Σd³, Σxy = 2·Σdadb)
-    # — one signed division via the spearman sign device; num·10⁶
-    # crosses 2⁶³ (≈ 8·10²² at sf0.1's margins), hence HUGEINT here and
-    # DECIMAL(38,0) on the Spark side (the widening device); den = 0
-    # (all degrees equal, incl. the empty graph) → NULL + 'undefined'
-    oracle="""
-    WITH li AS (SELECT DISTINCT l_orderkey o, l_partkey p FROM lineitem
-                WHERE l_shipdate BETWEEN DATE '1995-01-01'
-                                     AND DATE '1995-12-31'),
-    e AS (SELECT DISTINCT x.p a, y.p b FROM li x
-          JOIN li y ON x.o = y.o AND x.p < y.p),
-    deg AS (SELECT n, CAST(count(*) AS BIGINT) d
-            FROM (SELECT a n FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-    nagg AS (SELECT CAST(count(*) AS BIGINT) n_nodes,
-                    CAST(coalesce(sum(d * d), 0) AS BIGINT) s2,
-                    CAST(coalesce(sum(d * d * d), 0) AS BIGINT) s3
-             FROM deg),
-    eagg AS (SELECT CAST(count(*) AS BIGINT) n_edges,
-                    CAST(coalesce(sum(da.d * db.d), 0) AS BIGINT) sxy_half
-             FROM e JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b),
-    v AS (SELECT n_nodes, n_edges,
-                 (2 * n_edges)::HUGEINT * (2 * sxy_half)
-                   - s2::HUGEINT * s2 AS num,
-                 (2 * n_edges)::HUGEINT * s3 - s2::HUGEINT * s2 AS den
-          FROM nagg, eagg)
-    SELECT n_nodes, n_edges,
-           CAST(CASE WHEN den > 0 THEN
-                  CASE WHEN num >= 0 THEN (num * 1000000) // den
-                       ELSE -(((-num) * 1000000) // den) END
-                END AS BIGINT) AS r_e6,
-           CASE WHEN den <= 0 THEN 'undefined'
-                WHEN num > 0 THEN 'assortative'
-                WHEN num < 0 THEN 'disassortative'
-                ELSE 'neutral' END AS mixing
-    FROM v
-    """,
-)
-def q_part_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the 1995 co-order part graph — completes
-    the graph-health family (PageRank centrality, k-core density,
-    triangle clustering) with Newman's mixing coefficient: do
-    high-degree parts co-occur with other high-degree parts (r > 0,
-    hub-bundle catalogs) or with low-degree ones (r < 0, the
-    hub-and-spoke shape typical of basket data)? The structural trick
-    that keeps it integer-exact: counting every undirected edge in BOTH
-    directions makes the source- and target-degree margins identical,
-    so the Pearson correlation needs NO square root —
-    r = (M·Σxy − (Σx)²)/(M·Σx² − (Σx)²) with M = 2|E|, Σx = Σd²,
-    Σx² = Σd³ (node-side sums), Σxy = 2·Σ_edges d(a)·d(b) — a ratio of
-    exact integers reported as sign(num)·(|num|·10⁶ DIV den) via the
-    spearman sign device (num can be negative; the division operand
-    cannot). Products run in DECIMAL(38,0) / HUGEINT (the widening
-    device — num·10⁶ ≈ 8·10²² already at sf0.1); a degenerate graph
-    (all degrees equal, incl. empty) has den = 0 → NULL + 'undefined'
-    via the r13 guard device. Same graph build as the promoted
-    `q_part_triangles` (the independent test re-derives the degree
-    frame from the parquet, so the two entries' graphs cannot drift).
-
-    Scale: the co-order self-join is the same candidate-bounded edge
-    build the triangle entry ships (distinct (order, part) pairs,
-    order-keyed equi-join — never a cartesian); past that everything is
-    degree-frame-sized: one union-groupBy for degrees, one broadcast-
-    sized join of degrees onto edges, two global aggs, and a 1×1-row
-    cross join of the two scalar frames (the permitted
-    post-agg-scalar-broadcast class). Output is ONE row at any
-    scale."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate").between("1995-01-01", "1995-12-31"))
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.alias("x")
-        .join(
-            li.alias("y"),
-            on=F.expr(
-                "x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey"
-            ),
-        )
-        .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-        .distinct()
-        # the edge subtree appears SEVEN times in the lazy plan (the
-        # degree union references it twice, and eagg rebuilds deg twice
-        # plus probes e itself) — past the measured >=4-reuse
-        # localCheckpoint break-even (CLAUDE.md; the 2-use case LOST
-        # 20% and stays lazy elsewhere)
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    nagg = deg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        F.coalesce(F.sum(F.expr("d * d")), F.lit(0)).cast("long").alias("s2"),
-        F.coalesce(F.sum(F.expr("d * d * d")), F.lit(0))
-        .cast("long")
-        .alias("s3"),
-    )
-    eagg = (
-        e.join(deg.withColumnRenamed("n", "a").withColumnRenamed("d", "da"), "a")
-        .join(deg.withColumnRenamed("n", "b").withColumnRenamed("d", "db"), "b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_edges"),
-            F.coalesce(F.sum(F.expr("da * db")), F.lit(0))
-            .cast("long")
-            .alias("sxy_half"),
-        )
-    )
-    v = nagg.crossJoin(eagg).select(
-        "n_nodes",
-        "n_edges",
-        F.expr(
-            "CAST(2 * n_edges AS DECIMAL(38,0)) * (2 * sxy_half)"
-            " - CAST(s2 AS DECIMAL(38,0)) * s2"
-        ).alias("num"),
-        F.expr(
-            "CAST(2 * n_edges AS DECIMAL(38,0)) * s3"
-            " - CAST(s2 AS DECIMAL(38,0)) * s2"
-        ).alias("den"),
-    )
-    return v.select(
-        "n_nodes",
-        "n_edges",
-        F.expr(
-            "CAST(CASE WHEN den > 0 THEN"
-            " CASE WHEN num >= 0 THEN (num * 1000000) DIV den"
-            " ELSE -(((-num) * 1000000) DIV den) END"
-            " END AS BIGINT)"
-        ).alias("r_e6"),
-        F.expr(
-            "CASE WHEN den <= 0 THEN 'undefined'"
-            " WHEN num > 0 THEN 'assortative'"
-            " WHEN num < 0 THEN 'disassortative'"
-            " ELSE 'neutral' END"
-        ).alias("mixing"),
-    )
-
-
-@staged_query(
-    "dedup_cluster_size_buckets",
-    # rolls up from the SHARED _DEDUP_CSZ_PREFIX chain (the rate
-    # report's replay verbatim down to the per-cluster size frame), so
-    # the two entries' pipelines cannot drift; buckets via the
-    # length(bin(n))-1 device; csz rows have n >= 1 so bin() never sees
-    # 0 and the share division needs no zero guard beyond non-emptiness
-    oracle=_DEDUP_CSZ_PREFIX + """,
-    szb AS (SELECT CAST(length(bin(n)) - 1 AS BIGINT) bucket, n FROM csz),
-    szg AS (SELECT bucket, CAST(count(*) AS BIGINT) n_clusters,
-                   CAST(sum(n) AS BIGINT) n_docs,
-                   CAST(max(n) AS BIGINT) max_size
-            FROM szb GROUP BY 1),
-    szt AS (SELECT szg.*, CAST(sum(n_docs) OVER () AS BIGINT) tot FROM szg)
-    SELECT bucket, n_clusters, n_docs, max_size,
-           CAST(n_docs * 10000 // tot AS BIGINT) AS docs_share_bp
-    FROM szt
-    """,
-)
-def dedup_cluster_size_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster SIZE distribution in exact log₂ buckets — the
-    profile behind `docs_dedup_rate_report`'s single max_cluster_size
-    smoke alarm: a corpus where duplication lives in millions of pairs
-    (bucket 1) needs a different fix (crawl-frontier dedup) than one
-    where a handful of templates exploded into thousand-member clusters
-    (high buckets — trim at the source), and the histogram is what
-    distinguishes them. Per bucket ⌊log₂ size⌋: cluster count, document
-    count, largest member, and the share of the corpus living there in
-    basis points (bucket 0 = the unique documents). Reads the SHARED
-    session cluster map (`_dedup_cluster_map` — the dedup_clusters /
-    curation / golden-record / rate-report build, reused not rebuilt);
-    the oracle rolls up from the rate report's replay chain via the
-    shared `_DEDUP_CSZ_PREFIX`, so the two reports cannot drift, and
-    buckets use the length(bin(n))−1 device (sizes ≥ 1, so bin() never
-    sees zero).
-
-    Scale: everything upstream is the cluster map's own (LSH-bounded)
-    cost, paid once per session; this adds one cluster-keyed count over
-    the map, one ≤ ~45-key bucket agg, and the share window over the
-    post-agg bucket spine — output is bucket-count rows at any corpus
-    size."""
-    m = _dedup_cluster_map(spark, sf_dir)
-    csz = m.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    b = csz.select(
-        F.expr("CAST(length(bin(n)) - 1 AS BIGINT)").alias("bucket"), "n"
-    )
-    g = b.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n_clusters"),
-        F.sum("n").cast("long").alias("n_docs"),
-        F.max("n").cast("long").alias("max_size"),
-    )
-    t = g.withColumn(
-        "tot", F.sum("n_docs").over(Window.partitionBy()).cast("long")
-    )
-    return t.select(
-        "bucket",
-        "n_clusters",
-        "n_docs",
-        "max_size",
-        F.expr("CAST(n_docs * 10000 DIV tot AS BIGINT)").alias(
-            "docs_share_bp"
-        ),
-    )
-
-
 @staged_query("stream_simpson_monitor", oracle=_SIMPSON_SQL)
 def stream_simpson_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-language Simpson concentration screen as a STREAM: crawl
@@ -17498,61 +15486,3 @@ def stream_simpson_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = _drain_memory_sink(spark, tc, "stream_simpson_monitor", "complete", source_path=f"{sf_dir}/documents.parquet")
     return _simpson_report(t)
-
-
-@staged_query(
-    "dedup_rate_by_source",
-    # rolls up from the SHARED _DEDUP_CSZ_PREFIX chain's doc-level map
-    # `alln` (duplicate = non-least-id member), joined to documents for
-    # the source label — the rate report's replay verbatim, sliced; the
-    # share division is all-positive (grouped sources have >= 1 doc)
-    oracle=_DEDUP_CSZ_PREFIX + """,
-    src AS (SELECT d.source, CAST(count(*) AS BIGINT) n_docs,
-                   CAST(coalesce(sum(CASE WHEN a.cid <> a.doc_id
-                                     THEN 1 END), 0) AS BIGINT) n_dups
-            FROM alln a JOIN documents d ON a.doc_id = d.doc_id
-            GROUP BY 1)
-    SELECT source, n_docs, n_dups,
-           CAST(n_dups * 10000 // n_docs AS BIGINT) AS dup_rate_bp
-    FROM src
-    """,
-)
-def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate rate sliced BY CRAWL SOURCE — the attribution view
-    behind `docs_dedup_rate_report`'s corpus-level number: dedup
-    savings are an acquisition-pipeline signal (a mirror-heavy source
-    whose docs are 40 % redundant should be down-weighted or
-    frontier-deduped at the crawler, and that decision needs the rate
-    PER SOURCE, not the blend). Per source: document count, duplicate
-    count (docs that are not their cluster's least-id canonical —
-    attribution goes to the duplicate's own source, so a cross-source
-    clone pair charges the source that contributed the redundant copy),
-    and the duplicate rate in basis points (all-positive floor
-    division). Reads the SHARED session cluster map
-    (`_dedup_cluster_map` — reused, not rebuilt) joined back to the
-    documents table for the source label; the oracle rolls up from the
-    rate report's replay chain via the shared `_DEDUP_CSZ_PREFIX`, so
-    the three dedup reports (rate, size histogram, source slice)
-    replay ONE chain.
-
-    Scale: the map is the session build, paid once; this adds one
-    broadcast-sized join of the map to the pruned (doc_id, source)
-    projection and a source-keyed partial agg — |sources| rows out at
-    any corpus size."""
-    m = _dedup_cluster_map(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    j = m.select("doc_id", "is_canonical").join(docs, "doc_id")
-    g = j.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(
-            F.sum(F.when(~F.col("is_canonical"), 1)), F.lit(0)
-        ).cast("long").alias("n_dups"),
-    )
-    return g.select(
-        "source",
-        "n_docs",
-        "n_dups",
-        F.expr("CAST(n_dups * 10000 DIV n_docs AS BIGINT)").alias(
-            "dup_rate_bp"
-        ),
-    )

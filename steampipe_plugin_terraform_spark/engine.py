@@ -147,6 +147,37 @@ def _make_parse_fn(on_error: str, default_kind: str = "config"):
     return parse
 
 
+def _reset_listing_cache(spark: SparkSession) -> None:
+    """Drop Spark's FileStatusCache. Path reads list through it, and it pins
+    each file's LENGTH from its first listing, so a re-read of a grown
+    object would truncate (metadata only — persisted DataFrames are
+    untouched)."""
+    try:
+        # the Scala companion object has no static forwarder for this
+        # method, so it must be addressed explicitly via $.MODULE$
+        companion = getattr(
+            spark._jvm, "org.apache.spark.sql.execution.datasources.FileStatusCache$"
+        )
+        getattr(companion, "MODULE$").resetForTesting()
+    except Exception:
+        pass  # no JVM access (connect mode): stale listings possible
+
+
+def _read_canonical(spark: SparkSession, path: str) -> DataFrame:
+    """The wide frame of a canonical store (``save_canonical`` layout)."""
+    df = spark.read.parquet(path)
+    # stores written before file_kind joined the wide layout load with
+    # the column NULL (kind is unrecoverable post-parse). Both drift
+    # audits filter on file_kind == 'config'/'state'/'plan', so a
+    # legacy store contributes ZERO rows to every side — re-save the
+    # store from a fresh parse before auditing drift (the limitation
+    # is documented in _config_state_drift_frame / tf_plan_state_drift)
+    if "file_kind" not in df.columns:
+        df = df.withColumn("file_kind", F.lit(None).cast("string"))
+    # partition column comes back; reorder to the wide layout
+    return df.select(*WIDE_COLUMNS)
+
+
 class TerraformEngine:
     """Parse-once / derive-seven-tables engine over Terraform artifacts."""
 
@@ -162,6 +193,8 @@ class TerraformEngine:
         watch: bool = False,
         watch_interval: float = 1.0,
     ):
+        if on_error not in ("fail", "skip"):
+            raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
         self.spark = spark
         self._source_lists = (tuple(config_paths), tuple(plan_paths), tuple(state_paths), path_qual)
         auth: dict[str, str] = {}
@@ -175,6 +208,7 @@ class TerraformEngine:
             apply_s3a_auth(spark, auth)
         self.on_error = on_error
         self._cache = cache
+        self._canonical_path: str | None = None  # set by load_canonical
         self._wide: DataFrame | None = None
         self._slices = 1  # local parse slices of the last full build
         self._views_json_as: str | None = None
@@ -335,9 +369,22 @@ class TerraformEngine:
         wide frame we are reusing). A changed REMOTE object, or
         ``changed_paths=None``, falls back to a full lazy rebuild.
 
+        An engine from ``load_canonical`` has no source lists: it re-reads
+        its store instead, picking up rows a ``watch_to_canonical`` drain
+        appended since the load.
+
         Registered temp views are re-registered so ``spark.sql`` callers see
         the refreshed tables without re-calling ``register_views``.
         """
+        if self._canonical_path is not None:
+            _reset_listing_cache(self.spark)
+            self._wide = _read_canonical(self.spark, self._canonical_path)
+        else:
+            self._refresh_sources(changed_paths)
+        if self._views_json_as is not None:
+            self.register_views(json_as=self._views_json_as)
+
+    def _refresh_sources(self, changed_paths) -> None:
         old = self._wide
         cfg, plan, state, qual = self._source_lists
         auth: dict[str, str] = {}
@@ -346,20 +393,7 @@ class TerraformEngine:
             from .sources.discover import apply_s3a_auth
 
             apply_s3a_auth(self.spark, auth)
-        # binaryFile (remote roots) lists through Spark's FileStatusCache,
-        # which pins each file's LENGTH from its first listing, so a re-read
-        # of a grown object would truncate. Drop the listing cache
-        # (metadata only — persisted DataFrames are untouched).
-        try:
-            # the Scala companion object has no static forwarder for this
-            # method, so it must be addressed explicitly via $.MODULE$
-            jvm = self.spark._jvm
-            companion = getattr(
-                jvm, "org.apache.spark.sql.execution.datasources.FileStatusCache$"
-            )
-            getattr(companion, "MODULE$").resetForTesting()
-        except Exception:
-            pass  # no JVM access (connect mode): stale listings possible
+        _reset_listing_cache(self.spark)
         changed = (
             None
             if changed_paths is None
@@ -388,8 +422,6 @@ class TerraformEngine:
             df.count()  # materialize from the old cache BEFORE dropping it
             self._wide = df
             old.unpersist()
-        if self._views_json_as is not None:
-            self.register_views(json_as=self._views_json_as)
 
     # -- public surface --
 
@@ -447,15 +479,6 @@ class TerraformEngine:
     def load_canonical(cls, spark: SparkSession, path: str) -> "TerraformEngine":
         """Engine over a previously saved canonical store (no parsing)."""
         eng = cls(spark, cache=False)
-        df = spark.read.parquet(path)
-        # stores written before file_kind joined the wide layout load with
-        # the column NULL (kind is unrecoverable post-parse). Both drift
-        # audits filter on file_kind == 'config'/'state'/'plan', so a
-        # legacy store contributes ZERO rows to every side — re-save the
-        # store from a fresh parse before auditing drift (the limitation
-        # is documented in _config_state_drift_frame / tf_plan_state_drift)
-        if "file_kind" not in df.columns:
-            df = df.withColumn("file_kind", F.lit(None).cast("string"))
-        # partition column comes back; reorder to the wide layout
-        eng._wide = df.select(*WIDE_COLUMNS)
+        eng._canonical_path = path
+        eng._wide = _read_canonical(spark, path)
         return eng

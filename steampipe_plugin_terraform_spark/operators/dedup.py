@@ -239,43 +239,6 @@ def _shared_pairs_with_sizes(sh: DataFrame, df_max: int | None) -> DataFrame:
     )
 
 
-def shingle_containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    threshold_bp: int = 9000,
-    df_max: int | None = 10_000,
-) -> DataFrame:
-    """ASYMMETRIC near-dup pairs by shingle containment — the quote/
-    excerpt detector Jaccard dilutes: containment = |A∩B| / min(|A|, |B|)
-    is high when the smaller doc's shingles sit inside the larger one even
-    though their Jaccard (÷ the union) is low. Same posting-list trunk and
-    df-cap as the jaccard operator; the score lands on the basis-point
-    grid via shared·10⁴ DIV min(n_a, n_b) (positive ints — engine-exact).
-
-    Returns (id_a, id_b, containment_bp, contained_id) with id_a < id_b,
-    containment_bp >= threshold_bp; contained_id names the doc whose
-    shingle set is (near-)contained — the smaller side, id_a on ties.
-    """
-    sh = _hashed_shingles(df, id_col, text_col, n)
-    joined = _shared_pairs_with_sizes(sh, df_max)
-    return (
-        joined.select(
-            "id_a",
-            "id_b",
-            F.expr(
-                "CAST(shared * 10000 DIV least(n_a, n_b) AS BIGINT)"
-            ).alias("containment_bp"),
-            F.expr(
-                "CASE WHEN n_a < n_b OR (n_a = n_b AND id_a < id_b)"
-                " THEN id_a ELSE id_b END"
-            ).alias("contained_id"),
-        )
-        .filter(F.col("containment_bp") >= int(threshold_bp))
-    )
-
-
 def tfidf_cosine_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

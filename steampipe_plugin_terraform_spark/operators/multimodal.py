@@ -436,188 +436,3 @@ def ahash64(
     return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
         hsh, schema=AHASH_SCHEMA
     )
-
-
-ENERGY_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("energy", T.LongType()),
-        T.StructField("active", T.LongType()),
-    ]
-)
-
-
-def frame_energy(
-    df: DataFrame,
-    frame_bytes: int = 256,
-    threshold: int = 2000,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Per-frame ENERGY extraction over an opaque audio-like payload — the
-    voice-activity-detection (VAD) feature an audio-curation pipeline
-    segments on: treat each byte as an unsigned 8-bit PCM sample, window
-    the stream into fixed ``frame_bytes`` frames (tail partial frame
-    included), and report each frame's integer energy Σ(b − 128)² plus an
-    activity flag (mean squared deviation ≥ ``threshold``, compared as
-    energy ≥ threshold·frame_len — pure-integer, no division). A real
-    PCM decoder (soundfile etc., not in this container) drops into the
-    same numpy path; the Arrow batching, the multi-row-per-input schema,
-    and the bytes-never-shuffled property are the production plumbing.
-
-    Scale: narrow vectorized map (numpy square/reduceat per batch), no
-    shuffle; output is |payload|/frame_bytes fixed-width rows per doc and
-    raw bytes never leave the executor.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_name, payload_name = id_col, payload_col
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, idxs, energies, actives = [], [], [], []
-            for i, payload in zip(pdf[id_name], pdf[payload_name]):
-                b = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if not len(b):
-                    continue
-                dev2 = (b.astype(np.int64) - 128) ** 2
-                bounds = np.arange(0, len(b), frame_bytes)
-                sums = np.add.reduceat(dev2, bounds)
-                lens = np.minimum(bounds + frame_bytes, len(b)) - bounds
-                for fi, (e, ln) in enumerate(zip(sums, lens)):
-                    ids.append(int(i))
-                    idxs.append(fi)
-                    energies.append(int(e))
-                    actives.append(int(int(e) >= threshold * int(ln)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": idxs,
-                    "energy": energies,
-                    "active": actives,
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        extract, schema=ENERGY_SCHEMA
-    )
-
-
-DHASH_SCHEMA = "doc_id long, dhash string"
-
-
-def dhash64(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Difference-hash (dHash) perceptual fingerprint — the GRADIENT
-    companion of ``ahash64``: the stub codec reads the first 72 bytes as
-    an 8×9 grayscale grid and emits one bit per horizontally adjacent
-    cell pair — 1 iff the right cell is strictly brighter — so the hash
-    encodes local gradients where aHash encodes global brightness
-    structure (the standard pHash-family pairing: dHash is robust to
-    uniform brightness shifts that flip every aHash bit). Pure integer
-    comparisons, no FP anywhere.
-
-    Callers must pre-filter payloads ≥ 72 bytes (8 rows × 9 columns;
-    the stub has no interpolation to upsample smaller ones).
-
-    Scale: narrow Arrow-batched map, no shuffle; 64 bits leave the
-    executor per payload regardless of size.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_name, payload_name = id_col, payload_col
-
-    def hsh(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, hs = [], []
-            for i, payload in zip(pdf[id_name], pdf[payload_name]):
-                v = np.frombuffer(bytes(payload)[:72], dtype=np.uint8).astype(
-                    np.int64
-                ).reshape(8, 9)
-                bits = (v[:, 1:] > v[:, :-1]).astype(np.uint8).ravel()
-                ids.append(int(i))
-                hs.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame({"doc_id": ids, "dhash": hs})
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        hsh, schema=DHASH_SCHEMA
-    )
-
-
-# Fixed-point 8-point DCT-II basis, c[u][x] = round(8192·cos(π(2x+1)u/16))
-# — HARD-CODED literals shared verbatim with the DuckDB oracle (the
-# shared-constants device; tests/test_staged_independent.py re-derives
-# every entry from math.cos). The ± symmetry of the cosine arguments
-# makes each u ≥ 1 row sum EXACTLY zero in the rounded values, so a
-# global brightness shift (+k on every byte) moves ONLY the DC
-# coefficient: C·(B + k·J)·Cᵀ = C·B·Cᵀ + k·rowsum(u)·rowsum(v)/…, and
-# the AC bits are invariant BY CONSTRUCTION, not approximately.
-PHASH_DCT = [
-    [8192, 8192, 8192, 8192, 8192, 8192, 8192, 8192],
-    [8035, 6811, 4551, 1598, -1598, -4551, -6811, -8035],
-    [7568, 3135, -3135, -7568, -7568, -3135, 3135, 7568],
-    [6811, -1598, -8035, -4551, 4551, 8035, 1598, -6811],
-    [5793, -5793, -5793, 5793, 5793, -5793, -5793, 5793],
-    [4551, -8035, 1598, 6811, -6811, -1598, 8035, -4551],
-    [3135, -7568, 7568, -3135, -3135, 7568, -7568, 3135],
-    [1598, -4551, 6811, -8035, 8035, -6811, 4551, -1598],
-]
-
-PHASH_SCHEMA = "doc_id long, phash string"
-
-
-def phash63(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Perceptual DCT hash (pHash) — the FREQUENCY-domain member of the
-    triad (``ahash64`` thresholds cells against the global mean,
-    ``dhash64`` encodes local gradients; pHash encodes which spatial
-    FREQUENCIES carry the energy, the most structure-aware of the
-    three): the stub codec reads the first 64 bytes as an 8×8 grayscale
-    block, applies the fixed-point integer 2-D DCT (``PHASH_DCT``,
-    D = C·B·Cᵀ — pure int64 arithmetic, max |D| ≤ 8·8·8192²·255 ≈
-    1.1e12), drops the DC coefficient, and emits one bit per AC
-    coefficient: 1 iff strictly above the low median (the 32nd smallest
-    of 63 — an exact order statistic, no interpolation). Because every
-    u ≥ 1 basis row sums to exactly zero, a uniform brightness shift
-    changes only the DC coefficient and the 63-bit hash is EXACTLY
-    invariant — the property the independent test demonstrates (aHash
-    is too: its mean moves with the cells; dHash is; pHash adds
-    robustness to local contrast scaling the others lack).
-
-    Callers must pre-filter payloads ≥ 64 bytes.
-
-    Scale: narrow Arrow-batched map (one 8×8 integer matmul per
-    payload — dense linear algebra, the sanctioned Python path), no
-    shuffle; 63 bits leave the executor per payload."""
-    import numpy as np
-    import pandas as pd
-
-    id_name, payload_name = id_col, payload_col
-    C = np.array(PHASH_DCT, dtype=np.int64)
-
-    def hsh(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, hs = [], []
-            for i, payload in zip(pdf[id_name], pdf[payload_name]):
-                b = np.frombuffer(bytes(payload)[:64], dtype=np.uint8).astype(
-                    np.int64
-                ).reshape(8, 8)
-                d = C @ b @ C.T
-                ac = np.delete(d.ravel(), 0)
-                med = int(np.sort(ac, kind="stable")[31])
-                ids.append(int(i))
-                hs.append("".join("1" if x > med else "0" for x in ac))
-            yield pd.DataFrame({"doc_id": ids, "phash": hs})
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        hsh, schema=PHASH_SCHEMA
-    )

@@ -38,10 +38,6 @@ def _norm(a: str) -> Column:
     return F.sqrt(F.expr(f"aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(out, _dot(a, b) / (_norm(a) * _norm(b)))
-
-
 def _corpus_blocks(df: DataFrame, id_col: str, num_blocks: int) -> "Column":
     """Uniform deterministic block id for a vector row: xxhash64 of the id
     mod num_blocks — uniform for ANY id distribution (ids that are all

@@ -1,24 +1,21 @@
-"""Drive the r13 degenerate-division guards on BOTH engines (the r12
-advice's complaint was precisely that these branches were an
-UNEXERCISED divergence: Spark's non-ANSI DIV yields NULL where DuckDB's
-// raises — the guards exist so both sides emit NULL deliberately, and
-this module is the only place the branches actually fire).
+"""Drive the degenerate-division guards on BOTH engines: Spark's
+non-ANSI DIV yields NULL where DuckDB's // raises — the guards exist so
+both sides emit NULL deliberately, and this module is the only place the
+branches actually fire.
 
-A synthetic corpus directory is assembled per test class: the table
-under test is replaced by a crafted degenerate parquet (single
-linestatus group, all-tied quantities, zero-variance discount margin,
-single-token language) and every other table symlinks to sf0.001 so
+A synthetic corpus directory is assembled per test: the table under
+test is replaced by a crafted degenerate parquet (single linestatus
+group, all-tied quantities, single-token language) and every other
+table symlinks to sf0.001 so
 ``parity.duckdb_con`` can still bind all ten views. Each test then runs
 the EXACT driver compare — not just the Spark side — and additionally
 asserts the guarded column is genuinely NULL (a compare that passed
 with non-NULL values would prove nothing about the branch)."""
 
-import math
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 from steampipe_plugin_terraform_spark.catalog import (
     ORACLES,
@@ -100,25 +97,6 @@ def test_kruskal_all_tied_pool_nulls_h(spark, tmp_path):
     assert rows[0]["h_e6"] is None and rows[0]["reject_05"] is None
 
 
-def test_ks_missing_group_nulls_d(spark, tmp_path):
-    rows = _run(
-        spark, tmp_path, "q_lineitem_ks_test",
-        {"lineitem": _lineitem([(1.0, "O", "A", 0.0), (4.0, "O", "N", 0.0)])},
-    )
-    assert len(rows) == 1
-    assert rows[0]["d_e6"] is None and rows[0]["reject_05"] is None
-
-
-def test_spearman_zero_variance_margin_nulls_rho(spark, tmp_path):
-    # constant discount → Dy = 0 → rho2_e8_signed NULL on both sides
-    rows = _run(
-        spark, tmp_path, "q_lineitem_spearman",
-        {"lineitem": _lineitem([(1.0, "F", "A", 0.05), (2.0, "O", "N", 0.05),
-                                (3.0, "F", "R", 0.05)])},
-    )
-    assert len(rows) == 1 and rows[0]["rho2_e8_signed"] is None
-
-
 def test_simpson_single_token_lang_nulls_lambda(spark, tmp_path):
     # lang 'xx' has ONE token total → N = 1 → simpson_e6 NULL while
     # top_share_bp still reports 10000 (mixed null/non-null row)
@@ -139,71 +117,6 @@ def test_simpson_single_token_lang_nulls_lambda(spark, tmp_path):
     assert by_lang["xx"]["top_share_bp"] == 10000
     # the en slice is healthy: 4 tokens, 'two' twice → pairs=2, λ·1e6
     assert by_lang["en"]["simpson_e6"] == 2 * 1000000 // (4 * 3)
-
-
-def test_dow_chi2_empty_orders_empty_result(spark, tmp_path):
-    # zero orders: both engines produce ZERO rows (the GROUP BY nn
-    # collapses an empty input to no groups) — emptiness parity, the
-    # guard's N = 0 edge can never emit a row to disagree on
-    orders = pa.table(
-        {"o_orderdate": pa.array([], pa.timestamp("us"))}
-    )
-    rows = _run(spark, tmp_path, "q_orders_dow_chi2", {"orders": orders})
-    assert rows == []
-
-
-def test_trimmed_mean_tiny_frame_no_trim(spark, tmp_path):
-    # N = 4 → k = 0: nothing trims, the clamp contributes zero from
-    # both tails, and the mean is the plain snapped mean — the boundary
-    # the partial-level clamp must get right
-    rows = _run(
-        spark, tmp_path, "q_lineitem_trimmed_mean",
-        {"lineitem": _lineitem([(1.0, "F", "A", 0.0), (2.0, "O", "N", 0.0),
-                                (3.0, "F", "R", 0.0), (6.0, "O", "A", 0.0)])},
-    )
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_rows"], r["trim_k"], r["trimmed_sum"]) == (4, 0, 12)
-    assert r["trimmed_mean_e4"] == 12 * 10000 // 4
-
-
-def test_brown_forsythe_all_tied_groups_null_f(spark, tmp_path):
-    # every quantity identical → z ≡ 0 in every group → ssw = 0 →
-    # f_e6 and reject_05 NULL on both sides (and the k = 3 decision
-    # gate is moot)
-    rows = _run(
-        spark, tmp_path, "q_lineitem_brown_forsythe",
-        {"lineitem": _lineitem([(5.0, "F", "A", 0.0), (5.0, "O", "N", 0.0),
-                                (5.0, "F", "R", 0.0), (5.0, "O", "A", 0.0)])},
-    )
-    assert len(rows) == 1
-    assert rows[0]["f_e6"] is None and rows[0]["reject_05"] is None
-
-
-def test_mood_median_all_above_impossible_a_zero_nulls_chi2(spark, tmp_path):
-    # every quantity identical → pooled low median = that value → no row
-    # is strictly above it → A = 0 → chi2_e6 and reject_05 NULL on both
-    # sides (DuckDB would raise on // (a * (nn - a)) without the guard)
-    rows = _run(
-        spark, tmp_path, "q_lineitem_mood_median",
-        {"lineitem": _lineitem([(5.0, "F", "A", 0.0), (5.0, "O", "N", 0.0),
-                                (5.0, "F", "R", 0.0), (5.0, "O", "A", 0.0)])},
-    )
-    assert len(rows) == 1
-    assert rows[0]["n_above"] == 0
-    assert rows[0]["chi2_e6"] is None and rows[0]["reject_05"] is None
-
-
-def test_mood_median_empty_lineitem_one_null_row(spark, tmp_path):
-    # empty input: the GLOBAL aggregate (deliberately not a groupBy on
-    # the constant keys) emits ONE all-NULL row on BOTH engines — the
-    # empty-input row-count agreement the global-agg shape exists for
-    rows = _run(
-        spark, tmp_path, "q_lineitem_mood_median",
-        {"lineitem": _lineitem([])},
-    )
-    assert len(rows) == 1
-    assert rows[0]["n_rows"] is None and rows[0]["chi2_e6"] is None
 
 
 def test_zipf_slope_single_bucket_spectrum_nulls_slope(spark, tmp_path):
@@ -293,22 +206,6 @@ def test_cov_top_eigen_empty_embeddings_null_row(spark, tmp_path):
     assert r["n_vecs"] == 0 and r["top_eigen_e6"] is None
 
 
-def test_kendall_tau_b_single_level_margin_nulls_tau(spark, tmp_path):
-    # every price in one $10k band → n0 = n2 → the tie-corrected
-    # denominator vanishes → tau2_e8_signed NULL on both sides (gamma
-    # would also see C = D = 0 here; τ-b's guard is the margin, not
-    # the pair counts)
-    rows = _run(
-        spark, tmp_path, "q_lineitem_kendall_tau_b",
-        {"lineitem": pa.table({
-            "l_quantity": pa.array([1.0, 2.0, 3.0], pa.float64()),
-            "l_extendedprice": pa.array([100.0, 200.0, 300.0], pa.float64()),
-        })},
-    )
-    assert len(rows) == 1
-    assert rows[0]["tau2_e8_signed"] is None
-
-
 def _docs(rows) -> pa.Table:
     return pa.table(
         {
@@ -395,54 +292,6 @@ def test_sign_bit_balance_constant_sign_extremes(spark, tmp_path):
     assert by[49]["pos_share_bp"] == 0 and by[49]["balanced"] is False
 
 
-def test_ahash_clusters_all_short_payloads_all_singletons(spark, tmp_path):
-    # nothing reaches the hasher: every doc is its own cluster of size 1
-    # on both engines (the full-coverage contract, unlike the pair view
-    # which would emit zero rows)
-    rows = _run(
-        spark, tmp_path, "media_ahash_clusters",
-        {"documents": _docs([(1, "tiny"), (2, "also tiny")])},
-    )
-    assert {(r["doc_id"], r["cluster_id"], r["cluster_size"]) for r in rows} \
-        == {(1, 1, 1), (2, 2, 1)}
-
-
-def test_ahash_clusters_empty_corpus_zero_rows(spark, tmp_path):
-    rows = _run(spark, tmp_path, "media_ahash_clusters", {"documents": _docs([])})
-    assert rows == []
-
-
-def test_cramers_v_single_margin_level_undefined(spark, tmp_path):
-    # only one linestatus level → min(r,c) = 1 → m = 0 → V² NULL +
-    # 'undefined' on BOTH sides (Spark DIV-by-zero NULL vs DuckDB //
-    # error is the divergence class the CASE guard exists for); the
-    # chi2 roll-up itself is still well-defined (independence is exact
-    # when a margin is degenerate → every contrib 0)
-    rows = _run(
-        spark, tmp_path, "q_lineitem_cramers_v",
-        {"lineitem": _lineitem([
-            (1.0, "F", "A", 0.0), (2.0, "F", "A", 0.0),
-            (3.0, "F", "N", 0.0),
-        ])},
-    )
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["r_levels"], r["c_levels"]) == (2, 1)
-    assert r["df"] == 0 and r["chi2_e6"] == 0
-    assert r["v2_e8"] is None and r["effect"] == "undefined"
-
-
-def test_cramers_v_empty_table_zeros_row(spark, tmp_path):
-    # empty lineitem → the global-agg device emits ONE row of zero
-    # counts with NULL V² on both engines
-    rows = _run(spark, tmp_path, "q_lineitem_cramers_v", {"lineitem": _lineitem([])})
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_tot"], r["r_levels"], r["c_levels"], r["df"]) == (0, 0, 0, 0)
-    assert r["chi2_e6"] == 0
-    assert r["v2_e8"] is None and r["effect"] == "undefined"
-
-
 def test_norm_buckets_zero_vector_bucket_zero(spark, tmp_path):
     # the all-zeros vector has norm² = 0, which the bin-length device
     # maps to bucket 0 (bin(0) = '0' → length 1) — covered, not
@@ -511,100 +360,3 @@ def test_code_mix_all_code_lang_share_10000(spark, tmp_path):
     assert len(rows) == 1
     r = rows[0]
     assert (r["n_docs"], r["n_code"], r["code_share_bp"]) == (2, 1, 5000)
-
-
-def _lineitem_graph(rows) -> pa.Table:
-    # (l_orderkey, l_partkey) pairs, all shipped mid-1995
-    import datetime
-    ts = datetime.datetime(1995, 6, 1)
-    return pa.table(
-        {
-            "l_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "l_partkey": pa.array([r[1] for r in rows], pa.int64()),
-            "l_shipdate": pa.array([ts] * len(rows), pa.timestamp("us")),
-        }
-    )
-
-
-def test_assortativity_uniform_degrees_undefined(spark, tmp_path):
-    # one order shipping two parts → one edge, both degrees 1 → zero
-    # degree variance → den = 0 → r NULL + 'undefined' on BOTH sides
-    # (Spark DIV-by-zero NULL vs DuckDB // error is the divergence
-    # class the CASE guard exists for)
-    rows = _run(
-        spark, tmp_path, "q_part_degree_assortativity",
-        {"lineitem": _lineitem_graph([(1, 10), (1, 20)])},
-    )
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_nodes"], r["n_edges"]) == (2, 1)
-    assert r["r_e6"] is None and r["mixing"] == "undefined"
-
-
-def test_assortativity_empty_graph_undefined(spark, tmp_path):
-    rows = _run(
-        spark, tmp_path, "q_part_degree_assortativity",
-        {"lineitem": _lineitem_graph([])},
-    )
-    r = rows[0]
-    assert (r["n_nodes"], r["n_edges"]) == (0, 0)
-    assert r["r_e6"] is None and r["mixing"] == "undefined"
-
-
-def test_assortativity_path_graph_exact_minus_one(spark, tmp_path):
-    # the 3-node path a−b−c: directed degree pairs (1,2),(2,1),(2,1),
-    # (1,2) → r = −1 exactly → r_e6 = −1000000, 'disassortative' — the
-    # negative-numerator branch of the sign device, exact on both sides
-    rows = _run(
-        spark, tmp_path, "q_part_degree_assortativity",
-        {"lineitem": _lineitem_graph([(1, 10), (1, 20), (2, 20), (2, 30)])},
-    )
-    r = rows[0]
-    assert (r["n_nodes"], r["n_edges"]) == (3, 2)
-    assert r["r_e6"] == -1000000 and r["mixing"] == "disassortative"
-
-
-def test_cluster_size_buckets_empty_corpus_zero_rows(spark, tmp_path):
-    rows = _run(
-        spark, tmp_path, "dedup_cluster_size_buckets",
-        {"documents": _docs([])},
-    )
-    assert rows == []
-
-
-def test_cluster_size_buckets_pairs_land_in_bucket_one(spark, tmp_path):
-    # two identical docs + one unique: the duplicate pair is one
-    # cluster of size 2 (bucket 1), the unique doc a singleton
-    # (bucket 0) — shares 6667/3333 by the floor division
-    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = _run(
-        spark, tmp_path, "dedup_cluster_size_buckets",
-        {"documents": _docs([(1, text), (2, text), (3, "totally different words here now")])},
-    )
-    by = {r["bucket"]: r for r in rows}
-    assert by[1]["n_clusters"] == 1 and by[1]["n_docs"] == 2
-    assert by[1]["max_size"] == 2 and by[1]["docs_share_bp"] == 6666
-    assert by[0]["n_clusters"] == 1 and by[0]["n_docs"] == 1
-    assert by[0]["docs_share_bp"] == 3333
-
-
-def test_rate_by_source_empty_corpus_zero_rows(spark, tmp_path):
-    rows = _run(
-        spark, tmp_path, "dedup_rate_by_source", {"documents": _docs([])},
-    )
-    assert rows == []
-
-
-def test_rate_by_source_duplicate_charged_to_own_source(spark, tmp_path):
-    # 2 identical docs + 1 unique, all one source: the non-canonical
-    # member charges its source with exactly one duplicate → 1/3 =
-    # 3333 bp by the floor division
-    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = _run(
-        spark, tmp_path, "dedup_rate_by_source",
-        {"documents": _docs([(1, text), (2, text), (3, "other words entirely here now yes")])},
-    )
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["source"], r["n_docs"], r["n_dups"]) == ("s", 3, 1)
-    assert r["dup_rate_bp"] == 3333

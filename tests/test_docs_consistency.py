@@ -1,6 +1,6 @@
 """docs/OPERATORS.md must list every queries() entry with the right check
-mark: ✓O iff the entry has a DuckDB oracle. Catches the stale-docs drift
-the round-4 review flagged."""
+mark (✓O iff the entry has a DuckDB oracle) and exactly the staged entries
+as ⧖O rows. Catches stale-docs drift."""
 
 import re
 from pathlib import Path
@@ -16,8 +16,12 @@ README = Path(__file__).resolve().parents[1] / "README.md"
 
 
 def test_operators_md_lists_every_entry_with_correct_mark():
-    rows = dict(
-        re.findall(r"^\| `([a-z0-9_]+)` \| (✓O|✓R) \|", DOC.read_text(), re.M)
+    text = DOC.read_text()
+    rows = dict(re.findall(r"^\| `([a-z0-9_]+)` \| (✓O|✓R) \|", text, re.M))
+    staged = set(re.findall(r"^\| `([a-z0-9_]+)` \| ⧖O \|", text, re.M))
+    assert staged == set(STAGED_QUERIES), (
+        f"docs/OPERATORS.md ⧖O rows {sorted(staged ^ set(STAGED_QUERIES))} "
+        "disagree with the staged registry"
     )
     missing = sorted(set(QUERIES) - set(rows))
     stale = sorted(set(rows) - set(QUERIES))

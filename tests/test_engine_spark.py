@@ -134,6 +134,12 @@ def test_on_error_skip_keeps_good_files(spark, tmp_path):
     assert [(r["name"], r["path"]) for r in rows] == [("o", str(tmp_path / "good.tf"))]
 
 
+def test_unknown_on_error_rejected(spark, tmp_path):
+    # a typo must not silently fall through to skipping every bad file
+    with pytest.raises(ValueError, match="on_error must be 'fail' or 'skip'"):
+        TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")], on_error="raise")
+
+
 def test_file_vanished_before_ingest_yields_zero_rows(spark, tmp_path):
     # discovered, then deleted before the parse task reads it: zero rows and
     # no error, like a missing glob path (utils.go:87-90)
@@ -338,3 +344,19 @@ def test_canonical_store_roundtrip(spark, engine, tmp_path):
     a = sorted((r["address"], r["count"]) for r in engine.table("terraform_resource").collect())
     b = sorted((r["address"], r["count"]) for r in loaded.table("terraform_resource").collect())
     assert a == b
+
+
+def test_refresh_rereads_a_loaded_canonical_store(spark, engine, tmp_path):
+    # a loaded store has no source lists; refresh must re-read the store,
+    # not re-discover nothing and serve empty tables
+    store = str(tmp_path / "canonical")
+    engine.save_canonical(store)
+    loaded = TerraformEngine.load_canonical(spark, store)
+    want = {name: df.count() for name, df in engine.tables().items()}
+    try:
+        loaded.register_views()
+        loaded.refresh()
+        assert {name: df.count() for name, df in loaded.tables().items()} == want
+        assert {name: spark.table(name).count() for name in want} == want
+    finally:
+        engine.register_views()  # the module's views read the fresh parse again

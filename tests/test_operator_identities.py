@@ -156,40 +156,6 @@ def test_mannwhitney_grid_equals_bruteforce(xs, ys):
 
 @settings(max_examples=200, deadline=None)
 @given(
-    st.lists(st.integers(min_value=1, max_value=12), min_size=1, max_size=30),
-    st.lists(st.integers(min_value=1, max_value=12), min_size=1, max_size=30),
-)
-def test_ks_grid_equals_bruteforce_sup(xs, ys):
-    """q_lineitem_ks_test maximizes dev(q) = |cumA·nB − cumB·nA| over
-    POOLED grid points only. Verify that equals the true supremum of
-    |FA(t) − FB(t)|·nA·nB over ALL real t (the step functions only move
-    at pooled sample points), and that a sample against itself gives 0."""
-    n_a, n_b = len(xs), len(ys)
-    levels = sorted(set(xs) | set(ys))
-    grid_dev = 0
-    for q in levels:
-        ca = sum(1 for x in xs if x <= q)
-        cb = sum(1 for y in ys if y <= q)
-        grid_dev = max(grid_dev, abs(ca * n_b - cb * n_a))
-    # brute force over a fine sweep incl. off-grid midpoints
-    brute = 0
-    sweep = sorted({q for q in levels} | {q + 0.5 for q in levels} | {0})
-    for t in sweep:
-        ca = sum(1 for x in xs if x <= t)
-        cb = sum(1 for y in ys if y <= t)
-        brute = max(brute, abs(ca * n_b - cb * n_a))
-    assert grid_dev == brute
-    # self-KS is identically zero
-    self_dev = max(
-        abs(sum(1 for x in xs if x <= q) * n_a
-            - sum(1 for x in xs if x <= q) * n_a)
-        for q in sorted(set(xs))
-    )
-    assert self_dev == 0
-
-
-@settings(max_examples=200, deadline=None)
-@given(
     st.lists(st.integers(min_value=0, max_value=40), min_size=1, max_size=24)
 )
 def test_dispersion_numerator_nonnegative_and_constant_zero(counts):

@@ -1266,46 +1266,6 @@ def test_moved_blocks_audit_shuffle_free(spark):
         assert node not in plan
 
 
-# ---- round-11 pins: r16/r17-wave staged entries (pinned at staging time)
-
-
-def test_supplier_hhi_broadcast_dims_keyed_windows(spark):
-    # supplier and nation are dims — both joins broadcast; the windows
-    # are nation-keyed over the supplier-grain agg frame, so no
-    # single-partition stage; the fact scan prunes to 3 columns
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_supplier_hhi"](spark, SF))
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "Exchange SinglePartition" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    li = [s for s in scans if "l_suppkey" in s]
-    assert len(li) == 1
-    cols = {c.split("#")[0] for c in li[0].split(",") if c}
-    assert cols == {"l_suppkey", "l_extendedprice", "l_discount"}, cols
-
-
-def test_orders_benford_single_pruned_scan(spark):
-    # digit histogram: one scan pruned to o_totalprice, keyed partial
-    # agg to the 9-row frame; the only single-partition stage is the
-    # grand-total window over those 9 rows (the documented exemption)
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_orders_benford"](spark, SF))
-    assert "Join" not in plan
-    assert "CartesianProduct" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = {c.split("#")[0] for c in scans[0].split(",") if c}
-    assert cols == {"o_totalprice"}, cols
-
-
 def test_stream_benford_report_over_sink_only(spark):
     # the report ranks the DRAINED digit-count sink (digit-space-sized),
     # never re-scans events; the share window is type-keyed
@@ -1363,36 +1323,6 @@ def test_ivf_delete_prunes_partitions_and_pushes_tombstone(spark):
     assert any("vec_id" in l for l in pushed), pushed
 
 
-def test_containment_pairs_posting_list_no_cartesian(spark):
-    # the shared posting-list trunk: pair generation is a groupBy over
-    # shingle hashes + chunked emission — never a doc-side self-join or
-    # cartesian; everything stays JVM-side
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["dedup_containment_pairs"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
-    assert "xxhash64" in plan
-
-
-def test_gamma_grid_bnlj_single_pruned_scan(spark):
-    # the contingency-grid device: the grid-sized non-equi self-join
-    # (BNLJ over ~550 collected cells — corpus-independent, the bounded-
-    # collect device) runs over LOCAL frames, so the RETURNED plan never
-    # touches the fact table at all — a FileScan here means the naive
-    # double-scan formulation came back
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_gamma_correlation"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "FileScan parquet" not in plan
-    # pyspark createDataFrame plans local rows as Scan ExistingRDD
-    assert plan.count("Scan ExistingRDD") == 2
-
-
 def test_cdc_last_value_serves_from_state_only(spark):
     # the returned frame reads ONE state version (|users| rows), never
     # the event stream: one parquet scan, no join, no window re-rank
@@ -1402,27 +1332,6 @@ def test_cdc_last_value_serves_from_state_only(spark):
     assert plan.count("FileScan parquet") == 1
     assert "events.parquet" not in plan
     assert "Join" not in plan and "Window" not in plan
-
-
-def test_frame_energy_narrow_map_no_shuffle(spark):
-    # the multimodal contract: one Arrow-batched narrow map over a scan
-    # pruned to (doc_id, text) — no exchange, no join, bytes never
-    # shuffled; MapInPandas is the documented inherently-Python class
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["media_frame_energy"](spark, SF))
-    assert plan.count("MapInPandas") == 1
-    # the only exchange is documents_as_binary's small-file round-robin
-    # spread (skipped at real partition counts) — never a hash shuffle
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange SinglePartition" not in plan
-    assert "Join" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = {c.split("#")[0] for c in scans[0].split(",") if c}
-    assert cols == {"doc_id", "text"}, cols
 
 
 def test_knn_label_vote_broadcasts_topk_side(spark):
@@ -1436,43 +1345,6 @@ def test_knn_label_vote_broadcasts_topk_side(spark):
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") == 2
     assert "Exchange SinglePartition" not in plan
-
-
-def test_lsh_band_curve_bucket_joins_no_cartesian(spark):
-    # four band layouts over ONE localized signature chain: sig and
-    # truth are localCheckpointed (corpus scanned once per table at
-    # build time), n_true is a baked-in scalar literal — so the FINAL
-    # plan has no FileScan at all and no scalar crossJoins; every
-    # candidate join is a bucket-keyed equi-join (uniform md5 keys)
-    # and each layout's truth intersection is a broadcast semi-join
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["dedup_lsh_band_curve"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "FileScan" not in plan  # both subtrees localized
-    # the four truth semi-joins broadcast (left_semi BroadcastHashJoin)
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
-
-
-def test_runs_test_single_scan_day_grain_windows(spark):
-    # one fact scan pruned to two columns, keyed partial agg to the DAY
-    # grain; the median-rank and lag windows run over that date-bounded
-    # frame (the documented post-agg-tiny-frame exemption); the median
-    # attach is a broadcast 1-row scalar
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_orders_runs_test"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) <= 2  # Catalyst may split the day-agg subtree
-    for sc in scans:
-        cols = {c.split("#")[0] for c in sc.split(",") if c}
-        assert cols == {"o_orderdate", "o_totalprice"}, cols
 
 
 def test_count_foreach_expansion_shuffle_free(spark):
@@ -1570,7 +1442,6 @@ def test_markov_stationary_localized_broadcast_iterations(spark):
     )
 
 
-
 def test_stream_overdispersion_keyed_state_report_over_sink(spark):
     # complete-mode (type, hour) keyed state; the returned report runs
     # over the DRAINED sink only — keyed aggs, one 1-row scalar spine
@@ -1587,26 +1458,6 @@ def test_stream_overdispersion_keyed_state_report_over_sink(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "FileScan parquet" not in plan  # report reads the memory sink
     assert "BatchEvalPython" not in plan
-
-
-def test_ks_test_single_scan_grid_windows(spark):
-    # one fact scan pruned to two columns, keyed partial agg to the
-    # quantity grid; the cumulative windows run over that grid frame
-    # (post-agg-tiny-frame exemption) — no join anywhere
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_ks_test"](spark, SF))
-    assert "CartesianProduct" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin",
-                 "BroadcastNestedLoopJoin"):
-        assert node not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) <= 2  # Catalyst may split the grid-agg subtree
-    for sc in scans:
-        cols = [c.split("#")[0] for c in sc.split(",") if c]
-        assert set(cols) <= {"l_quantity", "l_linestatus"}, cols
 
 
 def test_vocab_growth_broadcast_cuts_no_corpus_self_join(spark):
@@ -1632,17 +1483,6 @@ def test_ivf_compaction_pruned_probe_no_tombstone_filter(spark):
     assert "CartesianProduct" not in plan
     assert "PartitionFilters: [bucket" in plan or "bucket#" in plan
     assert "vec_id % 8" not in plan  # the tombstone predicate is GONE
-
-
-def test_dhash_pairs_narrow_map_single_hash_shuffle(spark):
-    # narrow Arrow map (64 bits out per payload), bucket-cap window +
-    # hash-equality pair join — the aHash plan contract verbatim
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["media_dhash_pairs"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "MapInPandas" in plan  # the inherently-Python media decode
-    assert "BatchEvalPython" not in plan
 
 
 def test_unused_data_sources_single_broadcast_join(spark):
@@ -1721,22 +1561,6 @@ def test_incremental_batch_probes_store_no_corpus_retokenize(spark):
     assert 1 <= len(text_scans) <= 2
 
 
-def test_spearman_grid_agg_no_rank_shuffle(spark):
-    # rank-free execution: ONE partial-agg shuffle to the (x, y) grid,
-    # eagerly localCheckpointed (5 subtrees reuse it — the ≥4-reuse
-    # break-even), so the FINAL plan carries no FileScan at all; margin
-    # windows over level frames, broadcast rank attaches, no global
-    # sort of the fact table, no Python
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_spearman"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert not re.findall(r"FileScan parquet", plan)
-
-
 def test_sign_hamming_broadcast_query_side_no_cartesian(spark):
     # the sign pass is a JVM-side projection (two shiftleft sums, no
     # Python); the Hamming ranking broadcasts the 10-row query side
@@ -1794,92 +1618,6 @@ def test_stream_incremental_dedup_serves_from_sink_scan(spark):
     assert set(cols) <= {
         "new_id", "matched_id", "jacc_bp", "status", "batch_id"
     }, cols
-
-
-def test_dow_chi2_single_scan_seven_cell_agg(spark):
-    # one column scanned, one keyed agg to the 7-cell dow grid, no join
-    # (the algebraic zero-class term replaces a spine), no Python
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_orders_dow_chi2"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin"):
-        assert node not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = [c.split("#")[0] for c in scans[0].split(",") if c]
-    assert set(cols) <= {"o_orderdate"}, cols
-
-
-def test_trimmed_mean_grid_windows_no_row_sort(spark):
-    # the fact table is never globally sorted: one partial-agg shuffle
-    # to the level grid, cumulative windows over THAT frame only, no
-    # join, no Python, scan pruned to l_quantity
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_trimmed_mean"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin",
-                 "BroadcastNestedLoopJoin"):
-        assert node not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = [c.split("#")[0] for c in scans[0].split(",") if c]
-    assert set(cols) <= {"l_quantity"}, cols
-
-
-def test_phash_pairs_narrow_map_single_hash_shuffle(spark):
-    # narrow Arrow map (one int64 matmul per payload, 63 bits out),
-    # bucket-cap window + hash-equality pair join — the aHash/dHash
-    # plan contract verbatim
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["media_phash_pairs"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "MapInPandas" in plan  # the inherently-Python media decode
-    assert "BatchEvalPython" not in plan
-
-
-def test_brown_forsythe_keyed_windows_no_global_sort(spark):
-    # per-GROUP median windows (partitioned — never a global Sort of
-    # the fact table), broadcast median/scalar attaches, one pruned
-    # scan, no Python
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_brown_forsythe"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    for sc in scans:
-        cols = [c.split("#")[0] for c in sc.split(",") if c]
-        assert set(cols) <= {"l_returnflag", "l_quantity"}, cols
-
-
-def test_mood_median_grid_agg_no_global_sort(spark):
-    # pooled-median windows run over the LEVEL frame (post-agg tiny),
-    # the 1-row median attaches via broadcast (BNLJ, never
-    # CartesianProduct), one pruned scan, no Python anywhere
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_mood_median"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    for sc in scans:
-        cols = [c.split("#")[0] for c in sc.split(",") if c]
-        assert set(cols) <= {"l_returnflag", "l_quantity"}, cols
 
 
 def test_zipf_slope_spectrum_aggs_no_window_no_sort(spark):
@@ -1966,21 +1704,6 @@ def test_stream_source_drift_drained_report_shape(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_kendall_tau_b_local_pair_join_no_filescan(spark):
-    # the gamma device: the returned frame folds from the COLLECTED
-    # grid's local frames — one broadcast non-equi cell join, no
-    # FileScan (the fact table was scanned once upstream), no Python,
-    # no cartesian
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_kendall_tau_b"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert not re.findall(r"FileScan parquet", plan)
-
-
 def test_hapax_legomena_vocab_shuffle_then_global_agg(spark):
     # ONE vocabulary-keyed shuffle (map-side combinable) + ONE global
     # roll-up — the docs_unigram_logprob shuffle shape; nothing joins
@@ -2053,38 +1776,6 @@ def test_stream_hapax_monitor_drained_report_shape(spark):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "Window" not in plan
-
-
-def test_ahash_clusters_single_hash_shuffle(spark):
-    # the group view's structural claim: ONE hash-keyed exchange feeds
-    # both same-partition windows, the singleton leg is a union (no
-    # join anywhere), and the only Python is the Arrow hash map
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["media_ahash_clusters"](spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Window") == 1
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython"):
-        assert node not in plan
-
-
-def test_cramers_v_inherits_chi2_plan_plus_tiny_rollup(spark):
-    # the roll-up composes the promoted chi2 frame: its one cell-keyed
-    # exchange + agg-frame windows, plus the Expand-based two-column
-    # distinct count and a final single-partition agg — every stage
-    # past the scan is over the <= |flags|x|statuses| cell frame; the
-    # scan itself prunes to exactly the two categorical columns
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_lineitem_cramers_v"](spark, SF))
-    assert "Expand" in plan  # the countDistinct pair
-    assert "Exchange SinglePartition" in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython", "Generate"):
-        assert node not in plan
-    assert "ReadSchema: struct<l_returnflag:string,l_linestatus:string>" \
-        in plan
 
 
 def test_norm_buckets_fold_no_shuffle_before_spine_agg(spark):
@@ -2162,24 +1853,6 @@ def test_stream_code_mix_monitor_drained_report_shape(spark):
         assert node not in plan
 
 
-def test_assortativity_checkpointed_edges_no_rescan(spark):
-    # the 7-reuse edge subtree is eagerly localCheckpointed: the
-    # returned plan reads the materialized edges (Scan ExistingRDD),
-    # never the lineitem parquet — no FileScan, no re-derivation of the
-    # co-order self-join; the only nested-loop join is the 1x1-row
-    # scalar cross join (the permitted post-agg class) and the two
-    # global aggs are the only single-partition stages
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["q_part_degree_assortativity"](spark, SF))
-    assert "Scan ExistingRDD" in plan
-    assert "FileScan" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
-    assert plan.count("Exchange SinglePartition") == 2
-    for node in ("CartesianProduct", "BatchEvalPython", "Generate"):
-        assert node not in plan
-
-
 def test_stream_norm_buckets_monitor_drained_report_shape(spark):
     # the drained bucket grid feeds the SHARED share report: one
     # single-partition window over the <= ~45-row sink table — no
@@ -2194,21 +1867,6 @@ def test_stream_norm_buckets_monitor_drained_report_shape(spark):
         assert node not in plan
 
 
-def test_cluster_size_buckets_reads_shared_map(spark):
-    # the entry ROLLS UP the checkpointed session cluster map
-    # (Scan ExistingRDD — reused, not rebuilt: no Generate/joins from
-    # the LSH chain appear); past the map it is cluster-keyed count →
-    # bucket agg → the share window over the post-agg bucket spine
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["dedup_cluster_size_buckets"](spark, SF))
-    assert plan.count("Scan ExistingRDD") == 1
-    assert plan.count("Window") == 1
-    assert plan.count("Exchange SinglePartition") == 1
-    for node in ("CartesianProduct", "BatchEvalPython"):
-        assert node not in plan
-
-
 def test_stream_simpson_monitor_drained_report_shape(spark):
     # the drained (lang, term) count state feeds the SHARED per-lang
     # roll-up: one lang-keyed exchange, no window, no single-partition
@@ -2219,19 +1877,6 @@ def test_stream_simpson_monitor_drained_report_shape(spark):
     assert plan.count("Exchange hashpartitioning") == 1
     for node in ("CartesianProduct", "BatchEvalPython", "Window",
                  "Exchange SinglePartition", "SortMergeJoin"):
-        assert node not in plan
-
-
-def test_rate_by_source_reads_shared_map(spark):
-    # rolls up the checkpointed session cluster map (Scan ExistingRDD —
-    # reused, not rebuilt) joined to the pruned (doc_id, source)
-    # projection; no window, no global stage, no cartesian, no Python
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["dedup_rate_by_source"](spark, SF))
-    assert plan.count("Scan ExistingRDD") == 1
-    for node in ("CartesianProduct", "BatchEvalPython", "Window",
-                 "Exchange SinglePartition"):
         assert node not in plan
 
 
@@ -2394,14 +2039,6 @@ def test_r16_single_evaluation_restructures(spark):
     }
     for name, table in single_scan.items():
         plan = _plan(spark, name)
-        assert plan.count(table) == 1, name
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    for name, table in (
-        ("q_orders_runs_test", "orders.parquet"),
-        ("q_lineitem_mood_median", "lineitem.parquet"),
-    ):
-        plan = _plan_df(STAGED_QUERIES[name](spark, SF))
         assert plan.count(table) == 1, name
     # funnel and stickiness additionally lost their stage joins outright
     assert "Join" not in _plan(spark, "q_events_funnel")

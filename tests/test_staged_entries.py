@@ -1,13 +1,11 @@
-"""Staged catalog entries ↔ DuckDB oracle parity (standing workflow
-since r8: new entries draft in catalog.STAGED_QUERIES, outside the
-driver surface, until deliberately promoted).
+"""Staged catalog entries ↔ DuckDB oracle parity. Staged entries live in
+catalog.STAGED_QUERIES, outside the driver surface, until deliberately
+promoted.
 
 This runs the EXACT driver compare on every staged entry (same
 `parity.compare` the main sweep uses, same SPARK_GRAFT_TEST_SF_DIR
 override for the sf0.01 sweep) so promotion is always a decorator flip,
-not a development task. An empty staging area (right after a promotion
-wave) parametrizes to zero parity cases — that's the workflow's resting
-state, not a coverage gap.
+not a development task.
 """
 
 import os

@@ -875,59 +875,6 @@ def test_moved_blocks_pure_python_reference(spark):
     assert got == want
 
 
-# ---- r16/r17 wave (drafted in r11) ----
-
-
-def test_supplier_hhi_pure_python_reference(spark):
-    """q_supplier_hhi vs a from-scratch Python-int replay: the cents
-    snap is the one shared IEEE step (same doubles both sides); shares
-    and the HHI sum are arbitrary-precision ints, so any mismatch is a
-    Spark-side DECIMAL or window-partitioning bug."""
-    import math
-
-    li = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet",
-        columns=["l_suppkey", "l_extendedprice", "l_discount"],
-    )
-    sup = pq.read_table(
-        f"{SF_DIR}/supplier.parquet", columns=["s_suppkey", "s_nationkey"]
-    )
-    nat = pq.read_table(
-        f"{SF_DIR}/nation.parquet", columns=["n_nationkey", "n_name"]
-    )
-    s2n = dict(
-        zip(sup["s_suppkey"].to_pylist(), sup["s_nationkey"].to_pylist())
-    )
-    names = dict(
-        zip(nat["n_nationkey"].to_pylist(), nat["n_name"].to_pylist())
-    )
-    srev = collections.Counter()
-    for sk, ep, disc in zip(
-        li["l_suppkey"].to_pylist(),
-        li["l_extendedprice"].to_pylist(),
-        li["l_discount"].to_pylist(),
-    ):
-        srev[(s2n[sk], sk)] += math.floor(ep * (1 - disc) * 100 + 0.5)
-    ntot = collections.Counter()
-    ncnt = collections.Counter()
-    for (nk, _sk), rev in srev.items():
-        ntot[nk] += rev
-        ncnt[nk] += 1
-    want = {}
-    for nk in ntot:
-        hhi = sum(
-            (rev * 10000 // ntot[nk]) ** 2
-            for (k, _s), rev in srev.items()
-            if k == nk
-        )
-        want[names[nk]] = (ncnt[nk], ntot[nk], hhi)
-    got = {
-        r["n_name"]: (r["n_suppliers"], r["nation_rev_cents"], r["hhi_bp2"])
-        for r in _staged(spark, "q_supplier_hhi").collect()
-    }
-    assert got == want
-
-
 def _benford_dev_e6(counts):
     """Python-int Benford report from a digit Counter (shared by the
     batch and stream replays; constants re-derived from math.log10, NOT
@@ -940,25 +887,6 @@ def _benford_dev_e6(counts):
         bf = math.floor(math.log10(1 + 1 / d) * 1_000_000)
         out[d] = (n, n * 1_000_000 // total, bf, n * 1_000_000 // total - bf)
     return out
-
-
-def test_orders_benford_pure_python_reference(spark):
-    """q_orders_benford vs a Python replay that re-derives the Benford
-    constants from math.log10 — catches a typo'd catalog constant, which
-    the oracle (same literal both sides) never would."""
-    import math
-
-    t = pq.read_table(f"{SF_DIR}/orders.parquet", columns=["o_totalprice"])
-    counts = collections.Counter(
-        int(str(math.floor(v * 100 + 0.5))[0])
-        for v in t["o_totalprice"].to_pylist()
-    )
-    want = _benford_dev_e6(counts)
-    got = {
-        r["digit"]: (r["n"], r["obs_e6"], r["benford_e6"], r["dev_e6"])
-        for r in _staged(spark, "q_orders_benford").collect()
-    }
-    assert got == want
 
 
 def test_stream_benford_equals_batch_definition(spark):
@@ -1091,74 +1019,6 @@ def test_ivf_delete_commutes_with_probe(spark):
     assert got == want
 
 
-def test_containment_pairs_pure_python_reference(spark):
-    """dedup_containment_pairs vs a from-scratch Python replay over
-    STRING shingles (the entry keys on xxhash64 — a collision would
-    surface here as a count mismatch): per-doc 5-gram sets, inverted-
-    index pair counting, integer containment, same direction rule."""
-    t = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
-    sets = {}
-    for did, text in zip(t["doc_id"].to_pylist(), t["text"].to_pylist()):
-        w = text.split(" ")
-        sets[did] = {
-            " ".join(w[i : i + 5]) for i in range(len(w) - 4)
-        } if len(w) >= 5 else set()
-    inv = collections.defaultdict(list)
-    for did, sh in sets.items():
-        for s in sh:
-            inv[s].append(did)
-    shared = collections.Counter()
-    for ids in inv.values():
-        ids.sort()
-        for i in range(len(ids) - 1):
-            for j in range(i + 1, len(ids)):
-                shared[(ids[i], ids[j])] += 1
-    want = {}
-    for (a, b), c in shared.items():
-        na, nb = len(sets[a]), len(sets[b])
-        bp = c * 10000 // min(na, nb)
-        if bp >= 9000:
-            contained = a if (na < nb or (na == nb and a < b)) else b
-            want[(a, b)] = (bp, contained)
-    got = {
-        (r["id_a"], r["id_b"]): (r["containment_bp"], r["contained_id"])
-        for r in _staged(spark, "dedup_containment_pairs").collect()
-    }
-    assert got == want
-
-
-def test_gamma_correlation_pure_python_reference(spark):
-    """q_lineitem_gamma_correlation vs a Python-int replay of the grid
-    algebra — arbitrary-precision ints make the pair products and the
-    millionths snap exact by construction."""
-    import math
-
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet", columns=["l_quantity", "l_extendedprice"]
-    )
-    cells = collections.Counter(
-        (int(q), math.floor(p * 100 + 0.5) // 1000000)
-        for q, p in zip(
-            t["l_quantity"].to_pylist(), t["l_extendedprice"].to_pylist()
-        )
-    )
-    items = list(cells.items())
-    C = D = 0
-    for (x1, y1), n1 in items:
-        for (x2, y2), n2 in items:
-            if x2 > x1 and y2 > y1:
-                C += n1 * n2
-            elif x2 > x1 and y2 < y1:
-                D += n1 * n2
-    share = C * 1_000_000 // (C + D)
-    rows = _staged(spark, "q_lineitem_gamma_correlation").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["c_pairs"], r["d_pairs"]) == (C, D)
-    assert r["conc_share_e6"] == share
-    assert r["gamma_e6"] == 2 * share - 1_000_000
-
-
 def test_cdc_last_value_pure_python_reference(spark):
     """stream_cdc_last_value vs a Python replay of last-write-wins under
     the (ts, event_id) total order — the any-number-of-merges
@@ -1190,24 +1050,6 @@ def test_cdc_last_value_pure_python_reference(spark):
     assert got == expected
 
 
-def test_frame_energy_pure_python_reference(spark):
-    """media_frame_energy vs a byte-level Python-int replay of framing,
-    energy, and the multiplied-out activity threshold."""
-    t = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
-    want = {}
-    for did, text in zip(t["doc_id"].to_pylist(), t["text"].to_pylist()):
-        b = text.encode("ascii")
-        for fi in range((len(b) + 255) // 256):
-            fr = b[fi * 256 : (fi + 1) * 256]
-            e = sum((x - 128) ** 2 for x in fr)
-            want[(did, fi)] = (e, int(e >= 2000 * len(fr)))
-    got = {
-        (r["doc_id"], r["frame_idx"]): (r["energy"], r["active"])
-        for r in _staged(spark, "media_frame_energy").collect()
-    }
-    assert got == want
-
-
 def test_knn_label_vote_matches_promoted_ranking(spark):
     """emb_knn_label_vote cross-entry identity: its vote, recomputed in
     Python from the PROMOTED emb_cosine_topk entry's neighbor sets plus
@@ -1235,65 +1077,6 @@ def test_knn_label_vote_matches_promoted_ranking(spark):
         for r in _staged(spark, "emb_knn_label_vote").collect()
     }
     assert got == want
-
-
-def test_lsh_band_curve_monotone_and_matches_promoted(spark):
-    """dedup_lsh_band_curve internal + cross-entry consistency: recall
-    must be non-decreasing in the band count (a law of banding — more,
-    shorter bands can only add collisions), n_true identical across
-    rows, n_found ≤ n_true, and the 4×2 row must equal the PROMOTED
-    dedup_lsh_recall entry's numbers exactly."""
-    rows = {
-        r["bands"]: r
-        for r in _staged(spark, "dedup_lsh_band_curve").collect()
-    }
-    assert sorted(rows) == [1, 2, 4, 8]
-    n_true = {r["n_true"] for r in rows.values()}
-    assert len(n_true) == 1 and n_true.pop() > 0
-    for r in rows.values():
-        assert 0 <= r["n_found"] <= r["n_true"]
-        assert r["rows_per_band"] == 8 // r["bands"]
-    recalls = [rows[b]["recall_bp"] for b in (1, 2, 4, 8)]
-    assert recalls == sorted(recalls), f"recall not monotone: {recalls}"
-    promoted = _staged(spark, "dedup_lsh_recall").collect()[0]
-    assert rows[4]["n_true"] == promoted["n_true"]
-    assert rows[4]["n_found"] == promoted["n_found"]
-    assert rows[4]["recall_bp"] == promoted["recall_bp"]
-
-
-def test_runs_test_pure_python_reference(spark):
-    """q_orders_runs_test vs a from-scratch Python-int replay: day
-    revenue, lower-median order statistic, tie-dropping, run counting by
-    walking the date-ordered sequence, multiplied-out expectation."""
-    import math
-
-    t = pq.read_table(
-        f"{SF_DIR}/orders.parquet", columns=["o_orderdate", "o_totalprice"]
-    ).to_pandas()
-    day_rev = collections.Counter()
-    for ts, price in zip(t["o_orderdate"], t["o_totalprice"]):
-        day_rev[ts.floor("D")] += math.floor(price * 100 + 0.5)
-    ordered = sorted(day_rev.items(), key=lambda kv: (kv[1], kv[0]))
-    med = ordered[(len(ordered) + 1) // 2 - 1][1]
-    seq = [
-        1 if rev > med else 0
-        for d, rev in sorted(day_rev.items())
-        if rev != med
-    ]
-    n_above = sum(seq)
-    n_below = len(seq) - n_above
-    n_runs = 1 + sum(a != b for a, b in zip(seq, seq[1:]))
-    exp_e3 = 2000 * n_above * n_below // (n_above + n_below) + 1000
-    rows = _staged(spark, "q_orders_runs_test").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_above"], r["n_below"], r["n_runs"]) == (
-        n_above,
-        n_below,
-        n_runs,
-    )
-    assert r["expected_runs_e3"] == exp_e3
-    assert r["gap_e3"] == n_runs * 1000 - exp_e3
 
 
 def test_count_foreach_expansion_pure_python_reference(spark):
@@ -1575,35 +1358,6 @@ def test_stream_overdispersion_matches_batch(spark):
     assert stream_rows == batch_rows
 
 
-def test_ks_test_pure_python_reference(spark):
-    """q_lineitem_ks_test vs a from-scratch Python-bigint replay: step
-    CDFs from raw counts, the common-denominator dev(q) maximization,
-    the squared sqrt-free Smirnov decision."""
-    import collections
-
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet", columns=["l_linestatus", "l_quantity"]
-    ).to_pandas()
-    ca: collections.Counter = collections.Counter()
-    cb: collections.Counter = collections.Counter()
-    for g, q in zip(t["l_linestatus"], t["l_quantity"]):
-        (ca if g == "F" else cb)[int(q)] += 1
-    n_a, n_b = sum(ca.values()), sum(cb.values())
-    dev_max, cum_a, cum_b = 0, 0, 0
-    for q in sorted(set(ca) | set(cb)):
-        cum_a += ca.get(q, 0)
-        cum_b += cb.get(q, 0)
-        dev_max = max(dev_max, abs(cum_a * n_b - cum_b * n_a))
-    d_e6 = dev_max * 1000000 // (n_a * n_b)
-    reject = dev_max * dev_max * 1000000 > 1844164 * n_a * n_b * (n_a + n_b)
-    rows = _staged(spark, "q_lineitem_ks_test").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_a"], r["n_b"], r["d_e6"], r["reject_05"]) == (
-        n_a, n_b, d_e6, reject,
-    )
-
-
 def test_vocab_growth_pure_python_reference(spark):
     """docs_vocab_growth vs a Python replay: trigram first-occurrence
     map, value-range quarter cuts, exact per-cut doc and vocab counts —
@@ -1675,64 +1429,6 @@ def test_ivf_compaction_identity_and_erasure(spark):
         ).collect()
     }
     assert new == {v for v in old if v % 8 != 3}
-
-
-def test_dhash_pure_python_and_shift_invariance(spark):
-    """media_dhash_pairs vs a Python replay of the 8×9 gradient hash +
-    pair derivation — plus the property that MOTIVATES dHash: a uniform
-    brightness shift leaves every dHash bit unchanged while flipping
-    aHash bits (checked on a synthetic gradient payload)."""
-    import collections
-
-    import numpy as np
-
-    t = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-    ).to_pandas()
-    hashes = {}
-    for did, text in zip(t["doc_id"], t["text"]):
-        b = text.encode("utf-8")
-        if len(b) < 72:
-            continue
-        v = np.frombuffer(b[:72], dtype=np.uint8).astype(int).reshape(8, 9)
-        bits = (v[:, 1:] > v[:, :-1]).astype(int).ravel()
-        hashes[int(did)] = "".join(str(x) for x in bits)
-    buckets: dict = collections.defaultdict(list)
-    for did, h in hashes.items():
-        buckets[h].append(did)
-    want = set()
-    for h, ids in buckets.items():
-        if len(ids) <= 64:
-            for i, a in enumerate(sorted(ids)):
-                for b2 in sorted(ids)[i + 1:]:
-                    want.add((a, b2, h))
-    got = {
-        (r["doc_id1"], r["doc_id2"], r["dhash"])
-        for r in _staged(spark, "media_dhash_pairs").collect()
-    }
-    assert got == want
-
-    # LOCALITY, the property that motivates running both hashes (note
-    # aHash is itself invariant to a GLOBAL uniform shift — the mean
-    # moves equally — so the distinction is locality, not shift): a
-    # row-local brightness patch (+80 on row 0) preserves every
-    # intra-row adjacent order, so dHash is bit-identical, while the
-    # patch drags the GLOBAL mean and flips aHash bits in untouched
-    # rows (indices ≥ 9)
-    base = (np.arange(72) * 7 % 97).astype(np.uint8)
-    patched = base.copy()
-    patched[:9] = np.minimum(base[:9].astype(int) + 80, 255).astype(
-        np.uint8
-    )
-    def dh(v):
-        g = v.astype(int).reshape(8, 9)
-        return np.array(g[:, 1:] > g[:, :-1], dtype=int).ravel()
-    def ah(v):
-        g = v[:64].astype(int)
-        return np.array(g * 64 > g.sum(), dtype=int)
-    assert (dh(base) == dh(patched)).all()
-    far_flips = np.nonzero(ah(base) != ah(patched))[0]
-    assert len(far_flips) > 0 and (far_flips >= 9).any()
 
 
 def test_unused_data_sources_pure_python_reference(spark):
@@ -1936,63 +1632,6 @@ def test_incremental_batch_pure_python_and_cross_entry(spark):
     assert mine == promoted_cross
 
 
-def test_spearman_pure_python_and_textbook(spark):
-    """q_lineitem_spearman three ways: (a) exact bigint replay of the
-    doubled-mid-rank grid algebra including the two-stage snapped
-    division, (b) agreement with the TEXTBOOK average-rank Pearson form
-    of Spearman to 1e-6 (the identity the docstring claims — Spearman
-    IS Pearson on mid-ranks, and doubling cancels in the ratio), (c)
-    the sign of the reported value equals the sign of the rank
-    covariance."""
-    import math
-
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet", columns=["l_quantity", "l_discount"]
-    ).to_pandas()
-    grid: collections.Counter = collections.Counter()
-    for q, d in zip(t["l_quantity"], t["l_discount"]):
-        grid[(int(q), math.floor(d * 100 + 0.5))] += 1
-    xs: collections.Counter = collections.Counter()
-    ys: collections.Counter = collections.Counter()
-    for (x, y), n in grid.items():
-        xs[x] += n
-        ys[y] += n
-    nn = sum(xs.values())
-
-    def rank2(margin):
-        out, cum = {}, 0
-        for v in sorted(margin):
-            out[v] = 2 * cum + margin[v] + 1
-            cum += margin[v]
-        return out
-
-    rx, ry = rank2(xs), rank2(ys)
-    s = sum(
-        n * (rx[x] - (nn + 1)) * (ry[y] - (nn + 1))
-        for (x, y), n in grid.items()
-    )
-    dx = sum(tx * (rx[x] - (nn + 1)) ** 2 for x, tx in xs.items())
-    dy = sum(ty * (ry[y] - (nn + 1)) ** 2 for y, ty in ys.items())
-    want = (-1 if s < 0 else 1) * (((s * s) // dx) * 100000000 // dy)
-    rows = _staged(spark, "q_lineitem_spearman").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_rows"], r["rho2_e8_signed"]) == (nn, want)
-    # textbook: Pearson correlation of average mid-ranks (floats)
-    ax = {x: rx[x] / 2 for x in rx}
-    ay = {y: ry[y] / 2 for y in ry}
-    mx = (nn + 1) / 2  # mean rank is always (N+1)/2
-    cov = sum(
-        n * (ax[x] - mx) * (ay[y] - mx) for (x, y), n in grid.items()
-    )
-    vx = sum(tx * (ax[x] - mx) ** 2 for x, tx in xs.items())
-    vy = sum(ty * (ay[y] - mx) ** 2 for y, ty in ys.items())
-    rho = cov / math.sqrt(vx * vy)
-    got = r["rho2_e8_signed"] / 1e8
-    assert abs(abs(rho) * rho - got) <= 2e-8
-    assert (got < 0) == (cov < 0)
-
-
 def test_sign_hamming_numpy_replay_and_scale_invariance(spark):
     """emb_sign_hamming_recall two ways: (a) full numpy replay — sign
     words, Hamming top-10 with (distance, id) tie-break, exact cosine
@@ -2093,238 +1732,6 @@ def test_simpson_diversity_pure_python_and_uniform_identity(spark):
     nn = sum(uni.values())
     pairs = sum(n * (n - 1) for n in uni.values())
     assert pairs * 1000000 // (nn * (nn - 1)) == 2 * 1000000 // 20
-
-
-def test_dow_chi2_pure_python_and_rederived_constant(spark):
-    """q_orders_dow_chi2 three ways: (a) exact bigint replay of the
-    multiplied-out statistic including the zero-class N² terms, (b) the
-    textbook float form Σ(O−E)²/E agrees to 1e-6 relative, (c) the
-    12591587 decision constant re-derived from the CLOSED-FORM even-df
-    χ² CDF (df=6: P(X ≤ x) = 1 − e^{−x/2}(1 + x/2 + x²/8)) by pure-
-    Python bisection — no scipy, no table transcription to trust."""
-    import math
-
-    t = pq.read_table(
-        f"{SF_DIR}/orders.parquet", columns=["o_orderdate"]
-    ).to_pandas()
-    cnt: collections.Counter = collections.Counter()
-    for ts in t["o_orderdate"]:
-        # pandas datetime64[us/ns] → epoch µs → day index → % 7
-        us = ts.value // (1000 if ts.value > 10**16 else 1)
-        cnt[(us // 86400000000) % 7] += 1
-    nn = sum(cnt.values())
-    s = sum((7 * cnt.get(d, 0) - nn) ** 2 for d in range(7))
-    chi_e6 = s * 1000000 // (7 * nn)
-    rows = _staged(spark, "q_orders_dow_chi2").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_orders"], r["chi2_e6"]) == (nn, chi_e6)
-    # textbook float form
-    e = nn / 7
-    chib = sum((cnt.get(d, 0) - e) ** 2 / e for d in range(7))
-    assert abs(chib - chi_e6 / 1e6) <= max(1e-6 * chib, 2e-6)
-    # closed-form even-df CDF: df=6 → k=3 terms
-    def cdf6(x):
-        h = x / 2
-        return 1.0 - math.exp(-h) * (1 + h + h * h / 2)
-    lo, hi = 0.0, 100.0
-    for _ in range(200):
-        mid = (lo + hi) / 2
-        if cdf6(mid) < 0.95:
-            lo = mid
-        else:
-            hi = mid
-    assert math.floor(lo * 1e6) == 12591587
-    assert r["reject_05"] == (chi_e6 > 12591587)
-
-
-def test_trimmed_mean_definitional_replay(spark):
-    """q_lineitem_trimmed_mean vs the DEFINITION: materialize the sorted
-    quantity list, slice off k = N DIV 10 from each end, sum and snap —
-    the grid partial-level clamp must reproduce it exactly. Plus the
-    robustness sandwich: min ≤ trimmed mean ≤ max of the kept slice."""
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet", columns=["l_quantity"]
-    ).to_pandas()
-    qs = sorted(int(q) for q in t["l_quantity"])
-    nn = len(qs)
-    k = nn // 10
-    kept = qs[k: nn - k]
-    rows = _staged(spark, "q_lineitem_trimmed_mean").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_rows"], r["trim_k"], r["trimmed_sum"]) == (
-        nn, k, sum(kept),
-    )
-    want_mean = sum(kept) * 10000 // len(kept) if kept else None
-    assert r["trimmed_mean_e4"] == want_mean
-    if kept:
-        assert kept[0] * 10000 <= r["trimmed_mean_e4"] <= kept[-1] * 10000
-
-
-def test_phash_rederived_constants_replay_and_brightness_invariance(spark):
-    """media_phash_pairs three ways: (a) every PHASH_DCT constant
-    re-derived from math.cos (round(8192·cos(π(2x+1)u/16)) — the
-    re-derived-constants device: the table is shared verbatim by both
-    engines, so only first principles can catch a transposition), plus
-    the zero-row-sum property that makes brightness invariance exact;
-    (b) a pure-Python triple-loop DCT replay (no numpy, no SQL) of the
-    full hash pipeline against the operator's own output; (c) EXACT
-    brightness invariance: +10 on every byte (docs whose bytes stay
-    ≤ 255) leaves all 63 AC bits untouched."""
-    import math
-
-    from steampipe_plugin_terraform_spark.operators import multimodal
-
-    C = multimodal.PHASH_DCT
-    for u in range(8):
-        for x in range(8):
-            want = round(8192 * math.cos(math.pi * (2 * x + 1) * u / 16))
-            assert C[u][x] == want, (u, x)
-        if u >= 1:
-            assert sum(C[u]) == 0, u
-
-    def replay(bs):
-        d = [
-            [
-                sum(
-                    C[u][r] * bs[r * 8 + cl] * C[v][cl]
-                    for r in range(8)
-                    for cl in range(8)
-                )
-                for v in range(8)
-            ]
-            for u in range(8)
-        ]
-        ac = [d[u][v] for u in range(8) for v in range(8) if (u, v) != (0, 0)]
-        med = sorted(ac)[31]
-        return "".join("1" if x > med else "0" for x in ac)
-
-    t = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["doc_id", "text", "n_chars"]
-    ).to_pandas()
-    docs = {
-        int(r.doc_id): r.text.encode("utf-8")[:64]
-        for r in t.itertuples()
-        if r.n_chars >= 64
-    }
-    from steampipe_plugin_terraform_spark.catalog import _t
-    got = {
-        r["doc_id"]: r["phash"]
-        for r in multimodal.phash63(
-            multimodal.documents_as_binary(
-                _t(spark, SF_DIR, "documents").filter("n_chars >= 64")
-            )
-        ).collect()
-    }
-    assert set(got) == set(docs)
-    for i, bs in docs.items():
-        assert got[i] == replay(list(bs)), i
-    # exact invariance: +10 brightness moves only the DC coefficient
-    shifted = 0
-    for i, bs in docs.items():
-        if max(bs) <= 245:
-            assert replay([b + 10 for b in bs]) == got[i], i
-            shifted += 1
-    assert shifted > 0, "no doc eligible for the brightness-shift check"
-
-
-def test_brown_forsythe_pure_python_and_textbook(spark):
-    """q_lineitem_brown_forsythe two ways: (a) exact bigint replay of
-    the machine-formula ANOVA-on-|deviations| algebra including the
-    per-group floored Tᵢ²//nᵢ and the clamped SSB; (b) the textbook float Brown–Forsythe
-    F = [(N−k)/(k−1)]·Σnᵢ(z̄ᵢ−z̄)²/ΣΣ(z−z̄ᵢ)² recomputed from raw rows
-    agrees to 1e-6 relative (the floors lose at most k units on
-    ~1e20-scale sums)."""
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet", columns=["l_returnflag", "l_quantity"]
-    ).to_pandas()
-    grid: collections.Counter = collections.Counter()
-    for g, q in zip(t["l_returnflag"], t["l_quantity"]):
-        grid[(g, int(q))] += 1
-    groups = sorted({g for g, _ in grid})
-    med = {}
-    for g in groups:
-        tot = sum(n for (gg, _q), n in grid.items() if gg == g)
-        cum = 0
-        for q in sorted(q for (gg, q) in grid if gg == g):
-            cum += grid[(g, q)]
-            if cum >= (tot + 1) // 2:
-                med[g] = q
-                break
-    z: collections.Counter = collections.Counter()
-    for (g, q), n in grid.items():
-        z[(g, abs(q - med[g]) * 1000)] += n  # milli-unit deviations
-    n_i = {g: sum(n for (gg, _z), n in z.items() if gg == g) for g in groups}
-    t_i = {g: sum(n * zz for (gg, zz), n in z.items() if gg == g)
-           for g in groups}
-    ss = sum(n * zz * zz for (_g, zz), n in z.items())
-    nn, tt, k = sum(n_i.values()), sum(t_i.values()), len(groups)
-    sb = sum(t_i[g] ** 2 // n_i[g] for g in groups)
-    ssb = max(sb - tt * tt // nn, 0)
-    ssw = ss - sb
-    f_e6 = (nn - k) * ssb * 1000000 // ((k - 1) * ssw)
-    rows = _staged(spark, "q_lineitem_brown_forsythe").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_rows"], r["n_groups"], r["f_e6"]) == (nn, k, f_e6)
-    assert r["reject_05"] == ((k - 1) * f_e6 > 5991464)
-    # textbook float form from raw deviations
-    zbar_i = {g: t_i[g] / n_i[g] for g in groups}
-    zbar = tt / nn
-    num = sum(n_i[g] * (zbar_i[g] - zbar) ** 2 for g in groups) / (k - 1)
-    den = sum(
-        n * (zz - zbar_i[g]) ** 2 for (g, zz), n in z.items()
-    ) / (nn - k)
-    fb = num / den
-    assert abs(fb - f_e6 / 1e6) <= max(1e-6 * fb, 2e-6)
-
-
-def test_mood_median_pure_python_and_textbook(spark):
-    """q_lineitem_mood_median two ways: (a) exact bigint replay of the
-    pooled-low-median + 2×k collapse χ² = Σ d_j²/(n_j·A·(N−A))
-    including the per-group d²//n floors; (b) the textbook float χ²
-    over the {>m, ≤m} × group contingency recomputed with expected
-    counts agrees to 1e-5 relative (the k floors lose < k units on
-    ~1e15-scale sums)."""
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet", columns=["l_returnflag", "l_quantity"]
-    ).to_pandas()
-    grid: collections.Counter = collections.Counter()
-    for g, q in zip(t["l_returnflag"], t["l_quantity"]):
-        grid[(g, int(q))] += 1
-    lvl: collections.Counter = collections.Counter()
-    for (_g, q), n in grid.items():
-        lvl[q] += n
-    nn = sum(lvl.values())
-    cum, med = 0, None
-    for q in sorted(lvl):
-        cum += lvl[q]
-        if cum >= (nn + 1) // 2:
-            med = q
-            break
-    groups = sorted({g for g, _ in grid})
-    n_j = {g: sum(n for (gg, _q), n in grid.items() if gg == g)
-           for g in groups}
-    a_j = {g: sum(n for (gg, q), n in grid.items() if gg == g and q > med)
-           for g in groups}
-    a, k = sum(a_j.values()), len(groups)
-    s = sum((a_j[g] * nn - n_j[g] * a) ** 2 // n_j[g] for g in groups)
-    chi2_e6 = s * 1_000_000 // (a * (nn - a))
-    rows = _staged(spark, "q_lineitem_mood_median").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_rows"], r["n_groups"], r["n_above"], r["chi2_e6"]) == (
-        nn, k, a, chi2_e6,
-    )
-    assert r["reject_05"] == (chi2_e6 > 5991464)
-    # textbook float χ² from the 2×k contingency with expected counts
-    chi_f = 0.0
-    for g in groups:
-        for obs, row_tot in ((a_j[g], a), (n_j[g] - a_j[g], nn - a)):
-            e = n_j[g] * row_tot / nn
-            chi_f += (obs - e) ** 2 / e
-    assert abs(chi_f - chi2_e6 / 1e6) <= max(1e-5 * chi_f, 2e-6)
 
 
 def test_zipf_slope_pure_python_and_bucket_boundaries(spark):
@@ -2492,54 +1899,6 @@ def test_stream_source_drift_equals_batch(spark):
     batch = _staged(spark, "docs_source_drift_chi2").collect()
     stream = _staged(spark, "stream_source_drift_monitor").collect()
     assert [r.asDict() for r in batch] == [r.asDict() for r in stream]
-
-
-def test_kendall_tau_b_python_cross_entry_and_textbook(spark):
-    """q_lineitem_kendall_tau_b three ways: (a) C/D must EQUAL the
-    promoted gamma entry's pair counts (same grid, same pair algebra —
-    a cross-entry identity sharing no tie machinery); (b) exact bigint
-    replay of the tie terms and the two-stage snap; (c) the textbook
-    float τ-b agrees to 1e-6 on τ² (the two floors lose <2 units on
-    ~1e11-scale denominators)."""
-    gamma = _staged(spark, "q_lineitem_gamma_correlation").collect()[0]
-    rows = _staged(spark, "q_lineitem_kendall_tau_b").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["c_pairs"], r["d_pairs"]) == (
-        gamma["c_pairs"], gamma["d_pairs"],
-    )
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet",
-        columns=["l_quantity", "l_extendedprice"],
-    )
-    grid: collections.Counter = collections.Counter()
-    for q, p in zip(
-        t["l_quantity"].to_pylist(), t["l_extendedprice"].to_pylist()
-    ):
-        grid[(int(q), int(math.floor(p * 100 + 0.5)) // 1_000_000)] += 1
-    tx: collections.Counter = collections.Counter()
-    ty: collections.Counter = collections.Counter()
-    for (x, y), n in grid.items():
-        tx[x] += n
-        ty[y] += n
-    nn = sum(grid.values())
-    n0 = nn * (nn - 1) // 2
-    n1 = sum(v * (v - 1) // 2 for v in tx.values())
-    n2 = sum(v * (v - 1) // 2 for v in ty.values())
-    c = d = 0
-    cells = list(grid.items())
-    for (x1, y1), na in cells:
-        for (x2, y2), nb in cells:
-            if x2 > x1 and y2 > y1:
-                c += na * nb
-            elif x2 > x1 and y2 < y1:
-                d += na * nb
-    assert (r["c_pairs"], r["d_pairs"]) == (c, d)
-    sign = -1 if c < d else 1
-    expect = sign * ((((c - d) * (c - d)) // (n0 - n1)) * 10**8 // (n0 - n2))
-    assert r["tau2_e8_signed"] == expect
-    tau_f = (c - d) / math.sqrt((n0 - n1) * (n0 - n2))
-    assert abs(abs(tau_f) * tau_f - r["tau2_e8_signed"] / 1e8) <= 2e-6
 
 
 def test_hapax_legomena_pure_python_reference(spark):
@@ -2741,95 +2100,6 @@ def test_tokenize_device_three_engine_agreement(spark):
     assert {i: toks for i, toks in enumerate(py)} == dict(got)
 
 
-def test_ahash_clusters_python_replay_and_pair_consistency(spark):
-    """media_ahash_clusters vs a pure-Python aHash+grouping replay over
-    the parquet text, plus the cross-entry pin: every media_ahash_pairs
-    pair must land inside ONE cluster (pairs are a capped subset of the
-    group view, never the other way around)."""
-    import collections
-
-    from steampipe_plugin_terraform_spark.catalog import QUERIES
-
-    tab = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["doc_id", "text", "n_chars"]
-    )
-    groups = collections.defaultdict(list)
-    want = {}
-    for i, t, n in zip(
-        tab["doc_id"].to_pylist(), tab["text"].to_pylist(),
-        tab["n_chars"].to_pylist(),
-    ):
-        if n >= 64:
-            v = [ord(c) for c in t[:64]]
-            tot = sum(v)
-            h = "".join("1" if x * 64 > tot else "0" for x in v)
-            groups[h].append(i)
-        else:
-            want[i] = (i, 1)
-    for members in groups.values():
-        cid = min(members)
-        for i in members:
-            want[i] = (cid, len(members))
-    got = {
-        r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-        for r in _staged(spark, "media_ahash_clusters").collect()
-    }
-    assert got == want
-    # cross-entry pin: the promoted pair view is a subset of the groups
-    for r in QUERIES["media_ahash_pairs"](spark, SF_DIR).collect():
-        assert got[r["doc_id1"]][0] == got[r["doc_id2"]][0]
-
-
-def test_cramers_v_cross_entry_and_python_reference(spark):
-    """q_lineitem_cramers_v two ways: (a) the cross-entry identity —
-    its chi2_e6 / n_tot must equal the PROMOTED
-    q_lineitem_flag_status_chi2 frame's sums exactly (the roll-up
-    consumes that frame verbatim, so any drift is a composition bug);
-    (b) a from-scratch Python-int replay of the whole chain from the
-    parquet (cells → floored contribs → floored V²), plus a float
-    sanity band on V² itself."""
-    cells = QUERIES["q_lineitem_flag_status_chi2"](spark, SF_DIR).collect()
-    r = _staged(spark, "q_lineitem_cramers_v").collect()[0]
-    assert r["chi2_e6"] == sum(c["contrib_e6"] for c in cells)
-    assert r["n_tot"] == sum(c["observed"] for c in cells)
-
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet", columns=["l_returnflag", "l_linestatus"]
-    )
-    obs = collections.Counter(
-        zip(t["l_returnflag"].to_pylist(), t["l_linestatus"].to_pylist())
-    )
-    n = sum(obs.values())
-    rt = collections.Counter()
-    ct = collections.Counter()
-    for (f_, s_), o in obs.items():
-        rt[f_] += o
-        ct[s_] += o
-    chi2_e6 = sum(
-        (o * n - rt[f_] * ct[s_]) ** 2 * 1000000 // (rt[f_] * ct[s_] * n)
-        for (f_, s_), o in obs.items()
-    )
-    m = min(len(rt), len(ct)) - 1
-    assert r["r_levels"] == len(rt) and r["c_levels"] == len(ct)
-    assert r["df"] == (len(rt) - 1) * (len(ct) - 1)
-    assert r["chi2_e6"] == chi2_e6
-    assert r["v2_e8"] == chi2_e6 * 100 // (n * m)
-    # float sanity: the snapped V² sits within the floors' error band
-    chi2_f = sum(
-        (o - rt[f_] * ct[s_] / n) ** 2 / (rt[f_] * ct[s_] / n)
-        for (f_, s_), o in obs.items()
-    )
-    assert abs(r["v2_e8"] / 1e8 - chi2_f / (n * m)) < 5e-6
-    # effect banding on the squared thresholds (v = 0.1/0.3/0.5)
-    v2 = r["v2_e8"]
-    expect = (
-        "negligible" if v2 < 1000000 else
-        "small" if v2 < 9000000 else
-        "medium" if v2 < 25000000 else "large"
-    )
-    assert r["effect"] == expect
-
-
 def test_norm_buckets_numpy_reference(spark):
     """emb_norm_buckets vs a numpy replay of the milli-quantize →
     integer Σq² → ⌊log₂⌋ bucket chain, exact at every column."""
@@ -3020,70 +2290,6 @@ def test_stream_norm_buckets_equals_batch(spark):
     assert batch == stream and batch
 
 
-def test_degree_assortativity_python_reference(spark):
-    """q_part_degree_assortativity vs a from-scratch Python replay of
-    the graph build (distinct co-order pairs → degrees → exact integer
-    moments) plus a float Pearson over the directed degree pairs — the
-    graph derivation is independent of the entry's joins, so the
-    shared-with-triangles edge semantics cannot silently drift."""
-    t = pq.read_table(
-        f"{SF_DIR}/lineitem.parquet",
-        columns=["l_orderkey", "l_partkey", "l_shipdate"],
-    )
-    import datetime
-
-    lo, hi = datetime.datetime(1995, 1, 1), datetime.datetime(1995, 12, 31)
-    li = {
-        (o, p)
-        for o, p, d in zip(
-            t["l_orderkey"].to_pylist(), t["l_partkey"].to_pylist(),
-            t["l_shipdate"].to_pylist(),
-        )
-        if lo <= d <= hi
-    }
-    by_order = collections.defaultdict(set)
-    for o, p in li:
-        by_order[o].add(p)
-    edges = set()
-    for parts in by_order.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                edges.add((ps[i], ps[j]))
-    deg = collections.Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    m = 2 * len(edges)
-    s2 = sum(d * d for d in deg.values())
-    s3 = sum(d * d * d for d in deg.values())
-    sxy = 2 * sum(deg[a] * deg[b] for a, b in edges)
-    num = m * sxy - s2 * s2
-    den = m * s3 - s2 * s2
-    r = _staged(spark, "q_part_degree_assortativity").collect()[0]
-    assert r["n_nodes"] == len(deg) and r["n_edges"] == len(edges)
-    expect = (
-        None if den <= 0 else
-        (num * 1000000) // den if num >= 0 else
-        -((-num * 1000000) // den)
-    )
-    assert r["r_e6"] == expect
-    if den > 0:
-        # float sanity: Pearson over the 2E directed degree pairs
-        xs, ys = [], []
-        for a, b in edges:
-            xs += [deg[a], deg[b]]
-            ys += [deg[b], deg[a]]
-        mx = sum(xs) / m
-        cov = sum((x - mx) * (y - mx) for x, y in zip(xs, ys))
-        var = sum((x - mx) ** 2 for x in xs)
-        assert abs(r["r_e6"] / 1e6 - cov / var) < 2e-6
-        assert r["mixing"] == (
-            "assortative" if num > 0 else
-            "disassortative" if num < 0 else "neutral"
-        )
-
-
 def test_milli_quantize_device_three_engine_agreement(spark):
     """The f64 milli-quantize device behind emb_norm_buckets /
     emb_cov_top_eigen (CAST float→DOUBLE, floor(x·1000 + 0.5), BIGINT)
@@ -3175,40 +2381,6 @@ def test_bin_length_bucket_device_agreement(spark):
     assert [got[i] for i in range(len(ns))] == want
 
 
-def test_cluster_size_buckets_cross_entry_consistency(spark):
-    """dedup_cluster_size_buckets three ways: (a) the roll-up replayed
-    in Python over the PROMOTED dedup_clusters map (same session build,
-    independent bucketing/grouping math); (b) totals must reconcile
-    with the PROMOTED docs_dedup_rate_report (Σ clusters, Σ docs, max
-    size); (c) the bucket-0 row is exactly the unique-document
-    count."""
-    m = QUERIES["dedup_clusters"](spark, SF_DIR).collect()
-    sizes = collections.Counter(r["cluster_id"] for r in m)
-    per_bucket = collections.defaultdict(list)
-    for n in sizes.values():
-        per_bucket[n.bit_length() - 1].append(n)
-    tot = sum(sizes.values())
-    got = {
-        r["bucket"]: r
-        for r in _staged(spark, "dedup_cluster_size_buckets").collect()
-    }
-    assert sorted(got) == sorted(per_bucket)
-    for b, ns in per_bucket.items():
-        r = got[b]
-        assert r["n_clusters"] == len(ns)
-        assert r["n_docs"] == sum(ns)
-        assert r["max_size"] == max(ns)
-        assert r["docs_share_bp"] == sum(ns) * 10000 // tot
-    rate = QUERIES["docs_dedup_rate_report"](spark, SF_DIR).collect()[0]
-    assert sum(r["n_clusters"] for r in got.values()) == rate["n_clusters"]
-    assert sum(r["n_docs"] for r in got.values()) == rate["n_docs"]
-    assert max(r["max_size"] for r in got.values()) \
-        == rate["max_cluster_size"]
-    singles = sum(1 for n in sizes.values() if n == 1)
-    if singles:
-        assert got[0]["n_clusters"] == singles == got[0]["n_docs"]
-
-
 def test_stream_simpson_equals_batch_simpson(spark):
     """stream_simpson_monitor ≡ docs_simpson_diversity on the same
     corpus — the stream≡batch identity (complete-mode (lang, term)
@@ -3224,36 +2396,3 @@ def test_stream_simpson_equals_batch_simpson(spark):
         key=lambda d: d["lang"],
     )
     assert batch == stream and batch
-
-
-def test_dedup_rate_by_source_cross_entry_consistency(spark):
-    """dedup_rate_by_source vs a Python roll-up over the PROMOTED
-    dedup_clusters map joined to the parquet source column, plus the
-    reconciliation Σ n_dups ≡ the PROMOTED rate report's n_dup_docs
-    and Σ n_docs ≡ its n_docs — the three dedup reports must describe
-    ONE clustering."""
-    src = {
-        i: s
-        for i, s in zip(
-            *(pq.read_table(
-                f"{SF_DIR}/documents.parquet", columns=["doc_id", "source"]
-            )[c].to_pylist() for c in ("doc_id", "source"))
-        )
-    }
-    per = collections.defaultdict(lambda: [0, 0])
-    for r in QUERIES["dedup_clusters"](spark, SF_DIR).collect():
-        s = src[r["doc_id"]]
-        per[s][0] += 1
-        per[s][1] += int(not r["is_canonical"])
-    got = {
-        r["source"]: r
-        for r in _staged(spark, "dedup_rate_by_source").collect()
-    }
-    assert sorted(got) == sorted(per)
-    for s, (n_docs, n_dups) in per.items():
-        r = got[s]
-        assert r["n_docs"] == n_docs and r["n_dups"] == n_dups
-        assert r["dup_rate_bp"] == n_dups * 10000 // n_docs
-    rate = QUERIES["docs_dedup_rate_report"](spark, SF_DIR).collect()[0]
-    assert sum(r["n_docs"] for r in got.values()) == rate["n_docs"]
-    assert sum(r["n_dups"] for r in got.values()) == rate["n_dup_docs"]
