@@ -1,6 +1,6 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog
+.PHONY: test test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog perf-cold
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
@@ -48,3 +48,16 @@ perf-query:
 perf-catalog:
 	python3 perfbench/run.py --workload catalog_mix --seed 7 --seconds 10 --trace 0
 	python3 perfbench/run.py --workload catalog_mix --seed 7 --seconds 10 --trace 1
+
+# Cold start at one seed: tf_ingest untraced twice with a fresh cache
+# directory. The first run dumps the driver JVM's class-data-sharing archive
+# as it exits, the second starts from it; each run's process wall time
+# (dump included) and the archive's bytes print after its JSON lines.
+perf-cold:
+	@cache="$$(mktemp -d)"; trap 'rm -rf "$$cache"' EXIT; \
+	for run in dump warm; do \
+	  start=$$(date +%s%N); \
+	  XDG_CACHE_HOME="$$cache" python3 perfbench/run.py --workload tf_ingest --seed 7 --seconds 10 --trace 0 || exit 1; \
+	  echo "perf-cold $$run: process $$(( ($$(date +%s%N) - start) / 1000000 )) ms wall," \
+	    "archive $$(find "$$cache" -name '*.jsa' -printf '%s') bytes"; \
+	done

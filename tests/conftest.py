@@ -11,13 +11,14 @@ def spark():
 
     from pyspark.sql import SparkSession
 
-    from steampipe_plugin_terraform_spark.session import DAEMON_MODULE
+    from steampipe_plugin_terraform_spark.session import DAEMON_MODULE, create
 
     # one BLAS thread per Python worker (see session.get_spark): must be
     # in the env before the JVM launches so worker daemons inherit it
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    spark = (
+    # the JVM starts from the same class-data-sharing archive as get_spark's
+    spark = create(
         SparkSession.builder.appName("tf-spark-tests")
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
@@ -26,9 +27,8 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python tasks fork from the same worker daemon as get_spark's
         .config("spark.python.daemon.module", DAEMON_MODULE)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+        .config("spark.ui.enabled", "false"),
+        "4g",
     )
     yield spark
     spark.stop()
