@@ -17,28 +17,35 @@ All knobs here are safe at both extremes:
   re-reads pyspark.zip's directory once per imported subpackage (0.2-0.3
   CPU-s per task), a per-task tax that grows with task count.
 
-Cold start: a new driver JVM maps its classes from a dynamic class-data-
-sharing (AppCDS) archive instead of loading and verifying them from the
-jars, which cuts session start from about 14 to 8.5 CPU-s on 4 vCPUs. The
-archive holds the classes its dumping session loaded (150-210 MB) and lives
-in ``$XDG_CACHE_HOME/steampipe_plugin_terraform_spark/jvm/`` (default
-``~/.cache``), never in the checkout. Its name is a digest of the JDK
-(path and ``release`` file), the heap regime (compressed oops are off
-from about 32 GiB, and an archive from one regime is rejected by the other)
-and the name and size of every jar in ``$SPARK_HOME/jars``. On a miss the
-session dumps the archive when its JVM exits (that session runs 20-40%
-more CPU and takes about 12 s longer to exit), to a ``.part`` name that
-an ``atexit`` hook renames once the JVM is gone; every later session maps
-it. The JIT is left at its tiered C2 default: C1 alone starts faster but
-runs warm code about 20% slower.
+Cold start: a new driver JVM maps its classes from a class-data-sharing
+(AppCDS) archive instead of loading and verifying them from the jars,
+which cuts session start from about 14 to 8.5 CPU-s on 4 vCPUs. The
+archive holds the classes its recording session loaded (170-230 MB) and
+lives in ``$XDG_CACHE_HOME/steampipe_plugin_terraform_spark/jvm/``
+(default ``~/.cache``), never in the checkout. Its name is a digest of
+the JDK (path and ``release`` file), the driver heap setting and the path,
+name, size and modification time of every jar in ``$SPARK_HOME/jars``,
+which is what the JVM checks before it maps an archive. On a miss the
+session only records the names of the classes it loads
+(``-XX:DumpLoadedClassList``, no slower than a plain session); an
+``atexit`` hook then waits for the JVM to exit and builds the archive
+from that list with a static ``-Xshare:dump`` of the same java, options
+and class path (about 40 s, single-threaded, after the session's work is
+done), into a ``.part`` name it renames when the dump is complete. Every
+later session maps it. A dump that fails leaves an empty file under the
+archive's name, so later sessions start without an archive instead of
+paying for the dump again. The JIT is left at its tiered C2 default: C1
+alone starts faster but runs warm code about 20% slower.
 JDK 17 neither dumps nor maps an archive while a non-empty directory is on
 the class path, so the conf directory (``SPARK_CONF_DIR``, default
 ``$SPARK_HOME/conf``) is pointed at an empty directory beside the archive
 when it holds nothing but ``*.template`` files, which Spark never reads;
 when it holds real files, or a Hadoop/YARN conf directory or extra class
 path is set, the session starts without an archive. So does one whose
-cache directory cannot be written. ``-Xlog:cds*=off`` keeps the JVM's CDS
-warnings off stdout. To clear the archive, delete the directory.
+cache directory cannot be written. ``-Xlog:cds*=off`` keeps any CDS
+warning off stdout, where the CLIs print their one JSON line (JDK 17 logs
+a rejected archive at info level, so none is expected there). To clear
+the archive, delete the directory.
 """
 
 from __future__ import annotations
@@ -46,7 +53,6 @@ from __future__ import annotations
 import atexit
 import hashlib
 import os
-import re
 import shutil
 import subprocess
 
@@ -73,7 +79,8 @@ def get_spark(
     master: str | None = None,
     rocksdb_state: bool = False,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(min(32, len(os.sched_getaffinity(0))))
+    affinity = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(min(32, affinity or 1))
     master = master or f"local[{cpus}]"
     # Pin BLAS to one thread per Python worker: N parallel Arrow-batched
     # tasks each spawning an ncores-thread OpenBLAS matmul oversubscribes
@@ -128,7 +135,8 @@ def get_spark(
 
 def create(builder: SparkSession.Builder, driver_memory: str) -> SparkSession:
     """``builder.getOrCreate()`` with a ``driver_memory`` heap; a new driver
-    JVM starts from the class-data-sharing archive, or dumps it on a miss.
+    JVM starts from the class-data-sharing archive, or records the classes
+    it loads so that the archive can be built after it exits.
 
     The flags go in through ``spark.driver.defaultJavaOptions``, so a
     user's ``spark.driver.extraJavaOptions`` is left alone. A session in an
@@ -141,38 +149,39 @@ def create(builder: SparkSession.Builder, driver_memory: str) -> SparkSession:
     if cds is not None:
         builder = builder.config("spark.driver.defaultJavaOptions", cds[0])
     spark = builder.getOrCreate()
-    if cds is not None and cds[1] is not None:
-        proc = getattr(SparkContext._gateway, "proc", None)
-        if proc is not None:
-            atexit.register(_publish, proc, *cds[1], os.getpid())
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if cds is not None and cds[1] is not None and proc is not None:
+        # the dump runs the session JVM's own java, options and class path;
+        # one joined string, as iterating a py4j list costs 0.5 s
+        lang = spark._jvm.java.lang
+        options = lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+        java = [os.path.join(lang.System.getProperty("java.home"), "bin", "java"),
+                *(o for o in lang.String.join("\n", options).split("\n")
+                  if not o.startswith(("-XX:DumpLoadedClassList=", "-Xlog:"))),
+                "-cp", lang.System.getProperty("java.class.path")]
+        atexit.register(_publish, proc, java, *cds[1], os.getpid())
     return spark
-
-
-# JDK 17 on x86_64 keeps compressed oops up to -Xmx32736m and drops them
-# from -Xmx32744m; the two regimes need different archives.
-_COOPS_MAX_HEAP = (32 << 30) - (32 << 20)
-_UNITS = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}
 
 
 def archive_key(driver_memory: str) -> str | None:
     """Digest naming the archive a driver JVM with this heap can map: the
-    JDK, the heap regime and the jar list. None when one is unreadable."""
+    JDK, the heap and the jars, down to the modification times the JVM
+    checks. None when one is unreadable."""
     from pyspark.find_spark_home import _find_spark_home
 
-    m = re.fullmatch(r"(\d+)([kmgt]?)", driver_memory.strip().lower())
     java = os.environ.get("JAVA_HOME") or (
         os.path.dirname(os.path.dirname(os.path.realpath(shutil.which("java") or ""))))
-    jars = os.path.join(_find_spark_home(), "jars")
+    jars = os.path.realpath(os.path.join(_find_spark_home(), "jars"))
     try:
         with open(os.path.join(java, "release"), "rb") as f:
             release = f.read()
-        listing = sorted((e.name, e.stat().st_size) for e in os.scandir(jars))
+        listing = sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(jars))
     except OSError:
         return None
-    if m is None or not listing:
+    if not listing:
         return None
-    coops = int(m[1]) << _UNITS[m[2]] <= _COOPS_MAX_HEAP
-    digest = hashlib.sha256(repr((os.path.realpath(java), release, coops, listing)).encode())
+    heap = driver_memory.strip().lower()
+    digest = hashlib.sha256(repr((os.path.realpath(java), release, heap, jars, listing)).encode())
     return digest.hexdigest()[:20]
 
 
@@ -183,10 +192,10 @@ def _cache_dir() -> str:
     return os.path.join(base, "steampipe_plugin_terraform_spark", "jvm")
 
 
-def _cds_flags(driver_memory: str) -> tuple[str, tuple[str, str] | None] | None:
-    """(java options, (dump path, archive path) on a miss) for a new driver
-    JVM, pointing ``SPARK_CONF_DIR`` at the empty conf directory; None when
-    the JVM must start without an archive."""
+def _cds_flags(driver_memory: str) -> tuple[str, tuple[str, str, str] | None] | None:
+    """(java options, (class list, dump path, archive path) on a miss) for
+    a new driver JVM, pointing ``SPARK_CONF_DIR`` at the empty conf
+    directory; None when the JVM must start without an archive."""
     from pyspark.find_spark_home import _find_spark_home
 
     if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
@@ -208,19 +217,22 @@ def _cds_flags(driver_memory: str) -> tuple[str, tuple[str, str] | None] | None:
         return None
     archive = os.path.join(cache, f"{key}.jsa")
     if os.path.isfile(archive):
+        if os.path.getsize(archive) == 0:
+            return None  # its dump failed: do not pay for it again
         flag, dump = f"-XX:SharedArchiveFile={_quote(archive)}", None
     elif os.access(cache, os.W_OK):
         for name in os.listdir(cache):
             pid = name.rsplit(".", 2)[-2] if name.endswith(".part") else ""
             if pid and not (pid.isdigit() and _alive(int(pid))):
                 _unlink(os.path.join(cache, name))
-        part = f"{archive}.{os.getpid()}.part"
-        flag, dump = f"-XX:ArchiveClassesAtExit={_quote(part)}", (part, archive)
+        classes = os.path.join(cache, f"{key}.classes.{os.getpid()}.part")
+        dump = (classes, f"{archive}.{os.getpid()}.part", archive)
+        flag = f"-XX:DumpLoadedClassList={_quote(classes)}"
     else:
         return None
     os.environ["SPARK_CONF_DIR"] = empty_conf
-    # CDS warnings (signed jars skipped at dump, a rejected archive) go to
-    # stdout by default, where the CLIs print their one JSON line
+    # CDS warnings go to stdout by default, where the CLIs print their one
+    # JSON line
     return f"{flag} -Xlog:cds*=off", dump
 
 
@@ -247,18 +259,36 @@ def _unlink(path: str) -> None:
         pass
 
 
-def _publish(proc: subprocess.Popen, part: str, archive: str, owner: int) -> None:
+def _publish(proc: subprocess.Popen, java: list[str], classes: str, part: str,
+             archive: str, owner: int) -> None:
     """At interpreter exit: end the JVM (it exits when its stdin closes),
-    wait while it dumps, then publish the dump under the archive's name."""
+    build the archive from the classes it loaded with a static dump, then
+    publish it under the archive's name. A dump that fails publishes an
+    empty file, which later sessions take as "start without an archive"."""
+    from pyspark import SparkContext
+
     if os.getpid() != owner:
         return  # a forked child inherited the hook
     try:
+        sc = SparkContext._active_spark_context
+        if sc is not None and getattr(SparkContext._gateway, "proc", None) is proc:
+            # stop it first: its accumulator server would print the JVM's
+            # exit as an EOFError traceback
+            sc.stop()
         if proc.stdin:
             proc.stdin.close()
         proc.wait(timeout=120)
+        if proc.returncode == 0 and os.path.isfile(classes):
+            done = subprocess.run(
+                [java[0], "-Xshare:dump", f"-XX:SharedClassListFile={classes}",
+                 f"-XX:SharedArchiveFile={part}", *java[1:]],
+                stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+                stderr=subprocess.DEVNULL, timeout=900)
+            if done.returncode != 0 or not os.path.isfile(part):
+                open(part, "wb").close()
+            os.replace(part, archive)
     except (OSError, subprocess.TimeoutExpired):
-        return  # the next miss removes the .part of a dead process
-    if proc.returncode == 0 and os.path.isfile(part):
-        os.replace(part, archive)
-    else:
+        pass  # the next miss records the classes again
+    finally:
+        _unlink(classes)
         _unlink(part)

@@ -1,8 +1,9 @@
 """The driver JVM's class-data-sharing archive, end to end.
 
 Subprocess sessions run with XDG_CACHE_HOME in a temporary directory: the
-first dumps the archive and publishes it at exit, the second maps it. A
-JVM line on stdout would break the one-JSON-line contract of the CLIs.
+first records the classes it loads and builds the archive from them after
+its JVM exits, the second maps it. A JVM line on stdout would break the
+one-JSON-line contract of the CLIs.
 """
 
 import glob
@@ -23,7 +24,9 @@ SCRIPT = """
 import json
 from steampipe_plugin_terraform_spark import get_spark
 spark = get_spark("session-test")
-print(json.dumps({"master": spark.sparkContext.master, "rows": spark.range(10).count()}))
+# a Python task: its accumulator updates open the JVM's connection back
+rows = spark.sparkContext.parallelize(range(10), 2).count()
+print(json.dumps({"master": spark.sparkContext.master, "rows": rows}))
 """
 
 
@@ -36,6 +39,7 @@ def _session(cache: str, logs: str | None = None, memory: str = "4g") -> dict:
     out = subprocess.run([sys.executable, "-c", SCRIPT], cwd=ROOT, env=env,
                          capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-3000:]
+    assert "Traceback" not in out.stderr, out.stderr[-3000:]
     lines = out.stdout.splitlines()
     assert len(lines) == 1, f"JVM output on stdout: {lines[:5]}"
     return json.loads(lines[0])
@@ -64,7 +68,7 @@ def cache():
 
 @pytest.fixture(scope="module")
 def warm():
-    """A cache after one dumping session, and the two sessions' results.
+    """A cache after one recording session, and the two sessions' results.
     The space in its path must survive the launcher's option parsing."""
     cache = tempfile.mkdtemp(prefix="xdg cache-")
     logs = tempfile.mkdtemp(prefix="class-load-")  # JAVA_TOOL_OPTIONS splits at spaces
@@ -86,7 +90,7 @@ def test_first_session_publishes_one_archive(warm):
 
 def test_second_session_maps_the_archive(warm):
     _, logs, _, results = warm
-    assert _spark_session_source(logs) == "shared objects file (top)"
+    assert _spark_session_source(logs) == "shared objects file"
     assert all(r["rows"] == 10 for r in results)
 
 
@@ -103,15 +107,15 @@ def test_bad_archive_still_starts_with_clean_stdout(warm, cache, kind):
         with open(os.path.join(_jvm_dir(cache), f"{session.archive_key(memory)}.jsa"), "wb") as f:
             f.write(b"\0" * (1 << 20))
     else:
-        # dumped with compressed oops, mapped by a heap that has none
+        # dumped with compressed oops, mapped by a heap too large for them
         memory = "48g"
         shutil.copy(os.path.join(_jvm_dir(warm[0]), f"{session.archive_key('4g')}.jsa"),
                     os.path.join(_jvm_dir(cache), f"{session.archive_key(memory)}.jsa"))
     assert _session(cache, memory=memory)["rows"] == 10
 
 
-def test_key_follows_heap_regime_and_jars(tmp_path, monkeypatch):
-    assert session.archive_key("4g") == session.archive_key("4096m") == session.archive_key("31g")
+def test_key_follows_heap_and_jars(tmp_path, monkeypatch):
+    assert session.archive_key("4g") == session.archive_key(" 4G ")
     assert session.archive_key("4g") != session.archive_key("48g")
     jars = tmp_path / "jars"
     jars.mkdir()
@@ -122,7 +126,10 @@ def test_key_follows_heap_regime_and_jars(tmp_path, monkeypatch):
     keys.append(session.archive_key("4g"))
     (jars / "a.jar").write_bytes(b"x" * 11)
     keys.append(session.archive_key("4g"))
-    assert None not in keys and len(set(keys)) == 3
+    # same size, new mtime (a reinstall): the JVM would reject the archive
+    os.utime(jars / "a.jar", ns=(1, 1))
+    keys.append(session.archive_key("4g"))
+    assert None not in keys and len(set(keys)) == 4
 
 
 def test_conf_directory_rule(tmp_path, monkeypatch):
@@ -132,7 +139,7 @@ def test_conf_directory_rule(tmp_path, monkeypatch):
     (conf / "spark-defaults.conf.template").write_text("")
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
     flags = session._cds_flags("4g")
-    assert flags is not None and "-XX:ArchiveClassesAtExit=" in flags[0]
+    assert flags is not None and "-XX:DumpLoadedClassList=" in flags[0]
     # templates only: the class path gets the empty directory instead
     assert os.environ["SPARK_CONF_DIR"] == os.path.join(_jvm_dir(str(tmp_path / "xdg")), "conf")
     (conf / "spark-defaults.conf").write_text("spark.foo bar\n")
@@ -143,12 +150,32 @@ def test_conf_directory_rule(tmp_path, monkeypatch):
 
 def test_miss_removes_part_files_of_dead_processes(tmp_path, monkeypatch):
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
-    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    conf = tmp_path / "templates"
+    conf.mkdir()
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
     jvm = tmp_path / "steampipe_plugin_terraform_spark" / "jvm"
     jvm.mkdir(parents=True)
-    dead, live = jvm / "k.jsa.999999999.part", jvm / f"k.jsa.{os.getpid()}.part"
+    dead, live = jvm / "k.jsa.999999999.part", jvm / f"k.classes.{os.getpid()}.part"
     dead.write_bytes(b"x")
     live.write_bytes(b"x")
     flags = session._cds_flags("4g")
-    assert flags is not None and "-XX:ArchiveClassesAtExit=" in flags[0]
+    assert flags is not None and "-XX:DumpLoadedClassList=" in flags[0]
     assert not dead.exists() and live.exists()
+
+
+def test_failed_dump_is_not_retried(tmp_path, monkeypatch):
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    conf = tmp_path / "templates"
+    conf.mkdir()
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    _, (classes, part, archive) = session._cds_flags("4g")
+    with open(classes, "w") as f:
+        f.write("java/lang/Object\n")
+    jvm = subprocess.Popen([sys.executable, "-c", "import sys; sys.stdin.read()"],
+                           stdin=subprocess.PIPE)
+    # a "java" that fails the dump
+    session._publish(jvm, [sys.executable, "-c", "raise SystemExit(1)"],
+                     classes, part, archive, os.getpid())
+    assert os.path.getsize(archive) == 0
+    assert not os.path.exists(classes) and not os.path.exists(part)
+    assert session._cds_flags("4g") is None
