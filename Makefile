@@ -1,11 +1,18 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog perf-cold
+.PHONY: test test-ids test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog perf-cold
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# Sorted Tier-1 test ids, one a line. Removed ids between two commits are
+# `comm -23 <(parent's output) <(change's output)`. Collection leaves an
+# empty .benchmarks/ behind; rmdir removes it only while it is empty.
+test-ids:
+	@python -m pytest tests/ --collect-only -q -p no:cacheprovider | grep '::' | sort; \
+	rmdir .benchmarks 2>/dev/null || true
 
 # Tier-1 must pass in any test order: run the session-state tests before the
 # plan pins, then after them, so cached state can never change a pin.

@@ -161,8 +161,6 @@ EXTENDED = [
     "stream_hourly_topk_types",
     "docs_bpe_merge_pairs",
     "emb_pq_recall",
-    "docs_minhash_estimate_error",
-    "stream_bitmap_distinct",
     "tf_undeclared_references",
     "emb_centroid_drift",
     "tf_unused_data_sources",
@@ -170,8 +168,6 @@ EXTENDED = [
     "q_supplier_abc_classes",
     "dedup_incremental_batch",
     "emb_sign_hamming_recall",
-    "docs_simpson_diversity",
-    "stream_incremental_dedup",
     "tf_required_providers_audit",
     "tf_state_lineage_audit",
     "tf_backend_audit",
@@ -185,38 +181,21 @@ EXTENDED = [
     "emb_ann_recall_curve",
     "docs_dedup_rate_report",
     "tf_moved_blocks_audit",
-    "stream_benford_monitor",
-    "docs_tfidf_keywords",
     "tf_provider_alias_orphans",
     "emb_ivf_delete_maintenance",
-    "stream_cdc_last_value",
     "emb_knn_label_vote",
     "tf_count_foreach_expansion",
-    "docs_zipf_slope",
-    "docs_source_drift_chi2",
-    "stream_zipf_monitor",
     "emb_cov_top_eigen",
-    "stream_source_drift_monitor",
     "tf_lifecycle_audit",
     "tf_legacy_interpolation_audit",
     "q_lineitem_mannwhitney_u",
     "q_events_overdispersion",
     "q_events_markov_stationary",
-    "stream_overdispersion_monitor",
-    "docs_vocab_growth",
     "emb_ivf_compaction",
-    "docs_hapax_legomena",
     "emb_sign_bit_balance",
-    "docs_code_detect",
     "tf_resource_naming_convention",
-    "stream_hapax_monitor",
     "emb_norm_buckets",
-    "docs_code_mix",
-    "docs_ari_readability",
     "tf_variable_type_mismatch",
-    "stream_code_mix_monitor",
-    "stream_norm_buckets_monitor",
-    "stream_simpson_monitor",
 ]
 
 # heavy flagships get 2 timed passes (spread = the round-5 variance

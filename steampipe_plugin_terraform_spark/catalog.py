@@ -4989,9 +4989,9 @@ _SHINGLE_CTE = """
 # The minhash signature pipeline CTEs (8 md5 min-hashes -> ordered
 # signature -> 4 band hashes[, -> distinct banding candidates]) shared
 # VERBATIM by every minhash-family oracle (dedup_minhash_lsh, the recall
-# and estimator self-evals, clusters/linkage/golden-record, the
-# leakage-safe split) - one definition so a change to num_hashes, band
-# layout, or seed format cannot silently fork the replayed pipelines.
+# self-eval, clusters/linkage/golden-record, the leakage-safe split) -
+# one definition so a change to num_hashes, band layout, or seed format
+# cannot silently fork the replayed pipelines.
 _MINHASH_SIG_CTE = """mh AS (SELECT doc_id, i, min(md5(i::VARCHAR || ':' || s)) h
            FROM sh, unnest(range(0, 8)) q(i) GROUP BY doc_id, i),
     sig AS (SELECT doc_id, array_agg(h ORDER BY i) sig FROM mh GROUP BY doc_id),
@@ -7207,20 +7207,6 @@ def stream_hourly_append_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sink_and_checkpoint(
-    spark: SparkSession, sf_dir: str, kind: str, data: str
-) -> tuple[str, str]:
-    """(sink dir, checkpoint dir) of a stream entry, one pair per session
-    and corpus: re-draining on the same checkpoint is a no-op over the
-    committed offsets (the exactly-once restart contract)."""
-
-    def build() -> tuple[str, str]:
-        root = state.temp_root(kind + "_")
-        return f"{root}/{data}", f"{root}/ckpt"
-
-    return state.get(spark, kind, state.corpus_digest(sf_dir), build)
-
-
 @query(
     "stream_foreachbatch_sink",
     oracle="""
@@ -7241,7 +7227,11 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the direct aggregate (the oracle)."""
     from .streaming.events import read_events_stream
 
-    sink, ckpt = _sink_and_checkpoint(spark, sf_dir, "febatch_sink", "data")
+    def build() -> tuple[str, str]:
+        root = state.temp_root("febatch_sink_")
+        return f"{root}/data", f"{root}/ckpt"
+
+    sink, ckpt = state.get(spark, "febatch_sink", state.corpus_digest(sf_dir), build)
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
@@ -8982,12 +8972,14 @@ def tf_untagged_resources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGING AREA: drafts below are FULL entries (Spark implementation +
-# DuckDB oracle) registered into STAGED_QUERIES/STAGED_ORACLES instead of
-# QUERIES/ORACLES, so they stay off the driver surface while
-# tests/test_staged_entries.py parity-runs them (sf0.001, and sf0.01 under
-# SPARK_GRAFT_TEST_SF_DIR), tests/test_plan_shapes.py pins their plans and
-# the anti-pattern scan covers them. No new drafts are added. Promotion =
+# STAGING AREA: 15 drafts below — 6 `tf_*` audits and 9 `emb_*`
+# retrieval drafts, the `emb_*` ones due for deletion (ROADMAP item 4) —
+# are FULL entries (Spark implementation + DuckDB oracle) registered into
+# STAGED_QUERIES/STAGED_ORACLES instead of QUERIES/ORACLES, so they stay
+# off the driver surface while tests/test_staged_entries.py parity-runs
+# them (sf0.001, and sf0.01 under SPARK_GRAFT_TEST_SF_DIR),
+# tests/test_plan_shapes.py pins their plans and the anti-pattern scan
+# covers them. No new drafts are added. Promotion =
 # change ``@staged_query`` to ``@query``, add the name to the FRONT of
 # ``__spark_entry__._VALIDATE_FIRST`` (enforced by tests/test_rotation)
 # and move its docs/OPERATORS.md row into the main table.
@@ -10810,139 +10802,6 @@ def emb_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_EST_MATCHES = " + ".join(
-    f"(CASE WHEN sa.sig[{i + 1}] = sb.sig[{i + 1}] THEN 1 ELSE 0 END)"
-    for i in range(8)
-)
-
-
-@staged_query(
-    "docs_minhash_estimate_error",
-    # full replay of the minhash pipeline (the dedup_minhash_lsh CTEs)
-    # PLUS the exact-Jaccard ground truth; candidates that share zero
-    # shingles stay in via the LEFT join (a banding false positive with
-    # exact J = 0 is precisely what the error column must surface)
-    oracle=_SHINGLE_CTE
-    + f""",
-    """ + _MINHASH_CAND_CTE + f""",
-    est AS (SELECT c.id_a, c.id_b,
-                   ({_MINHASH_EST_MATCHES}) * 1250 AS est_x1e4
-            FROM cand c JOIN sig sa ON sa.doc_id = c.id_a
-                        JOIN sig sb ON sb.doc_id = c.id_b),
-    j AS (SELECT e.id_a, e.id_b, e.est_x1e4,
-                 CAST(floor(COALESCE(s.c, 0) * 1.0
-                            / (x.n + y.n - COALESCE(s.c, 0)) * 10000 + 0.5)
-                      AS BIGINT) AS jaccard_x1e4
-          FROM est e
-          LEFT JOIN shared s ON s.id_a = e.id_a AND s.id_b = e.id_b
-          JOIN sz x ON x.doc_id = e.id_a JOIN sz y ON y.doc_id = e.id_b)
-    SELECT id_a, id_b, CAST(est_x1e4 AS BIGINT) AS est_x1e4, jaccard_x1e4,
-           CAST(abs(est_x1e4 - jaccard_x1e4) AS BIGINT) AS err_x1e4
-    FROM j
-    """,
-)
-def docs_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash estimator accuracy self-eval — the measurement that sizes
-    ``num_hashes`` before trusting an LSH deployment: for every LSH
-    candidate pair, the sketch's Jaccard ESTIMATE (matching signature
-    components / 8, in basis points — each component matches with
-    probability J, so the mean error shrinks as 1/√num_hashes) next to
-    the EXACT shingle Jaccard and the absolute error. Completes the
-    measured-quality family (`dedup_lsh_recall` measures what banding
-    MISSES; this measures what the estimator GETS WRONG on what banding
-    found — including banding false positives with exact J = 0, kept by
-    the left join). 8 hashes → estimates quantized to multiples of 1250.
-
-    Scale: candidates come from the banded LSH join (never all pairs);
-    the estimate is a zip-compare of two 8-element arrays per candidate;
-    the exact side reuses the capped array-intersect verify device.
-    Everything is integer-snapped — the one IEEE division is the exact
-    Jaccard's, snapped identically on both engines."""
-    docs = _t(spark, sf_dir, "documents")
-    # r16: pairs and sig come from ONE pipeline over the shared posting
-    # checkpoint — the separate minhash_signatures call re-tokenized the
-    # corpus a second time per invocation (plan: 16 scans → 4)
-    pairs, sig = dedup.minhash_lsh_pairs_with_sig(docs, threshold=0.0)
-    # merge-hinted like every minhash-family join: the signature table is
-    # O(N) rows over a heavy explode+groupBy subtree — a small-SF
-    # broadcast would DUPLICATE that subtree into the build side (the
-    # round-6 minhash adjudication), while identical exchanges let the
-    # reuse rule materialize it once for both sides
-    sig = sig.hint("merge")
-    wide = pairs.join(
-        sig.withColumnRenamed("id", "id_a").withColumnRenamed("sig", "sa"),
-        "id_a",
-    ).join(
-        sig.withColumnRenamed("id", "id_b").withColumnRenamed("sig", "sb"),
-        "id_b",
-    )
-    return wide.select(
-        "id_a",
-        "id_b",
-        F.expr(
-            "CAST(size(filter(zip_with(sa, sb, (x, y) -> x = y), v -> v))"
-            " * 1250 AS BIGINT)"
-        ).alias("est_x1e4"),
-        F.expr("CAST(floor(jaccard * 10000 + 0.5) AS BIGINT)").alias(
-            "jaccard_x1e4"
-        ),
-    ).withColumn(
-        "err_x1e4", F.expr("CAST(abs(est_x1e4 - jaccard_x1e4) AS BIGINT)")
-    )
-
-
-@staged_query(
-    "stream_bitmap_distinct",
-    # the naive-definition oracle again: the streaming drain must land on
-    # the plain batch COUNT(DISTINCT) — micro-batch OR-merge included
-    oracle="""
-    SELECT event_type,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(count(DISTINCT user_id // 62) AS BIGINT) AS n_words
-    FROM events GROUP BY event_type
-    """,
-)
-def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT distinct users per event type computed AS A STREAM — the
-    streaming leg of the bitmap device (`q_events_bitmap_distinct_users`
-    is the batch leg, `sketch.bitmap_distinct` the operator): the
-    running state is the (type, word_idx) → bit_or word table, so each
-    micro-batch's words OR-merge into state exactly like the batch
-    partial aggregation merges across partitions — the same
-    state-IS-the-sketch story as stream_quantile_logsketch and
-    stream_countmin_sketch, except the answer is EXACT. State is
-    bounded by #types × ceil(max_id/62) 8-byte words regardless of
-    stream length (no watermark needed — state cannot grow past the id
-    space). Complete-mode drain; the per-type count is answered
-    batch-side from the drained word table, which is also what a
-    dashboard store would merge across restarts by re-ORing."""
-    from .streaming.events import read_events_stream
-
-    words = (
-        read_events_stream(spark, sf_dir)
-        .groupBy(
-            F.col("event_type"),
-            F.expr("user_id DIV 62").alias("word_idx"),
-        )
-        .agg(
-            F.expr(
-                "bit_or(shiftleft(CAST(1 AS BIGINT),"
-                " CAST(user_id % 62 AS INT)))"
-            ).alias("word")
-        )
-    )
-    sink = _drain_memory_sink(
-        spark, words, "__stream_bitmap_distinct", "complete",
-        source_path=f"{sf_dir}/events.parquet",
-    )
-    return sink.groupBy("event_type").agg(
-        F.expr("CAST(coalesce(sum(bit_count(word)), 0) AS BIGINT)").alias(
-            "n_users"
-        ),
-        F.count("word").cast("long").alias("n_words"),
-    )
-
-
 _MODULE_TOKEN_RE = _TOKEN_LB + "module\\\\.([A-Za-z_][A-Za-z0-9_-]*)"
 
 
@@ -11888,7 +11747,7 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the oracle IS the batch funnel SQL, shared verbatim — the driver then
 # checks the stream≡batch identity itself (the strongest oracle form for
-# a streaming leg, same device as stream_bitmap_distinct / scd2_merge)
+# a streaming leg, same device as scd2_merge)
 @query("stream_docs_pipeline_funnel", oracle=_PIPELINE_FUNNEL_SQL)
 def stream_docs_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming leg of docs_pipeline_funnel: documents ARRIVE (crawl
@@ -12153,159 +12012,6 @@ def tf_moved_blocks_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# floor(log10(1 + 1/d)·10⁶) for d = 1..9 — fixed public math, literal on
-# BOTH sides so no cross-engine log evaluation ever happens
-_BENFORD_E6 = [301029, 176091, 124938, 96910, 79181, 66946, 57991, 51152, 45757]
-_BENFORD_CASE = "CASE digit " + " ".join(
-    f"WHEN {d} THEN {v}" for d, v in enumerate(_BENFORD_E6, start=1)
-) + " END"
-
-
-@staged_query(
-    "stream_benford_monitor",
-    # the watermark-free running-state leg: the oracle replays the SAME
-    # integer Benford report over the whole events table — stream≡batch
-    # identity, like stream_bitmap_distinct vs its batch leg
-    oracle=f"""
-    WITH c AS (SELECT event_type,
-                      CAST(substring(CAST(CAST(floor(value * 100 + 0.5)
-                             AS BIGINT) AS VARCHAR), 1, 1) AS INT) digit
-               FROM events),
-    d AS (SELECT event_type, digit, CAST(count(*) AS BIGINT) n
-          FROM c GROUP BY 1, 2),
-    t AS (SELECT event_type, digit, n,
-                 CAST(sum(n) OVER (PARTITION BY event_type) AS BIGINT) total
-          FROM d)
-    SELECT event_type, digit, n,
-           CAST((n::HUGEINT * 1000000) // total
-                - {_BENFORD_CASE} AS BIGINT) AS dev_e6
-    FROM t
-    """,
-)
-def stream_benford_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford drift monitor AS A STREAM: a fraud/quality dashboard
-    keeps a running first-digit histogram per event type and alarms
-    when the deviation drifts. The running state is the (type, digit) count
-    table — ≤ #types × 9 longs regardless of stream length, so no
-    watermark is needed (state cannot grow past the digit space); each
-    micro-batch's counts ADD into state exactly like batch partial
-    counts merge across partitions. Complete-mode drain; the share and
-    deviation columns are answered batch-side from the drained counts
-    on the same integer grid as the batch leg.
-
-    Scale: keyed streaming agg (no single-partition stage); the drained
-    frame the report runs over is digit-space-sized. Value snap +
-    leading digit are per-row JVM expressions in the stream."""
-    from .streaming.events import read_events_stream
-
-    counts = (
-        read_events_stream(spark, sf_dir)
-        .select(
-            "event_type",
-            F.expr(
-                "CAST(substring(CAST(CAST(floor(value * 100 + 0.5)"
-                " AS BIGINT) AS STRING), 1, 1) AS INT)"
-            ).alias("digit"),
-        )
-        .groupBy("event_type", "digit")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    sink = _drain_memory_sink(
-        spark, counts, "__stream_benford_monitor", "complete",
-        source_path=f"{sf_dir}/events.parquet",
-    )
-    t = sink.withColumn(
-        "total", F.sum("n").over(Window.partitionBy("event_type"))
-    )
-    return t.select(
-        "event_type",
-        "digit",
-        "n",
-        F.expr(
-            "CAST(CAST(n AS DECIMAL(38,0)) * 1000000 DIV total"
-            f" - {_BENFORD_CASE} AS BIGINT)"
-        ).alias("dev_e6"),
-    )
-
-
-@staged_query(
-    "docs_tfidf_keywords",
-    # score_e6 = tf·10⁶ DIV df on positive ints (truncation ≡ floor);
-    # the rank is fully deterministic — (score desc, term asc) is a
-    # total order because (doc, term) is the tf grain
-    oracle="""
-    WITH tok AS (SELECT doc_id, lower(t.w) term
-                 FROM documents, unnest(string_split(text, ' ')) t(w)
-                 WHERE regexp_matches(t.w, '^[A-Za-z0-9]+$')),
-    tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) tf
-           FROM tok GROUP BY 1, 2),
-    dfreq AS (SELECT term, CAST(count(*) AS BIGINT) df FROM tf GROUP BY 1),
-    sc AS (SELECT f.doc_id, f.term, f.tf, d.df,
-                  CAST((f.tf::HUGEINT * 1000000) // d.df AS BIGINT) score_e6
-           FROM tf f JOIN dfreq d USING (term)),
-    r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-                      ORDER BY score_e6 DESC, term) rnk FROM sc)
-    SELECT doc_id, term, tf, df, score_e6, CAST(rnk AS BIGINT) AS rnk
-    FROM r WHERE rnk <= 3
-    """,
-)
-def docs_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document keyword extraction: top-3 terms by tf/df weighting —
-    the document-side application of the TF-IDF device the pairwise
-    cosine entry uses for dedup, here producing the per-doc keyword
-    lists a training-data pipeline feeds into topic routing and prompt
-    construction. Terms are space-split words filtered to [A-Za-z0-9]+
-    BEFORE lowercasing (ASCII-only case mapping is byte-identical on
-    both engines; lowering first would ride Unicode case rules — the
-    Kelvin-sign class of divergence), the score is
-    tf·10⁶ DIV df on the integer grid (linear inverse-df — no log, so
-    no cross-engine float), and the per-doc top-3 breaks ties by term
-    ascending (a total order: (doc, term) is the tf grain).
-
-    Scale: ONE corpus scan — the explode→(doc, term) partial agg is the
-    only corpus-sized shuffle, and df comes from a term-keyed COUNT
-    window OVER THE TF FRAME rather than a self-join (a groupBy-then-
-    join-back would make Catalyst re-scan and re-tokenize the corpus a
-    second time — measured in the plan; the window is one term-keyed
-    exchange of the already-aggregated frame and no join at all). The
-    per-doc top-3 then prunes via WindowGroupLimit before its shuffle."""
-    tok = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.explode(F.split("text", " ")).alias("w"),
-        )
-        # ASCII filter BEFORE lowercasing: Unicode case mapping is an
-        # engine-variance surface (e.g. Kelvin sign K -> k only under
-        # full Unicode rules); lowercase of an [A-Za-z0-9]+ token is
-        # byte-exact on both engines
-        .filter(F.col("w").rlike("^[A-Za-z0-9]+$"))
-        .select("doc_id", F.lower("w").alias("term"))
-    )
-    tf = tok.groupBy("doc_id", "term").agg(
-        F.count("*").cast("long").alias("tf")
-    )
-    sc = tf.withColumn(
-        "df", F.count("*").over(Window.partitionBy("term")).cast("long")
-    ).select(
-        "doc_id",
-        "term",
-        "tf",
-        "df",
-        F.expr(
-            "CAST(CAST(tf AS DECIMAL(38,0)) * 1000000 DIV df AS BIGINT)"
-        ).alias("score_e6"),
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score_e6").desc(), F.col("term").asc()
-    )
-    return (
-        sc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 3)
-        .select("doc_id", "term", "tf", "df", "score_e6", "rnk")
-    )
-
-
 @staged_query(
     "tf_provider_alias_orphans",
     # golden rows from the dedicated corpus, one resource per routing
@@ -12458,95 +12164,6 @@ def emb_ivf_delete_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = loaded.filter(F.col("vec_id") % 8 != 3)
     return similarity.ivf_topk(
         queries, survivors, cents, k=5, nprobe=8, static_prune=True
-    )
-
-
-@staged_query(
-    "stream_cdc_last_value",
-    # the serving-table oracle: last event per user under the (ts,
-    # event_id) total order — what any number of merge steps must
-    # converge to (last-write-wins is associative/idempotent, so batch
-    # boundaries cannot show through)
-    oracle="""
-    SELECT user_id, ts AS last_ts, event_type AS last_type,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS last_value_cents
-    FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                    ORDER BY ts DESC, event_id DESC) rn FROM events)
-    WHERE rn = 1
-    """,
-)
-def stream_cdc_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC-style LAST-WRITE-WINS upsert into a keyed serving table — the
-    foreachBatch MERGE pattern (`stream_foreachbatch_sink` pins the
-    idempotent-append sink; this is the other production foreachBatch
-    shape: maintain a per-key latest-state table a dashboard reads).
-    Each micro-batch merges into the running state under the (ts,
-    event_id) total order; last-write-wins is associative and
-    idempotent, so replayed batches and restarts converge to the same
-    table — which is exactly the batch row_number()=1 oracle.
-
-    Scale: state is |users| rows regardless of stream volume. The
-    portable-parquet merge here rewrites the state per batch (each
-    version written to its own batch-stamped dir — idempotent under
-    replay like the sink entry); a production engine swaps the rewrite
-    for a transactional MERGE INTO (Delta/Iceberg) with the identical
-    merge predicate — the semantics this entry pins are engine-portable,
-    the rewrite is not the 100 TB design and says so."""
-    from .streaming.events import read_events_stream
-
-    state_root, ckpt = _sink_and_checkpoint(spark, sf_dir, "cdc_upsert", "state")
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        sess = batch.sparkSession
-        cur = batch.select(
-            "user_id", "ts", "event_type", "event_id",
-            F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias(
-                "last_value_cents"
-            ),
-        )
-        done = sorted(
-            int(d.split("=")[1])
-            for d in (os.listdir(state_root) if os.path.isdir(state_root) else [])
-            if d.startswith("v=") and int(d.split("=")[1]) < batch_id
-        )
-        if done:
-            cur = sess.read.parquet(f"{state_root}/v={done[-1]}").unionByName(cur)
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            cur.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        # each batch's merged state lands in its OWN version dir —
-        # overwrite-idempotent under replay, never read+rewrite in place
-        latest.write.mode("overwrite").parquet(f"{state_root}/v={batch_id}")
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stream_cdc_last_value drain exceeded 600s")
-    import os
-
-    latest = max(
-        int(d.split("=")[1])
-        for d in os.listdir(state_root)
-        if d.startswith("v=")
-    )
-    return spark.read.parquet(f"{state_root}/v={latest}").select(
-        "user_id",
-        F.col("ts").alias("last_ts"),
-        F.col("event_type").alias("last_type"),
-        "last_value_cents",
     )
 
 
@@ -12997,9 +12614,7 @@ def q_lineitem_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 # spine LENGTH, never a gap-fill: D·10³ = (H·Σn² − (Σn)²)·10³ DIV
 # (H·Σn), positive-integer floor both sides. Hour index = epoch-µs DIV
 # 3600000000 (integer floor; never epoch/3.6e9 CAST, which ROUNDS in
-# DuckDB and truncates in Spark — the int-CAST parity trap). A module
-# constant because the streaming leg (`stream_overdispersion_monitor`)
-# uses it VERBATIM — the stream≡batch identity device.
+# DuckDB and truncates in Spark — the int-CAST parity trap).
 _OVERDISPERSION_SQL = """
     WITH hc AS (SELECT event_type,
                        epoch_us(ts) // 3600000000 AS h,
@@ -13028,10 +12643,8 @@ _OVERDISPERSION_SQL = """
 
 
 def _overdispersion_report(hc: DataFrame) -> DataFrame:
-    """Batch-side roll-up shared VERBATIM by `q_events_overdispersion`
-    and the streaming monitor's drained state — one definition so the
-    stream≡batch identity cannot fork: (type, hour, n) cells → spine
-    length → per-type integer dispersion + label bands.
+    """Roll-up of `q_events_overdispersion`: (type, hour, n) cells →
+    spine length → per-type integer dispersion + label bands.
 
     r16 (guide §2.4): the spine length was a second aggregation of the
     hc cells crossJoined back on — two evaluations of the cell subtree
@@ -13183,160 +12796,6 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         pi = nxt
     return spark.createDataFrame(
         sorted(pi.items()), "event_type string, pi_e6 long"
-    )
-
-
-@staged_query(
-    "stream_overdispersion_monitor",
-    # the stream≡batch identity: the oracle is the BATCH dispersion SQL
-    # verbatim — complete-mode (type, hour) count state OR-free
-    # ADD-merges across micro-batches exactly like batch partials, so
-    # the drained state must reproduce the batch report bit-for-bit
-    oracle=_OVERDISPERSION_SQL,
-)
-def stream_overdispersion_monitor(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Arrival-burstiness monitor AS A STREAM — the production form of
-    `q_events_overdispersion` (a rate-limiting/anomaly dashboard keeps
-    running per-hour arrival counts and alarms when the dispersion
-    index drifts): the running state is the (type, hour) count table;
-    each micro-batch's counts ADD into state exactly like batch partial
-    counts merge across partitions (complete-mode keyed agg, no
-    watermark — the state key space is the hour spine × types, growing
-    with WALL-CLOCK, never with event volume; a long-horizon deployment
-    ages closed hours out to a compacted table, same lifecycle as the
-    foreachBatch sink). The dispersion report runs batch-side over the
-    drained cells via the SAME `_overdispersion_report` the batch entry
-    uses — one definition, so stream and batch cannot fork.
-
-    Scale: keyed streaming agg (no single-partition stage); the drained
-    frame the report runs over is spine-sized. Hour index = epoch-µs
-    integer floor division in the streaming projection."""
-    from .streaming.events import read_events_stream
-
-    counts = (
-        read_events_stream(spark, sf_dir)
-        .select(
-            "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000"
-            ).alias("h"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    sink = _drain_memory_sink(
-        spark, counts, "__stream_overdispersion_monitor", "complete",
-        source_path=f"{sf_dir}/events.parquet",
-    )
-    return _overdispersion_report(sink)
-
-
-@staged_query(
-    "docs_vocab_growth",
-    # Heaps-law curve over TRIGRAM vocabulary (the unigram vocabulary of
-    # the synthetic corpus saturates in the first quarter — 31 words —
-    # so the trigram space is what actually exercises growth); cuts are
-    # VALUE-range quarters of the doc_id span (computable from min/max
-    # scalars — a rank-based cut would need a global row_number sort),
-    # with the exact doc count per cut reported alongside
-    oracle="""
-    WITH bounds AS (SELECT min(doc_id) lo, max(doc_id) hi FROM documents),
-    cuts AS (SELECT k AS qtr,
-                    lo + ((hi - lo + 1) * k) // 4 - 1 AS cut_id
-             FROM bounds, unnest(range(1, 5)) r(k)),
-    w AS (SELECT doc_id, string_split(text, ' ') ws FROM documents),
-    tok AS (SELECT lower(ws[i]) || ' ' || lower(ws[i+1]) || ' '
-                     || lower(ws[i+2]) term,
-                   min(doc_id) first_doc
-            FROM w, unnest(range(1, len(ws) - 1)) r(i)
-            WHERE regexp_matches(ws[i], '^[A-Za-z0-9]+$')
-              AND regexp_matches(ws[i+1], '^[A-Za-z0-9]+$')
-              AND regexp_matches(ws[i+2], '^[A-Za-z0-9]+$')
-            GROUP BY 1)
-    SELECT CAST(qtr AS BIGINT) qtr, CAST(cut_id AS BIGINT) cut_id,
-           (SELECT CAST(count(*) AS BIGINT) FROM documents d
-            WHERE d.doc_id <= cut_id) n_docs,
-           (SELECT CAST(count(*) AS BIGINT) FROM tok
-            WHERE first_doc <= cut_id) vocab_size
-    FROM cuts ORDER BY qtr
-    """,
-)
-def docs_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-growth (Heaps-law) curve — "is the corpus still
-    teaching the tokenizer new n-grams, or has it saturated?": distinct
-    trigram vocabulary after each quarter of the corpus, the
-    diminishing-returns measurement behind data-mix and dedup decisions
-    (a flattening curve means additional data re-states what earlier
-    data already said — the corpus-level complement of per-doc
-    `docs_novelty`). Quarters cut the doc_id VALUE range (thresholds
-    derive from min/max scalars — a rank-based cut would need a global
-    row_number sort, the single-partition trap), exact doc counts
-    reported per cut. Trigram terms use the shared ASCII-alnum
-    tokenization (filter BEFORE lowercasing — the Unicode-case trap).
-
-    Scale: one corpus scan + explode to trigram terms, one term-keyed
-    agg (min first_doc — the same O(shingles) bound as docs_novelty),
-    then both counts come from broadcast non-equi joins against the
-    4-row cut frame (vocab-sized × 4 and doc-count × 4, never
-    corpus × corpus); the second FileScan is a doc_id-only projection
-    for the exact per-cut doc counts."""
-    docs = _t(spark, sf_dir, "documents")
-    bounds = docs.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    )
-    cuts = F.broadcast(
-        bounds.select(
-            F.explode(F.expr("sequence(1, 4)")).alias("qtr"), "lo", "hi"
-        ).select(
-            F.col("qtr").cast("long").alias("qtr"),
-            F.expr(
-                "CAST(lo + ((hi - lo + 1) * qtr) DIV 4 - 1 AS BIGINT)"
-            ).alias("cut_id"),
-        )
-    )
-    tok = docs.select(
-        "doc_id", F.split("text", " ").alias("ws")
-    ).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "filter(transform(sequence(0, greatest(size(ws) - 3, -1)),"
-                " i -> CASE WHEN ws[i] RLIKE '^[A-Za-z0-9]+$'"
-                " AND ws[i+1] RLIKE '^[A-Za-z0-9]+$'"
-                " AND ws[i+2] RLIKE '^[A-Za-z0-9]+$'"
-                " THEN concat(lower(ws[i]), ' ', lower(ws[i+1]), ' ',"
-                " lower(ws[i+2])) END), x -> x IS NOT NULL)"
-            )
-        ).alias("term"),
-    )
-    first = tok.groupBy("term").agg(F.min("doc_id").alias("first_doc"))
-    vocab = (
-        first.join(cuts, F.col("first_doc") <= F.col("cut_id"))
-        .groupBy("qtr", "cut_id")
-        .agg(F.count("*").cast("long").alias("vocab_size"))
-    )
-    ndocs = (
-        docs.select("doc_id")
-        .join(cuts, F.col("doc_id") <= F.col("cut_id"))
-        .groupBy("qtr", "cut_id")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-    )
-    # assemble FROM the 4-row cut frame with left joins (r12 advice): a
-    # quarter with zero docs (cut_id < lo when the id span is < 4) or
-    # zero trigram vocab must still emit its row with count 0, exactly
-    # like the oracle's scalar subqueries
-    return (
-        cuts.join(ndocs, ["qtr", "cut_id"], "left")
-        .join(vocab, ["qtr", "cut_id"], "left")
-        .select(
-            "qtr",
-            "cut_id",
-            F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce("vocab_size", F.lit(0)).cast("long")
-            .alias("vocab_size"),
-        )
     )
 
 
@@ -13698,10 +13157,6 @@ def _lsh_store_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 # in basis points by positive-integer floor division; the ≥ 0.8 gate is
 # the integer cross-multiplication c·10⁴ ≥ 8000·union — EXACTLY
 # equivalent to the float compare, with no division before the gate.
-# A module constant because the STREAMING leg (`stream_incremental_dedup`)
-# uses it VERBATIM — the stream≡batch identity device: the store is
-# frozen, each new doc's probe is independent, so the append-union over
-# micro-batches must equal the one-shot batch result row for row.
 _INCR_DEDUP_ORACLE = (
     _SHINGLE_CTE
     + """,
@@ -13733,14 +13188,12 @@ _INCR_DEDUP_ORACLE = (
 def _incremental_probe(
     new: DataFrame, old_buckets: DataFrame, old_sets: DataFrame
 ) -> DataFrame:
-    """The ingest-gate probe shared VERBATIM by `dedup_incremental_batch`
-    and the streaming leg (`stream_incremental_dedup`) — one definition
-    so the stream≡batch identity cannot fork: band-sign the NEW docs
-    only, one (band, bh) equi-join against the frozen bucket store for
-    candidates, one id-keyed join against the frozen sets store for
-    exact-Jaccard verification (integer cross-multiplied ≥ 0.8 gate,
-    basis-point floor-division score), snapped-rank best match per new
-    doc or `unique`."""
+    """The ingest-gate probe of `dedup_incremental_batch`: band-sign
+    the NEW docs only, one (band, bh) equi-join against the frozen
+    bucket store for candidates, one id-keyed join against the frozen
+    sets store for exact-Jaccard verification (integer cross-multiplied
+    ≥ 0.8 gate, basis-point floor-division score), snapped-rank best
+    match per new doc or `unique`."""
     nb = dedup.minhash_band_buckets(new, n=5, num_hashes=8, bands=4)
     cand = (
         nb.alias("x")
@@ -13965,490 +13418,6 @@ def emb_sign_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# unbiased Simpson concentration Σn(n−1)/(N(N−1)) stays entirely in
-# integers: pair counts are exact products, one positive floor
-# division onto the millionths grid (the integer-exact-statistics
-# device), top-token share in basis points the same way; a
-# single-token language (N ≤ 1) emits NULL per the r13 guard device.
-# HUGEINT sums CAST back to BIGINT for the driver compare. Shared
-# verbatim with stream_simpson_monitor (stream≡batch identity)
-_SIMPSON_SQL = """
-    WITH tok AS (SELECT lang, ws[i] term
-                 FROM (SELECT lang, string_split(text, ' ') ws
-                       FROM documents),
-                      unnest(range(1, len(ws) + 1)) r(i)),
-    tc AS (SELECT lang, term, CAST(count(*) AS BIGINT) n
-           FROM tok GROUP BY 1, 2),
-    ag AS (SELECT lang, CAST(sum(n) AS BIGINT) n_tokens,
-                  CAST(count(*) AS BIGINT) vocab,
-                  CAST(sum(n::HUGEINT * (n - 1)) AS HUGEINT) pairs,
-                  CAST(max(n) AS BIGINT) top_n
-           FROM tc GROUP BY 1)
-    SELECT lang, n_tokens, vocab,
-           CAST(CASE WHEN n_tokens > 1 THEN pairs * 1000000
-                // (n_tokens::HUGEINT * (n_tokens - 1)) END AS BIGINT)
-             AS simpson_e6,
-           CAST(CASE WHEN n_tokens > 0 THEN top_n * 10000 // n_tokens
-                END AS BIGINT) AS top_share_bp
-    FROM ag
-"""
-
-
-def _simpson_report(tc: DataFrame) -> DataFrame:
-    """Per-language Simpson roll-up from a (lang, term, n) count frame.
-    Shared by the batch entry and the streaming monitor so the report
-    logic cannot fork (the r14 monitor template, sixth instance)."""
-    ag = tc.groupBy("lang").agg(
-        F.sum("n").cast("long").alias("n_tokens"),
-        F.count("*").cast("long").alias("vocab"),
-        F.expr(
-            "CAST(sum(CAST(n AS DECIMAL(38,0)) * (n - 1)) AS DECIMAL(38,0))"
-        ).alias("pairs"),
-        F.max("n").cast("long").alias("top_n"),
-    )
-    return ag.select(
-        "lang",
-        "n_tokens",
-        "vocab",
-        F.expr(
-            "CAST(CASE WHEN n_tokens > 1 THEN pairs * 1000000"
-            " DIV (CAST(n_tokens AS DECIMAL(38,0)) * (n_tokens - 1))"
-            " END AS BIGINT)"
-        ).alias("simpson_e6"),
-        F.expr(
-            "CAST(CASE WHEN n_tokens > 0 THEN top_n * 10000 DIV n_tokens"
-            " END AS BIGINT)"
-        ).alias("top_share_bp"),
-    )
-
-
-@staged_query("docs_simpson_diversity", oracle=_SIMPSON_SQL)
-def docs_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson diversity / concentration of the token distribution per
-    language — the collision-probability complement of entropy
-    (`q_user_entropy` needs logs and a float grid; Simpson's unbiased
-    form λ = Σn(n−1)/(N(N−1)) is the probability two tokens drawn
-    WITHOUT replacement coincide, and stays integer-exact end to end —
-    the Herfindahl–Hirschman index of text). High λ = a
-    repetitive, template-dominated language slice; low λ = diverse
-    vocabulary — the per-language data-mix screen that pairs with
-    `docs_vocab_growth` (corpus saturation) and `docs_repetition`
-    (within-doc boilerplate). Reports exact token/vocab counts, λ on
-    the millionths grid, and the top token's share in basis points;
-    a degenerate slice (N ≤ 1) yields NULL per the r13 guard device.
-
-    Scale: one corpus scan + explode, one (lang, term)-keyed partial
-    agg (the O(tokens) → O(vocab) collapse — counts combine map-side),
-    one lang-keyed roll-up of the vocab-sized frame; the answer is
-    |langs| rows. Pair products: n(n−1) per term fits HUGEINT/
-    DECIMAL(38) to ~10¹⁸ occurrences of a single term."""
-    tc = (
-        _t(spark, sf_dir, "documents")
-        .select("lang", F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("lang", "term")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    return _simpson_report(tc)
-
-
-@staged_query("stream_incremental_dedup", oracle=_INCR_DEDUP_ORACLE)
-def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ingest-dedup gate AS A STREAM — the production deployment of
-    `dedup_incremental_batch` (crawl shards land in object storage and
-    must be admitted or rejected as they arrive, not in a nightly
-    batch): new documents stream in, and each micro-batch runs the SAME
-    `_incremental_probe` against the SAME session-persisted frozen LSH
-    store (band buckets + shingle sets — the batch entry built them;
-    this entry only reads), appending verdicts through a foreachBatch
-    parquet sink. Because the store is frozen and every new doc's probe
-    is independent, the append-union over micro-batches equals the
-    one-shot batch result row for row — the oracle IS the batch
-    entry's oracle verbatim (the stream≡batch identity device, third
-    instance after the funnel and overdispersion monitors). Intra-batch
-    and batch-vs-batch duplicates stay the next store rebuild's problem
-    — the frozen-quantizer contract, unchanged by streaming.
-
-    Exactly-once: micro-batch writes overwrite their own
-    ``batch_id=<n>`` directory (idempotent), offsets are checkpointed,
-    and repeat invocations restart the drain on the SAME checkpoint —
-    committed offsets make it a no-op (the foreachBatch sink device,
-    pinned by test_entry_caches for this entry too).
-
-    Scale: per micro-batch the work is the batch probe's — tokenize the
-    batch only, one uniform-key equi-join per store; state lives in the
-    store parquet, not the stream (no watermark, no streaming state at
-    all — the gate is stateless given the store), so an indefinitely
-    running deployment holds ZERO in-flight aggregation state and the
-    sink grows with verdicts, not with corpus rescans."""
-    # the frozen store is shared with the batch entry, never rebuilt here
-    bpath, spath = _lsh_store_paths(spark, sf_dir)
-    sink, ckpt = _sink_and_checkpoint(spark, sf_dir, "stream_dedup", "verdicts")
-
-    src = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("doc_id") % 10 == 7)
-    )
-    old_buckets = spark.read.parquet(bpath)
-    old_sets = spark.read.parquet(spath)
-
-    def probe_batch(bdf: DataFrame, batch_id: int) -> None:
-        _incremental_probe(bdf, old_buckets, old_sets).write.mode(
-            "overwrite"
-        ).parquet(f"{sink}/batch_id={batch_id}")
-
-    q = (
-        src.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stream_incremental_dedup drain exceeded 600s")
-    return (
-        spark.read.option("basePath", sink)
-        .parquet(sink + "/batch_id=*")
-        .select("new_id", "matched_id", "jacc_bp", "status")
-    )
-
-
-# Zipf/power-law health via the FREQUENCY SPECTRUM (cnt_f = how many
-# words occur exactly f times; Zipf exponent s ⇒ spectrum slope
-# −(1+1/s)): exact integer log₂ buckets from binary-string length
-# (length(bin(n))−1 ≡ n.bit_length()−1 — no float log anywhere),
-# unweighted least squares over the spectrum points with every sum an
-# integer, and the slope reported through the spearman sign device
-# sign(num)·(|num|·10⁶ DIV D) — |num| is sign-free so the one division
-# is positive-floor on both engines; D = 0 (≤1 distinct x bucket) emits
-# NULL per the r13 guard device. Shared verbatim by the batch entry AND
-# the streaming monitor (the stream≡batch identity device).
-_ZIPF_SLOPE_SQL = """
-    WITH w AS (SELECT unnest(string_split(text, ' ')) AS word
-               FROM documents),
-    wf AS (SELECT word, CAST(count(*) AS BIGINT) f FROM w
-           WHERE word <> '' GROUP BY 1),
-    sp AS (SELECT f, CAST(count(*) AS BIGINT) c FROM wf GROUP BY 1),
-    pts AS (SELECT c, CAST(length(bin(f)) - 1 AS BIGINT) x,
-                   CAST(length(bin(c)) - 1 AS BIGINT) y
-            FROM sp),
-    s AS (SELECT CAST(count(*) AS BIGINT) p, CAST(sum(c) AS BIGINT) nv,
-                 CAST(sum(x) AS HUGEINT) sx, CAST(sum(y) AS HUGEINT) sy,
-                 CAST(sum(x * y) AS HUGEINT) sxy,
-                 CAST(sum(x * x) AS HUGEINT) sxx
-          FROM pts)
-    SELECT nv AS n_vocab, p AS n_points,
-           CAST(CASE WHEN p * sxx - sx * sx > 0
-                THEN (CASE WHEN p * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-                     * (abs(p * sxy - sx * sy) * 1000000
-                        // (p * sxx - sx * sx))
-                END AS BIGINT) AS slope_e6_signed
-    FROM s
-"""
-
-
-def _zipf_slope_report(wf: DataFrame) -> DataFrame:
-    """Spectrum → exact log₂ buckets → integer least squares, from a
-    per-word frequency frame (column ``f``). Shared by the batch entry
-    and the streaming monitor so the report logic cannot fork."""
-    sp = wf.groupBy("f").agg(F.count("*").cast("long").alias("c"))
-    pts = sp.select(
-        "c",
-        F.expr("CAST(length(bin(f)) - 1 AS BIGINT)").alias("x"),
-        F.expr("CAST(length(bin(c)) - 1 AS BIGINT)").alias("y"),
-    )
-    s = pts.agg(
-        F.count("*").cast("long").alias("p"),
-        F.sum("c").cast("long").alias("nv"),
-        F.expr("CAST(sum(x) AS DECIMAL(38,0))").alias("sx"),
-        F.expr("CAST(sum(y) AS DECIMAL(38,0))").alias("sy"),
-        F.expr("CAST(sum(x * y) AS DECIMAL(38,0))").alias("sxy"),
-        F.expr("CAST(sum(x * x) AS DECIMAL(38,0))").alias("sxx"),
-    )
-    return s.select(
-        F.col("nv").alias("n_vocab"),
-        F.col("p").alias("n_points"),
-        F.expr(
-            "CAST(CASE WHEN p * sxx - sx * sx > 0"
-            " THEN (CASE WHEN p * sxy - sx * sy < 0 THEN -1 ELSE 1 END)"
-            "      * (CAST(abs(p * sxy - sx * sy) AS DECIMAL(38,0))"
-            "         * 1000000 DIV (p * sxx - sx * sx))"
-            " END AS BIGINT)"
-        ).alias("slope_e6_signed"),
-    )
-
-
-@staged_query("docs_zipf_slope", oracle=_ZIPF_SLOPE_SQL)
-def docs_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf power-law health check of the corpus token distribution —
-    the vocabulary-shape screen a training pipeline runs next to Heaps
-    growth (`docs_vocab_growth`): natural text keeps a near-Zipfian
-    frequency spectrum, and boilerplate floods, template spam, or
-    tokenizer damage bend it. Measured on the FREQUENCY SPECTRUM
-    (cnt_f vs f — for Zipf exponent s the spectrum is a power law of
-    slope −(1+1/s), ≈ −2 for s = 1) rather than rank-frequency:
-    rank-frequency needs a GLOBAL ordering of the vocabulary (a sort
-    that grows with vocab — the rank-tertile trap), while the spectrum
-    is two keyed aggregations and a frame of ≤ log-many dozens of
-    points. Both axes take EXACT integer log₂ buckets via binary-string
-    length (length(bin(n))−1, identical on both engines — never a
-    float log whose 1-ulp boundary wobble would flip a bucket), the
-    least-squares slope multiplies out to integers (num = P·Σxy −
-    Σx·Σy, D = P·Σx² − (Σx)²), and the answer lands on the millionths
-    grid through the spearman SIGN device: sign(num)·(|num|·10⁶ DIV D)
-    — |num| is sign-free, so the single division is a positive floor
-    replayed identically by both engines (never a negative-numerator
-    truncation divergence). A degenerate spectrum (all frequencies in
-    one log₂ bucket → D = 0) yields NULL per the r13 guard device.
-
-    Scale: one corpus scan pruned to the text column, one vocab-keyed
-    partial-agg shuffle (map-side combine — the same shape as
-    `docs_top_bigrams`), one spectrum-keyed agg (≤ |distinct f|
-    rows, sublinear in vocab), then a 1-row scalar fold; no window, no
-    sort, no collect. Integer headroom is structural: x, y ≤ 63, so
-    every sum fits BIGINT to P ≈ 10¹⁴ spectrum points and the DECIMAL
-    intermediates never approach 10³⁸."""
-    wf = (
-        _t(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("f"))
-    )
-    return _zipf_slope_report(wf)
-
-
-@staged_query("stream_zipf_monitor", oracle=_ZIPF_SLOPE_SQL)
-def stream_zipf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Zipf health screen as a STREAM: documents arrive (crawl
-    shards landing in object storage) and the per-word counts update
-    as they stream through — the live vocabulary-shape dashboard next
-    to `stream_docs_pipeline_funnel`'s gate counters. Running state is
-    the (word → count) table in complete mode: counts are monotone
-    ADD-merges, so micro-batches fold in exactly like batch partials
-    and no watermark is needed (the `stream_bitmap_distinct` /
-    `stream_overdispersion_monitor` state class — state bounded by
-    VOCABULARY, not stream volume; at 100 TB the state is the same
-    vocab table every corpus statistic materializes, aged out by
-    dropping singleton tails if a boundless vocab ever matters). The
-    spectrum, log₂ buckets, and regression run batch-side over the
-    drained counts via the SHARED `_zipf_slope_report` (the report
-    logic cannot fork from the batch entry), and the oracle is the
-    batch entry's SQL verbatim — the driver checks the stream≡batch
-    identity itself.
-
-    Scale: each micro-batch contributes map-side partial word counts —
-    the identical shuffle shape as the batch vocab agg,
-    incrementalized; the drained spectrum fold is sublinear in vocab
-    (see `docs_zipf_slope`)."""
-    src = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    wf = (
-        src.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("f"))
-    )
-    t = _drain_memory_sink(spark, wf, "stream_zipf_monitor", "complete", source_path=f"{sf_dir}/documents.parquet")
-    return _zipf_slope_report(t)
-
-
-# χ² INDEPENDENCE of the source × lang contingency, the corpus-mix
-# drift screen: the full margin spine (sources × langs cross of two
-# post-agg tiny frames) prices ABSENT cells algebraically (O = 0 →
-# d = −R·C — the real corpus has genuinely empty cells, so the
-# zero-cell path is exercised, not decorative); per-cell
-# (O·N − R·C)²·10⁶ // (R·C·N) floors replayed identically on both
-# sides (the kruskal device; d² is sign-free), summed to χ²·10⁶.
-# Empty corpus emits NULL per the r13 guard device; the α=0.05
-# decision uses ⌊χ²₀.₉₅(76)·10⁶⌋ = 97350970, re-derived from the
-# closed-form even-df CDF by bisection in the independent test (df
-# = 76 because the corpus is 20 sources × 5 langs; emitted only at
-# that df — the exact quantile depends on the table shape). Shared
-# verbatim by the batch entry AND the streaming monitor (the
-# stream≡batch identity device).
-_SOURCE_DRIFT_SQL = """
-    WITH grid AS (SELECT source, lang, CAST(count(*) AS BIGINT) o
-                  FROM documents GROUP BY 1, 2),
-    r AS (SELECT source, CAST(sum(o) AS BIGINT) rt FROM grid GROUP BY 1),
-    c AS (SELECT lang, CAST(sum(o) AS BIGINT) ct FROM grid GROUP BY 1),
-    tot AS (SELECT CAST(coalesce(sum(o), 0) AS BIGINT) nn FROM grid),
-    cells AS (SELECT r.source, c.lang, r.rt, c.ct, nn,
-                     CAST(coalesce(g.o, 0) AS BIGINT) o
-              FROM r CROSS JOIN c CROSS JOIN tot
-              LEFT JOIN grid g ON g.source = r.source AND g.lang = c.lang),
-    terms AS (SELECT source, lang, nn,
-                     ((o::HUGEINT * nn - rt::HUGEINT * ct)
-                      * (o::HUGEINT * nn - rt::HUGEINT * ct) * 1000000)
-                       // (rt::HUGEINT * ct * nn) AS term
-              FROM cells),
-    st AS (SELECT max(nn) nn,
-                  CAST(count(DISTINCT source) AS BIGINT) ns,
-                  CAST(count(DISTINCT lang) AS BIGINT) nl,
-                  CAST(sum(term) AS HUGEINT) s
-           FROM terms)
-    SELECT nn AS n_docs, ns AS n_sources, nl AS n_langs,
-           CAST(CASE WHEN nn > 0 THEN s END AS BIGINT) AS chi2_e6,
-           CASE WHEN nn > 0 AND (ns - 1) * (nl - 1) = 76
-                THEN s > 97350970 END AS reject_05
-    FROM st
-"""
-
-
-def _source_drift_report(grid: DataFrame) -> DataFrame:
-    """Margins → full spine → per-cell floored χ² terms → 1-row fold,
-    from a (source, lang, o) count frame. Shared by the batch entry and
-    the streaming monitor so the report logic cannot fork. The input
-    frame is reused four times (both margins, the total, the spine
-    join) — the batch entry localCheckpoints it; the stream passes the
-    drained in-memory sink, which re-reads for free."""
-    r = grid.groupBy("source").agg(F.sum("o").cast("long").alias("rt"))
-    c = grid.groupBy("lang").agg(F.sum("o").cast("long").alias("ct"))
-    tot = grid.agg(
-        F.coalesce(F.sum("o"), F.lit(0)).cast("long").alias("nn")
-    )
-    # fresh aliases for the observation side: margins AND the probe
-    # derive from the SAME input frame, and without re-aliased exprIds
-    # the spine⋈grid join is a self-join with conflicting attributes
-    # (bites when the input is a drained memory-sink view)
-    gobs = grid.select(
-        F.col("source").alias("g_source"),
-        F.col("lang").alias("g_lang"),
-        F.col("o").alias("g_o"),
-    )
-    cells = (
-        r.crossJoin(F.broadcast(c))
-        .crossJoin(F.broadcast(tot))
-        .join(
-            F.broadcast(gobs),
-            (F.col("source") == F.col("g_source"))
-            & (F.col("lang") == F.col("g_lang")),
-            "left",
-        )
-        .select(
-            "source",
-            "lang",
-            "rt",
-            "ct",
-            "nn",
-            F.coalesce(F.col("g_o"), F.lit(0)).cast("long").alias("o"),
-        )
-    )
-    # per-cell floor: d² rides DECIMAL(38,0); Spark DIV returns BIGINT,
-    # cast straight back to DECIMAL before the sum (the r14 spearman
-    # device)
-    st = cells.select(
-        "source",
-        "lang",
-        "nn",
-        F.expr(
-            "CAST((CAST(o AS DECIMAL(38,0)) * nn"
-            " - CAST(rt AS DECIMAL(38,0)) * ct)"
-            " * (CAST(o AS DECIMAL(38,0)) * nn"
-            "    - CAST(rt AS DECIMAL(38,0)) * ct)"
-            " * 1000000 DIV (CAST(rt AS DECIMAL(38,0)) * ct * nn)"
-            " AS DECIMAL(38,0))"
-        ).alias("term"),
-    ).agg(
-        F.max("nn").alias("nn"),
-        F.countDistinct("source").cast("long").alias("ns"),
-        F.countDistinct("lang").cast("long").alias("nl"),
-        F.expr("CAST(sum(term) AS DECIMAL(38,0))").alias("s"),
-    )
-    return st.select(
-        F.col("nn").alias("n_docs"),
-        F.col("ns").alias("n_sources"),
-        F.col("nl").alias("n_langs"),
-        F.expr("CAST(CASE WHEN nn > 0 THEN s END AS BIGINT)").alias(
-            "chi2_e6"
-        ),
-        F.expr(
-            "CASE WHEN nn > 0 AND (ns - 1) * (nl - 1) = 76"
-            " THEN s > 97350970 END"
-        ).alias("reject_05"),
-    )
-
-
-@staged_query("docs_source_drift_chi2", oracle=_SOURCE_DRIFT_SQL)
-def docs_source_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-mix drift screen: χ² INDEPENDENCE of the source × lang
-    contingency — "did some crawl source shift its language mix?", the
-    significance test behind the `docs_source_mix` report (the report
-    shows shares; this says whether the differences exceed chance).
-    Another χ² species in the battery: `q_lineitem_flag_status_chi2` is
-    2×2 independence with all cells present — this is r×k independence
-    over a spine
-    with genuinely ABSENT cells, priced algebraically via the full
-    margin cross (O = 0 → d = −R·C; the synthetic corpus has empty
-    (source, lang) cells, so the path is exercised). Per-cell
-    (O·N − R·C)²·10⁶ // (R·C·N) floors are replayed identically on
-    both engines (the kruskal device — d² is sign-free so
-    trunc-toward-zero ≡ floor), and χ²·10⁶ is their exact sum — never
-    a float. An empty corpus yields NULL per the r13 guard device; the
-    α=0.05 decision applies ⌊χ²₀.₉₅(76)·10⁶⌋ = 97350970 (re-derived
-    from the closed-form even-df χ² CDF by bisection in the
-    independent test — the re-derived-constants device; emitted only
-    when (ns−1)·(nl−1) = 76 since the quantile depends on df).
-
-    Scale: one scan pruned to two metadata columns, one keyed
-    partial-agg shuffle to the ≤(sources×langs) grid (map-side
-    combine), margins and spine entirely over post-agg tiny frames
-    (broadcast crosses — BNLJ, never CartesianProduct), a 1-row
-    answer. Headroom: d ≤ N² keeps d²·10⁶ inside DECIMAL(38)/HUGEINT
-    to N ≈ 10⁸ documents; per-cell quotients ≤ χ²·10⁶ ≤ N·10⁶ fit
-    BIGINT to N ≈ 9×10¹² — past 10⁸ docs drop the snap to 10³ on both
-    sides or sample."""
-    grid = (
-        _t(spark, sf_dir, "documents")
-        .select("source", "lang")
-        .groupBy("source", "lang")
-        .agg(F.count("*").cast("long").alias("o"))
-        # 4 reuses (both margins, the total, the spine join): at the
-        # state.py checkpoint break-even
-        .localCheckpoint(eager=True)
-    )
-    return _source_drift_report(grid)
-
-
-@staged_query("stream_source_drift_monitor", oracle=_SOURCE_DRIFT_SQL)
-def stream_source_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus-mix drift screen as a STREAM: documents arrive and
-    the (source, lang) contingency updates as they land — the live
-    "did a crawl source shift its language mix" alarm next to
-    `stream_zipf_monitor` and `stream_docs_pipeline_funnel`. Running
-    state is the (source, lang) → count grid in complete mode: counts
-    are monotone ADD-merges, micro-batches fold in like batch partials,
-    no watermark needed (state bounded by sources × langs — SPINE-sized,
-    the `stream_overdispersion_monitor` state class, far smaller than
-    the vocab-bounded zipf state). Margins, the absent-cell spine, the
-    per-cell floored χ² terms, and the df-pinned decision all run
-    batch-side over the drained grid through the SHARED
-    `_source_drift_report` (the report logic cannot fork from the batch
-    entry), and the oracle is the batch entry's SQL verbatim — the
-    driver checks the stream≡batch identity itself.
-
-    Scale: each micro-batch contributes map-side partial (source, lang)
-    counts — the identical shuffle shape as the batch grid agg,
-    incrementalized; everything after the drain is spine-sized."""
-    src = (
-        spark.readStream.schema("doc_id long, source string, lang string")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    grid = src.groupBy("source", "lang").agg(
-        F.count("*").cast("long").alias("o")
-    )
-    t = _drain_memory_sink(
-        spark, grid, "stream_source_drift_monitor", "complete",
-        source_path=f"{sf_dir}/documents.parquet",
-    )
-    return _source_drift_report(t)
-
-
 def _tdiv(a: int, b: int) -> int:
     """Truncate-toward-zero integer division for b > 0 — the exact
     semantics BOTH engines share (Spark DIV and DuckDB // truncate
@@ -14641,82 +13610,6 @@ def emb_cov_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# all-positive integer divisions -> trunc == floor on both engines; the
-# empty corpus collapses every count to 0 and the CASE guards emit NULL
-# ratios (global-agg device: exactly one row either way). Shared
-# verbatim by the batch entry AND the streaming monitor (the
-# stream≡batch identity device).
-_HAPAX_SQL = """
-    WITH tok AS (SELECT unnest(string_split(text, ' ')) t FROM documents),
-    v AS (SELECT t, count(*) cnt FROM tok GROUP BY 1),
-    agg AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) n_tokens,
-                   CAST(count(*) AS BIGINT) n_types,
-                   CAST(coalesce(sum(CASE WHEN cnt = 1 THEN 1 END), 0)
-                        AS BIGINT) n_hapax
-            FROM v)
-    SELECT n_tokens, n_types, n_hapax,
-           CAST(CASE WHEN n_tokens > 0 THEN n_types * 10000 // n_tokens
-                END AS BIGINT) AS ttr_bp,
-           CAST(CASE WHEN n_types > 0 THEN n_hapax * 10000 // n_types
-                END AS BIGINT) AS hapax_share_bp
-    FROM agg
-"""
-
-
-def _hapax_report(v: DataFrame) -> DataFrame:
-    """Vocabulary-richness roll-up from a per-token count frame (column
-    ``cnt``). Shared by the batch entry and the streaming monitor so
-    the report logic cannot fork (the r14 `_zipf_slope_report` /
-    `_source_drift_report` template)."""
-    agg = v.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.count(F.lit(1)).cast("long").alias("n_types"),
-        F.coalesce(
-            F.sum(F.when(F.col("cnt") == 1, 1)), F.lit(0)
-        ).cast("long").alias("n_hapax"),
-    )
-    return agg.select(
-        "n_tokens",
-        "n_types",
-        "n_hapax",
-        F.expr(
-            "CAST(CASE WHEN n_tokens > 0 THEN n_types * 10000 DIV n_tokens"
-            " END AS BIGINT)"
-        ).alias("ttr_bp"),
-        F.expr(
-            "CAST(CASE WHEN n_types > 0 THEN n_hapax * 10000 DIV n_types"
-            " END AS BIGINT)"
-        ).alias("hapax_share_bp"),
-    )
-
-
-@staged_query("docs_hapax_legomena", oracle=_HAPAX_SQL)
-def docs_hapax_legomena(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-richness report of the corpus in one row: token count,
-    type (distinct-token) count, hapax legomena (types occurring exactly
-    once), type/token ratio and hapax share in basis points — the
-    corpus-health triple behind dedup and data-mix decisions (a
-    shrinking hapax share under corpus growth is the classic symptom of
-    template/boilerplate flooding; Heaps-law saturation shows up here
-    before it shows up in loss curves). Completes the vocabulary family
-    next to docs_vocab_growth (curve) and docs_zipf_slope (spectrum
-    shape). Ratios are all-positive integer floor divisions (Spark DIV
-    == DuckDB //); the empty corpus emits one row of zeros with NULL
-    ratios via the global-agg device (r14: agg over empty input yields
-    one row on both engines, a groupBy would yield zero rows).
-
-    Scale: the only corpus-sized work is the tokenize+explode feeding a
-    vocabulary-keyed count (map-side combinable, one shuffle on the
-    token key — the docs_unigram_logprob shuffle shape); the roll-up
-    over the vocabulary frame is a global agg with partial aggregation,
-    and the result is ONE row — nothing data-sized ever reaches the
-    driver."""
-    docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(F.split(F.col("text"), " ")).alias("t"))
-    v = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
-    return _hapax_report(v)
-
-
 @staged_query(
     "emb_sign_bit_balance",
     # sign comparison is the ONLY per-element op (no arithmetic at all,
@@ -14769,123 +13662,6 @@ def emb_sign_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "(n_pos * 10000 DIV n_vecs) BETWEEN 2000 AND 8000"
         ).alias("balanced"),
-    )
-
-
-def _code_marker_parts(extra_cols: str = "") -> str:
-    """Oracle CTE fragment computing the code-classifier markers (the
-    `m`/`s` stages shared VERBATIM by the docs_code_detect oracle and
-    the code-mix roll-ups, so the classifier SQL cannot fork — the
-    `_lloyd_parts` parametric-fragment device). ``extra_cols`` threads
-    pass-through columns (``, lang``) into both stages. Every marker is
-    counted via length differences (translate / replace —
-    Postgres-semantics in BOTH engines, verified), never a regex: the
-    r12 regexp-escaping hazard class has no surface here. n_lines >= 1
-    by construction; the empty-text guard is the only division guard
-    needed."""
-    return f"""
-    m AS (
-      SELECT doc_id{extra_cols},
-             CAST(length(text) AS BIGINT) n_chars,
-             CAST(length(text)
-                  - length(translate(text, '{{}}();=<>[]', '')) AS BIGINT)
-               n_sym,
-             CAST(1 + length(text)
-                  - length(replace(text, chr(10), '')) AS BIGINT) n_lines,
-             CAST((length(text)
-                  - length(replace(text, chr(10) || '  ', ''))) // 3
-               AS BIGINT) n_indent
-      FROM documents),
-    s AS (SELECT doc_id{extra_cols}, n_lines,
-                 CAST(CASE WHEN n_chars > 0 THEN n_sym * 10000 // n_chars
-                      END AS BIGINT) sym_bp,
-                 CAST(n_indent * 10000 // n_lines AS BIGINT) indent_bp
-          FROM m)"""
-
-
-def _code_flags(docs: DataFrame) -> DataFrame:
-    """Per-document code-vs-prose classification frame — doc_id, lang,
-    n_lines, sym_bp, indent_bp, looks_code. Shared by docs_code_detect,
-    docs_code_mix, and stream_code_mix_monitor so the classifier logic
-    cannot fork between the per-doc gate, the corpus roll-up, and the
-    stream (the `_zipf_slope_report` shared-logic template, applied to
-    the classifier instead of the report)."""
-    m = docs.select(
-        "doc_id",
-        "lang",
-        F.length("text").cast("long").alias("n_chars"),
-        (
-            F.length("text")
-            - F.length(F.translate("text", "{}();=<>[]", ""))
-        ).cast("long").alias("n_sym"),
-        (
-            F.lit(1)
-            + F.length("text")
-            - F.length(F.replace(F.col("text"), F.lit("\n"), F.lit("")))
-        ).cast("long").alias("n_lines"),
-        (
-            (
-                F.length("text")
-                - F.length(
-                    F.replace(F.col("text"), F.lit("\n  "), F.lit(""))
-                )
-            )
-            / 3
-        ).cast("long").alias("n_indent"),
-    )
-    s = m.select(
-        "doc_id",
-        "lang",
-        "n_lines",
-        F.expr(
-            "CAST(CASE WHEN n_chars > 0 THEN n_sym * 10000 DIV n_chars"
-            " END AS BIGINT)"
-        ).alias("sym_bp"),
-        F.expr("CAST(n_indent * 10000 DIV n_lines AS BIGINT)").alias(
-            "indent_bp"
-        ),
-    )
-    return s.select(
-        "doc_id",
-        "lang",
-        "n_lines",
-        "sym_bp",
-        "indent_bp",
-        F.expr(
-            "coalesce(sym_bp, 0) >= 300 OR indent_bp >= 2000"
-        ).alias("looks_code"),
-    )
-
-
-@staged_query(
-    "docs_code_detect",
-    oracle=f"""
-    WITH {_code_marker_parts()}
-    SELECT doc_id, n_lines, sym_bp, indent_bp,
-           (coalesce(sym_bp, 0) >= 300 OR indent_bp >= 2000) AS looks_code
-    FROM s
-    """,
-)
-def docs_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Code-vs-prose gate per document — the curation classifier a
-    pretraining mix needs before routing text into code-weighted or
-    prose-weighted buckets (symbol-dense or indent-structured text
-    behaves very differently under dedup, quality scoring, and LM
-    filtering): structural-symbol density ({}();=<>[] per character)
-    and indented-line density (leading two-space lines per line), both
-    in basis points, with looks_code = sym >= 3 % OR indent >= 20 % of
-    lines. Every marker is a LENGTH-DIFFERENCE count (translate for the
-    symbol class, replace for the newline/indent patterns — identical
-    Postgres semantics on both engines, so no regex and none of the
-    regexp-escaping hazard class); divisions are all-positive floors
-    with the empty-text NULL guard on n_chars.
-
-    Scale: a pure per-row projection — no join, no aggregation, no
-    window and no exchange; the classifier runs entirely inside
-    whole-stage codegen."""
-    docs = _t(spark, sf_dir, "documents")
-    return _code_flags(docs).select(
-        "doc_id", "n_lines", "sym_bp", "indent_bp", "looks_code"
     )
 
 
@@ -14950,50 +13726,12 @@ def tf_resource_naming_convention(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@staged_query("stream_hapax_monitor", oracle=_HAPAX_SQL)
-def stream_hapax_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vocabulary-richness screen as a STREAM: crawl shards land and
-    the (token → count) state updates as they stream through — the live
-    hapax/TTR dashboard next to `stream_zipf_monitor`'s spectrum slope
-    (richness level and spectrum shape are the two axes of the same
-    vocabulary health check). Running state is the token count table in
-    complete mode: counts are monotone ADD-merges, so micro-batches
-    fold in exactly like batch partials and no watermark is needed (the
-    `stream_zipf_monitor` state class — state bounded by VOCABULARY,
-    not stream volume). The roll-up runs batch-side over the drained
-    counts via the SHARED `_hapax_report` (report logic cannot fork
-    from the batch entry — the r14 monitor template), and the oracle is
-    the batch entry's SQL verbatim: the driver checks the stream≡batch
-    identity itself. Tokenization deliberately matches the batch leg
-    EXACTLY (split on space, empty tokens counted) — any filter added
-    on one side only is precisely the divergence the identity exists to
-    catch.
-
-    Scale: each micro-batch contributes map-side partial token counts —
-    the identical shuffle shape as the batch vocab agg,
-    incrementalized; the drained roll-up is one global agg over the
-    vocab frame, one row out."""
-    src = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    v = (
-        src.select(F.explode(F.split(F.col("text"), " ")).alias("t"))
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    t = _drain_memory_sink(spark, v, "stream_hapax_monitor", "complete", source_path=f"{sf_dir}/documents.parquet")
-    return _hapax_report(t)
-
-
 # per-element milli-quantize in f64 (the c62fc0b device: cast each
 # FLOAT element to DOUBLE before any arithmetic, never DuckDB's f32
 # promotion), then an exact integer Σq² per vector — order-free, no
-# float sum anywhere; log2 buckets via length(bin(n))-1 (the
-# docs_zipf_slope device); list_sum of an EMPTY list is NULL in
-# DuckDB where Spark's aggregate seed gives 0, hence the coalesce;
-# shared verbatim with stream_norm_buckets_monitor (stream≡batch)
+# float sum anywhere; log2 buckets via length(bin(n))-1 (an exact
+# integer log₂); list_sum of an EMPTY list is NULL in DuckDB where
+# Spark's aggregate seed gives 0, hence the coalesce
 _NORM_BUCKETS_SQL = """
     WITH q AS (SELECT vec_id,
                  CAST(coalesce(list_sum(list_transform(
@@ -15016,10 +13754,9 @@ _NORM_BUCKETS_SQL = """
 
 
 def _norm_bucket_report(g: DataFrame) -> DataFrame:
-    """Share roll-up from a (bucket, n_vecs, min_norm2, max_norm2) grid
-    frame. Shared by the batch entry and the streaming monitor so the
-    report logic cannot fork (the r14 monitor template, fifth
-    instance); the window runs over the post-agg bucket spine."""
+    """Share roll-up of `emb_norm_buckets` from a (bucket, n_vecs,
+    min_norm2, max_norm2) grid frame; the window runs over the post-agg
+    bucket spine."""
     t = g.withColumn(
         "tot", F.sum("n_vecs").over(Window.partitionBy()).cast("long")
     )
@@ -15034,9 +13771,7 @@ def _norm_bucket_report(g: DataFrame) -> DataFrame:
 
 def _norm_bucket_grid(vecs: DataFrame) -> DataFrame:
     """(bucket, n_vecs, min_norm2, max_norm2) grid from an embedding
-    frame — the exact-integer milli-quantize fold + bin-length bucket,
-    shared by the batch entry and (incrementalized by complete-mode
-    state) the streaming monitor."""
+    frame — the exact-integer milli-quantize fold + bin-length bucket."""
     q = vecs.select(
         F.expr(
             "aggregate(transform(embedding,"
@@ -15080,226 +13815,6 @@ def emb_norm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows at any corpus size."""
     emb = _t(spark, sf_dir, "embeddings")
     return _norm_bucket_report(_norm_bucket_grid(emb))
-
-
-# marker stages composed from _code_marker_parts VERBATIM (lang threaded
-# through), so the three code-classifier entries share one classifier
-# SQL; grouped rows always have n_docs >= 1, so the share division
-# needs no zero guard
-_CODE_MIX_SQL = f"""
-    WITH {_code_marker_parts(", lang")},
-    c AS (SELECT lang,
-                 (coalesce(sym_bp, 0) >= 300 OR indent_bp >= 2000) lc
-          FROM s),
-    g AS (SELECT lang, CAST(count(*) AS BIGINT) n_docs,
-                 CAST(coalesce(sum(CASE WHEN lc THEN 1 END), 0) AS BIGINT)
-                   n_code
-          FROM c GROUP BY 1)
-    SELECT lang, n_docs, n_code,
-           CAST(n_code * 10000 // n_docs AS BIGINT) AS code_share_bp
-    FROM g
-"""
-
-
-def _code_mix_report(grid: DataFrame) -> DataFrame:
-    """Code-share roll-up from a (lang, looks_code, cnt) grid frame.
-    Shared by the batch entry and the streaming monitor so the report
-    logic cannot fork (the r14 `_zipf_slope_report` /
-    `_source_drift_report` / `_hapax_report` template, fourth
-    instance)."""
-    per = grid.groupBy("lang").agg(
-        F.sum("cnt").cast("long").alias("n_docs"),
-        F.coalesce(
-            F.sum(F.when(F.col("looks_code"), F.col("cnt"))), F.lit(0)
-        ).cast("long").alias("n_code"),
-    )
-    return per.select(
-        "lang",
-        "n_docs",
-        "n_code",
-        F.expr("CAST(n_code * 10000 DIV n_docs AS BIGINT)").alias(
-            "code_share_bp"
-        ),
-    )
-
-
-@staged_query("docs_code_mix", oracle=_CODE_MIX_SQL)
-def docs_code_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus code-mix report per language — the roll-up a pretraining
-    data-mix decision actually consumes (docs_code_detect answers "is
-    THIS doc code"; the mix designer asks "how much of my English /
-    German / etc. slice is code, and did that move since the last
-    crawl"): per lang, document count, code-classified count, and the
-    code share in basis points. The per-doc classifier is the SHARED
-    `_code_flags` frame (docs_code_detect consumes the same one — the
-    classifier cannot fork), and the roll-up is the SHARED
-    `_code_mix_report` the streaming monitor reuses; the oracle's
-    marker stages are composed from `_code_marker_parts` verbatim. The
-    share is one all-positive floor division (grouped langs have ≥ 1
-    doc by construction); the empty corpus emits zero rows on both
-    engines (the grouped shape's empty contract).
-
-    Scale: the classifier is a per-row whole-stage-codegen projection;
-    the only shuffle carries ≤ |langs|×2 partial-agg rows to the
-    (lang, looks_code) grid, and the report collapses that spine-sized
-    frame — nothing data-sized moves after the scan."""
-    docs = _t(spark, sf_dir, "documents")
-    grid = _code_flags(docs).groupBy("lang", "looks_code").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    return _code_mix_report(grid)
-
-
-@staged_query("stream_code_mix_monitor", oracle=_CODE_MIX_SQL)
-def stream_code_mix_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The code-mix screen as a STREAM: crawl shards land and the
-    (lang, looks_code) count grid updates as they stream through — the
-    live "did code share jump in this slice" dashboard next to
-    `stream_source_drift_monitor` (a code-share jump in a prose slice
-    is the classic symptom of a crawler picking up a code-host mirror).
-    Per-doc classification is STATELESS (the shared `_code_flags`
-    projection applied to each micro-batch); the running state is the
-    (lang, looks_code) → count grid in complete mode — SPINE-sized
-    (≤ |langs|×2 rows), monotone ADD-merges folding in exactly like
-    batch partials, no watermark needed (the `stream_zipf_monitor`
-    state class). The roll-up runs batch-side over the drained grid via
-    the SHARED `_code_mix_report` (report logic cannot fork — the r14
-    monitor template, fourth instance), and the oracle is the batch
-    entry's SQL verbatim: the driver checks the stream≡batch identity
-    itself.
-
-    Scale: each micro-batch contributes map-side partial (lang, flag)
-    counts — the identical shuffle shape as the batch grid agg,
-    incrementalized; state never grows past the lang spine, and the
-    drained report is a spine-sized group-by."""
-    src = (
-        spark.readStream.schema("doc_id long, text string, lang string")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    grid = _code_flags(src).groupBy("lang", "looks_code").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    t = _drain_memory_sink(spark, grid, "stream_code_mix_monitor", "complete", source_path=f"{sf_dir}/documents.parquet")
-    return _code_mix_report(t)
-
-
-@staged_query(
-    "docs_ari_readability",
-    # counts are length differences (replace — the docs_code_detect
-    # device); the ARI formula is shifted by +21.43 BEFORE dividing:
-    # grade + 21.43 = 4.71·C/W + 0.5·W/S >= 0 always, so the single
-    # floor division is all-positive (trunc ≡ floor on both engines —
-    # the r13 integer-division-parity device, positivity manufactured
-    # algebraically instead of by offset) and the shift is subtracted
-    # back AFTER; S = 0 (no sentence marker) → NULL grade via the
-    # degenerate-guard CASE on both sides
-    oracle="""
-    WITH m AS (
-      SELECT doc_id,
-             CAST(length(text) - length(replace(text, ' ', ''))
-                  AS BIGINT) n_spaces,
-             CAST(length(text) AS BIGINT) n_chars,
-             CAST(length(text) - length(replace(text, '.', ''))
-                  AS BIGINT) n_sentences
-      FROM documents),
-    w AS (SELECT doc_id, n_chars - n_spaces AS n_chars_ns,
-                 n_spaces + 1 AS n_words, n_sentences
-          FROM m),
-    a AS (SELECT doc_id, n_chars_ns, n_words, n_sentences,
-                 CAST(CASE WHEN n_sentences > 0
-                      THEN (471 * n_chars_ns * n_sentences
-                            + 50 * n_words * n_words)
-                           // (n_words * n_sentences) - 2143
-                      END AS BIGINT) AS ari_centi
-          FROM w)
-    SELECT doc_id, n_chars_ns, n_words, n_sentences, ari_centi,
-           CASE WHEN ari_centi IS NULL THEN 'unmeasurable'
-                WHEN ari_centi <= 500 THEN 'elementary'
-                WHEN ari_centi <= 800 THEN 'middle_school'
-                WHEN ari_centi <= 1200 THEN 'high_school'
-                WHEN ari_centi <= 1600 THEN 'college'
-                ELSE 'graduate' END AS band
-    FROM a
-    """,
-)
-def docs_ari_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Automated Readability Index per document, integer-exact — the
-    audience/complexity gate in curation recipes next to the
-    quality-score and code-detect gates (readability bands are how
-    child-safe, plain-language, and textbook-style slices get routed,
-    and a band-mix shift between crawls is a content-drift signal):
-    ARI = 4.71·(chars/words) + 0.5·(words/sentences) − 21.43, reported
-    in grade centi-units. Counting is the corpus's own devices — words
-    are split-on-space token counts (1 + space count, empty tokens
-    counted, matching the tokenize device), sentences are '.'
-    occurrences, characters exclude spaces; all three are
-    length-difference counts (replace), no regex. The formula lands on
-    the integer grid through ONE all-positive floor division: the
-    +21.43 shift is applied BEFORE dividing (grade + 21.43 =
-    4.71·C/W + 0.5·W/S is a sum of non-negatives, so the numerator
-    471·C·S + 50·W² is never negative — positivity manufactured
-    algebraically, the same trick as the emb_nearest_centroid_label
-    offset device) and subtracted back after. No sentence marker →
-    grade undefined → NULL + 'unmeasurable' (the r13 guard device).
-    The synthetic corpus carries no punctuation at all, so the driver
-    compare exercises the counting columns plus the unmeasurable
-    branch there (the docs_code_detect always-zero-marker precedent);
-    the measurable branch's cross-engine parity is exercised
-    end-to-end by the crafted-corpus degenerate compares.
-    DECIMAL headroom: 471·C·S stays under 2⁶³ until a single document
-    approaches ~60 GB of text — per-document bound, corpus-independent.
-
-    Scale: a pure per-row whole-stage-codegen projection (no join, no
-    aggregation, no window, no Python) — the docs_code_detect plan
-    shape; bands at 100 TB are exactly as parallel as the scan."""
-    docs = _t(spark, sf_dir, "documents")
-    m = docs.select(
-        "doc_id",
-        (
-            F.length("text")
-            - F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
-        ).cast("long").alias("n_spaces"),
-        F.length("text").cast("long").alias("n_chars"),
-        (
-            F.length("text")
-            - F.length(F.replace(F.col("text"), F.lit("."), F.lit("")))
-        ).cast("long").alias("n_sentences"),
-    )
-    w = m.select(
-        "doc_id",
-        (F.col("n_chars") - F.col("n_spaces")).alias("n_chars_ns"),
-        (F.col("n_spaces") + 1).alias("n_words"),
-        "n_sentences",
-    )
-    a = w.select(
-        "doc_id",
-        "n_chars_ns",
-        "n_words",
-        "n_sentences",
-        F.expr(
-            "CAST(CASE WHEN n_sentences > 0"
-            " THEN (471 * n_chars_ns * n_sentences"
-            " + 50 * n_words * n_words)"
-            " DIV (n_words * n_sentences) - 2143"
-            " END AS BIGINT)"
-        ).alias("ari_centi"),
-    )
-    return a.select(
-        "doc_id",
-        "n_chars_ns",
-        "n_words",
-        "n_sentences",
-        "ari_centi",
-        F.expr(
-            "CASE WHEN ari_centi IS NULL THEN 'unmeasurable'"
-            " WHEN ari_centi <= 500 THEN 'elementary'"
-            " WHEN ari_centi <= 800 THEN 'middle_school'"
-            " WHEN ari_centi <= 1200 THEN 'high_school'"
-            " WHEN ari_centi <= 1600 THEN 'college'"
-            " ELSE 'graduate' END"
-        ).alias("band"),
-    )
 
 
 @staged_query(
@@ -15411,78 +13926,3 @@ def tf_variable_type_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ELSE 'mismatch' END"
         ).alias("status"),
     )
-
-
-@staged_query("stream_norm_buckets_monitor", oracle=_NORM_BUCKETS_SQL)
-def stream_norm_buckets_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vector-norm distribution screen as a STREAM: embedding
-    batches land from the encoder and the per-bucket population updates
-    as they stream through — the live "did the norm scale jump"
-    dashboard next to `stream_source_drift_monitor` (an encoder swap or
-    a lost normalization step moves a norm bucket BEFORE any cosine
-    ranking metric reacts, and catching it at ingest beats re-embedding
-    a corpus). The per-vector norm² fold is STATELESS (the shared
-    `_norm_bucket_grid` quantize+fold applied to each micro-batch);
-    running state is the bucket grid in complete mode — spine-sized
-    (≤ ~45 rows), with count/min/max all monotone merge-able
-    aggregates, no watermark needed (the `stream_zipf_monitor` state
-    class). The share roll-up runs batch-side over the drained grid via
-    the SHARED `_norm_bucket_report` (report logic cannot fork — the
-    r14 monitor template, fifth instance), and the oracle is the batch
-    entry's SQL verbatim: the driver checks the stream≡batch identity
-    itself.
-
-    Scale: each micro-batch contributes map-side partial bucket
-    aggregates — the batch grid shuffle incrementalized; state never
-    grows past the bucket spine, and the drained report is one tiny
-    window."""
-    src = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-    grid = _norm_bucket_grid(src)
-    t = _drain_memory_sink(
-        spark, grid, "stream_norm_buckets_monitor", "complete",
-        source_path=f"{sf_dir}/embeddings.parquet",
-    )
-    return _norm_bucket_report(t)
-
-
-@staged_query("stream_simpson_monitor", oracle=_SIMPSON_SQL)
-def stream_simpson_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-language Simpson concentration screen as a STREAM: crawl
-    shards land and the (lang, term) count state updates as they stream
-    through — the live template-flooding alarm per language slice
-    (Simpson spikes when a boilerplate template floods one lang long
-    before loss curves move; the hapax monitor watches richness LEVEL,
-    this watches CONCENTRATION — the two ends of the same distribution).
-    Running state is the (lang, term) → count table in complete mode:
-    counts are monotone ADD-merges, so micro-batches fold in exactly
-    like batch partials and no watermark is needed (the
-    `stream_zipf_monitor` state class — state bounded by vocabulary ×
-    languages, not stream volume). The roll-up runs batch-side over the
-    drained counts via the SHARED `_simpson_report` (report logic
-    cannot fork — the r14 monitor template, sixth instance), and the
-    oracle is the batch entry's SQL verbatim: the driver checks the
-    stream≡batch identity itself. Tokenization deliberately matches the
-    batch leg exactly (split on space, empty tokens counted).
-
-    Scale: each micro-batch contributes map-side partial (lang, term)
-    counts — the batch vocab shuffle incrementalized; the drained
-    roll-up is a lang-keyed agg over the vocab-sized frame, |langs|
-    rows out."""
-    src = (
-        spark.readStream.schema("doc_id long, text string, lang string")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    tc = (
-        src.select("lang", F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("lang", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    t = _drain_memory_sink(spark, tc, "stream_simpson_monitor", "complete", source_path=f"{sf_dir}/documents.parquet")
-    return _simpson_report(t)

@@ -373,7 +373,7 @@ def minhash_signatures(
     expressions into interpreted higher-order-function lambdas (HOFs are
     CodegenFallback): warm timings were flat (dedup_minhash_lsh 1.79 →
     1.78 s) while FIRST-execution cost exploded while the interpreted
-    eval path JIT-warms (docs_minhash_estimate_error cold sample → 15–25
+    eval path JIT-warms (a minhash-estimate entry's cold sample → 15–25
     s in a verified-quiet window) — the hazard class the codegen-size
     note under ``_hashed_shingles`` documents. One-shot invocations are
     the bench's and any real job's shape, so the aggregate form stays.
@@ -552,27 +552,6 @@ def minhash_lsh_pairs(
     ``_minhash_posting_base`` checkpoint — one corpus scan + one
     tokenize pass per invocation instead of three (see its docstring).
     """
-    pairs, _ = minhash_lsh_pairs_with_sig(
-        df, id_col, text_col, n, num_hashes, bands, threshold, df_max
-    )
-    return pairs
-
-
-def minhash_lsh_pairs_with_sig(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.8,
-    df_max: int | None = 10_000,
-) -> tuple[DataFrame, DataFrame]:
-    """(pairs, sig) — the LSH pair pipeline plus the signature frame it
-    banded, both reading ONE ``_minhash_posting_base`` checkpoint.
-    Consumers that need signatures next to the pairs (the estimator
-    self-eval) reuse ``sig`` instead of re-running the tokenize+aggregate
-    chain on a second corpus pass."""
     base = _minhash_posting_base(df, id_col, text_col, n)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
@@ -635,7 +614,7 @@ def minhash_lsh_pairs_with_sig(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return pairs, sig
+    return pairs
 
 
 _HEX = "0123456789abcdef"

@@ -16,8 +16,8 @@ Remote sources: ``s3a://``/``s3://`` URLs pass through untouched (Spark's
 Hadoop FS reads them natively — the scale path); the reference's documented
 go-getter form ``s3::https://bucket.s3.region.amazonaws.com/key//*.tf``
 (docs/index.md:227-268) is translated to the equivalent ``s3a://`` URL; git
-URLs are fetched to a local temp dir on the driver (``fetch_remote``),
-mirroring the reference's go-getter behavior (utils.go:82;
+URLs are cloned once per process to a local temp dir on the driver
+(``fetch_remote``), mirroring the reference's go-getter behavior (utils.go:82;
 docs/index.md:118-268) without putting a non-distributable step on
 executors. Any other ``scheme::`` forced-getter prefix raises instead of
 silently matching zero local files.
@@ -30,6 +30,7 @@ import os
 import shutil
 import re
 import subprocess
+import threading
 
 from .. import state
 
@@ -38,6 +39,10 @@ _GIT_RE = re.compile(r"^(git::|git@|github\.com/|gitlab\.com/|bitbucket\.org/|ht
 # go-getter "forced getter" prefix, e.g. s3::, git::, hg:: (utils.go:82 via
 # hashicorp/go-getter; documented formats docs/index.md:118-268)
 _FORCED_GETTER_RE = re.compile(r"^([a-z0-9]+)::")
+# (clone URL, ref) -> local clone: repeat discovery of one git source (every
+# watch tick) must see the same paths, not a fresh clone with new ones
+_CLONES: dict[tuple[str, str | None], str] = {}
+_CLONES_LOCK = threading.Lock()  # a background watch tick may discover too
 
 
 def is_dfs_url(p: str) -> bool:
@@ -46,15 +51,6 @@ def is_dfs_url(p: str) -> bool:
 
 def is_git_url(p: str) -> bool:
     return bool(_GIT_RE.match(p))
-
-
-def s3_getter_to_s3a(url: str) -> str:
-    """Translate a go-getter S3 URL (the reference's documented S3 format,
-    docs/index.md:227-268) to an ``s3a://bucket/key`` URL Spark's Hadoop FS
-    reads natively. Query auth params are parsed but dropped here; use
-    ``parse_s3_getter`` to also honor them (the reference passes
-    ``?aws_profile=``/``?region=`` to go-getter per path)."""
-    return parse_s3_getter(url)[0]
 
 
 def parse_s3_getter(url: str) -> tuple[str, dict[str, str]]:
@@ -248,7 +244,8 @@ def _split_git_subpath(raw: str) -> tuple[str, str | None]:
 
 def fetch_remote(url: str) -> tuple[str, str | None]:
     """Clone a git URL (optionally ``?ref=`` pinned, ``//sub/glob`` suffixed)
-    to a temp dir; returns (local_dir, sub_glob or None).
+    to a temp dir, once per (repository, ref) per process; returns
+    (local_dir, sub_glob or None).
 
     Driver-side only — mirrors go-getter's git support (reference
     docs/index.md:141-200). Requires a ``git`` binary; raises RuntimeError
@@ -261,6 +258,15 @@ def fetch_remote(url: str) -> tuple[str, str | None]:
     raw, sub = _split_git_subpath(raw)
     if "://" not in raw and not raw.startswith("git@"):
         raw = "https://" + raw
+    with _CLONES_LOCK:
+        dest = _CLONES.get((raw, ref))
+        if dest is None:
+            dest = _CLONES[raw, ref] = _clone(url, raw, ref)
+    return dest, sub
+
+
+def _clone(url: str, raw: str, ref: str | None) -> str:
+    """``git clone`` ``raw`` (at ``ref``) into a fresh temp dir."""
     dest = state.temp_root("tf_git_")
     try:
         cmd = ["git", "clone", "--depth", "1"]
@@ -277,7 +283,7 @@ def fetch_remote(url: str) -> tuple[str, str | None]:
             raise subprocess.CalledProcessError(r.returncode, cmd, r.stdout, r.stderr)
     except (OSError, subprocess.SubprocessError) as e:
         raise RuntimeError(f"git fetch failed for {url}: {e}") from e
-    return dest, sub
+    return dest
 
 
 def file_size(path: str) -> int:

@@ -119,13 +119,16 @@ class TerraformWatcher:
             time.sleep(interval)
 
 
-def canonical_batch_writer(store_path: str):
+def canonical_batch_writer(store_path: str, checkpoint: str):
     """foreachBatch callable appending wide rows to the canonical store,
-    skipping replayed micro-batch ids (see ``watch_to_canonical``). The
-    batch-id marker needs a POSIX-atomic rename, so it is kept only for
-    local store paths; an object-store path falls back to at-least-once
-    (use a transactional table format there)."""
-    marker = None if "://" in store_path else os.path.join(store_path, "_last_committed_batch")
+    skipping replayed micro-batch ids (see ``watch_to_canonical``). Batch
+    ids count per checkpoint, so the last-written id is recorded inside
+    the stream's ``checkpoint``: a second stream, or a reset checkpoint,
+    into the same store starts from its own ids. The marker needs a
+    POSIX-atomic rename, so it is kept only for a local checkpoint; an
+    object-store one falls back to at-least-once (use a transactional
+    table format there)."""
+    marker = None if "://" in checkpoint else os.path.join(checkpoint, "_last_committed_batch")
 
     def _append_once(batch: DataFrame, batch_id: int) -> None:
         if marker is not None:
@@ -137,6 +140,7 @@ def canonical_batch_writer(store_path: str):
                 pass  # first batch, or marker unreadable → write (at-least-once)
         batch.write.mode("append").partitionBy("tf_table").parquet(store_path)
         if marker is not None:
+            os.makedirs(checkpoint, exist_ok=True)
             tmp = marker + ".tmp"
             with open(tmp, "w") as f:
                 f.write(str(batch_id))
@@ -162,8 +166,8 @@ def watch_to_canonical(
     foreachBatch is at-least-once: a micro-batch whose write succeeded but
     whose checkpoint commit failed is REPLAYED on restart, so a blind
     append would duplicate rows. The writer records the last fully-written
-    batch id in a ``_last_committed_batch`` marker (leading underscore →
-    invisible to parquet scans) and skips replayed ids. Remaining gap,
+    batch id in a ``_last_committed_batch`` marker inside the checkpoint
+    (whose ids it counts) and skips replayed ids. Remaining gap,
     stated honestly: a batch that fails MID-write leaves a partial append
     that the retry then re-writes — closing that needs a transactional
     table format, which plain parquet is not; the marker closes the common
@@ -171,10 +175,11 @@ def watch_to_canonical(
 
     Returns the StreamingQuery.
     """
+    checkpoint = checkpoint or store_path + "/_checkpoint"
     stream = watch_terraform_blocks(spark, config_dir, kind=kind)
-    writer = stream.writeStream.option(
-        "checkpointLocation", checkpoint or store_path + "/_checkpoint"
-    ).foreachBatch(canonical_batch_writer(store_path))
+    writer = stream.writeStream.option("checkpointLocation", checkpoint).foreachBatch(
+        canonical_batch_writer(store_path, checkpoint)
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

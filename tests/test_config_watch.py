@@ -152,7 +152,7 @@ def test_canonical_batch_writer_skips_replayed_batch(spark, tmp_path):
 
     store = str(tmp_path / "store")
     batch = spark.createDataFrame([("a", "terraform_resource")], "path string, tf_table string")
-    write = canonical_batch_writer(store)
+    write = canonical_batch_writer(store, str(tmp_path / "ckpt"))
     write(batch, 0)
     write(batch, 0)  # replay: must be skipped
     assert spark.read.parquet(store).count() == 1

@@ -14,7 +14,7 @@ from steampipe_plugin_terraform_spark.sources.discover import (
     expand_glob,
     is_dfs_url,
     is_git_url,
-    s3_getter_to_s3a,
+    parse_s3_getter,
 )
 
 
@@ -61,14 +61,14 @@ from steampipe_plugin_terraform_spark.sources.discover import (
     ],
 )
 def test_s3_getter_to_s3a(url, expected):
-    assert s3_getter_to_s3a(url) == expected
+    assert parse_s3_getter(url)[0] == expected
     # the discovery router must hand it straight to the Spark reader
     assert expand_glob(url) == [expected]
 
 
 def test_s3_getter_rejects_garbage():
     with pytest.raises(ValueError):
-        s3_getter_to_s3a("s3::ftp://nope")
+        parse_s3_getter("s3::ftp://nope")
 
 
 def test_unknown_forced_getter_raises_not_empty():

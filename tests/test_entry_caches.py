@@ -104,44 +104,24 @@ def test_partitioned_handle_survives_other_corpus_invocation(spark, monkeypatch)
     assert _rows(handle_a) == expected_a
 
 
-def _assert_restart_is_noop(spark, name, files_glob, kind, data):
+def test_foreachbatch_restart_is_noop(spark):
     """Restarting an availableNow drain on the same checkpoint must not
     rewrite its sink (committed offsets → no new batches) and must return
     identical rows — the exactly-once restart contract."""
-    first = _rows(_entry(name)(spark, SF_A))
-    sink, _ = catalog._sink_and_checkpoint(spark, SF_A, kind, data)
-    files = sorted(glob.glob(f"{sink}/{files_glob}"))
+    state.clear(spark, "febatch_sink")
+    run = QUERIES["stream_foreachbatch_sink"]
+    first = _rows(run(spark, SF_A))
+    sink, _ = state.get(
+        spark, "febatch_sink", state.corpus_digest(SF_A),
+        lambda: pytest.fail("the first drain must have built its sink"),
+    )
+    pattern = f"{sink}/batch_id=*/*.parquet"
+    files = sorted(glob.glob(pattern))
     assert files, "the first drain must write to the sink"
     mtimes = {f: os.path.getmtime(f) for f in files}
-    second = _rows(_entry(name)(spark, SF_A))
-    assert first == second
-    assert sorted(glob.glob(f"{sink}/{files_glob}")) == files, "restart must not add files"
+    assert _rows(run(spark, SF_A)) == first
+    assert sorted(glob.glob(pattern)) == files, "restart must not add files"
     assert all(os.path.getmtime(f) == mtimes[f] for f in files), "restart must not rewrite"
-    return first
-
-
-def test_foreachbatch_restart_is_noop(spark):
-    state.clear(spark, "febatch_sink")
-    _assert_restart_is_noop(
-        spark, "stream_foreachbatch_sink", "batch_id=*/*.parquet", "febatch_sink", "data"
-    )
-
-
-def test_cdc_upsert_restart_is_noop(spark):
-    """stream_cdc_last_value: a repeat invocation writes NO new state
-    versions, rewrites none of the existing ones, and serves identical rows."""
-    state.clear(spark, "cdc_upsert")
-    _assert_restart_is_noop(spark, "stream_cdc_last_value", "v=*/*.parquet", "cdc_upsert", "state")
-
-
-def test_stream_incremental_dedup_restart_noop_and_batch_identity(spark):
-    """The streaming ingest-dedup leg restarts as a no-op, and its drained
-    verdict set equals the one-shot batch entry's result row for row (the
-    frozen store makes every new doc's probe batching-independent)."""
-    first = _assert_restart_is_noop(
-        spark, "stream_incremental_dedup", "batch_id=*/*.parquet", "stream_dedup", "verdicts"
-    )
-    assert first == _rows(QUERIES["dedup_incremental_batch"](spark, SF_A))
 
 
 def test_table_reads_are_plan_cached_never_data_cached(spark):
@@ -213,8 +193,6 @@ def test_registry_holds_nothing_in_the_cache_manager(spark):
         "emb_centroid_drift",
         "dedup_minhash_lsh",
         "stream_foreachbatch_sink",
-        "stream_cdc_last_value",
-        "stream_incremental_dedup",
     ]
     for name in state_entries:
         _entry(name)(spark, SF_A)

@@ -9,6 +9,7 @@ import subprocess
 import pytest
 
 from steampipe_plugin_terraform_spark.sources.discover import (
+    discover_files,
     expand_glob,
     fetch_remote,
     is_git_url,
@@ -80,3 +81,18 @@ def test_engine_end_to_end_over_git_source(spark, bare_repo):
     rows = eng.table("terraform_resource").select("name", "type").collect()
     got = {(r["type"], r["name"]) for r in rows}
     assert got == {("aws_instance", "one"), ("aws_instance", "two")}
+
+
+def test_repeat_discovery_reuses_one_clone(spark, bare_repo):
+    """A git source is cloned once per process: repeat discovery returns
+    the same paths, so a watch tick over an unchanged remote sees no
+    change and refreshes nothing."""
+    from steampipe_plugin_terraform_spark import TerraformEngine
+    from steampipe_plugin_terraform_spark.streaming.watch import TerraformWatcher
+
+    url = bare_repo["url"] + "//*.tf"
+    first = discover_files(config_paths=[url])
+    assert len(first) == 2
+    assert discover_files(config_paths=[url]) == first
+    w = TerraformWatcher(TerraformEngine(spark, config_paths=[url]))
+    assert w.poll() == set()

@@ -1074,31 +1074,6 @@ def test_pq_recall_no_cartesian_single_cogroup(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
-def test_minhash_estimate_error_merge_hinted_no_broadcast_subtrees(spark):
-    # the minhash-family join rule: every O(N)-side join (bands, verify
-    # sets, and this entry's two signature joins) is merge-hinted — the
-    # only broadcasts allowed are the tiny LeftOuter overcap-flag joins
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_minhash_estimate_error"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    bhj = [l for l in plan.splitlines() if "BroadcastHashJoin" in l]
-    assert len(bhj) <= 2 and all("LeftOuter" in l for l in bhj)
-
-
-def test_stream_bitmap_distinct_sink_sized_tail(spark):
-    # the returned frame aggregates the DRAINED word table (bounded by
-    # #types × ceil(max_id/62) rows) — keyed agg, no parquet re-scan of
-    # the source, no join, no single-partition stage
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_bitmap_distinct"](spark, SF))
-    assert plan.count("Scan parquet") == 0
-    assert "Join" not in plan
-    assert "SinglePartition" not in plan
-
-
 def test_undeclared_references_broadcast_anti_joins(spark):
     # dangling = token scan ∖ declared names: every anti-join must
     # broadcast its metadata-sized declaration side (Spark may split the
@@ -1266,38 +1241,6 @@ def test_moved_blocks_audit_shuffle_free(spark):
         assert node not in plan
 
 
-def test_stream_benford_report_over_sink_only(spark):
-    # the report ranks the DRAINED digit-count sink (digit-space-sized),
-    # never re-scans events; the share window is type-keyed
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_benford_monitor"](spark, SF))
-    assert plan.count("Scan parquet") == 0
-    assert "SinglePartition" not in plan
-    assert "Join" not in plan
-
-
-def test_tfidf_keywords_single_scan_no_join(spark):
-    # ONE corpus scan pruned to (doc_id, text): df comes from a
-    # term-keyed window over the tf frame, NOT a groupBy-join-back
-    # (which made Catalyst re-scan and re-tokenize the corpus — the
-    # two-FileScan plan this pin forbids); per-doc top-3 must plan a
-    # WindowGroupLimit so partitions prune before the shuffle
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_tfidf_keywords"](spark, SF))
-    assert "WindowGroupLimit" in plan
-    assert "Join" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = {c.split("#")[0] for c in scans[0].split(",") if c}
-    assert cols == {"doc_id", "text"}, cols
-
-
 def test_alias_orphans_single_broadcast_join(spark):
     # resource side vs O(files) aggregated provider spine: one broadcast
     # resolution join, everything else per-row projection
@@ -1321,17 +1264,6 @@ def test_ivf_delete_prunes_partitions_and_pushes_tombstone(spark):
     assert any("bucket" in l and "IN" in l for l in scan_lines), scan_lines
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert any("vec_id" in l for l in pushed), pushed
-
-
-def test_cdc_last_value_serves_from_state_only(spark):
-    # the returned frame reads ONE state version (|users| rows), never
-    # the event stream: one parquet scan, no join, no window re-rank
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_cdc_last_value"](spark, SF))
-    assert plan.count("FileScan parquet") == 1
-    assert "events.parquet" not in plan
-    assert "Join" not in plan and "Window" not in plan
 
 
 def test_knn_label_vote_broadcasts_topk_side(spark):
@@ -1442,37 +1374,6 @@ def test_markov_stationary_localized_broadcast_iterations(spark):
     )
 
 
-def test_stream_overdispersion_keyed_state_report_over_sink(spark):
-    # complete-mode (type, hour) keyed state; the returned report runs
-    # over the DRAINED sink only — keyed aggs, one 1-row scalar spine
-    # attach (BNLJ), no fact re-scan in the report plan
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(
-        STAGED_QUERIES["stream_overdispersion_monitor"](spark, SF)
-    )
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    # r16: the spine attach folded into the report aggregate (see the
-    # batch pin) — no BNLJ left
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "FileScan parquet" not in plan  # report reads the memory sink
-    assert "BatchEvalPython" not in plan
-
-
-def test_vocab_growth_broadcast_cuts_no_corpus_self_join(spark):
-    # the only non-equi joins are against the broadcast 4-row cut frame
-    # (vocab × 4 and doc_id × 4 — never corpus × corpus); term explode +
-    # one term-keyed agg; trigram building is JVM-side (no Python)
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_vocab_growth"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    # two cut attaches (vocab side + doc-count side), both broadcast
-    assert plan.count("BroadcastNestedLoopJoin") == 2
-
-
 def test_ivf_compaction_pruned_probe_no_tombstone_filter(spark):
     # the compacted store serves with static bucket pruning and NO
     # tombstone predicate — compaction converted the per-probe filter
@@ -1576,98 +1477,6 @@ def test_sign_hamming_broadcast_query_side_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_simpson_diversity_two_keyed_aggs_no_join(spark):
-    # explode → (lang, term) partial agg → lang roll-up: no join
-    # anywhere, no Python, scan pruned to (lang, text)
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_simpson_diversity"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin",
-                 "BroadcastNestedLoopJoin"):
-        assert node not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = [c.split("#")[0] for c in scans[0].split(",") if c]
-    assert set(cols) <= {"lang", "text"}, cols
-
-
-def test_stream_incremental_dedup_serves_from_sink_scan(spark):
-    # the returned frame is a PLAIN scan of the verdict sink (4 columns,
-    # no join, no Python) — every probe join ran at ingest inside
-    # foreachBatch, whose plan is the batch entry's `_incremental_probe`
-    # (pinned by test_incremental_batch_probes_store_no_corpus_retokenize
-    # — one shared definition, so this pin cannot silently diverge)
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_incremental_dedup"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin",
-                 "BroadcastNestedLoopJoin"):
-        assert node not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = [c.split("#")[0] for c in scans[0].split(",") if c]
-    # batch_id is the sink's partition directory column
-    assert set(cols) <= {
-        "new_id", "matched_id", "jacc_bp", "status", "batch_id"
-    }, cols
-
-
-def test_zipf_slope_spectrum_aggs_no_window_no_sort(spark):
-    # two keyed aggs (vocab, then spectrum) and a scalar fold — NO
-    # window, NO sort, NO join: the spectrum design exists precisely to
-    # avoid the global rank-frequency ordering (the rank-tertile trap)
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_zipf_slope"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "Window" not in plan
-    assert "SortMergeJoin" not in plan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 1
-    cols = [c.split("#")[0] for c in scans[0].split(",") if c]
-    assert set(cols) <= {"text"}, cols
-
-
-def test_source_drift_chi2_broadcast_spine_no_cartesian(spark):
-    # the margin spine is two broadcast crosses of post-agg tiny frames
-    # (BNLJ, never CartesianProduct) plus a broadcast left join pricing
-    # absent cells; one pruned scan feeds the localCheckpointed grid
-    # (4 reuses — the measured break-even), so the FINAL plan carries
-    # no FileScan; no Python, no sort-merge
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_source_drift_chi2"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-    assert not re.findall(r"FileScan parquet", plan)
-
-
-def test_stream_zipf_monitor_drained_report_shape(spark):
-    # the drained (word -> count) state feeds the SHARED spectrum
-    # report: no cartesian, no Python, no window — same pins as the
-    # batch entry's report stage
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_zipf_monitor"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "Window" not in plan
-
-
 def test_cov_gram_mapinpandas_pruned_scan(spark):
     # the only corpus-sized work in emb_cov_top_eigen: the Gram pass is
     # ONE Arrow-batched mapInPandas (sanctioned dense-linear-algebra
@@ -1692,33 +1501,6 @@ def test_cov_gram_mapinpandas_pruned_scan(spark):
     assert "BatchEvalPython" not in splan and "MapInPandas" not in splan
 
 
-def test_stream_source_drift_drained_report_shape(spark):
-    # the drained spine-sized grid feeds the SHARED drift report: no
-    # cartesian, no Python, no sort-merge — same pins as the batch
-    # entry's report stage
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_source_drift_monitor"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_hapax_legomena_vocab_shuffle_then_global_agg(spark):
-    # ONE vocabulary-keyed shuffle (map-side combinable) + ONE global
-    # roll-up — the docs_unigram_logprob shuffle shape; nothing joins
-    # and nothing data-sized leaves the aggregation pipeline
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_hapax_legomena"](spark, SF))
-    assert plan.count("Exchange SinglePartition") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Generate" in plan  # the tokenize explode
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython", "Window"):
-        assert node not in plan
-
-
 def test_sign_bit_balance_partial_agg_64_keys(spark):
     # posexplode feeding a 64-key grouped count: exactly one key shuffle
     # (partial aggregation collapses each partition to <= 64 rows first)
@@ -1736,23 +1518,6 @@ def test_sign_bit_balance_partial_agg_64_keys(spark):
         assert node not in plan
 
 
-def test_code_detect_pure_projection(spark):
-    # the classifier is a per-row projection: no aggregate, no window,
-    # no explode, no join — everything inside whole-stage codegen
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_code_detect"](spark, SF))
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange SinglePartition" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython", "Window", "Generate", "HashAggregate",
-                 "SortAggregate"):
-        assert node not in plan
-    # column pruning reaches the scan: the classifier touches only
-    # doc_id + text, so lang/source/n_chars must not be read
-    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
-
-
 def test_naming_convention_shuffle_free(spark):
     # resource metadata lint: one projection over the parsed wide frame
     # — no exchange, no join (the MapInPandas is the HCL parse itself)
@@ -1763,19 +1528,6 @@ def test_naming_convention_shuffle_free(spark):
     for node in ("SortMergeJoin", "BroadcastHashJoin",
                  "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert node not in plan
-
-
-def test_stream_hapax_monitor_drained_report_shape(spark):
-    # the drained (token -> count) state feeds the SHARED richness
-    # roll-up: no cartesian, no Python, no window, one global agg —
-    # same pins as the batch entry's report stage
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_hapax_monitor"](spark, SF))
-    assert plan.count("Exchange SinglePartition") == 1
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "Window" not in plan
 
 
 def test_norm_buckets_fold_no_shuffle_before_spine_agg(spark):
@@ -1795,39 +1547,6 @@ def test_norm_buckets_fold_no_shuffle_before_spine_agg(spark):
     assert "ReadSchema: struct<embedding:array<float>>" in plan
 
 
-def test_code_mix_two_spine_sized_exchanges(spark):
-    # classifier = per-row projection; exchange #1 keys the
-    # (lang, looks_code) grid, exchange #2 re-keys the spine-sized grid
-    # on lang for the shared report — both carry <= |langs|x2 rows
-    # after partial agg; no window, no join, no single-partition stage;
-    # the scan prunes to text+lang (doc_id unused by the roll-up)
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_code_mix"](spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 2
-    assert "Exchange SinglePartition" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython", "Window", "Generate"):
-        assert node not in plan
-    assert "ReadSchema: struct<text:string,lang:string>" in plan
-
-
-def test_ari_readability_pure_projection(spark):
-    # the docs_code_detect plan shape: a per-row whole-stage-codegen
-    # projection — no aggregate, no window, no Python; column pruning
-    # reaches the scan (doc_id + text only)
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["docs_ari_readability"](spark, SF))
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange SinglePartition" not in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython", "Window", "Generate", "HashAggregate",
-                 "SortAggregate"):
-        assert node not in plan
-    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
-
-
 def test_variable_type_mismatch_shuffle_free(spark):
     # settings-audit plan shape: one projection over the parsed wide
     # frame — no exchange, no join (the MapInPandas is the HCL parse)
@@ -1837,46 +1556,6 @@ def test_variable_type_mismatch_shuffle_free(spark):
     assert "Exchange" not in plan
     for node in ("SortMergeJoin", "BroadcastHashJoin",
                  "BroadcastNestedLoopJoin", "CartesianProduct"):
-        assert node not in plan
-
-
-def test_stream_code_mix_monitor_drained_report_shape(spark):
-    # the drained (lang, looks_code) grid feeds the SHARED report: one
-    # lang-keyed exchange over the spine-sized sink table — no
-    # cartesian, no Python, no window, no single-partition stage
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_code_mix_monitor"](spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1
-    for node in ("CartesianProduct", "BatchEvalPython", "Window",
-                 "Exchange SinglePartition"):
-        assert node not in plan
-
-
-def test_stream_norm_buckets_monitor_drained_report_shape(spark):
-    # the drained bucket grid feeds the SHARED share report: one
-    # single-partition window over the <= ~45-row sink table — no
-    # cartesian, no Python, no join, no re-aggregation
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_norm_buckets_monitor"](spark, SF))
-    assert plan.count("Exchange SinglePartition") == 1
-    assert plan.count("Window") == 1
-    for node in ("CartesianProduct", "BatchEvalPython", "Generate",
-                 "SortMergeJoin", "BroadcastHashJoin"):
-        assert node not in plan
-
-
-def test_stream_simpson_monitor_drained_report_shape(spark):
-    # the drained (lang, term) count state feeds the SHARED per-lang
-    # roll-up: one lang-keyed exchange, no window, no single-partition
-    # stage, no cartesian, no Python
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["stream_simpson_monitor"](spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1
-    for node in ("CartesianProduct", "BatchEvalPython", "Window",
-                 "Exchange SinglePartition", "SortMergeJoin"):
         assert node not in plan
 
 
@@ -1980,16 +1659,10 @@ def test_minhash_family_reads_one_posting_checkpoint(spark):
     statically. The shared _minhash_posting_base localCheckpoint now
     serves signature AND verify sets: the declared query plan reads the
     materialized rows only — zero parquet scans (the one scan+tokenize
-    lives in the checkpoint build job), and the estimator self-eval
-    reuses the same base instead of a second minhash_signatures chain."""
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    for plan in (
-        _plan(spark, "dedup_minhash_lsh"),
-        _plan_df(STAGED_QUERIES["docs_minhash_estimate_error"](spark, SF)),
-    ):
-        assert "ExistingRDD" in plan
-        assert "Scan parquet" not in plan
+    lives in the checkpoint build job)."""
+    plan = _plan(spark, "dedup_minhash_lsh")
+    assert "ExistingRDD" in plan
+    assert "Scan parquet" not in plan
 
 
 def test_stream_state_partitions_sized_by_volume():

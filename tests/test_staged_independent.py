@@ -5,10 +5,10 @@ that does NOT share machinery with its DuckDB oracle. Three kinds here:
 - pure-Python references (chi2, BPE pairs, streaming top-k closure):
   the statistic recomputed from the parquet with Python ints /
   collections.Counter — no Spark expressions, no SQL, exact arithmetic;
-- internal-consistency properties (minhash estimate error, centroid
-  drift, PQ recall): relations between output columns that must hold by
-  construction, recomputed in Python from the entry's own rows;
-- engine identities (stream_bitmap_distinct ≡ the batch operator).
+- internal-consistency properties (centroid drift, PQ recall):
+  relations between output columns that must hold by construction,
+  recomputed in Python from the entry's own rows;
+- engine identities (stream_state_serial_watch ≡ the batch answer).
 
 All run at sf0.001 where a full pure-Python replay is cheap.
 """
@@ -128,20 +128,6 @@ def test_stream_hourly_topk_pure_python_reference(spark):
     assert got == expected
 
 
-def test_minhash_estimate_error_internal_consistency(spark):
-    """docs_minhash_estimate_error: with 8 signature components the
-    estimate is quantized to multiples of 1250; the error column must
-    equal |est - exact| row by row; exact Jaccard stays in [0, 10000].
-    All recomputed from the entry's own rows with Python ints."""
-    rows = _staged(spark, "docs_minhash_estimate_error").collect()
-    assert rows, "LSH banding produced no candidate pairs at sf0.001"
-    for r in rows:
-        assert r["est_x1e4"] % 1250 == 0 and 0 <= r["est_x1e4"] <= 10000
-        assert 0 <= r["jaccard_x1e4"] <= 10000
-        assert r["err_x1e4"] == abs(r["est_x1e4"] - r["jaccard_x1e4"])
-        assert r["id_a"] < r["id_b"]
-
-
 def test_pq_recall_granularity_and_bounds(spark):
     """emb_pq_recall: the ground-truth side is 10 queries x top-5 = 50
     pairs, so recall_x1e4 = hits * 10000 // 50 is an exact multiple of
@@ -151,28 +137,6 @@ def test_pq_recall_granularity_and_bounds(spark):
     r = row[0]
     assert 0 <= r["recall_x1e4"] <= 10000 and r["recall_x1e4"] % 200 == 0
     assert 0 <= r["n_queries_with_hits"] <= 10
-
-
-def test_stream_bitmap_distinct_equals_batch_operator(spark):
-    """stream_bitmap_distinct (micro-batch OR-merge drain) must land on
-    exactly what the batch operator computes over the same events — the
-    mergeability identity, checked engine-side rather than via the
-    COUNT(DISTINCT) oracle."""
-    from steampipe_plugin_terraform_spark.operators import sketch
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        "event_type", "user_id"
-    )
-    batch = {
-        r["event_type"]: r["n_distinct"]
-        for r in sketch.bitmap_distinct(ev, ["event_type"], "user_id").collect()
-    }
-    streamed = _staged(spark, "stream_bitmap_distinct").collect()
-    assert {r["event_type"]: r["n_users"] for r in streamed} == batch
-    # n_words is the bounded-state claim: ceil-ish word count per type,
-    # never more than distinct users
-    for r in streamed:
-        assert 0 < r["n_words"] <= r["n_users"]
 
 
 def test_centroid_drift_internal_consistency(spark):
@@ -409,7 +373,7 @@ def test_stream_state_serial_equals_batch(spark):
     """stream_state_serial_watch ≡ the same aggregation computed batch
     over stdlib-json-parsed headers: the streaming max/count state
     machine must converge to the batch answer (the engine-identity
-    pattern, like stream_bitmap_distinct)."""
+    pattern)."""
     import json
     import pathlib
 
@@ -875,71 +839,6 @@ def test_moved_blocks_pure_python_reference(spark):
     assert got == want
 
 
-def _benford_dev_e6(counts):
-    """Python-int Benford report from a digit Counter (shared by the
-    batch and stream replays; constants re-derived from math.log10, NOT
-    copied from the catalog literals)."""
-    import math
-
-    total = sum(counts.values())
-    out = {}
-    for d, n in counts.items():
-        bf = math.floor(math.log10(1 + 1 / d) * 1_000_000)
-        out[d] = (n, n * 1_000_000 // total, bf, n * 1_000_000 // total - bf)
-    return out
-
-
-def test_stream_benford_equals_batch_definition(spark):
-    """stream_benford_monitor vs the same per-type Python replay over
-    the whole events table — the stream≡batch identity, plus the
-    re-derived-constants cross-check."""
-    import math
-
-    t = pq.read_table(
-        f"{SF_DIR}/events.parquet", columns=["event_type", "value"]
-    )
-    per_type = collections.defaultdict(collections.Counter)
-    for et, v in zip(t["event_type"].to_pylist(), t["value"].to_pylist()):
-        per_type[et][int(str(math.floor(v * 100 + 0.5))[0])] += 1
-    want = {}
-    for et, counts in per_type.items():
-        for d, (n, _obs, _bf, dev) in _benford_dev_e6(counts).items():
-            want[(et, d)] = (n, dev)
-    got = {
-        (r["event_type"], r["digit"]): (r["n"], r["dev_e6"])
-        for r in _staged(spark, "stream_benford_monitor").collect()
-    }
-    assert got == want
-
-
-def test_tfidf_keywords_pure_python_reference(spark):
-    """docs_tfidf_keywords vs a from-scratch Python replay of the whole
-    pipeline: tokenize, tf, df, integer score, (score desc, term asc)
-    top-3 — exact arithmetic, no Spark expressions, no SQL."""
-    import re
-
-    t = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
-    word = re.compile(r"^[A-Za-z0-9]+$")
-    tf = collections.Counter()
-    for did, text in zip(t["doc_id"].to_pylist(), t["text"].to_pylist()):
-        for w in text.split(" "):
-            if word.match(w):
-                tf[(did, w.lower())] += 1
-    df = collections.Counter(term for (_d, term) in tf)
-    per_doc = collections.defaultdict(list)
-    for (did, term), f in tf.items():
-        per_doc[did].append((-(f * 1_000_000 // df[term]), term, f))
-    want = set()
-    for did, rows in per_doc.items():
-        for rnk, (negscore, term, f) in enumerate(sorted(rows)[:3], start=1):
-            want.add((did, term, f, df[term], -negscore, rnk))
-    got = {
-        (r["doc_id"], r["term"], r["tf"], r["df"], r["score_e6"], r["rnk"])
-        for r in _staged(spark, "docs_tfidf_keywords").collect()
-    }
-    assert got == want
-
-
 def test_provider_alias_orphans_pure_python_reference(spark):
     """tf_provider_alias_orphans vs a regex scanner over the corpus:
     provider blocks re-parsed with the crude extractor, resource routing
@@ -1017,37 +916,6 @@ def test_ivf_delete_commutes_with_probe(spark):
     }
     assert not {g for g in got if g[1] % 8 == 3}
     assert got == want
-
-
-def test_cdc_last_value_pure_python_reference(spark):
-    """stream_cdc_last_value vs a Python replay of last-write-wins under
-    the (ts, event_id) total order — the any-number-of-merges
-    convergence target, checked against the drained serving table."""
-    import math
-
-    t = pq.read_table(
-        f"{SF_DIR}/events.parquet",
-        columns=["user_id", "ts", "event_type", "event_id", "value"],
-    ).to_pandas()
-    want = {}
-    for row in t.itertuples(index=False):
-        key = row.user_id
-        cand = (row.ts, row.event_id, row.event_type, row.value)
-        if key not in want or (cand[0], cand[1]) > (want[key][0], want[key][1]):
-            want[key] = cand
-    expected = {
-        u: (ts.to_pydatetime(), et, math.floor(v * 100 + 0.5))
-        for u, (ts, _eid, et, v) in want.items()
-    }
-    got = {
-        r["user_id"]: (
-            r["last_ts"].replace(tzinfo=None),
-            r["last_type"],
-            r["last_value_cents"],
-        )
-        for r in _staged(spark, "stream_cdc_last_value").collect()
-    }
-    assert got == expected
 
 
 def test_knn_label_vote_matches_promoted_ranking(spark):
@@ -1339,62 +1207,6 @@ def test_markov_stationary_pure_python_reference(spark):
         for r in _staged(spark, "q_events_markov_stationary").collect()
     }
     assert got == pi
-
-
-def test_stream_overdispersion_matches_batch(spark):
-    """stream_overdispersion_monitor ≡ q_events_overdispersion row for
-    row — the stream≡batch identity checked directly (the shared oracle
-    checks it against DuckDB; this checks the two Spark legs against
-    each other, so a drift in either leg's streaming/batch plumbing
-    surfaces even if both still match some oracle)."""
-    stream_rows = {
-        r["event_type"]: (r["n_events"], r["n_hours"], r["dispersion_e3"], r["label"])
-        for r in _staged(spark, "stream_overdispersion_monitor").collect()
-    }
-    batch_rows = {
-        r["event_type"]: (r["n_events"], r["n_hours"], r["dispersion_e3"], r["label"])
-        for r in _staged(spark, "q_events_overdispersion").collect()
-    }
-    assert stream_rows == batch_rows
-
-
-def test_vocab_growth_pure_python_reference(spark):
-    """docs_vocab_growth vs a Python replay: trigram first-occurrence
-    map, value-range quarter cuts, exact per-cut doc and vocab counts —
-    plus the Heaps sanity that the curve is non-decreasing."""
-    import re as _re
-
-    t = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-    ).to_pandas()
-    alnum = _re.compile(r"^[A-Za-z0-9]+$")
-    first: dict = {}
-    ids = []
-    for did, text in zip(t["doc_id"], t["text"]):
-        did = int(did)
-        ids.append(did)
-        ws = text.split(" ")
-        for i in range(len(ws) - 2):
-            if alnum.match(ws[i]) and alnum.match(ws[i + 1]) and alnum.match(ws[i + 2]):
-                term = f"{ws[i].lower()} {ws[i+1].lower()} {ws[i+2].lower()}"
-                if term not in first or did < first[term]:
-                    first[term] = did
-    lo, hi = min(ids), max(ids)
-    want = {}
-    for k in (1, 2, 3, 4):
-        cut = lo + ((hi - lo + 1) * k) // 4 - 1
-        want[k] = (
-            cut,
-            sum(1 for d in ids if d <= cut),
-            sum(1 for fd in first.values() if fd <= cut),
-        )
-    got = {
-        r["qtr"]: (r["cut_id"], r["n_docs"], r["vocab_size"])
-        for r in _staged(spark, "docs_vocab_growth").collect()
-    }
-    assert got == want
-    sizes = [got[k][2] for k in (1, 2, 3, 4)]
-    assert sizes == sorted(sizes)
 
 
 def test_ivf_compaction_identity_and_erasure(spark):
@@ -1696,167 +1508,6 @@ def test_sign_hamming_numpy_replay_and_scale_invariance(spark):
     assert got == want
 
 
-def test_simpson_diversity_pure_python_and_uniform_identity(spark):
-    """docs_simpson_diversity two ways: (a) exact bigint replay from the
-    parquet with collections.Counter — token counts, unbiased pair
-    algebra, both floor divisions; (b) the analytic identity λ of an
-    exactly-uniform distribution (every term appearing m times over v
-    terms) is (m−1)/(N−1) — checked on the replayed counters for any
-    language that happens to be uniform, and on a constructed uniform
-    counter to pin the formula itself."""
-    t = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["lang", "text"]
-    ).to_pandas()
-    counts: dict = {}
-    for lang, text in zip(t["lang"], t["text"]):
-        c = counts.setdefault(lang, collections.Counter())
-        c.update(text.split(" "))
-    want = {}
-    for lang, c in counts.items():
-        nn = sum(c.values())
-        pairs = sum(n * (n - 1) for n in c.values())
-        simpson = (
-            pairs * 1000000 // (nn * (nn - 1)) if nn > 1 else None
-        )
-        top = max(c.values()) * 10000 // nn if nn > 0 else None
-        want[lang] = (nn, len(c), simpson, top)
-    got = {
-        r["lang"]: (
-            r["n_tokens"], r["vocab"], r["simpson_e6"], r["top_share_bp"]
-        )
-        for r in _staged(spark, "docs_simpson_diversity").collect()
-    }
-    assert got == want
-    # formula pin: uniform m=3, v=7 → λ = (m−1)/(N−1) = 2/20
-    uni = collections.Counter({f"t{i}": 3 for i in range(7)})
-    nn = sum(uni.values())
-    pairs = sum(n * (n - 1) for n in uni.values())
-    assert pairs * 1000000 // (nn * (nn - 1)) == 2 * 1000000 // 20
-
-
-def test_zipf_slope_pure_python_and_bucket_boundaries(spark):
-    """docs_zipf_slope two ways: (a) exact bigint replay — whitespace
-    Counter → frequency spectrum → bit_length log₂ buckets → integer
-    least squares with the sign device; (b) the binary-string-length
-    bucket device pinned against int.bit_length at every power-of-two
-    boundary up to 2⁶² (the exact points a float log2 could misbucket
-    by 1 ulp)."""
-    t = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["text"])
-    words: collections.Counter = collections.Counter()
-    for txt in t["text"].to_pylist():
-        for w in (txt or "").split(" "):
-            if w:
-                words[w] += 1
-    spectrum: collections.Counter = collections.Counter()
-    for f in words.values():
-        spectrum[f] += 1
-    pts = [(f.bit_length() - 1, c.bit_length() - 1)
-           for f, c in spectrum.items()]
-    p = len(pts)
-    sx = sum(x for x, _ in pts)
-    sy = sum(y for _, y in pts)
-    sxy = sum(x * y for x, y in pts)
-    sxx = sum(x * x for x, _ in pts)
-    num, d = p * sxy - sx * sy, p * sxx - sx * sx
-    expect = None
-    if d > 0:
-        expect = (-1 if num < 0 else 1) * (abs(num) * 1_000_000 // d)
-    rows = _staged(spark, "docs_zipf_slope").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_vocab"], r["n_points"], r["slope_e6_signed"]) == (
-        sum(spectrum.values()), p, expect,
-    )
-    # the synthetic corpus has a ~31-word vocabulary and is NOT
-    # Zipfian (spectrum slope comes out slightly positive) — the
-    # screen reporting that honestly is the point; pin only that the
-    # spectrum is non-degenerate so the slope actually computed
-    assert r["slope_e6_signed"] is not None
-    # (b) boundary pin: the Spark-side bucket expression at 2^k and
-    # 2^k − 1 for every k ≤ 62 equals bit_length − 1 exactly
-    vals = [1] + [v for k in range(1, 63) for v in (2**k - 1, 2**k)]
-    df = spark.createDataFrame([(v,) for v in vals], "n: long")
-    got = {
-        r["n"]: r["b"]
-        for r in df.selectExpr(
-            "n", "CAST(length(bin(n)) - 1 AS BIGINT) AS b"
-        ).collect()
-    }
-    for v in vals:
-        assert got[v] == v.bit_length() - 1, v
-
-
-def test_source_drift_chi2_pure_python_textbook_and_constant(spark):
-    """docs_source_drift_chi2 three ways: (a) exact bigint replay over
-    the FULL margin spine including absent cells; (b) textbook float χ²
-    with expected counts agrees to 1e-5 relative; (c) the 97350970
-    decision constant re-derived from the closed-form even-df χ² CDF by
-    bisection (df = 76 — no scipy anywhere)."""
-    import math
-
-    t = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["source", "lang"]
-    )
-    grid = collections.Counter(
-        zip(t["source"].to_pylist(), t["lang"].to_pylist())
-    )
-    rt = collections.Counter()
-    ct = collections.Counter()
-    for (s_, l_), n in grid.items():
-        rt[s_] += n
-        ct[l_] += n
-    nn = sum(grid.values())
-    s = 0
-    for src in rt:
-        for lg in ct:  # the FULL spine — absent cells contribute too
-            o = grid.get((src, lg), 0)
-            d = o * nn - rt[src] * ct[lg]
-            s += d * d * 1_000_000 // (rt[src] * ct[lg] * nn)
-    rows = _staged(spark, "docs_source_drift_chi2").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["n_docs"], r["n_sources"], r["n_langs"], r["chi2_e6"]) == (
-        nn, len(rt), len(ct), s,
-    )
-    df_ = (len(rt) - 1) * (len(ct) - 1)
-    assert df_ == 76 and r["reject_05"] == (s > 97350970)
-    # (b) textbook float form
-    chi_f = sum(
-        (grid.get((src, lg), 0) - rt[src] * ct[lg] / nn) ** 2
-        / (rt[src] * ct[lg] / nn)
-        for src in rt
-        for lg in ct
-    )
-    assert abs(chi_f - s / 1e6) <= max(1e-5 * chi_f, 2e-6)
-    # (c) re-derive floor(chi2_0.95(76) * 1e6) via the closed-form
-    # even-df CDF: P(X <= x) = 1 - exp(-x/2) * sum_{i<38} (x/2)^i / i!
-    def cdf(x: float) -> float:
-        acc, term = 0.0, 1.0
-        for i in range(38):
-            if i:
-                term *= (x / 2) / i
-            acc += term
-        return 1 - math.exp(-x / 2) * acc
-
-    lo, hi = 0.0, 500.0
-    for _ in range(200):
-        mid = (lo + hi) / 2
-        if cdf(mid) < 0.95:
-            lo = mid
-        else:
-            hi = mid
-    assert math.floor(lo * 1e6) == 97350970
-
-
-def test_stream_zipf_equals_batch_zipf(spark):
-    """stream_zipf_monitor ≡ docs_zipf_slope on the same corpus — the
-    stream≡batch identity (complete-mode word counts are monotone
-    ADD-merges), checked on actual rows, not SQL."""
-    batch = _staged(spark, "docs_zipf_slope").collect()
-    stream = _staged(spark, "stream_zipf_monitor").collect()
-    assert [r.asDict() for r in batch] == [r.asDict() for r in stream]
-
-
 def test_cov_top_eigen_numpy_spectrum_bounds(spark):
     """emb_cov_top_eigen vs numpy.linalg.eigvalsh on the FLOAT
     covariance — machinery-free invariants: the Rayleigh estimate can
@@ -1892,40 +1543,6 @@ def test_cov_top_eigen_numpy_spectrum_bounds(spark):
     assert abs(r["top_energy_bp"] - approx_bp) <= 2
 
 
-def test_stream_source_drift_equals_batch(spark):
-    """stream_source_drift_monitor ≡ docs_source_drift_chi2 on the same
-    corpus — the stream≡batch identity (complete-mode grid counts are
-    monotone ADD-merges), checked on actual rows."""
-    batch = _staged(spark, "docs_source_drift_chi2").collect()
-    stream = _staged(spark, "stream_source_drift_monitor").collect()
-    assert [r.asDict() for r in batch] == [r.asDict() for r in stream]
-
-
-def test_hapax_legomena_pure_python_reference(spark):
-    """docs_hapax_legomena vs a collections.Counter replay over the
-    parquet text — independent of Spark's split/explode/agg pipeline and
-    of the oracle's SQL."""
-    import collections
-
-    tab = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["text"])
-    cnt = collections.Counter()
-    for t in tab["text"].to_pylist():
-        cnt.update(t.split(" "))
-    n_tokens = sum(cnt.values())
-    n_types = len(cnt)
-    n_hapax = sum(1 for v in cnt.values() if v == 1)
-    row = _staged(spark, "docs_hapax_legomena").collect()[0]
-    assert row["n_tokens"] == n_tokens
-    assert row["n_types"] == n_types
-    assert row["n_hapax"] == n_hapax
-    assert row["ttr_bp"] == (
-        n_types * 10000 // n_tokens if n_tokens else None
-    )
-    assert row["hapax_share_bp"] == (
-        n_hapax * 10000 // n_types if n_types else None
-    )
-
-
 def test_sign_bit_balance_numpy_reference(spark):
     """emb_sign_bit_balance vs a numpy replay (sign counting per
     dimension), plus the inclusive-boundary pin of the balanced band:
@@ -1949,33 +1566,6 @@ def test_sign_bit_balance_numpy_reference(spark):
     # boundary pin (pure arithmetic, engine-free)
     assert 2000 <= 2000 <= 8000 and 2000 <= 8000 <= 8000
     assert not (2000 <= 1999 <= 8000) and not (2000 <= 8001 <= 8000)
-
-
-def test_code_detect_pure_python_reference(spark):
-    """docs_code_detect vs a str.count/str.translate replay — Python's
-    non-overlapping count matches both engines' replace-removal count by
-    definition, so any divergence is a marker-definition bug."""
-    tab = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-    )
-    strip = str.maketrans("", "", "{}();=<>[]")
-    want = {}
-    for i, t in zip(tab["doc_id"].to_pylist(), tab["text"].to_pylist()):
-        n_chars = len(t)
-        n_sym = n_chars - len(t.translate(strip))
-        n_lines = 1 + t.count("\n")
-        n_indent = t.count("\n  ")
-        sym_bp = n_sym * 10000 // n_chars if n_chars else None
-        indent_bp = n_indent * 10000 // n_lines
-        want[i] = (
-            n_lines, sym_bp, indent_bp,
-            (sym_bp or 0) >= 300 or indent_bp >= 2000,
-        )
-    got = {
-        r["doc_id"]: (r["n_lines"], r["sym_bp"], r["indent_bp"], r["looks_code"])
-        for r in _staged(spark, "docs_code_detect").collect()
-    }
-    assert got == want
 
 
 def test_naming_convention_pure_python_reference(spark):
@@ -2004,56 +1594,6 @@ def test_naming_convention_pure_python_reference(spark):
         for r in _staged(spark, "tf_resource_naming_convention").collect()
     }
     assert got == want
-
-
-def test_stream_hapax_equals_batch_hapax(spark):
-    """stream_hapax_monitor ≡ docs_hapax_legomena on the same corpus —
-    the stream≡batch identity (complete-mode token counts are monotone
-    ADD-merges), checked on actual rows, not SQL."""
-    batch = _staged(spark, "docs_hapax_legomena").collect()
-    stream = _staged(spark, "stream_hapax_monitor").collect()
-    assert [r.asDict() for r in batch] == [r.asDict() for r in stream]
-
-
-def test_length_difference_device_duckdb_python_fuzz():
-    """Fuzz the r15 length-difference marker-counting device on the
-    DuckDB side against plain Python string ops (the Spark side is
-    covered by the corpus replay above): translate char-class stripping
-    and replace-based substring counting must agree with
-    str.translate / str.count on arbitrary text — including braces,
-    newlines, runs of spaces, and non-ASCII — or the docs_code_detect
-    oracle would diverge on a corpus regen."""
-    import duckdb
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    con = duckdb.connect()
-    strip = str.maketrans("", "", "{}();=<>[]")
-    alphabet = st.characters(
-        whitelist_categories=("L", "N", "P", "S", "Zs"),
-        whitelist_characters="\n {}();=<>[]",
-    )
-
-    @settings(max_examples=200, deadline=None)
-    @given(st.text(alphabet=alphabet, max_size=120))
-    def check(text):
-        n_chars, n_sym, n_lines, n_indent = con.execute(
-            """
-            SELECT length(t),
-                   length(t) - length(translate(t, '{}();=<>[]', '')),
-                   1 + length(t) - length(replace(t, chr(10), '')),
-                   (length(t) - length(replace(t, chr(10) || '  ', ''))) // 3
-            FROM (SELECT ? AS t)
-            """,
-            [text],
-        ).fetchone()
-        assert n_chars == len(text)
-        assert n_sym == len(text) - len(text.translate(strip))
-        assert n_lines == 1 + text.count("\n")
-        assert n_indent == text.count("\n  ")
-
-    check()
-    con.close()
 
 
 def test_tokenize_device_three_engine_agreement(spark):
@@ -2132,43 +1672,6 @@ def test_norm_buckets_bit_length_identity():
     assert len(bin(0)) - 2 - 1 == 0  # '0b0' → length 1 → bucket 0
 
 
-def test_ari_readability_pure_python_reference(spark):
-    """docs_ari_readability vs a str.count replay with Python ints
-    (exact), plus the float-ARI sanity band and the positivity
-    invariant that justifies the single all-positive division."""
-    tab = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-    )
-    bands = [
-        (500, "elementary"), (800, "middle_school"),
-        (1200, "high_school"), (1600, "college"),
-    ]
-    got = {
-        r["doc_id"]: r
-        for r in _staged(spark, "docs_ari_readability").collect()
-    }
-    assert len(got) == tab.num_rows
-    for i, t in zip(tab["doc_id"].to_pylist(), tab["text"].to_pylist()):
-        spaces = t.count(" ")
-        c = len(t) - spaces
-        w = spaces + 1
-        s = t.count(".")
-        r = got[i]
-        assert r["n_chars_ns"] == c and r["n_words"] == w
-        assert r["n_sentences"] == s
-        if s == 0:
-            assert r["ari_centi"] is None and r["band"] == "unmeasurable"
-            continue
-        num = 471 * c * s + 50 * w * w
-        assert num >= 0  # positivity is algebraic, not an offset
-        ari = num // (w * s) - 2143
-        assert r["ari_centi"] == ari
-        ari_f = 4.71 * c / w + 0.5 * w / s - 21.43
-        assert abs(ari / 100.0 - ari_f) <= 0.02
-        band = next((b for lim, b in bands if ari <= lim), "graduate")
-        assert r["band"] == band
-
-
 def test_variable_type_mismatch_json_semantic_reference(spark):
     """tf_variable_type_mismatch vs a json.loads-based re-derivation
     over the fixture corpus: the default's KIND comes from actually
@@ -2234,62 +1737,6 @@ def test_variable_type_mismatch_json_semantic_reference(spark):
     }
 
 
-def test_code_mix_pure_python_reference(spark):
-    """docs_code_mix vs the str.count/str.translate classifier replay
-    rolled up by lang — independent of the shared _code_flags frame and
-    of the oracle's SQL."""
-    tab = pq.read_table(
-        f"{SF_DIR}/documents.parquet", columns=["text", "lang"]
-    )
-    strip = str.maketrans("", "", "{}();=<>[]")
-    per = collections.defaultdict(lambda: [0, 0])
-    for t, lang in zip(tab["text"].to_pylist(), tab["lang"].to_pylist()):
-        n_chars = len(t)
-        n_sym = n_chars - len(t.translate(strip))
-        n_lines = 1 + t.count("\n")
-        sym_bp = n_sym * 10000 // n_chars if n_chars else 0
-        indent_bp = (t.count("\n  ") * 10000) // n_lines
-        per[lang][0] += 1
-        per[lang][1] += int(sym_bp >= 300 or indent_bp >= 2000)
-    got = {r["lang"]: r for r in _staged(spark, "docs_code_mix").collect()}
-    assert sorted(got) == sorted(per)
-    for lang, (n_docs, n_code) in per.items():
-        r = got[lang]
-        assert r["n_docs"] == n_docs and r["n_code"] == n_code
-        assert r["code_share_bp"] == n_code * 10000 // n_docs
-
-
-def test_stream_code_mix_equals_batch_code_mix(spark):
-    """stream_code_mix_monitor ≡ docs_code_mix on the same corpus — the
-    stream≡batch identity (complete-mode grid counts are monotone
-    ADD-merges), checked on actual rows, not SQL."""
-    batch = sorted(
-        (r.asDict() for r in _staged(spark, "docs_code_mix").collect()),
-        key=lambda d: d["lang"],
-    )
-    stream = sorted(
-        (r.asDict() for r in _staged(spark, "stream_code_mix_monitor").collect()),
-        key=lambda d: d["lang"],
-    )
-    assert batch == stream
-
-
-def test_stream_norm_buckets_equals_batch(spark):
-    """stream_norm_buckets_monitor ≡ emb_norm_buckets on the same
-    corpus — the stream≡batch identity (complete-mode bucket grid
-    merges count/min/max monotonically), checked on actual rows."""
-    batch = sorted(
-        (r.asDict() for r in _staged(spark, "emb_norm_buckets").collect()),
-        key=lambda d: d["bucket"],
-    )
-    stream = sorted(
-        (r.asDict()
-         for r in _staged(spark, "stream_norm_buckets_monitor").collect()),
-        key=lambda d: d["bucket"],
-    )
-    assert batch == stream and batch
-
-
 def test_milli_quantize_device_three_engine_agreement(spark):
     """The f64 milli-quantize device behind emb_norm_buckets /
     emb_cov_top_eigen (CAST float→DOUBLE, floor(x·1000 + 0.5), BIGINT)
@@ -2346,8 +1793,8 @@ def test_milli_quantize_device_three_engine_agreement(spark):
 
 
 def test_bin_length_bucket_device_agreement(spark):
-    """The length(bin(n))−1 log₂-bucket device (emb_norm_buckets,
-    docs_zipf_slope) checked on every power-of-two boundary up to 2⁶²
+    """The length(bin(n))−1 log₂-bucket device (emb_norm_buckets)
+    checked on every power-of-two boundary up to 2⁶²
     plus 0, across Spark, DuckDB, and int.bit_length(): off-by-one at
     a boundary would silently merge adjacent buckets."""
     import duckdb
@@ -2379,20 +1826,3 @@ def test_bin_length_bucket_device_agreement(spark):
         ).collect()
     }
     assert [got[i] for i in range(len(ns))] == want
-
-
-def test_stream_simpson_equals_batch_simpson(spark):
-    """stream_simpson_monitor ≡ docs_simpson_diversity on the same
-    corpus — the stream≡batch identity (complete-mode (lang, term)
-    counts are monotone ADD-merges), checked on actual rows."""
-    batch = sorted(
-        (r.asDict()
-         for r in _staged(spark, "docs_simpson_diversity").collect()),
-        key=lambda d: d["lang"],
-    )
-    stream = sorted(
-        (r.asDict()
-         for r in _staged(spark, "stream_simpson_monitor").collect()),
-        key=lambda d: d["lang"],
-    )
-    assert batch == stream and batch

@@ -188,6 +188,27 @@ def test_watch_to_canonical_store(spark, fixtures_dir, tmp_path):
     )
 
 
+def test_watch_to_canonical_two_streams_into_one_store(spark, tmp_path):
+    """Batch ids belong to a checkpoint: a second stream with its own
+    checkpoint writes its batch 0 into the same store instead of skipping
+    it as a replay of the first stream's batch 0."""
+    from steampipe_plugin_terraform_spark.engine import TerraformEngine
+    from steampipe_plugin_terraform_spark.streaming.watch import watch_to_canonical
+
+    store = str(tmp_path / "store")
+    for name in ("a", "b"):
+        watch_dir = tmp_path / name
+        watch_dir.mkdir()
+        (watch_dir / "main.tf").write_text(f'resource "t" "{name}" {{ x = 1 }}\n')
+        q = watch_to_canonical(
+            spark, str(watch_dir), store, checkpoint=str(tmp_path / f"ck_{name}")
+        )
+        assert q.awaitTermination(300)
+    eng = TerraformEngine.load_canonical(spark, store)
+    names = sorted(r["name"] for r in eng.table("terraform_resource").collect())
+    assert names == ["a", "b"]
+
+
 def test_stream_reader_adapts_to_nanos_parquet(spark, tmp_path):
     """Regression guard for the r04 ts-unit bug IN BOTH DIRECTIONS: the
     streaming reader must probe the parquet footer and handle a genuine
