@@ -16,11 +16,11 @@ Remote sources: ``s3a://``/``s3://`` URLs pass through untouched (Spark's
 Hadoop FS reads them natively — the scale path); the reference's documented
 go-getter form ``s3::https://bucket.s3.region.amazonaws.com/key//*.tf``
 (docs/index.md:227-268) is translated to the equivalent ``s3a://`` URL; git
-URLs are cloned once per process to a local temp dir on the driver
-(``fetch_remote``), mirroring the reference's go-getter behavior (utils.go:82;
-docs/index.md:118-268) without putting a non-distributable step on
-executors. Any other ``scheme::`` forced-getter prefix raises instead of
-silently matching zero local files.
+URLs are cloned once per process to a local temp dir on the driver and
+fetched into on later calls (``fetch_remote``), mirroring the reference's
+go-getter behavior (utils.go:82; docs/index.md:118-268) without putting a
+non-distributable step on executors. Any other ``scheme::`` forced-getter
+prefix raises instead of silently matching zero local files.
 """
 
 from __future__ import annotations
@@ -39,9 +39,10 @@ _GIT_RE = re.compile(r"^(git::|git@|github\.com/|gitlab\.com/|bitbucket\.org/|ht
 # go-getter "forced getter" prefix, e.g. s3::, git::, hg:: (utils.go:82 via
 # hashicorp/go-getter; documented formats docs/index.md:118-268)
 _FORCED_GETTER_RE = re.compile(r"^([a-z0-9]+)::")
-# (clone URL, ref) -> local clone: repeat discovery of one git source (every
-# watch tick) must see the same paths, not a fresh clone with new ones
-_CLONES: dict[tuple[str, str | None], str] = {}
+# (clone URL, ref) -> (local clone, ref to fetch into it or None when pinned
+# to a commit): repeat discovery of one git source (every watch tick) must see
+# the same paths, not a fresh clone with new ones
+_CLONES: dict[tuple[str, str | None], tuple[str, str | None]] = {}
 _CLONES_LOCK = threading.Lock()  # a background watch tick may discover too
 
 
@@ -245,7 +246,9 @@ def _split_git_subpath(raw: str) -> tuple[str, str | None]:
 def fetch_remote(url: str) -> tuple[str, str | None]:
     """Clone a git URL (optionally ``?ref=`` pinned, ``//sub/glob`` suffixed)
     to a temp dir, once per (repository, ref) per process; returns
-    (local_dir, sub_glob or None).
+    (local_dir, sub_glob or None). A later call fetches the branch or tag
+    into that clone in place, so upstream commits show up while unchanged
+    files keep their paths and mtimes; a commit-SHA ref never moves.
 
     Driver-side only — mirrors go-getter's git support (reference
     docs/index.md:141-200). Requires a ``git`` binary; raises RuntimeError
@@ -259,31 +262,42 @@ def fetch_remote(url: str) -> tuple[str, str | None]:
     if "://" not in raw and not raw.startswith("git@"):
         raw = "https://" + raw
     with _CLONES_LOCK:
-        dest = _CLONES.get((raw, ref))
-        if dest is None:
-            dest = _CLONES[raw, ref] = _clone(url, raw, ref)
-    return dest, sub
+        hit = _CLONES.get((raw, ref))
+        if hit is None:
+            hit = _CLONES[raw, ref] = _clone(url, raw, ref)
+        elif hit[1] is not None:
+            _git(url, ["-C", hit[0], "fetch", "--depth", "1", "origin", hit[1]], 300)
+            _git(url, ["-C", hit[0], "reset", "--hard", "FETCH_HEAD"], 60)
+    return hit[0], sub
 
 
-def _clone(url: str, raw: str, ref: str | None) -> str:
-    """``git clone`` ``raw`` (at ``ref``) into a fresh temp dir."""
+def _clone(url: str, raw: str, ref: str | None) -> tuple[str, str | None]:
+    """``git clone`` ``raw`` (at ``ref``) into a fresh temp dir; returns it
+    with the ref a later call fetches (None for a commit SHA)."""
     dest = state.temp_root("tf_git_")
+    cmd = ["git", "clone", "--depth", "1"]
+    if ref:
+        cmd += ["--branch", ref]
     try:
-        cmd = ["git", "clone", "--depth", "1"]
-        if ref:
-            cmd += ["--branch", ref]
-        cmd += [raw, dest]
-        r = subprocess.run(cmd, capture_output=True, timeout=300)
-        if r.returncode != 0 and ref:
-            # a commit SHA is not clonable via --branch: full clone + checkout
-            shutil.rmtree(dest, ignore_errors=True)
-            subprocess.run(["git", "clone", raw, dest], check=True, capture_output=True, timeout=600)
-            subprocess.run(["git", "-C", dest, "checkout", ref], check=True, capture_output=True, timeout=60)
-        elif r.returncode != 0:
-            raise subprocess.CalledProcessError(r.returncode, cmd, r.stdout, r.stderr)
+        r = subprocess.run(cmd + [raw, dest], capture_output=True, timeout=300)
     except (OSError, subprocess.SubprocessError) as e:
         raise RuntimeError(f"git fetch failed for {url}: {e}") from e
-    return dest
+    if r.returncode == 0:
+        return dest, ref or "HEAD"
+    if not ref:
+        raise RuntimeError(f"git fetch failed for {url}: {r.stderr.decode(errors='replace')}")
+    # a commit SHA is not clonable via --branch: full clone + checkout
+    shutil.rmtree(dest, ignore_errors=True)
+    _git(url, ["clone", raw, dest], 600)
+    _git(url, ["-C", dest, "checkout", ref], 60)
+    return dest, None
+
+
+def _git(url: str, args: list[str], timeout: int) -> None:
+    try:
+        subprocess.run(["git", *args], check=True, capture_output=True, timeout=timeout)
+    except (OSError, subprocess.SubprocessError) as e:
+        raise RuntimeError(f"git fetch failed for {url}: {e}") from e
 
 
 def file_size(path: str) -> int:

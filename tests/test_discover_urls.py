@@ -166,6 +166,7 @@ def test_fetch_remote_clone_url_for_ssh(monkeypatch):
         return R()
 
     monkeypatch.setattr(discover.subprocess, "run", fake_run)
+    monkeypatch.setattr(discover, "_CLONES", {})  # keep the fake clones out of the real cache
     local, sub = discover.fetch_remote("git::ssh://git@github.com/test_org/test_repo//*.tf")
     assert seen["url"] == "ssh://git@github.com/test_org/test_repo"
     assert sub == "*.tf"

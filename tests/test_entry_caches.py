@@ -104,23 +104,23 @@ def test_partitioned_handle_survives_other_corpus_invocation(spark, monkeypatch)
     assert _rows(handle_a) == expected_a
 
 
-def test_foreachbatch_restart_is_noop(spark):
+def test_foreachbatch_restart_is_noop(spark, monkeypatch):
     """Restarting an availableNow drain on the same checkpoint must not
     rewrite its sink (committed offsets → no new batches) and must return
     identical rows — the exactly-once restart contract."""
     state.clear(spark, "febatch_sink")
+    roots, temp_root = [], state.temp_root
+    monkeypatch.setattr(state, "temp_root", lambda prefix: roots.append(temp_root(prefix)) or roots[-1])
     run = QUERIES["stream_foreachbatch_sink"]
     first = _rows(run(spark, SF_A))
-    sink, _ = state.get(
-        spark, "febatch_sink", state.corpus_digest(SF_A),
-        lambda: pytest.fail("the first drain must have built its sink"),
-    )
-    pattern = f"{sink}/batch_id=*/*.parquet"
-    files = sorted(glob.glob(pattern))
+    assert len(roots) == 1, "the first drain must build its sink"
+    pattern = f"{roots[0]}/**/batch_id=*/*.parquet"
+    files = sorted(glob.glob(pattern, recursive=True))
     assert files, "the first drain must write to the sink"
     mtimes = {f: os.path.getmtime(f) for f in files}
     assert _rows(run(spark, SF_A)) == first
-    assert sorted(glob.glob(pattern)) == files, "restart must not add files"
+    assert len(roots) == 1, "restart must reuse the sink"
+    assert sorted(glob.glob(pattern, recursive=True)) == files, "restart must not add files"
     assert all(os.path.getmtime(f) == mtimes[f] for f in files), "restart must not rewrite"
 
 

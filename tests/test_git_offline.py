@@ -22,6 +22,11 @@ def _git(*args, cwd=None):
     return r.stdout.strip()
 
 
+def _commit(work, msg):
+    _git("-c", "user.email=t@t", "-c", "user.name=t", "add", ".", cwd=work)
+    _git("-c", "user.email=t@t", "-c", "user.name=t", "commit", "-m", msg, cwd=work)
+
+
 @pytest.fixture(scope="module")
 def bare_repo(tmp_path_factory):
     """Bare repo with two commits: v1 has one resource, HEAD (tag v2.0.0)
@@ -31,16 +36,14 @@ def bare_repo(tmp_path_factory):
         'resource "aws_instance" "one" {\n  ami = "ami-1"\n}\n'
     )
     _git("init", "-b", "main", cwd=work)
-    _git("-c", "user.email=t@t", "-c", "user.name=t", "add", ".", cwd=work)
-    _git("-c", "user.email=t@t", "-c", "user.name=t", "commit", "-m", "v1", cwd=work)
+    _commit(work, "v1")
     _git("tag", "v1.0.0", cwd=work)
     sha_v1 = _git("rev-parse", "HEAD", cwd=work)
     sub = work / "sub" / "dir"
     sub.mkdir(parents=True)
     (sub / "extra.tf").write_text('resource "aws_s3_bucket" "b" {\n  bucket = "x"\n}\n')
     (work / "second.tf").write_text('resource "aws_instance" "two" {\n  ami = "ami-2"\n}\n')
-    _git("-c", "user.email=t@t", "-c", "user.name=t", "add", ".", cwd=work)
-    _git("-c", "user.email=t@t", "-c", "user.name=t", "commit", "-m", "v2", cwd=work)
+    _commit(work, "v2")
     _git("tag", "v2.0.0", cwd=work)
     bare = tmp_path_factory.mktemp("git_bare") / "repo.git"
     _git("clone", "--bare", str(work), str(bare))
@@ -96,3 +99,38 @@ def test_repeat_discovery_reuses_one_clone(spark, bare_repo):
     assert discover_files(config_paths=[url]) == first
     w = TerraformWatcher(TerraformEngine(spark, config_paths=[url]))
     assert w.poll() == set()
+
+
+def test_repeat_discovery_fetches_upstream_commits(spark, tmp_path):
+    """The cached clone is updated in place: a commit pushed upstream shows
+    up in the next discovery, a watch tick reports only the file it added,
+    and a full ``refresh()`` serves the next commit's rows."""
+    from steampipe_plugin_terraform_spark import TerraformEngine
+    from steampipe_plugin_terraform_spark.streaming.watch import TerraformWatcher
+
+    work = tmp_path / "work"
+    work.mkdir()
+    (work / "main.tf").write_text('resource "aws_instance" "one" {\n  ami = "ami-1"\n}\n')
+    _git("init", "-b", "main", cwd=work)
+    _commit(work, "one")
+    bare = tmp_path / "repo.git"
+    _git("clone", "--bare", str(work), str(bare))
+    url = f"git::file://{bare}//*.tf"
+    eng = TerraformEngine(spark, config_paths=[url])
+    w = TerraformWatcher(eng)
+    (main,) = discover_files(config_paths=[url])
+
+    (work / "second.tf").write_text('resource "aws_instance" "two" {\n  ami = "ami-2"\n}\n')
+    _commit(work, "two")
+    _git("push", str(bare), "main", cwd=work)
+    second = main[0].rsplit("/", 1)[0] + "/second.tf"
+    assert w.poll() == {second}
+    names = {r["name"] for r in eng.table("terraform_resource").collect()}
+    assert names == {"one", "two"}
+
+    (work / "third.tf").write_text('resource "aws_instance" "three" {\n  ami = "ami-3"\n}\n')
+    _commit(work, "three")
+    _git("push", str(bare), "main", cwd=work)
+    eng.refresh()
+    names = {r["name"] for r in eng.table("terraform_resource").collect()}
+    assert names == {"one", "two", "three"}
