@@ -57,14 +57,17 @@ perf-catalog:
 	python3 perfbench/run.py --workload catalog_mix --seed 7 --seconds 10 --trace 1
 
 # Cold start at one seed: tf_ingest untraced twice with a fresh cache
-# directory. The first run dumps the driver JVM's class-data-sharing archive
-# as it exits, the second starts from it; each run's process wall time
-# (dump included) and the archive's bytes print after its JSON lines.
+# directory. The first run unpacks and compiles the worker daemon's Python
+# archives (py/) and dumps the driver JVM's class-data-sharing archive as it
+# exits; the second starts from both. Each run's process wall time (dump
+# included), the JVM archive's bytes and py/'s bytes print after its JSON
+# lines.
 perf-cold:
 	@cache="$$(mktemp -d)"; trap 'rm -rf "$$cache"' EXIT; \
 	for run in dump warm; do \
 	  start=$$(date +%s%N); \
 	  XDG_CACHE_HOME="$$cache" python3 perfbench/run.py --workload tf_ingest --seed 7 --seconds 10 --trace 0 || exit 1; \
 	  echo "perf-cold $$run: process $$(( ($$(date +%s%N) - start) / 1000000 )) ms wall," \
-	    "archive $$(find "$$cache" -name '*.jsa' -printf '%s') bytes"; \
+	    "archive $$(find "$$cache" -name '*.jsa' -printf '%s') bytes," \
+	    "py/ $$(du -sb "$$cache/steampipe_plugin_terraform_spark/py" | cut -f1) bytes"; \
 	done

@@ -23,6 +23,13 @@ executors, tested on local[N]):
 The wide frame is persisted on first materialization so repeat queries skip
 the parse (the SDK-cache analog, go.mod:23,35 — but correct by construction
 since our tables derive from one lineage).
+
+The first ingest of a session pays for little besides the parse itself:
+``get_spark``'s Python workers fork from ``daemon.py`` with pyspark (from
+cached bytecode), pandas, pyarrow and this module already imported, and
+the parse stage's input has a ``StructType`` schema, so Spark's SQL parser
+never starts. The HCL tokenizer consumes runs of plain characters with
+precompiled regexes rather than one character at a time.
 """
 
 from __future__ import annotations
@@ -56,6 +63,15 @@ WIDE_SCHEMA = T.StructType(
         for c in WIDE_COLUMNS
     ]
 )
+
+# rows of the parse stage's input; a StructType, not a DDL string, which
+# would start Spark's SQL parser on the first ingest of a session
+_FILES_SCHEMA = T.StructType([
+    T.StructField("path", T.StringType()),
+    T.StructField("content", T.BinaryType()),
+    T.StructField("file_kind", T.StringType()),
+    T.StructField("build", T.StringType()),
+])
 
 # Column projections per table, in the reference's declared order
 # (SURVEY.md §1.4; table_terraform_*.go column lists).
@@ -329,7 +345,7 @@ class TerraformEngine:
         # changed files being served an older cached parse of the same paths
         table = pa.table({"path": [p for p, _, _ in rows], "content": pa.nulls(len(rows), pa.binary()),
                           "file_kind": [k for _, k, _ in rows], "build": [uuid.uuid4().hex] * len(rows)})
-        out = self.spark.createDataFrame(table, "path string, content binary, file_kind string, build string")
+        out = self.spark.createDataFrame(table, _FILES_SCHEMA)
         out = out.drop("build").coalesce(n)
         for kind in ("config", "plan", "state"):
             paths = [p for p, k in files if k == kind and "://" in p]

@@ -26,6 +26,7 @@ reference's per-row file re-parse (/root/reference/terraform/utils.go:268-298).
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -33,13 +34,22 @@ from typing import Any
 # Tokens
 # ---------------------------------------------------------------------------
 
-# Longest-match-first multi-char operators, then single chars.
-_MULTI_OPS = ("...", "==", "!=", "<=", ">=", "&&", "||", "=>", "::", ".*")
+# Operators: the one three-char one, then two-char ones, then single chars
+# (longest match first).
+_OPS_2 = frozenset(("==", "!=", "<=", ">=", "&&", "||", "=>", "::", ".*"))
 _SINGLE_OPS = "{}[](),:.?=+-*/%<>!"
 
-_IDENT_START = set("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ_")
-_IDENT_CONT = _IDENT_START | set("0123456789-")
+_IDENT_CONT = set("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ_0123456789-")
 _DIGITS = set("0123456789")
+
+# Runs the tokenizer consumes whole instead of one character at a time:
+# blanks, identifiers, and string characters with no meaning in a template
+# outside (``_PLAIN``) or inside (``_PLAIN_INTERP``) a ``${``/``%{``.
+_BLANKS = re.compile(r"[ \t\r]+")
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_-]*")
+_PLAIN = re.compile(r'[^\\"$%]+')
+_PLAIN_INTERP = re.compile(r'[^"$%}]+')
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "\\": "\\"}
 
 
 class HCLParseError(ValueError):
@@ -69,7 +79,7 @@ def tokenize(src: str) -> list[Token]:
         c = src[i]
         # -- whitespace (newline is significant) --
         if c in " \t\r":
-            i += 1
+            i = _BLANKS.match(src, i).end()
             continue
         if c == "\n":
             toks.append(Token("NEWLINE", "\n", line, i, i + 1))
@@ -77,11 +87,11 @@ def tokenize(src: str) -> list[Token]:
             i += 1
             continue
         # -- comments --
-        if c == "#" or src.startswith("//", i):
-            while i < n and src[i] != "\n":
-                i += 1
+        if c == "#" or (c == "/" and src[i + 1 : i + 2] == "/"):
+            j = src.find("\n", i)
+            i = n if j < 0 else j
             continue
-        if src.startswith("/*", i):
+        if c == "/" and src[i + 1 : i + 2] == "*":
             j = src.find("*/", i + 2)
             if j < 0:
                 raise err("unterminated block comment")
@@ -89,7 +99,7 @@ def tokenize(src: str) -> list[Token]:
             i = j + 2
             continue
         # -- heredoc (must check before '<' operator) --
-        if src.startswith("<<", i):
+        if c == "<" and src[i + 1 : i + 2] == "<":
             j = i + 2
             indent = False
             if j < n and src[j] == "-":
@@ -142,12 +152,19 @@ def tokenize(src: str) -> list[Token]:
             has_interp = False
             depth = 0  # ${ / %{ nesting depth
             while i < n:
+                run = (_PLAIN if depth == 0 else _PLAIN_INTERP).match(src, i)
+                if run is not None:
+                    j = run.end()
+                    line += src.count("\n", i, j)
+                    buf.append(src[i:j])
+                    i = j
+                    if i >= n:
+                        break
                 ch = src[i]
-                if ch == "\\" and depth == 0:
+                if ch == "\\":  # only at depth 0: plain inside ${ }
                     if i + 1 >= n:
                         raise err("dangling escape")
                     nxt = src[i + 1]
-                    mapped = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "\\": "\\"}.get(nxt)
                     if nxt == "u" and i + 5 < n:
                         try:
                             buf.append(chr(int(src[i + 2 : i + 6], 16)))
@@ -155,50 +172,49 @@ def tokenize(src: str) -> list[Token]:
                             raise err(f"invalid \\u escape {src[i:i + 6]!r}") from None
                         i += 6
                         continue
-                    buf.append(mapped if mapped is not None else "\\" + nxt)
+                    buf.append(_ESCAPES.get(nxt, "\\" + nxt))
                     i += 2
                     continue
-                if src.startswith("$${", i) or src.startswith("%%{", i):
-                    # HCL escape: $${ evaluates to the literal ${ (same for
-                    # %%{) — unescape so pure-literal strings match what the
-                    # kics/hcl template evaluation produces
-                    buf.append(src[i + 1 : i + 3])
-                    i += 3
+                if ch in "$%":
+                    after = src[i + 1 : i + 3]
+                    if after == ch + "{":
+                        # HCL escape: $${ evaluates to the literal ${ (same for
+                        # %%{) — unescape so pure-literal strings match what the
+                        # kics/hcl template evaluation produces
+                        buf.append(after)
+                        i += 3
+                        continue
+                    if after[:1] == "{":
+                        has_interp = True
+                        depth += 1
+                        buf.append(ch + "{")
+                        i += 2
+                        continue
+                    buf.append(ch)
+                    i += 1
                     continue
-                if src.startswith("${", i) or src.startswith("%{", i):
-                    has_interp = True
-                    depth += 1
-                    buf.append(src[i : i + 2])
-                    i += 2
-                    continue
-                if ch == "}" and depth > 0:
+                if ch == "}":  # only inside ${ }: plain at depth 0
                     depth -= 1
                     buf.append(ch)
                     i += 1
                     continue
-                if ch == '"' and depth == 0:
+                if depth == 0:  # the closing quote
                     break
-                if ch == '"' and depth > 0:
-                    # nested quoted string inside interpolation — copy verbatim
-                    buf.append(ch)
-                    i += 1
-                    while i < n and src[i] != '"':
-                        if src[i] == "\\":
-                            buf.append(src[i : i + 2])
-                            i += 2
-                            continue
-                        if src[i] == "\n":
-                            line += 1
-                        buf.append(src[i])
-                        i += 1
-                    if i >= n:
-                        raise HCLParseError("unterminated string", start_line)
-                    buf.append('"')
-                    i += 1
-                    continue
-                if ch == "\n":
-                    line += 1
+                # nested quoted string inside interpolation — copy verbatim
                 buf.append(ch)
+                i += 1
+                while i < n and src[i] != '"':
+                    if src[i] == "\\":
+                        buf.append(src[i : i + 2])
+                        i += 2
+                        continue
+                    if src[i] == "\n":
+                        line += 1
+                    buf.append(src[i])
+                    i += 1
+                if i >= n:
+                    raise HCLParseError("unterminated string", start_line)
+                buf.append('"')
                 i += 1
             if i >= n:
                 raise HCLParseError("unterminated string", start_line)
@@ -234,28 +250,22 @@ def tokenize(src: str) -> list[Token]:
             toks.append(Token("NUMBER", float(text) if is_float else int(text), line, start, i))
             continue
         # -- identifiers --
-        if c in _IDENT_START:
-            start = i
-            i += 1
-            while i < n and src[i] in _IDENT_CONT:
-                i += 1
-            toks.append(Token("IDENT", src[start:i], line, start, i))
+        ident = _IDENT.match(src, i)
+        if ident is not None:
+            toks.append(Token("IDENT", ident.group(), line, i, ident.end()))
+            i = ident.end()
             continue
         # -- operators / punctuation --
-        matched = False
-        for op in _MULTI_OPS:
-            if src.startswith(op, i):
-                toks.append(Token("OP", op, line, i, i + len(op)))
-                i += len(op)
-                matched = True
-                break
-        if matched:
-            continue
-        if c in _SINGLE_OPS:
-            toks.append(Token("OP", c, line, i, i + 1))
-            i += 1
-            continue
-        raise err(f"unexpected character {c!r}")
+        if src[i : i + 3] == "...":
+            op = "..."
+        elif src[i : i + 2] in _OPS_2:
+            op = src[i : i + 2]
+        elif c in _SINGLE_OPS:
+            op = c
+        else:
+            raise err(f"unexpected character {c!r}")
+        toks.append(Token("OP", op, line, i, i + len(op)))
+        i += len(op)
     toks.append(Token("EOF", None, line, n, n))
     return toks
 

@@ -13,16 +13,20 @@ All knobs here are safe at both extremes:
 - Session timezone pinned to UTC so timestamp semantics are deterministic and
   match the DuckDB oracle (which is timezone-naive).
 - Python workers fork from ``daemon.py`` (``spark.python.daemon.module``), not
-  from pyspark's stock daemon: on CPython < 3.13 every task otherwise
-  re-reads pyspark.zip's directory once per imported subpackage (0.2-0.3
-  CPU-s per task), a per-task tax that grows with task count.
+  from pyspark's stock daemon: it imports pyspark from cached bytecode
+  instead of compiling it from pyspark.zip in every session, and imports
+  pandas, pyarrow and the parse modules once for all the workers it forks.
 
-Cold start: a new driver JVM maps its classes from a class-data-sharing
-(AppCDS) archive instead of loading and verifying them from the jars,
-which cuts session start from about 14 to 8.5 CPU-s on 4 vCPUs. The
-archive holds the classes its recording session loaded (170-230 MB) and
-lives in ``$XDG_CACHE_HOME/steampipe_plugin_terraform_spark/jvm/``
-(default ``~/.cache``), never in the checkout. Its name is a digest of
+Cold start: one cache root, ``$XDG_CACHE_HOME/steampipe_plugin_terraform_spark/``
+(default ``~/.cache``, never the checkout), holds two artifacts that later
+sessions reuse: the driver JVM's class-data-sharing archive in ``jvm/``,
+and the worker daemon's unpacked Python archives with their bytecode in
+``py/`` (see ``daemon.py``). To clear either, delete its directory.
+
+A new driver JVM maps its classes from a class-data-sharing (AppCDS)
+archive instead of loading and verifying them from the jars, which cuts
+session start from about 14 to 8.5 CPU-s on 4 vCPUs. The archive holds the
+classes its recording session loaded (170-230 MB). Its name is a digest of
 the JDK (path and ``release`` file), the driver heap setting and the path,
 name, size and modification time of every jar in ``$SPARK_HOME/jars``,
 which is what the JVM checks before it maps an archive. On a miss the
@@ -42,10 +46,16 @@ the class path, so the conf directory (``SPARK_CONF_DIR``, default
 when it holds nothing but ``*.template`` files, which Spark never reads;
 when it holds real files, or a Hadoop/YARN conf directory or extra class
 path is set, the session starts without an archive. So does one whose
-cache directory cannot be written. ``-Xlog:cds*=off`` keeps any CDS
-warning off stdout, where the CLIs print their one JSON line (JDK 17 logs
-a rejected archive at info level, so none is expected there). To clear
-the archive, delete the directory.
+cache directory cannot be written, and one whose JVM options (the
+builder's ``spark.driver.extraJavaOptions``, ``JAVA_TOOL_OPTIONS``,
+``JDK_JAVA_OPTIONS`` or ``PYSPARK_SUBMIT_ARGS``) start a flight recording
+or a Java agent: JDK 17 crashes in its class-file load hook on classes
+mapped from an archive. For the same reason, attaching JFR to a running
+session (``jcmd <pid> JFR.start``) crashes a JVM that mapped the archive;
+delete ``jvm/`` first, or start the session with
+``-XX:StartFlightRecording``. ``-Xlog:cds*=off`` keeps any CDS warning off
+stdout, where the CLIs print their one JSON line (JDK 17 logs a rejected
+archive at info level, so none is expected there).
 """
 
 from __future__ import annotations
@@ -58,6 +68,8 @@ import subprocess
 
 from pyspark.sql import SparkSession
 
+from . import state
+
 
 # RocksDB-backed streaming state: keeps per-key state off-heap and spills
 # to local disk, so stateful operators (session windows, dedup-within-
@@ -69,9 +81,17 @@ ROCKSDB_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
-# Python worker daemon that skips re-reading unchanged zip archives on
-# every task (see daemon.py).
+# Python worker daemon that imports pyspark from cached bytecode and
+# preloads pandas and pyarrow for the workers it forks (see daemon.py).
 DAEMON_MODULE = "steampipe_plugin_terraform_spark.daemon"
+
+
+# JVM options that install a class-file load hook: JFR, and Java agents,
+# which use the same hook (that case is untested). JDK 17 crashes in
+# KlassFactory::check_shared_class_file_load_hook when such a hook meets a
+# class mapped from the archive, so these sessions start without one.
+_LOAD_HOOK_OPTIONS = ("-XX:StartFlightRecording", "-javaagent:", "-agentlib:", "-agentpath:")
+_JAVA_OPTION_VARS = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "PYSPARK_SUBMIT_ARGS")
 
 
 def get_spark(
@@ -145,7 +165,9 @@ def create(builder: SparkSession.Builder, driver_memory: str) -> SparkSession:
     from pyspark import SparkContext
 
     builder = builder.config("spark.driver.memory", driver_memory)
-    cds = None if SparkContext._gateway is not None else _cds_flags(driver_memory)
+    cds = None
+    if SparkContext._gateway is None:
+        cds = _cds_flags(driver_memory, builder._options.get("spark.driver.extraJavaOptions", ""))
     if cds is not None:
         builder = builder.config("spark.driver.defaultJavaOptions", cds[0])
     spark = builder.getOrCreate()
@@ -185,21 +207,18 @@ def archive_key(driver_memory: str) -> str | None:
     return digest.hexdigest()[:20]
 
 
-def _cache_dir() -> str:
-    base = os.environ.get("XDG_CACHE_HOME", "")
-    if not os.path.isabs(base):
-        base = os.path.join(os.path.expanduser("~"), ".cache")
-    return os.path.join(base, "steampipe_plugin_terraform_spark", "jvm")
-
-
-def _cds_flags(driver_memory: str) -> tuple[str, tuple[str, str, str] | None] | None:
+def _cds_flags(driver_memory: str, java_options: str = "") -> tuple[str, tuple[str, str, str] | None] | None:
     """(java options, (class list, dump path, archive path) on a miss) for
     a new driver JVM, pointing ``SPARK_CONF_DIR`` at the empty conf
-    directory; None when the JVM must start without an archive."""
+    directory; None when the JVM must start without an archive.
+    ``java_options`` is the session's ``spark.driver.extraJavaOptions``."""
     from pyspark.find_spark_home import _find_spark_home
 
     if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
         return None  # the launcher puts these on the class path too
+    asked = " ".join([java_options, *(os.environ.get(v, "") for v in _JAVA_OPTION_VARS)])
+    if any(o in asked for o in _LOAD_HOOK_OPTIONS):
+        return None
     conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
     try:
         if any(not n.endswith(".template") for n in os.listdir(conf)):
@@ -207,7 +226,7 @@ def _cds_flags(driver_memory: str) -> tuple[str, tuple[str, str, str] | None] | 
     except OSError:
         pass  # no conf directory: nothing to read either
     key = archive_key(driver_memory)
-    cache = _cache_dir()
+    cache = state.cache_dir("jvm")
     empty_conf = os.path.join(cache, "conf")
     try:
         os.makedirs(empty_conf, exist_ok=True)
@@ -221,10 +240,8 @@ def _cds_flags(driver_memory: str) -> tuple[str, tuple[str, str, str] | None] | 
             return None  # its dump failed: do not pay for it again
         flag, dump = f"-XX:SharedArchiveFile={_quote(archive)}", None
     elif os.access(cache, os.W_OK):
-        for name in os.listdir(cache):
-            pid = name.rsplit(".", 2)[-2] if name.endswith(".part") else ""
-            if pid and not (pid.isdigit() and _alive(int(pid))):
-                _unlink(os.path.join(cache, name))
+        for part in state.dead_parts(cache):
+            _unlink(part)
         classes = os.path.join(cache, f"{key}.classes.{os.getpid()}.part")
         dump = (classes, f"{archive}.{os.getpid()}.part", archive)
         flag = f"-XX:DumpLoadedClassList={_quote(classes)}"
@@ -240,16 +257,6 @@ def _quote(path: str) -> str:
     # spark-launcher splits java options shell-style: escape every byte
     # that could be a space, a quote or a backslash
     return "".join(c if c.isalnum() or c in "/._-" else "\\" + c for c in path)
-
-
-def _alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    return True
 
 
 def _unlink(path: str) -> None:

@@ -20,6 +20,11 @@ Rules every builder follows:
   costs more than the recompute it saves.
 - On-disk state goes under a ``temp_root``, removed at interpreter exit.
 
+State that outlives a session (the driver JVM's class-data-sharing
+archive, the worker daemon's unpacked Python archives) goes under
+``cache_dir``, outside the checkout. This module imports only the
+standard library, so the worker daemon can use it before pyspark.
+
 ``get`` itself materializes nothing: each builder decides how.
 """
 
@@ -63,6 +68,36 @@ def temp_root(prefix: str) -> str:
     root = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
+
+
+def cache_dir(name: str) -> str:
+    """``$XDG_CACHE_HOME/steampipe_plugin_terraform_spark/<name>`` (default
+    ``~/.cache``): user-level state kept across sessions."""
+    base = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "steampipe_plugin_terraform_spark", name)
+
+
+def dead_parts(directory: str) -> list[str]:
+    """Paths of the ``*.<pid>.part`` entries in ``directory`` whose process
+    is gone: a writer killed before it renamed its result into place."""
+    dead = []
+    for name in os.listdir(directory):
+        pid = name.rsplit(".", 2)[-2] if name.endswith(".part") else ""
+        if pid and not (pid.isdigit() and _alive(int(pid))):
+            dead.append(os.path.join(directory, name))
+    return dead
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
 
 
 def stats(spark) -> dict[str, dict[str, int]]:

@@ -195,3 +195,44 @@ def test_attr_after_block_same_name_preserved():
     # plain attr re-assignment still last-wins (HCL attr semantics)
     body2 = parse_document("locals {\n  a = 1\n  a = 2\n}")["locals"]
     assert body2["a"] == 2
+
+
+# A long run of plain string characters (consumed as one run by the
+# tokenizer), then the one character or sequence that ends the run:
+# (text inside the quotes after the run, STRING value after the run,
+# has_interp).
+_RUN = "plain text with no specials, 0-9 and (a.b/c) punctuation; " * 4
+_RUN_ENDS = {
+    "newline": ("\n", "\n", False),
+    "newline escape": ("\\n", "\n", False),
+    "unicode escape": ("\\u0041", "A", False),
+    "escaped dollar": ("$${x}", "${x}", False),
+    "escaped percent": ("%%{x}", "%{x}", False),
+    "interpolation": ('${format("%s\n", var.a)}', '${format("%s\n", var.a)}', True),
+    "interpolation and newline": ('${join(",",\n  ["\\"q\\""])}', '${join(",",\n  ["\\"q\\""])}', True),
+    "directive": ("%{ if var.a }y%{ endif }", "%{ if var.a }y%{ endif }", True),
+    "brace at depth 0": ("}", "}", False),
+}
+
+
+@pytest.mark.parametrize("case", list(_RUN_ENDS))
+def test_string_run_ends_at_its_special_sequence(case):
+    from steampipe_plugin_terraform_spark.hcl.parser import tokenize
+
+    tail, value, interp = _RUN_ENDS[case]
+    src = f'x = "{_RUN}{tail}"\ny = 1\n'
+    end = 4 + len(_RUN) + len(tail) + 2  # x, " = ", both quotes
+    last = 1 + tail.count("\n")  # line of the closing quote
+    got = [(t.kind, t.value, t.line, t.start, t.end) for t in tokenize(src)]
+    assert got == [
+        ("IDENT", "x", 1, 0, 1),
+        ("OP", "=", 1, 2, 3),
+        ("STRING", _RUN + value, 1, 4, end),
+        ("NEWLINE", "\n", last, end, end + 1),
+        ("IDENT", "y", last + 1, end + 1, end + 2),
+        ("OP", "=", last + 1, end + 3, end + 4),
+        ("NUMBER", 1, last + 1, end + 5, end + 6),
+        ("NEWLINE", "\n", last + 1, end + 6, end + 7),
+        ("EOF", None, last + 2, end + 7, end + 7),
+    ]
+    assert tokenize(src)[2].has_interp is interp

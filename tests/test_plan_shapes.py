@@ -1104,8 +1104,6 @@ def test_required_providers_audit_shuffle_free(spark):
     # settings blocks are config metadata: the audit must stay an
     # embarrassingly parallel scan — any exchange or join node means
     # the per-row JSON extraction grew a shuffle
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["tf_required_providers_audit"](spark, SF))
     assert "Exchange" not in plan
     for node in ("SortMergeJoin", "BroadcastHashJoin",
@@ -1118,8 +1116,6 @@ def test_state_lineage_audit_single_keyed_window(spark):
     # frame — exactly one hash exchange (the grouping semantics), no
     # SinglePartition stage, no joins, and NO python/pandas stage (the
     # state header is read Spark-natively, not through the HCL parser)
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["tf_state_lineage_audit"](spark, SF))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "SinglePartition" not in plan
@@ -1131,8 +1127,6 @@ def test_backend_audit_shuffle_free(spark):
     # same contract as the providers audit: settings metadata, per-row
     # JSON extraction only — any exchange/join/generator means the
     # one-backend-per-block element_at design regressed to a shuffle
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["tf_backend_audit"](spark, SF))
     assert "Exchange" not in plan
     for node in ("SortMergeJoin", "BroadcastHashJoin",
@@ -1144,8 +1138,6 @@ def test_provider_matrix_broadcast_spine(spark):
     # the spine is union+distinct precisely so the three enrichments can
     # broadcast: a full-outer rewrite would force SortMergeJoin — pin
     # the broadcast shape
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["tf_provider_version_matrix"](spark, SF))
     assert plan.count("BroadcastHashJoin") == 3
     assert "SortMergeJoin" not in plan
@@ -1157,8 +1149,6 @@ def test_cluster_quality_broadcast_and_two_aggs(spark):
     # centroid pairwise = k-row broadcast self-join (deliberate BNLJ) +
     # one k-row agg; no sort-merge, no cartesian, and exactly the two
     # keyed exchanges (per-cluster agg, k-row sep agg)
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["emb_cluster_quality"](spark, SF))
     assert plan.count("BroadcastNestedLoopJoin") == 1
     assert plan.count("Exchange hashpartitioning") == 2
@@ -1171,8 +1161,6 @@ def test_pipeline_funnel_counter_rollup(spark):
     # the funnel is a counter roll-up: metric flags fuse into the doc
     # scan, the dup set broadcasts, and the only global stage is the
     # single 1-row aggregate (counter-sized by construction)
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["docs_pipeline_funnel"](spark, SF))
     assert plan.count("Exchange SinglePartition") == 1
     assert "SortMergeJoin" not in plan
@@ -1294,8 +1282,6 @@ def test_count_foreach_expansion_shuffle_free(spark):
 def test_lifecycle_audit_shuffle_free(spark):
     # lifecycle governance: per-row JSON extraction over the parsed
     # wide frame — the settings-audit contract: no exchange, no join
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["tf_lifecycle_audit"](spark, SF))
     assert "Exchange" not in plan
     for node in ("SortMergeJoin", "BroadcastHashJoin",
@@ -1307,8 +1293,6 @@ def test_legacy_interpolation_single_scan_no_join(spark):
     # source-text lint: one regexp projection + explode + block-keyed
     # agg — no join anywhere, and no Python evaluation (the regex runs
     # JVM-side via regexp_extract_all)
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(
         QUERIES["tf_legacy_interpolation_audit"](spark, SF)
     )
@@ -1323,8 +1307,6 @@ def test_mannwhitney_grid_localized_no_filescan(spark):
     # BUILD (driver-side bounded collect); the returned frame is pure
     # grid algebra over local frames — no FileScan, and the only
     # nested-loop join is the grid-sized non-equi pair join
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["q_lineitem_mannwhitney_u"](spark, SF))
     assert "FileScan" not in plan
     assert "CartesianProduct" not in plan
@@ -1337,8 +1319,6 @@ def test_overdispersion_single_scan_keyed_aggs(spark):
     # roll-up; the spine attaches as the documented 1-row broadcast
     # scalar (exactly one BNLJ), no other join
     import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
 
     plan = _plan_df(QUERIES["q_events_overdispersion"](spark, SF))
     assert "CartesianProduct" not in plan
@@ -1390,8 +1370,6 @@ def test_unused_data_sources_single_broadcast_join(spark):
     # the _unused_decls_frame contract: one regexp projection over the
     # parsed wide frame, one small distinct-and-count, ONE broadcast
     # join onto the declaration rows — no SMJ, no cartesian, no Python
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["tf_unused_data_sources"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
@@ -1405,8 +1383,6 @@ def test_kruskal_wallis_single_scan_grid_windows(spark):
     # level/group-sized frames; the final attach is the documented
     # 1-row scalar broadcast
     import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
 
     plan = _plan_df(QUERIES["q_lineitem_kruskal_wallis"](spark, SF))
     assert "CartesianProduct" not in plan
@@ -1427,8 +1403,6 @@ def test_abc_classes_supplier_grain_windows(spark):
     # exemption); 3-row roll-up, no join at all
     import re
 
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
     plan = _plan_df(QUERIES["q_supplier_abc_classes"](spark, SF))
     assert "CartesianProduct" not in plan
     for node in ("SortMergeJoin", "BroadcastHashJoin",
@@ -1445,8 +1419,6 @@ def test_incremental_batch_probes_store_no_corpus_retokenize(spark):
     # batch — the old side arrives from the two store parquets (scans
     # WITHOUT a text column), every join is an equi-join, no Python
     import re
-
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
 
     plan = _plan_df(QUERIES["dedup_incremental_batch"](spark, SF))
     assert "CartesianProduct" not in plan

@@ -20,13 +20,20 @@ import pytest
 from steampipe_plugin_terraform_spark import session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the workload both scripts run: a Python task (its accumulator updates open
+# the JVM's connection back) and an aggregate over an Arrow Python task
+WORKLOAD = """
+from pyspark.sql import functions as F
+rows = spark.sparkContext.parallelize(range(10), 2).count()
+df = spark.range(100).mapInPandas(lambda batches: batches, "id long")
+groups = df.groupBy(F.col("id") % 7).count().count()
+"""
 SCRIPT = """
 import json
 from steampipe_plugin_terraform_spark import get_spark
 spark = get_spark("session-test")
-# a Python task: its accumulator updates open the JVM's connection back
-rows = spark.sparkContext.parallelize(range(10), 2).count()
-print(json.dumps({"master": spark.sparkContext.master, "rows": rows}))
+""" + WORKLOAD + """
+print(json.dumps({"master": spark.sparkContext.master, "rows": rows, "groups": groups}))
 """
 
 
@@ -112,6 +119,48 @@ def test_bad_archive_still_starts_with_clean_stdout(warm, cache, kind):
         shutil.copy(os.path.join(_jvm_dir(warm[0]), f"{session.archive_key('4g')}.jsa"),
                     os.path.join(_jvm_dir(cache), f"{session.archive_key(memory)}.jsa"))
     assert _session(cache, memory=memory)["rows"] == 10
+
+
+JFR_SCRIPT = """
+import json, sys
+from pyspark.sql import SparkSession
+from steampipe_plugin_terraform_spark.session import create
+builder = (SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false")
+           .config("spark.driver.extraJavaOptions", "-XX:StartFlightRecording=filename=" + sys.argv[1]))
+spark = create(builder, "4g")
+""" + WORKLOAD + """
+print(json.dumps({"rows": rows, "groups": groups}))
+"""
+
+
+def test_flight_recording_session_runs_beside_an_archive(warm, tmp_path):
+    """JDK 17 crashed (SIGSEGV in its class-file load hook) when a
+    recording met classes mapped from the archive: such a session now
+    starts without one. JFR prints its own lines on stdout."""
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_CONF_DIR", "JAVA_TOOL_OPTIONS")}
+    env.update(XDG_CACHE_HOME=warm[0], PYTHONPATH=ROOT)
+    out = subprocess.run([sys.executable, "-c", JFR_SCRIPT, str(tmp_path / "rec.jfr")],
+                         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, (out.stdout + out.stderr)[-3000:]
+    assert json.loads(out.stdout.splitlines()[-1]) == {"rows": 10, "groups": 7}
+    assert os.path.getsize(tmp_path / "rec.jfr") > 0
+
+
+@pytest.mark.parametrize("var", ["extraJavaOptions", *session._JAVA_OPTION_VARS])
+@pytest.mark.parametrize("option", [*session._LOAD_HOOK_OPTIONS])
+def test_load_hook_options_start_without_archive(tmp_path, monkeypatch, var, option):
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "templates"))
+    for v in session._JAVA_OPTION_VARS:
+        monkeypatch.delenv(v, raising=False)
+    assert session._cds_flags("4g", "-Xss4m") is not None
+    asked = f"-Dx=1 {option}"
+    if var == "extraJavaOptions":
+        assert session._cds_flags("4g", asked) is None
+    else:
+        monkeypatch.setenv(var, asked)
+        assert session._cds_flags("4g") is None
 
 
 def test_key_follows_heap_and_jars(tmp_path, monkeypatch):
