@@ -1,6 +1,6 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test test-ids test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog perf-cold
+.PHONY: test test-ids test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog perf-cold perf-pairs
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
@@ -71,3 +71,15 @@ perf-cold:
 	    "archive $$(find "$$cache" -name '*.jsa' -printf '%s') bytes," \
 	    "py/ $$(du -sb "$$cache/steampipe_plugin_terraform_spark/py" | cut -f1) bytes"; \
 	done
+
+# A/B pairs of one workload: BASE (a git revision) against the working tree,
+# each from a clean `git archive` copy, alternating which side runs first.
+# Prints each side's median and quartiles of both end-to-end metrics and the
+# change's win count, e.g.
+#   make perf-pairs WORKLOAD=catalog_mix BASE=HEAD PAIRS=10 SEED=901
+WORKLOAD ?= catalog_mix
+BASE ?= HEAD
+PAIRS ?= 5
+SEED ?= 901
+perf-pairs:
+	python3 tools/perf_pairs.py --workload $(WORKLOAD) --base $(BASE) --pairs $(PAIRS) --seed $(SEED)

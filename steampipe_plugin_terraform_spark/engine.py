@@ -7,8 +7,9 @@ executors, tested on local[N]):
    (sources/discover.py — the tfConfigList analog).
 2. **Scan**: the discovered local list IS the scan — nothing is listed
    twice — bin-packed by size into ``min(files, defaultParallelism, bytes
-   // _SLICE_BYTES)`` slices (≥ 1). Only remote ``://`` roots (globs only
-   Hadoop can list) go through ``spark.read.format("binaryFile")``.
+   // SLICE_BYTES)`` slices (≥ 1; ``parallel.slices``, shared with the
+   Arrow-batched operators). Only remote ``://`` roots (globs only Hadoop
+   can list) go through ``spark.read.format("binaryFile")``.
 3. **Parse** (executors, narrow): one ``mapInPandas`` stage reads each local
    file and turns every file into wide rows for every table it feeds
    (tfcore/rows.py). One parse per file total — vs the reference's
@@ -43,12 +44,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .parallel import SLICE_BYTES, slices
 from .sources.discover import discover_files, file_size, pack_by_size
 from .tfcore.rows import WIDE_COLUMNS, build_rows_for_file
 
-# local bytes per parse slice: under ~0.2 s of parse (~0.9 µs/byte), less
-# than a cold Python worker plus a shuffle on every later query
-_SLICE_BYTES = 256 * 1024
+# local bytes per parse slice (``parallel.slices`` applies it)
+_SLICE_BYTES = SLICE_BYTES
 
 _LONG_COLS = {"count", "start_line", "end_line"}
 _BOOL_COLS = {"sensitive"}
@@ -332,14 +333,15 @@ class TerraformEngine:
         """(path, content, file_kind) rows for the parse stage, and the local
         slice count. Local files are a local relation (its row-count size
         estimate keeps joins broadcastable) with NULL content for the parse
-        task to read, coalesced from the slices Spark cuts into ``min(files,
-        defaultParallelism, bytes // _SLICE_BYTES)`` (≥ 1) size-packed ones.
+        task to read, coalesced from the slices Spark cuts into
+        ``parallel.slices`` of the local bytes, capped at the file count,
+        size-packed.
         Remote ``://`` roots are globs only Hadoop can list: binaryFile."""
         import pyarrow as pa
 
         local = [(p, k, file_size(p)) for p, k in files if "://" not in p]
         cut = min(len(local), self.spark.sparkContext.defaultParallelism)
-        n = max(1, min(cut, sum(s for _, _, s in local) // _SLICE_BYTES))
+        n = slices(self.spark, sum(s for _, _, s in local), cut)
         rows = [f for b in pack_by_size(local, n, size=lambda f: f[2], slices=cut) for f in b]
         # cached plans match by content: a per-build id stops a re-read of
         # changed files being served an older cached parse of the same paths

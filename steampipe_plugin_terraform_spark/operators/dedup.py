@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import state
+from ..parallel import spread
 
 
 def shingles(text_col: str, n: int = 5, sep: str = " ") -> Column:
@@ -39,20 +40,6 @@ def shingles(text_col: str, n: int = 5, sep: str = " ") -> Column:
         f" i -> concat_ws('{sep}', slice({toks}, i, {n})))) "
         f"ELSE array() END"
     )
-
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition a narrow projection to cluster parallelism before a
-    compute-heavy explode: a small single-file input is one partition and
-    would serialize the hash work on one core. Gated on the input actually
-    being under-partitioned — at real scale the corpus arrives in hundreds
-    of partitions and the extra shuffle of the full text column would be a
-    gratuitous cost, so it must be (and is) skipped."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    proj = df.select(*cols)
-    if proj.rdd.getNumPartitions() >= max(par // 2, 2):
-        return proj
-    return proj.repartition(par)
 
 
 def _hashed_shingles(
@@ -85,7 +72,7 @@ def _hashed_shingles(
     posting row in the one remaining shuffle."""
     toks = f"split({text_col}, '{' '}')"
     return (
-        _spread(df, id_col, text_col)
+        spread(df.select(id_col, text_col))
         .select(
             F.col(id_col).alias("id"),
             F.expr(
@@ -102,7 +89,7 @@ def _hashed_shingles(
         # the bare attribute: InferFiltersFromGenerate fires only on
         # attribute children (its SPARK-36715 cost guard), and the
         # size()>0 filter it would infer gets alias-substituted by
-        # predicate pushdown below the _spread exchange — re-evaluating
+        # predicate pushdown below the spread exchange — re-evaluating
         # the whole shingle transform TWICE per doc on the UNSPREAD
         # single scan partition (measured: 1.8 s → 5.1 s for the jaccard
         # entry when the explode child was the plain attribute). The
@@ -291,7 +278,7 @@ def tfidf_cosine_pairs(
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine snapped to 1e-6.
     """
     toks = f"split({text_col}, ' ')"
-    sh = _spread(df, id_col, text_col).select(
+    sh = spread(df.select(id_col, text_col)).select(
         F.col(id_col).alias("id"),
         F.explode(
             F.expr(
@@ -378,7 +365,7 @@ def minhash_signatures(
     note under ``_hashed_shingles`` documents. One-shot invocations are
     the bench's and any real job's shape, so the aggregate form stays.
     """
-    sh = _spread(df, id_col, text_col).select(
+    sh = spread(df.select(id_col, text_col)).select(
         F.col(id_col).alias("id"), F.explode(shingles(text_col, n)).alias("s")
     )
     aggs = [
@@ -489,7 +476,7 @@ def _minhash_posting_base(
         toks = f"split({text_col}, ' ')"
         sl = f"slice({toks}, i, {n})"
         return (
-            _spread(df, id_col, text_col)
+            spread(df.select(id_col, text_col))
             .select(
                 F.col(id_col).alias("id"),
                 F.expr(
@@ -640,7 +627,7 @@ def simhash64_hex(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     locate()/substring() string extraction, and bit-identical to it (digit
     k of the hex string is nibble 7-(k mod 8) of its half's value).
     """
-    tok = _spread(df, id_col, text_col).select(
+    tok = spread(df.select(id_col, text_col)).select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col(text_col), " ")).alias("t"),
     )
@@ -680,7 +667,7 @@ def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     xxhash64 is engine-specific; use :func:`simhash64_hex` when the result
     must be reproducible outside Spark (the catalog's oracle-checked entry).
     """
-    tok = _spread(df, id_col, text_col).select(
+    tok = spread(df.select(id_col, text_col)).select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col(text_col), " ")).alias("t"),
     )

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..parallel import plan_bytes, slices, spread
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -219,17 +221,15 @@ def documents_as_binary(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     opaque media payload so the binary plumbing is exercised end-to-end.
 
     Every media operator funnels through this projection before its
-    Arrow-batched decode, so the gated scan-parallelism spread lives HERE
-    (r15; the same narrow-projection device as ``operators.dedup._spread``):
-    a single-split input would otherwise put the whole corpus through ONE
-    mapInPandas task — media decode is the canonical expensive-per-row
-    work. At real scale the input arrives multi-split and the gate skips
-    the shuffle."""
+    Arrow-batched decode, so the spread of the decode lives HERE, sized by
+    input bytes (``parallel.slices`` of the projection's plan estimate):
+    under two slices the decode runs as one task with no exchange (a
+    Python task plus a shuffle costs more than decoding a small input);
+    from two slices a single-split input is round-robined to the slice
+    count (``parallel.spread``)."""
     proj = df.select(F.col(id_col), F.encode(F.col(text_col), "utf-8").alias("payload"))
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if proj.rdd.getNumPartitions() >= max(par // 2, 2):
-        return proj
-    return proj.repartition(par)
+    n = slices(df.sparkSession, plan_bytes(proj))
+    return proj if n < 2 else spread(proj, n)
 
 
 FRAME_SCHEMA = T.StructType(

@@ -8,7 +8,9 @@ Tiers (SURVEY.md §2.11):
   O(|Q|·|C|·d) compute (exactness demands it) but embarrassingly parallel
   with no driver materialization.
 - all-pairs near-dup — same blocking on BOTH sides over the
-  block-pair grid (B·(B+1)/2 cogroups), matmul per block pair.
+  block-pair grid (B·(B+1)/2 cogroups), matmul per block pair. B is sized
+  by input bytes (``parallel.slices``): an input under two slices is one
+  block in one task, with no shuffle.
 - LSH (random hyperplane) bucketed search — the scale path: sign-bit
   signatures (one Arrow-batched matmul against the broadcast plane matrix)
   put similar vectors in the same bucket; only bucket-colliding pairs are
@@ -28,6 +30,8 @@ import struct
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..parallel import plan_bytes, slices, spread
 
 
 def _dot(a: str, b: str) -> Column:
@@ -1092,7 +1096,7 @@ def cosine_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    num_blocks: int = 8,
+    num_blocks: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine pairs above a threshold — blocked both sides, no
     driver materialization (the round-1 version collected the corpus with
@@ -1110,16 +1114,22 @@ def cosine_near_dup_pairs(
     blocks, so B is the knob that fits blocks to executor memory — the
     driver never holds vectors at any B.
 
+    ``num_blocks=None`` sizes B by input bytes: ``min(8, parallel.slices)``
+    of the (id, vector) projection's plan estimate. At one block the input
+    is coalesced to one partition, which satisfies the cogroup's
+    distribution: one task and no exchange.
+
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine portable-rounded
     to 6 digits.
     """
     import numpy as np
 
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _corpus_blocks(df, id_col, num_blocks).alias("blk"),
-    )
+    proj = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    if num_blocks is None:
+        num_blocks = slices(df.sparkSession, plan_bytes(proj), 8)
+        if num_blocks == 1:
+            proj = proj.coalesce(1)
+    base = proj.select("id", "v", _corpus_blocks(proj, "id", num_blocks).alias("blk"))
     # a vector in block b participates as the LEFT side of pairs (b, j≥b)
     # and the RIGHT side of pairs (i≤b, b); pid = bi·B + bj. Replication via
     # explode — no grid join, no broadcast, stays in codegen.
@@ -1360,14 +1370,10 @@ def quantize_int8(
     # double-cast transform three times. Stage them as columns — evaluated
     # once each; CollapseProject never re-inlines an expensive alias with
     # multiple consumers. The gated repartition is the per-row-work spread
-    # (zero-shuffle operator, so nothing downstream parallelizes a
-    # single-split input).
-    par = df.sparkSession.sparkContext.defaultParallelism
-    proj = df.select(id_col, vec_col)
-    if proj.rdd.getNumPartitions() < max(par // 2, 2):
-        proj = proj.repartition(par)
+    # (parallel.spread: zero-shuffle operator, so nothing downstream
+    # parallelizes a single-split input).
     return (
-        proj.select(
+        spread(df.select(id_col, vec_col)).select(
             F.col(id_col),
             F.expr(f"transform({vec_col}, x -> cast(x AS double))").alias("__v"),
         )

@@ -11,6 +11,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..parallel import spread
+
 # tiny per-language stopword profiles for the heuristic language scorer
 LANG_STOPWORDS = {
     "en": ("the", "a", "of", "and", "to"),
@@ -196,15 +198,9 @@ def winnow_fingerprints(
         f"transform(sequence(1, size(__gr) - {w - 1}),"
         f" j -> array_min(slice(__gr, j, {w})))"
     )
-    # gated narrow spread (the family device): md5-heavy zero-shuffle
-    # per-row work would otherwise serialize on a single-split input; at
-    # real scale the gate sees multi-split input and skips the shuffle
-    par = df.sparkSession.sparkContext.defaultParallelism
-    proj = df.filter(F.expr(f"length({text_col}) >= {k + w - 1}")).select(
-        id_col, text_col
-    )
-    if proj.rdd.getNumPartitions() < max(par // 2, 2):
-        proj = proj.repartition(par)
+    # gated narrow spread (parallel.spread): md5-heavy zero-shuffle
+    # per-row work would otherwise serialize on a single-split input
+    proj = spread(df.filter(F.expr(f"length({text_col}) >= {k + w - 1}")).select(id_col, text_col))
     return (
         proj.select(F.col(id_col), F.expr(grams).alias("__gr"))
         .select(F.col(id_col), F.expr(wins).alias("__w"))
@@ -271,14 +267,10 @@ def redact_pii(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     for _, pat, repl in PII_PATTERNS:
         count = count + F.size(F.regexp_extract_all(cur, F.lit(pat), F.lit(0)))
         cur = F.regexp_replace(cur, pat, repl)
-    # gated narrow spread (r15): the regex chain is the expensive per-row
-    # work and the operator is zero-shuffle — on single-split input it
-    # would serialize on one core (same device as dedup._spread)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    proj = df.select(id_col, text_col)
-    if proj.rdd.getNumPartitions() < max(par // 2, 2):
-        proj = proj.repartition(par)
-    return proj.select(
+    # gated narrow spread (parallel.spread): the regex chain is the
+    # expensive per-row work and the operator is zero-shuffle — on
+    # single-split input it would serialize on one core
+    return spread(df.select(id_col, text_col)).select(
         F.col(id_col), cur.alias("clean_text"), count.cast("long").alias("n_redactions")
     )
 
@@ -328,15 +320,11 @@ def repetition_signals(
     # an expensive alias referenced more than once is never re-inlined
     # (struct-field reads of the stored scan are cheap). Same expressions,
     # same values — only the evaluation count changes. The gated
-    # repartition is the per-row-work spread (same device as
-    # dedup._spread): this operator is zero-shuffle, so nothing downstream
-    # would otherwise parallelize a single-split input.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    proj = df.select(id_col, text_col)
-    if proj.rdd.getNumPartitions() < max(par // 2, 2):
-        proj = proj.repartition(par)
+    # repartition is the per-row-work spread (parallel.spread): this
+    # operator is zero-shuffle, so nothing downstream would otherwise
+    # parallelize a single-split input.
     return (
-        proj.select(F.col(id_col), F.expr(grams).alias("__g"))
+        spread(df.select(id_col, text_col)).select(F.col(id_col), F.expr(grams).alias("__g"))
         .select(
             F.col(id_col),
             F.expr("CAST(size(__g) AS BIGINT)").alias("n_ngrams"),

@@ -38,8 +38,7 @@ and class path (about 40 s, single-threaded, after the session's work is
 done), into a ``.part`` name it renames when the dump is complete. Every
 later session maps it. A dump that fails leaves an empty file under the
 archive's name, so later sessions start without an archive instead of
-paying for the dump again. The JIT is left at its tiered C2 default: C1
-alone starts faster but runs warm code about 20% slower.
+paying for the dump again.
 JDK 17 neither dumps nor maps an archive while a non-empty directory is on
 the class path, so the conf directory (``SPARK_CONF_DIR``, default
 ``$SPARK_HOME/conf``) is pointed at an empty directory beside the archive
@@ -53,9 +52,22 @@ or a Java agent: JDK 17 crashes in its class-file load hook on classes
 mapped from an archive. For the same reason, attaching JFR to a running
 session (``jcmd <pid> JFR.start``) crashes a JVM that mapped the archive;
 delete ``jvm/`` first, or start the session with
-``-XX:StartFlightRecording``. ``-Xlog:cds*=off`` keeps any CDS warning off
-stdout, where the CLIs print their one JSON line (JDK 17 logs a rejected
-archive at info level, so none is expected there).
+``-XX:StartFlightRecording``.
+
+JIT: every new driver JVM, with an archive or without, compiles on two
+threads (``-XX:CICompilerCount=2``: one C1 and one C2, the least tiered
+compilation runs with). HotSpot's default grows with the cores, 3/4/12/15
+threads at 4/8/16/32, and in a short session most of the set-up CPU goes
+to them. C2 stays on: C1 alone starts faster but runs warm code about 20%
+slower. A ``-XX:CICompilerCount`` in ``spark.driver.extraJavaOptions``
+comes later on the command line and wins.
+
+Stdout belongs to the CLIs, which print one JSON line there, and the JVM
+logs to stdout by default. ``-Xlog:cds*=off`` keeps any CDS warning off it
+(JDK 17 logs a rejected archive at info level, so none is expected
+there), and ``-Xlog:jfr+startup=off`` the lines a flight recording prints
+as it starts: JFR re-enables that tag on stdout whatever level or output
+it is given, so only ``off`` silences it (harmless without JFR).
 """
 
 from __future__ import annotations
@@ -85,6 +97,9 @@ ROCKSDB_STATE_PROVIDER = (
 # preloads pandas and pyarrow for the workers it forks (see daemon.py).
 DAEMON_MODULE = "steampipe_plugin_terraform_spark.daemon"
 
+
+# options of every new driver JVM (see "JIT" and "Stdout" above)
+_DRIVER_OPTIONS = "-XX:CICompilerCount=2 -Xlog:cds*=off -Xlog:jfr+startup=off"
 
 # JVM options that install a class-file load hook: JFR, and Java agents,
 # which use the same hook (that case is untested). JDK 17 crashes in
@@ -155,21 +170,24 @@ def get_spark(
 
 def create(builder: SparkSession.Builder, driver_memory: str) -> SparkSession:
     """``builder.getOrCreate()`` with a ``driver_memory`` heap; a new driver
-    JVM starts from the class-data-sharing archive, or records the classes
-    it loads so that the archive can be built after it exits.
+    JVM runs two JIT compiler threads and starts from the class-data-sharing
+    archive, or records the classes it loads so that the archive can be
+    built after it exits.
 
-    The flags go in through ``spark.driver.defaultJavaOptions``, so a
-    user's ``spark.driver.extraJavaOptions`` is left alone. A session in an
-    already running JVM gets none: its JVM started with whatever it had.
+    The flags go in through ``spark.driver.defaultJavaOptions``, ahead of
+    any the builder set there, so a user's ``spark.driver.extraJavaOptions``
+    comes later on the command line and wins. A session in an already
+    running JVM gets none: its JVM started with whatever it had.
     """
     from pyspark import SparkContext
 
     builder = builder.config("spark.driver.memory", driver_memory)
     cds = None
     if SparkContext._gateway is None:
-        cds = _cds_flags(driver_memory, builder._options.get("spark.driver.extraJavaOptions", ""))
-    if cds is not None:
-        builder = builder.config("spark.driver.defaultJavaOptions", cds[0])
+        options = builder._options
+        cds = _cds_flags(driver_memory, options.get("spark.driver.extraJavaOptions", ""))
+        flags = [_DRIVER_OPTIONS, cds[0] if cds else "", options.get("spark.driver.defaultJavaOptions", "")]
+        builder = builder.config("spark.driver.defaultJavaOptions", " ".join(f for f in flags if f))
     spark = builder.getOrCreate()
     proc = getattr(SparkContext._gateway, "proc", None)
     if cds is not None and cds[1] is not None and proc is not None:
@@ -208,8 +226,8 @@ def archive_key(driver_memory: str) -> str | None:
 
 
 def _cds_flags(driver_memory: str, java_options: str = "") -> tuple[str, tuple[str, str, str] | None] | None:
-    """(java options, (class list, dump path, archive path) on a miss) for
-    a new driver JVM, pointing ``SPARK_CONF_DIR`` at the empty conf
+    """(archive java option, (class list, dump path, archive path) on a
+    miss) for a new driver JVM, pointing ``SPARK_CONF_DIR`` at the empty conf
     directory; None when the JVM must start without an archive.
     ``java_options`` is the session's ``spark.driver.extraJavaOptions``."""
     from pyspark.find_spark_home import _find_spark_home
@@ -248,9 +266,7 @@ def _cds_flags(driver_memory: str, java_options: str = "") -> tuple[str, tuple[s
     else:
         return None
     os.environ["SPARK_CONF_DIR"] = empty_conf
-    # CDS warnings go to stdout by default, where the CLIs print their one
-    # JSON line
-    return f"{flag} -Xlog:cds*=off", dump
+    return flag, dump
 
 
 def _quote(path: str) -> str:

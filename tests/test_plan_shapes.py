@@ -1590,13 +1590,37 @@ def test_cheap_relational_aggregation_has_no_spread_exchange(spark):
 def test_per_row_heavy_operators_keep_their_spread(spark):
     """The scan-parallelism spread lives in the per-row-heavy operators
     (narrow projection, gated) — not on the table reader. Zero-shuffle
-    operators whose per-row work is expensive (regex chain, n-gram
-    sort+scan, Arrow media decode) must still show the gated round-robin
-    on single-split input, or they serialize on one core."""
-    for name in ("docs_redact_pii", "docs_repetition", "media_metadata",
-                 "emb_quantize_int8"):
+    JVM operators whose per-row work is expensive (regex chain, n-gram
+    sort+scan, per-element array math) must still show the gated
+    round-robin on single-split input, or they serialize on one core."""
+    for name in ("docs_redact_pii", "docs_repetition", "emb_quantize_int8"):
         plan = _plan(spark, name)
         assert "RoundRobinPartitioning" in plan, name
+
+
+def test_python_operators_fan_out_by_input_bytes(spark):
+    """Arrow-batched operators size their spread by input bytes
+    (parallel.slices), like the Terraform parse. Under two slices a Python
+    task plus a shuffle costs more than the work: no exchange at all."""
+    from pyspark.sql import functions as F
+
+    from steampipe_plugin_terraform_spark.operators import multimodal, similarity
+    from steampipe_plugin_terraform_spark.parallel import plan_bytes, slices
+
+    for name in ("media_metadata", "emb_near_dup_pairs"):
+        assert "Exchange" not in _plan(spark, name), name
+    # a single-partition input of at least two slices: round-robin to the
+    # rule's count, not to defaultParallelism
+    docs = spark.range(0, 10_000, 1, 1).select(
+        F.col("id").alias("doc_id"), F.repeat(F.lit("x"), 10).alias("text"))
+    payload = multimodal.documents_as_binary(docs)
+    n = slices(spark, plan_bytes(payload))
+    assert 2 <= n < spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in _plan_df(multimodal.extract_media_metadata(payload))
+    # an explicit block count keeps its two hash exchanges
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    plan = _plan_df(similarity.cosine_near_dup_pairs(emb, num_blocks=3))
+    assert plan.count("Exchange hashpartitioning") == 2
 
 
 def test_winnow_staged_projections_survive_and_no_aggregate_shuffle(spark):

@@ -27,13 +27,17 @@ from pyspark.sql import functions as F
 rows = spark.sparkContext.parallelize(range(10), 2).count()
 df = spark.range(100).mapInPandas(lambda batches: batches, "id long")
 groups = df.groupBy(F.col("id") % 7).count().count()
+jvm = spark._jvm
+hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+jit = int(hotspot.getVMOption("CICompilerCount").getValue())
 """
 SCRIPT = """
 import json
 from steampipe_plugin_terraform_spark import get_spark
 spark = get_spark("session-test")
 """ + WORKLOAD + """
-print(json.dumps({"master": spark.sparkContext.master, "rows": rows, "groups": groups}))
+print(json.dumps({"master": spark.sparkContext.master, "rows": rows, "groups": groups, "jit": jit}))
 """
 
 
@@ -101,6 +105,11 @@ def test_second_session_maps_the_archive(warm):
     assert all(r["rows"] == 10 for r in results)
 
 
+def test_driver_jit_compiles_on_two_threads(warm):
+    # the recording session starts without an archive, the second maps it
+    assert [r["jit"] for r in warm[3]] == [2, 2]
+
+
 def test_default_master_follows_cpu_affinity(warm):
     cpus = min(32, len(os.sched_getaffinity(0)))
     assert [r["master"] for r in warm[3]] == [f"local[{cpus}]"] * 2
@@ -126,24 +135,28 @@ import json, sys
 from pyspark.sql import SparkSession
 from steampipe_plugin_terraform_spark.session import create
 builder = (SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false")
-           .config("spark.driver.extraJavaOptions", "-XX:StartFlightRecording=filename=" + sys.argv[1]))
+           .config("spark.driver.extraJavaOptions",
+                   "-XX:CICompilerCount=3 -XX:StartFlightRecording=filename=" + sys.argv[1]))
 spark = create(builder, "4g")
 """ + WORKLOAD + """
-print(json.dumps({"rows": rows, "groups": groups}))
+print(json.dumps({"rows": rows, "groups": groups, "jit": jit}))
 """
 
 
 def test_flight_recording_session_runs_beside_an_archive(warm, tmp_path):
     """JDK 17 crashed (SIGSEGV in its class-file load hook) when a
     recording met classes mapped from the archive: such a session now
-    starts without one. JFR prints its own lines on stdout."""
+    starts without one. JFR's start-up lines stay off stdout, and the
+    user's compiler thread count wins over the session's."""
     env = {k: v for k, v in os.environ.items()
            if k not in ("SPARK_CONF_DIR", "JAVA_TOOL_OPTIONS")}
     env.update(XDG_CACHE_HOME=warm[0], PYTHONPATH=ROOT)
     out = subprocess.run([sys.executable, "-c", JFR_SCRIPT, str(tmp_path / "rec.jfr")],
                          cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, (out.stdout + out.stderr)[-3000:]
-    assert json.loads(out.stdout.splitlines()[-1]) == {"rows": 10, "groups": 7}
+    lines = out.stdout.splitlines()
+    assert len(lines) == 1, f"JVM output on stdout: {lines[:5]}"
+    assert json.loads(lines[0]) == {"rows": 10, "groups": 7, "jit": 3}
     assert os.path.getsize(tmp_path / "rec.jfr") > 0
 
 
