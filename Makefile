@@ -75,11 +75,12 @@ perf-cold:
 # A/B pairs of one workload: BASE (a git revision) against the working tree,
 # each from a clean `git archive` copy, alternating which side runs first.
 # Prints each side's median and quartiles of both end-to-end metrics and the
-# change's win count, e.g.
-#   make perf-pairs WORKLOAD=catalog_mix BASE=HEAD PAIRS=10 SEED=901
+# change's win count. SEED (the first pair's) has no default: a claim needs
+# seeds not used while writing the change, e.g.
+#   make perf-pairs WORKLOAD=catalog_mix BASE=HEAD PAIRS=10 SEED=<unused seed>
 WORKLOAD ?= catalog_mix
 BASE ?= HEAD
-PAIRS ?= 5
-SEED ?= 901
+PAIRS ?= 10
 perf-pairs:
+	@test -n "$(SEED)" || { echo "perf-pairs: set SEED=<first seed, not used while writing>" >&2; exit 2; }
 	python3 tools/perf_pairs.py --workload $(WORKLOAD) --base $(BASE) --pairs $(PAIRS) --seed $(SEED)

@@ -44,12 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .parallel import SLICE_BYTES, slices
+from .parallel import slices
 from .sources.discover import discover_files, file_size, pack_by_size
 from .tfcore.rows import WIDE_COLUMNS, build_rows_for_file
-
-# local bytes per parse slice (``parallel.slices`` applies it)
-_SLICE_BYTES = SLICE_BYTES
 
 _LONG_COLS = {"count", "start_line", "end_line"}
 _BOOL_COLS = {"sensitive"}

@@ -225,11 +225,10 @@ def documents_as_binary(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     input bytes (``parallel.slices`` of the projection's plan estimate):
     under two slices the decode runs as one task with no exchange (a
     Python task plus a shuffle costs more than decoding a small input);
-    from two slices a single-split input is round-robined to the slice
-    count (``parallel.spread``)."""
+    from two slices the gated spread applies (``parallel.spread``: a
+    single-split input is round-robined to ``defaultParallelism``)."""
     proj = df.select(F.col(id_col), F.encode(F.col(text_col), "utf-8").alias("payload"))
-    n = slices(df.sparkSession, plan_bytes(proj))
-    return proj if n < 2 else spread(proj, n)
+    return proj if slices(df.sparkSession, plan_bytes(proj)) < 2 else spread(proj)
 
 
 FRAME_SCHEMA = T.StructType(

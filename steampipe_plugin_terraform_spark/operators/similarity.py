@@ -8,9 +8,9 @@ Tiers (SURVEY.md §2.11):
   O(|Q|·|C|·d) compute (exactness demands it) but embarrassingly parallel
   with no driver materialization.
 - all-pairs near-dup — same blocking on BOTH sides over the
-  block-pair grid (B·(B+1)/2 cogroups), matmul per block pair. B is sized
-  by input bytes (``parallel.slices``): an input under two slices is one
-  block in one task, with no shuffle.
+  block-pair grid (B·(B+1)/2 cogroups), matmul per block pair. By default
+  an input under two slices of bytes (``parallel.slices``) is one block in
+  one task, with no shuffle; a larger one gets 8 blocks.
 - LSH (random hyperplane) bucketed search — the scale path: sign-bit
   signatures (one Arrow-batched matmul against the broadcast plane matrix)
   put similar vectors in the same bucket; only bucket-colliding pairs are
@@ -1114,10 +1114,10 @@ def cosine_near_dup_pairs(
     blocks, so B is the knob that fits blocks to executor memory — the
     driver never holds vectors at any B.
 
-    ``num_blocks=None`` sizes B by input bytes: ``min(8, parallel.slices)``
-    of the (id, vector) projection's plan estimate. At one block the input
-    is coalesced to one partition, which satisfies the cogroup's
-    distribution: one task and no exchange.
+    ``num_blocks=None`` sizes B by input bytes: 1 when the (id, vector)
+    projection's plan estimate is under two ``parallel.slices``, else 8.
+    At one block the input is coalesced to one partition, which satisfies
+    the cogroup's distribution: one task and no exchange.
 
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine portable-rounded
     to 6 digits.
@@ -1126,7 +1126,7 @@ def cosine_near_dup_pairs(
 
     proj = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     if num_blocks is None:
-        num_blocks = slices(df.sparkSession, plan_bytes(proj), 8)
+        num_blocks = 1 if slices(df.sparkSession, plan_bytes(proj)) < 2 else 8
         if num_blocks == 1:
             proj = proj.coalesce(1)
     base = proj.select("id", "v", _corpus_blocks(proj, "id", num_blocks).alias("blk"))

@@ -36,11 +36,11 @@ def plan_bytes(df: DataFrame) -> int:
     return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
 
 
-def spread(proj: DataFrame, n: int | None = None) -> DataFrame:
-    """``proj`` round-robined to ``n`` partitions (default
-    ``defaultParallelism``) when it arrives in fewer than ``max(n // 2, 2)``;
-    otherwise ``proj`` unchanged."""
-    n = n or proj.sparkSession.sparkContext.defaultParallelism
-    if proj.rdd.getNumPartitions() >= max(n // 2, 2):
+def spread(proj: DataFrame) -> DataFrame:
+    """``proj`` round-robined to ``defaultParallelism`` partitions when it
+    arrives in fewer than ``max(defaultParallelism // 2, 2)``; otherwise
+    ``proj`` unchanged."""
+    par = proj.sparkSession.sparkContext.defaultParallelism
+    if proj.rdd.getNumPartitions() >= max(par // 2, 2):
         return proj
-    return proj.repartition(n)
+    return proj.repartition(par)

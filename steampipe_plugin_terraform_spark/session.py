@@ -59,8 +59,10 @@ threads (``-XX:CICompilerCount=2``: one C1 and one C2, the least tiered
 compilation runs with). HotSpot's default grows with the cores, 3/4/12/15
 threads at 4/8/16/32, and in a short session most of the set-up CPU goes
 to them. C2 stays on: C1 alone starts faster but runs warm code about 20%
-slower. A ``-XX:CICompilerCount`` in ``spark.driver.extraJavaOptions``
-comes later on the command line and wins.
+slower. A ``-XX:CICompilerCount`` of the user's comes later on the
+command line and wins: in ``spark.driver.extraJavaOptions``, or in the
+``spark.driver.defaultJavaOptions`` of the builder or of the conf
+directory's ``spark-defaults.conf``, which ``create`` keeps after its own.
 
 Stdout belongs to the CLIs, which print one JSON line there, and the JVM
 logs to stdout by default. ``-Xlog:cds*=off`` keeps any CDS warning off it
@@ -75,6 +77,7 @@ from __future__ import annotations
 import atexit
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 
@@ -175,9 +178,12 @@ def create(builder: SparkSession.Builder, driver_memory: str) -> SparkSession:
     built after it exits.
 
     The flags go in through ``spark.driver.defaultJavaOptions``, ahead of
-    any the builder set there, so a user's ``spark.driver.extraJavaOptions``
-    comes later on the command line and wins. A session in an already
-    running JVM gets none: its JVM started with whatever it had.
+    the value that would otherwise apply: the builder's, or else the conf
+    directory's ``spark-defaults.conf`` one, which the builder's value
+    replaces on the launcher's command line. Later options win, so those
+    and a user's ``spark.driver.extraJavaOptions`` override ours. A session
+    in an already running JVM gets none: its JVM started with whatever it
+    had.
     """
     from pyspark import SparkContext
 
@@ -185,8 +191,11 @@ def create(builder: SparkSession.Builder, driver_memory: str) -> SparkSession:
     cds = None
     if SparkContext._gateway is None:
         options = builder._options
+        own = options.get("spark.driver.defaultJavaOptions")
+        if own is None:
+            own = _spark_default("spark.driver.defaultJavaOptions")
         cds = _cds_flags(driver_memory, options.get("spark.driver.extraJavaOptions", ""))
-        flags = [_DRIVER_OPTIONS, cds[0] if cds else "", options.get("spark.driver.defaultJavaOptions", "")]
+        flags = [_DRIVER_OPTIONS, cds[0] if cds else "", own]
         builder = builder.config("spark.driver.defaultJavaOptions", " ".join(f for f in flags if f))
     spark = builder.getOrCreate()
     proc = getattr(SparkContext._gateway, "proc", None)
@@ -225,21 +234,61 @@ def archive_key(driver_memory: str) -> str | None:
     return digest.hexdigest()[:20]
 
 
+def _conf_dir() -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+
+
+# a properties line: its key ends at an unescaped blank, "=" or ":"
+_PROPERTY = re.compile(r"((?:\\.|[^\\=: \t\f])*)[ \t\f]*[=:]?[ \t\f]*(.*)", re.S)
+_ESCAPES = {"t": "\t", "n": "\n", "r": "\r", "f": "\f"}
+
+
+def _spark_default(name: str) -> str | None:
+    """``name``'s value in the conf directory's ``spark-defaults.conf``, read
+    as the launcher reads it (a Java properties file: the last entry wins,
+    trimmed), or None."""
+    try:
+        with open(os.path.join(_conf_dir(), "spark-defaults.conf"), encoding="utf-8", errors="replace") as f:
+            text = f.read()
+    except OSError:
+        return None
+    found, logical = None, ""
+    for line in re.split(r"\r\n|\r|\n", text):
+        line = line.lstrip(" \t\f")
+        if not logical and (not line or line[0] in "#!"):
+            continue
+        if (len(line) - len(line.rstrip("\\"))) % 2:  # continued on the next line
+            logical += line[:-1]
+            continue
+        key, value = _PROPERTY.match(logical + line).groups()
+        logical = ""
+        if _unescape(key) == name:
+            found = _unescape(value).strip()
+    return found
+
+
+def _unescape(text: str) -> str:
+    def one(m: re.Match) -> str:
+        c = m[1]
+        return chr(int(c[1:], 16)) if len(c) == 5 else _ESCAPES.get(c, c)
+
+    return re.sub(r"\\(u[0-9a-fA-F]{4}|.)", one, text, flags=re.S)
+
+
 def _cds_flags(driver_memory: str, java_options: str = "") -> tuple[str, tuple[str, str, str] | None] | None:
     """(archive java option, (class list, dump path, archive path) on a
     miss) for a new driver JVM, pointing ``SPARK_CONF_DIR`` at the empty conf
     directory; None when the JVM must start without an archive.
     ``java_options`` is the session's ``spark.driver.extraJavaOptions``."""
-    from pyspark.find_spark_home import _find_spark_home
-
     if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
         return None  # the launcher puts these on the class path too
     asked = " ".join([java_options, *(os.environ.get(v, "") for v in _JAVA_OPTION_VARS)])
     if any(o in asked for o in _LOAD_HOOK_OPTIONS):
         return None
-    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
     try:
-        if any(not n.endswith(".template") for n in os.listdir(conf)):
+        if any(not n.endswith(".template") for n in os.listdir(_conf_dir())):
             return None
     except OSError:
         pass  # no conf directory: nothing to read either

@@ -219,7 +219,7 @@ def test_small_corpus_served_as_one_shuffle_free_task(spark, engine):
 
 
 def test_large_corpus_keeps_parallel_slices_and_refresh_stays_bounded(spark, tmp_path):
-    from steampipe_plugin_terraform_spark.engine import _SLICE_BYTES
+    from steampipe_plugin_terraform_spark.parallel import SLICE_BYTES
 
     def write(name: str, n_locals: int, size: int) -> str:
         body = "locals {\n" + "".join(f"  {name}_{j} = {j}\n" for j in range(n_locals)) + "}\n"
@@ -227,7 +227,7 @@ def test_large_corpus_keeps_parallel_slices_and_refresh_stays_bounded(spark, tmp
         return str(tmp_path / f"{name}.tf")
 
     par = spark.sparkContext.defaultParallelism
-    paths = [write(f"f{i}", 1, _SLICE_BYTES // 2 + 1024) for i in range(2 * par)]  # > par slices
+    paths = [write(f"f{i}", 1, SLICE_BYTES // 2 + 1024) for i in range(2 * par)]  # > par slices
     eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
     assert eng.wide().rdd.getNumPartitions() == par
     eng.refresh(changed_paths=[write("f0", 2, 4096)])  # modify

@@ -4,6 +4,8 @@ second scan / drops a pushdown / falls back to a cartesian join fails CI,
 not a 100 TB run. Checked on the declared (pre-AQE) plan — these are
 structural properties, not runtime size decisions."""
 
+import re
+
 import pytest
 
 from steampipe_plugin_terraform_spark.catalog import QUERIES
@@ -1601,7 +1603,8 @@ def test_per_row_heavy_operators_keep_their_spread(spark):
 def test_python_operators_fan_out_by_input_bytes(spark):
     """Arrow-batched operators size their spread by input bytes
     (parallel.slices), like the Terraform parse. Under two slices a Python
-    task plus a shuffle costs more than the work: no exchange at all."""
+    task plus a shuffle costs more than the work: no exchange at all. From
+    two slices they keep the gated spread and the 8 default blocks."""
     from pyspark.sql import functions as F
 
     from steampipe_plugin_terraform_spark.operators import multimodal, similarity
@@ -1609,14 +1612,18 @@ def test_python_operators_fan_out_by_input_bytes(spark):
 
     for name in ("media_metadata", "emb_near_dup_pairs"):
         assert "Exchange" not in _plan(spark, name), name
-    # a single-partition input of at least two slices: round-robin to the
-    # rule's count, not to defaultParallelism
+    # a single-partition input of at least two slices keeps the gated
+    # spread to defaultParallelism
     docs = spark.range(0, 10_000, 1, 1).select(
         F.col("id").alias("doc_id"), F.repeat(F.lit("x"), 10).alias("text"))
     payload = multimodal.documents_as_binary(docs)
-    n = slices(spark, plan_bytes(payload))
-    assert 2 <= n < spark.sparkContext.defaultParallelism
-    assert f"RoundRobinPartitioning({n})" in _plan_df(multimodal.extract_media_metadata(payload))
+    assert slices(spark, plan_bytes(payload)) >= 2
+    par = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({par})" in _plan_df(multimodal.extract_media_metadata(payload))
+    vecs = spark.range(0, 100_000, 1, 1).select(
+        F.col("id").alias("vec_id"), F.array(F.lit(1.0)).alias("embedding"))
+    assert slices(spark, plan_bytes(vecs)) >= 2
+    assert re.search(r"sequence\(blk#\d+, 7,", _plan_df(similarity.cosine_near_dup_pairs(vecs)))
     # an explicit block count keeps its two hash exchanges
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     plan = _plan_df(similarity.cosine_near_dup_pairs(emb, num_blocks=3))

@@ -31,20 +31,24 @@ jvm = spark._jvm
 hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
     jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
 jit = int(hotspot.getVMOption("CICompilerCount").getValue())
+site = jvm.java.lang.System.getProperty("graft.site")
 """
 SCRIPT = """
 import json
 from steampipe_plugin_terraform_spark import get_spark
 spark = get_spark("session-test")
 """ + WORKLOAD + """
-print(json.dumps({"master": spark.sparkContext.master, "rows": rows, "groups": groups, "jit": jit}))
+print(json.dumps({"master": spark.sparkContext.master, "rows": rows, "groups": groups, "jit": jit,
+                  "site": site}))
 """
 
 
-def _session(cache: str, logs: str | None = None, memory: str = "4g") -> dict:
+def _session(cache: str, logs: str | None = None, memory: str = "4g", conf: str | None = None) -> dict:
     env = {k: v for k, v in os.environ.items()
            if k not in ("SPARK_CONF_DIR", "SPARK_GRAFT_CPUS", "JAVA_TOOL_OPTIONS")}
     env.update(XDG_CACHE_HOME=cache, SPARK_DRIVER_MEMORY=memory)
+    if conf:
+        env["SPARK_CONF_DIR"] = conf
     if logs:
         env["JAVA_TOOL_OPTIONS"] = f"-Xlog:class+load=info:file={logs}/cl-%p.log"
     out = subprocess.run([sys.executable, "-c", SCRIPT], cwd=ROOT, env=env,
@@ -108,6 +112,36 @@ def test_second_session_maps_the_archive(warm):
 def test_driver_jit_compiles_on_two_threads(warm):
     # the recording session starts without an archive, the second maps it
     assert [r["jit"] for r in warm[3]] == [2, 2]
+
+
+def test_site_default_java_options_still_apply(cache, tmp_path):
+    """The session's own spark.driver.defaultJavaOptions goes to the
+    launcher as --conf, which replaces the conf directory's value: the
+    site's options must be carried in it. Real conf files also mean no
+    archive."""
+    (tmp_path / "spark-defaults.conf").write_text(
+        "spark.driver.defaultJavaOptions  -Dgraft.site=kept -XX:CICompilerCount=3\n")
+    result = _session(cache, conf=str(tmp_path))
+    assert (result["site"], result["jit"]) == ("kept", 3)
+    assert not os.path.exists(_jvm_dir(cache)) or not any(
+        n.endswith(".jsa") for n in os.listdir(_jvm_dir(cache)))
+
+
+def test_spark_default_reads_java_properties(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    name = "spark.driver.defaultJavaOptions"
+    assert session._spark_default(name) is None  # no spark-defaults.conf
+    (tmp_path / "spark-defaults.conf").write_text(
+        "# spark.driver.defaultJavaOptions -Dcomment=1\n"
+        "  ! a comment too \\\n"
+        "spark.driver.defaultJavaOptions=-Dfirst=1\n"
+        "\n"
+        "spark.driver.defaultJavaOptions : -Da=1 \\\n"
+        "     -Db=C:\\\\x\\u0041 \r\n"
+        "spark.driver.extraJavaOptions -Dother=1\n")
+    assert session._spark_default(name) == "-Da=1 -Db=C:\\xA"
+    assert session._spark_default("spark.driver.extraJavaOptions") == "-Dother=1"
+    assert session._spark_default("spark.driver") is None
 
 
 def test_default_master_follows_cpu_affinity(warm):

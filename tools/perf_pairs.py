@@ -1,7 +1,7 @@
 """Alternating pairs of one benchmark workload: a base revision against the
 working tree.
 
-    python3 tools/perf_pairs.py --workload catalog_mix --base HEAD --pairs 10 --seed 901
+    python3 tools/perf_pairs.py --workload catalog_mix --base HEAD --pairs 10 --seed <unused seed>
 
 Both sides run ``perfbench/run.py --trace 0`` from a clean ``git archive``
 copy in a temporary directory: the base from ``--base``, the change from
@@ -56,10 +56,12 @@ def _export(tree: str, dest: str) -> str:
 
 
 def _run(copy: str, workload: str, seed: int, seconds: float) -> dict:
+    # the copy alone on the path: a checkout on the caller's PYTHONPATH
+    # would reach the Python workers ahead of it
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", "0"],
-        cwd=copy, capture_output=True, text=True)
+        cwd=copy, env={**os.environ, "PYTHONPATH": copy}, capture_output=True, text=True)
     if out.returncode != 0:
         raise SystemExit(f"{copy}: seed {seed} failed:\n{out.stderr[-3000:]}")
     line = json.loads(out.stdout.splitlines()[-1])
@@ -78,7 +80,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--base", default="HEAD", help="revision of the base side")
-    ap.add_argument("--pairs", type=int, default=5)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, required=True, help="seed of the first pair")
     args = ap.parse_args(argv)
 
