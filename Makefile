@@ -1,6 +1,6 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test test-ids test-order parity-sf001 parity-sf01 bench loc perf-ingest perf-query perf-catalog perf-cold perf-pairs
+.PHONY: test test-ids test-order parity-sf001 parity-sf01 bench loc surface perf-ingest perf-query perf-catalog perf-cold perf-pairs
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
@@ -37,6 +37,12 @@ bench:
 # Line count of the package plus tests: the measure "less code" is judged by.
 loc:
 	@git ls-files steampipe_plugin_terraform_spark tests | grep '\.py$$' | xargs cat | wc -l
+
+# The driver surface as labelled lines (queries() and the bench lists in
+# order, ORACLES and STAGED_QUERIES sorted). A change that keeps the surface
+# diffs empty against the parent's output.
+surface:
+	@python3 tools/surface.py
 
 # Terraform ingest benchmark at one seed: end-to-end metrics untraced, then
 # the per-layer split traced (see perfbench/run.py).

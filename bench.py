@@ -160,14 +160,11 @@ EXTENDED = [
     "emb_mmr_rerank",
     "stream_hourly_topk_types",
     "docs_bpe_merge_pairs",
-    "emb_pq_recall",
     "tf_undeclared_references",
-    "emb_centroid_drift",
     "tf_unused_data_sources",
     "q_lineitem_kruskal_wallis",
     "q_supplier_abc_classes",
     "dedup_incremental_batch",
-    "emb_sign_hamming_recall",
     "tf_required_providers_audit",
     "tf_state_lineage_audit",
     "tf_backend_audit",
@@ -182,19 +179,13 @@ EXTENDED = [
     "docs_dedup_rate_report",
     "tf_moved_blocks_audit",
     "tf_provider_alias_orphans",
-    "emb_ivf_delete_maintenance",
-    "emb_knn_label_vote",
     "tf_count_foreach_expansion",
-    "emb_cov_top_eigen",
     "tf_lifecycle_audit",
     "tf_legacy_interpolation_audit",
     "q_lineitem_mannwhitney_u",
     "q_events_overdispersion",
     "q_events_markov_stationary",
-    "emb_ivf_compaction",
-    "emb_sign_bit_balance",
     "tf_resource_naming_convention",
-    "emb_norm_buckets",
     "tf_variable_type_mismatch",
 ]
 

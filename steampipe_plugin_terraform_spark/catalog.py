@@ -8972,9 +8972,8 @@ def tf_untagged_resources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGING AREA: 15 drafts below — 6 `tf_*` audits and 9 `emb_*`
-# retrieval drafts, the `emb_*` ones due for deletion (ROADMAP item 4) —
-# are FULL entries (Spark implementation + DuckDB oracle) registered into
+# STAGING AREA: the 6 `tf_*` audit drafts below are FULL entries (Spark
+# implementation + DuckDB oracle) registered into
 # STAGED_QUERIES/STAGED_ORACLES instead of QUERIES/ORACLES, so they stay
 # off the driver surface while tests/test_staged_entries.py parity-runs
 # them (sf0.001, and sf0.01 under SPARK_GRAFT_TEST_SF_DIR),
@@ -10735,73 +10734,6 @@ def docs_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query(
-    "emb_pq_recall",
-    # recall replay: the full PQ chain (_pq_cte: four subspace Lloyds,
-    # encoding, ADC ranking) against the rounded-rank brute-force ground
-    # truth; recall snapped to basis points by positive integer division
-    oracle=f"""
-    WITH {_pq_cte()},
-    ne AS (SELECT vec_id nid, embedding::DOUBLE[] v FROM embeddings
-           WHERE vec_id >= 10),
-    bf AS (SELECT qid, nid FROM (
-        SELECT q.qid, ne.nid, row_number() OVER (PARTITION BY q.qid
-            ORDER BY {_cos_sql('q.v', 'ne.v')} DESC, ne.nid) rnk
-        FROM q, ne) WHERE rnk <= 5),
-    ap AS (SELECT qid, nid FROM r WHERE rank <= 5),
-    hits AS (SELECT bf.qid FROM bf JOIN ap USING (qid, nid))
-    SELECT CAST((count(*) * 10000) // (SELECT count(*) FROM bf) AS BIGINT)
-             AS recall_x1e4,
-           CAST(count(DISTINCT qid) AS BIGINT) AS n_queries_with_hits
-    FROM hits
-    """,
-)
-def emb_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the PQ/ADC ranking against brute-force ground truth —
-    the missing member of the measured-quality family (emb_ivf_recall,
-    dedup_lsh_recall, emb_matryoshka_prefix_recall): PQ is the LOSSY
-    tier of the ANN stack (2-byte codes), so a deployment must know how
-    much ranking quality the compression costs before trusting it.
-    Reuses the session-trained PQ (one training per corpus, served from
-    ``_pq_trained``) and the cosine_topk ground-truth device; recall in basis
-    points via positive integer division — bit-exact cross-engine.
-
-    Shape: both sides are (qid, nid) pair sets (|Q|·k rows); recall is
-    one left-semi join + one aggregate. The ground-truth side is the
-    self-evaluation cost, same as the other recall entries."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    exact = similarity.cosine_topk(queries, corpus, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = similarity.pq_topk(
-        corpus,
-        queries,
-        dim=64,
-        m=4,
-        k=16,
-        iters=2,
-        topk=5,
-        trained=_pq_trained(spark, sf_dir),
-    ).select("query_id", "neighbor_id", F.lit(True).alias("__hit"))
-    # r16 (guide §5): the denominator was a driver-side exact.count() —
-    # a second full brute-force evaluation per invocation. Marker left
-    # join (exact: approx pairs are unique) folds both counts into one
-    # aggregate; numerator and denominator stay positive integers, so
-    # the DIV parity is unchanged.
-    marked = exact.join(approx, ["query_id", "neighbor_id"], "left")
-    return marked.agg(
-        F.expr(
-            "CAST(sum(CASE WHEN __hit THEN 1 ELSE 0 END) * 10000"
-            " DIV count(*) AS BIGINT)"
-        ).alias("recall_x1e4"),
-        F.countDistinct(F.when(F.col("__hit"), F.col("query_id")))
-        .cast("long")
-        .alias("n_queries_with_hits"),
-    )
-
-
 _MODULE_TOKEN_RE = _TOKEN_LB + "module\\\\.([A-Za-z_][A-Za-z0-9_-]*)"
 
 
@@ -10872,123 +10804,6 @@ def tf_undeclared_references(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_ref_blocks")
     )
 
-
-def _drift_quantizer(spark: SparkSession, sf_dir: str):
-    """Lloyd trained ONLY on the even-id 'reference' corpus slice — the
-    frozen production quantizer a drift monitor compares new traffic
-    against (training on the union would hide exactly the shift being
-    measured)."""
-
-    def build():
-        emb = _t(spark, sf_dir, "embeddings")
-        ref = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") % 2 == 0))
-        return similarity.kmeans_lloyd(ref, k=_effective_k(ref.count()), iters=3)[1]
-
-    return state.get(spark, "drift_quantizer", state.corpus_digest(sf_dir), build)
-
-
-def _drift_cte() -> str:
-    """Replay: Lloyd over the even-id slice only (k from ksel over that
-    slice), then FROZEN-centroid assignment of both slices (the
-    _ivf_incr_cte maf device, once per slice), shares in basis points by
-    positive integer division, every centroid emitted (empty buckets
-    are drift signal too)."""
-    dist = _dist_sql
-    parts = _lloyd_parts("vec_id >= 10 AND vec_id % 2 = 0", 3, 64)
-    parts += [
-        "cur AS (SELECT vec_id nid, embedding::DOUBLE[] v FROM embeddings "
-        "WHERE vec_id >= 10 AND vec_id % 2 = 1)",
-        "curaf AS (SELECT nid, cid AS bucket FROM ("
-        "SELECT e.nid, c.cid, row_number() OVER (PARTITION BY e.nid "
-        f"ORDER BY {dist('e.v', 'c.cv')}, c.cid) rn FROM cur e, c3 c) "
-        "WHERE rn = 1)",
-        "rc AS (SELECT bucket, CAST(count(*) AS BIGINT) n_ref FROM af "
-        "GROUP BY 1)",
-        "cc AS (SELECT bucket, CAST(count(*) AS BIGINT) n_cur FROM curaf "
-        "GROUP BY 1)",
-        "tot AS (SELECT (SELECT count(*) FROM af) tr, "
-        "(SELECT count(*) FROM curaf) tc)",
-        "j AS (SELECT c3.cid AS bucket, COALESCE(rc.n_ref, 0) n_ref, "
-        "COALESCE(cc.n_cur, 0) n_cur FROM c3 "
-        "LEFT JOIN rc ON rc.bucket = c3.cid "
-        "LEFT JOIN cc ON cc.bucket = c3.cid)",
-        "sh AS (SELECT bucket, n_ref, n_cur, "
-        "CAST((n_ref * 10000) // (SELECT tr FROM tot) AS BIGINT) share_ref_x1e4, "
-        "CAST((n_cur * 10000) // (SELECT tc FROM tot) AS BIGINT) share_cur_x1e4 "
-        "FROM j)",
-    ]
-    return ",\n    ".join(parts)
-
-
-@staged_query(
-    "emb_centroid_drift",
-    oracle=f"""
-    WITH {_drift_cte()}
-    SELECT bucket, CAST(n_ref AS BIGINT) AS n_ref,
-           CAST(n_cur AS BIGINT) AS n_cur,
-           share_ref_x1e4, share_cur_x1e4,
-           CAST(abs(share_cur_x1e4 - share_ref_x1e4) AS BIGINT)
-             AS drift_x1e4
-    FROM sh
-    """,
-)
-def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding distribution-drift monitor — the cluster-population
-    shift report an ML-ops pipeline runs on every new embedding batch
-    (the clustered analog of `emb_dim_stats`' per-dimension moments,
-    and the population-level complement of PSI over scalar features):
-    a quantizer FROZEN on the even-id reference slice assigns both the
-    reference and the odd-id 'current' slice; each bucket reports both
-    populations, both shares in basis points, and the absolute share
-    drift. Empty buckets are emitted too — a cluster the new traffic
-    abandoned (or never reaches) is exactly the signal. Training on the
-    union would hide the shift being measured.
-
-    Scale: one Lloyd training on the capped reference sample (session-
-    cached per corpus), two frozen-centroid assignment passes (each one
-    scan + k-row broadcast comparison), two bucket-count aggregations —
-    never a pairwise structure. Shares snap by positive integer
-    division; the oracle replays the Lloyd chain and both assignments."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = _drift_quantizer(spark, sf_dir)
-    ref = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") % 2 == 0))
-    cur = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") % 2 == 1))
-    ra = similarity.assign_to_centroids(ref, cents)
-    ca = similarity.assign_to_centroids(cur, cents)
-    rc = ra.groupBy("bucket").agg(F.count("*").cast("long").alias("n_ref"))
-    cc = ca.groupBy("bucket").agg(F.count("*").cast("long").alias("n_cur"))
-    buckets = spark.range(len(cents)).select(
-        F.col("id").cast("int").alias("bucket")
-    )
-    j = (
-        buckets.join(F.broadcast(rc), "bucket", "left")
-        .join(F.broadcast(cc), "bucket", "left")
-        .select(
-            "bucket",
-            F.coalesce("n_ref", F.lit(0).cast("long")).alias("n_ref"),
-            F.coalesce("n_cur", F.lit(0).cast("long")).alias("n_cur"),
-        )
-    )
-    # r16 (guide §5): the slice totals were two driver-side .count()
-    # jobs — two extra full scans of the embeddings table per
-    # invocation. Every slice row lands in exactly one bucket, so the
-    # totals are the SUM of the per-bucket counts already on hand: a
-    # whole-frame window over the k-row bucket report, zero extra scans.
-    # Positive-integer DIV parity unchanged (same integers divided).
-    return j.select(
-        "bucket",
-        "n_ref",
-        "n_cur",
-        F.expr(
-            "CAST(n_ref * 10000 DIV (sum(n_ref) OVER ()) AS BIGINT)"
-        ).alias("share_ref_x1e4"),
-        F.expr(
-            "CAST(n_cur * 10000 DIV (sum(n_cur) OVER ()) AS BIGINT)"
-        ).alias("share_cur_x1e4"),
-    ).withColumn(
-        "drift_x1e4",
-        F.expr("CAST(abs(share_cur_x1e4 - share_ref_x1e4) AS BIGINT)"),
-    )
 
 def _settings_frame(spark: SparkSession, corpus: str) -> DataFrame:
     """The engine-internal ``terraform_settings`` rows of a fixture
@@ -11841,7 +11656,7 @@ def emb_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side and re-emit as a local frame, so the |Q|·N brute-force
     # matmul runs once for all three curve points. Not cached in Spark's
     # cache manager: it would plan-match the identical cosine_topk subtree
-    # inside emb_pq_recall (the state.py rule).
+    # inside emb_ivf_recall (the state.py rule).
     exact_rows = (
         similarity.cosine_topk(queries, corpus, k=5)
         .select("query_id", "neighbor_id")
@@ -12097,152 +11912,6 @@ def tf_provider_alias_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("has_unaliased").isNotNull(), F.lit("default_missing"))
         .otherwise(F.lit("implicit_default"))
         .alias("status"),
-    )
-
-
-def _ivf_delete_cte() -> str:
-    """Replay: the standard full-corpus Lloyd chain (exactly `_ivf_cte`'s
-    index — same store `emb_ivf_store_topk` probes), then the post-delete
-    rebuild: survivors are af minus the deleted eighth, and the probe
-    ranks only survivors — what a from-scratch index over the remaining
-    corpus with the SAME frozen centroids would serve."""
-    cos = _cos_sql
-    parts = [
-        "q AS (SELECT vec_id qid, embedding::DOUBLE[] v FROM embeddings WHERE vec_id < 10)"
-    ]
-    parts += _lloyd_parts("vec_id >= 10", 3, 64)
-    parts += [
-        "surv AS (SELECT nid, v, bucket FROM af WHERE nid % 8 <> 3)",
-        "pr AS (SELECT qid, cid AS bucket FROM ("
-        "SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid "
-        f"ORDER BY {cos('q.v', 'c.cv')} DESC, c.cid) rn FROM q, c3 c) WHERE rn <= 8)",
-        f"s AS (SELECT q.qid, surv.nid, {cos('q.v', 'surv.v')} AS cosine "
-        "FROM pr JOIN q ON q.qid = pr.qid JOIN surv ON surv.bucket = pr.bucket)",
-        "r AS (SELECT qid, nid, cosine, row_number() OVER "
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) rank FROM s)",
-    ]
-    return ",\n    ".join(parts)
-
-
-@staged_query(
-    "emb_ivf_delete_maintenance",
-    # the oracle IS the post-delete rebuild against the same frozen
-    # centroids: tombstone-filter ≡ re-assign-the-survivors, and deleted
-    # neighbors must vanish from every top-k with next-best backfill —
-    # the deletion half of the maintenance-identity pair whose ingest
-    # half is emb_ivf_incremental_topk
-    oracle=f"""
-    WITH {_ivf_delete_cte()}
-    SELECT qid AS query_id, nid AS neighbor_id, cosine,
-           CAST(rank AS BIGINT) AS rank
-    FROM r WHERE rank <= 5
-    """,
-)
-def emb_ivf_delete_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF DELETE — the other day-2 vector-store operation
-    (`emb_ivf_incremental_topk` is ingest): drop a batch of vectors
-    (the vec_id % 8 == 3 eighth — GDPR erasure, dedup prune, TTL) from
-    the SAME session-persisted bucket-partitioned store the serving
-    entry probes, without retraining or rewriting the store. The
-    tombstone is a pushed data filter over the loaded index; the probe
-    then serves top-5 over survivors, with deleted neighbors replaced
-    by each query's next-best — which is exactly what the oracle's
-    rebuild (full Lloyd chain, survivors only) produces, so the driver
-    validates the maintenance identity end-to-end.
-
-    Scale: nothing re-reads or rewrites the store — the delete costs
-    one predicate on the probe scan (at 100 TB: a broadcast-semi
-    against a tombstone set instead of the modulo predicate), stacked
-    ON TOP of the static bucket-partition pruning (PartitionFilters
-    from the probed set, PushedFilters from the tombstone — both pinned
-    in the plan test). Compaction (rewriting buckets to physically drop
-    tombstones) stays a scheduled offline job, same as retraining."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    path = _ivf_store_path(spark, sf_dir)
-    loaded, cents = similarity.ivf_load(spark, path)
-    survivors = loaded.filter(F.col("vec_id") % 8 != 3)
-    return similarity.ivf_topk(
-        queries, survivors, cents, k=5, nprobe=8, static_prune=True
-    )
-
-
-@staged_query(
-    "emb_knn_label_vote",
-    # replay: the emb_cosine_topk ranking device (quantized cosine,
-    # nid tiebreak) extended with the label vote — winner by (count
-    # desc, label asc), a total order; correct as an integer flag
-    oracle="""
-    WITH q AS (SELECT vec_id qid, label ql, embedding::DOUBLE[] v
-               FROM embeddings WHERE vec_id < 10),
-    c AS (SELECT vec_id nid, label nl, embedding::DOUBLE[] v
-          FROM embeddings WHERE vec_id >= 10),
-    s AS (SELECT qid, nid, nl,
-                 floor(list_dot_product(q.v, c.v)
-                       / (sqrt(list_dot_product(q.v, q.v))
-                          * sqrt(list_dot_product(c.v, c.v)))
-                       * 1000000 + 0.5) / 1000000 cosine
-          FROM q, c),
-    r AS (SELECT qid, nid, nl, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM s),
-    votes AS (SELECT qid, nl AS label, CAST(count(*) AS BIGINT) cnt
-              FROM r WHERE rank <= 5 GROUP BY 1, 2),
-    win AS (SELECT qid, label, cnt, row_number() OVER
-              (PARTITION BY qid ORDER BY cnt DESC, label) vr FROM votes)
-    SELECT q.qid AS query_id, CAST(q.ql AS BIGINT) AS true_label,
-           CAST(w.label AS BIGINT) AS voted_label, w.cnt AS n_votes,
-           CAST(w.label = q.ql AS BIGINT) AS correct
-    FROM win w JOIN q ON q.qid = w.qid WHERE w.vr = 1
-    """,
-)
-def emb_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN majority-vote label check — the label-noise screen a
-    training-data pipeline runs before trusting a labeled corpus
-    (Northcutt-style confident-learning lite): each labeled query's 5
-    nearest neighbors (exact cosine, the `emb_cosine_topk` baseline
-    ranking) vote with their labels; a query whose own label loses the
-    vote is a relabel/review candidate. Winner by (count desc, label
-    asc) — a total order, so the vote is engine-deterministic.
-
-    Scale: the ranking is the documented |Q|·N brute-force baseline
-    (|Q| bounded by contract — the scale path swaps in the IVF probe,
-    same downstream vote); the vote itself runs over the |Q|·k top-k
-    frame, and the label attaches BROADCAST the |Q|·k side into the
-    corpus label scan, never the reverse. Everything after the matmul
-    is |Q|-sized."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    topk = similarity.cosine_topk(queries, corpus, k=5)
-    labels = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("nl")
-    )
-    votes = (
-        F.broadcast(topk)
-        .join(labels, "neighbor_id")
-        .groupBy("query_id", "nl")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cnt").desc(), F.col("nl").asc()
-    )
-    win = votes.withColumn("vr", F.row_number().over(w)).filter(
-        F.col("vr") == 1
-    )
-    ql = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").cast("long").alias("true_label"),
-    )
-    return (
-        F.broadcast(win)
-        .join(ql, "query_id")
-        .select(
-            "query_id",
-            "true_label",
-            F.col("nl").cast("long").alias("voted_label"),
-            F.col("cnt").alias("n_votes"),
-            F.expr("CAST(nl = true_label AS BIGINT)").alias("correct"),
-        )
     )
 
 
@@ -12759,8 +12428,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE user-keyed window shuffle extracts successor pairs,
     one keyed agg to the |types|² grid — then the bounded-collect
     device (the grid is corpus-independent): the three iterations run
-    on exact Python ints over the collected grid (the
-    `emb_cov_top_eigen` power-iteration precedent; r15 — the previous
+    on exact Python ints over the collected grid (r15 — the previous
     broadcast-join form paid three chained grid-sized Spark jobs of
     pure scheduling latency per invocation), so the corpus is scanned
     once and the final plan is a local result relation with no
@@ -12796,66 +12464,6 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         pi = nxt
     return spark.createDataFrame(
         sorted(pi.items()), "event_type string, pi_e6 long"
-    )
-
-
-def _ivf_compacted_path(spark: SparkSession, sf_dir: str) -> str:
-    """Physically rewrite the session IVF store WITHOUT the tombstoned
-    eighth (vec_id % 8 == 3 — the same delete set
-    `emb_ivf_delete_maintenance` filters at probe time): the scheduled
-    offline compaction job that entry's docstring defers. Centroids are
-    carried over UNCHANGED — compaction drops bytes, it never retrains
-    or re-assigns."""
-
-    def build() -> str:
-        loaded, cents = similarity.ivf_load(spark, _ivf_store_path(spark, sf_dir))
-        survivors = loaded.filter(F.col("vec_id") % 8 != 3)
-        path = state.temp_root("ivf_compact_") + "/index"
-        similarity.ivf_save(survivors, cents, path)
-        return path
-
-    return state.get(spark, "ivf_compact", state.corpus_digest(sf_dir), build)
-
-
-@staged_query(
-    "emb_ivf_compaction",
-    # the oracle is emb_ivf_delete_maintenance's rebuild CTE VERBATIM:
-    # compaction must be invisible to queries — probe(compacted store)
-    # ≡ probe(tombstone-filtered store) ≡ rebuild-over-survivors; the
-    # driver checks the invisibility identity end-to-end
-    oracle=f"""
-    WITH {_ivf_delete_cte()}
-    SELECT qid AS query_id, nid AS neighbor_id, cosine,
-           CAST(rank AS BIGINT) AS rank
-    FROM r WHERE rank <= 5
-    """,
-)
-def emb_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF store COMPACTION — the third day-2 vector-store operation,
-    completing the maintenance triad (`emb_ivf_incremental_topk` =
-    ingest, `emb_ivf_delete_maintenance` = tombstone delete, this =
-    the scheduled offline job that delete entry defers): physically
-    rewrite the bucket-partitioned store dropping the tombstoned
-    eighth, centroids carried over untouched (compaction drops bytes —
-    it never retrains or re-assigns), then serve probes from the
-    compacted store. Correctness IS invisibility: the oracle is the
-    delete entry's rebuild replay verbatim, so the driver validates
-    probe(compacted) ≡ probe(tombstone-filtered) ≡ rebuild — the
-    identity that makes swapping a compacted store under a live serving
-    path safe.
-
-    Scale: the rewrite reads each store partition once and writes the
-    survivor subset (bucket partitioning preserved, so probes keep
-    their static partition pruning); probes afterwards carry NO
-    tombstone predicate at all — compaction converts the per-probe
-    filter cost into a one-time IO pass, which is the entire point of
-    running it."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    path = _ivf_compacted_path(spark, sf_dir)
-    loaded, cents = similarity.ivf_load(spark, path)
-    return similarity.ivf_topk(
-        queries, loaded, cents, k=5, nprobe=8, static_prune=True
     )
 
 
@@ -13254,24 +12862,24 @@ def _incremental_probe(
 @query("dedup_incremental_batch", oracle=_INCR_DEDUP_ORACLE)
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL near-dup ingest — the dedup family's missing day-2
-    operation (the ANN analogs are `emb_ivf_incremental_topk` /
-    `emb_ivf_delete_maintenance`): an arriving batch (the doc_id%10==7
-    tenth) is checked against the SESSION-PERSISTED corpus LSH store
-    (band buckets + shingle-hash sets, written once — the existing
-    corpus is never re-tokenized), each new doc reporting its best
-    corpus match at exact Jaccard ≥ 0.8 (snapped-rank: basis-point
-    floor-division score, old-id tiebreak) or `unique`. This is the
-    production ingest gate: tokenize/shingle/sign the batch only, one
-    bucket equi-join against the store, verify only banding collisions.
+    operation (the ANN analog is `emb_ivf_incremental_topk`): an
+    arriving batch (the doc_id%10==7 tenth) is checked against the
+    SESSION-PERSISTED corpus LSH store (band buckets + shingle-hash
+    sets, written once — the existing corpus is never re-tokenized),
+    each new doc reporting its best corpus match at exact Jaccard ≥ 0.8
+    (snapped-rank: basis-point floor-division score, old-id tiebreak) or
+    `unique`. This is the production ingest gate: tokenize/shingle/sign
+    the batch only, one bucket equi-join against the store, verify only
+    banding collisions.
 
-    Store-freshness contract (the frozen-quantizer precedent,
-    `emb_centroid_drift`): the store is df-cap-free here (the cap is
-    the SELF-join's scale guard; a bipartite probe's candidate count is
-    already bounded by the banding) and frozen at build — intra-batch
+    Store-freshness contract (the frozen-centroid precedent,
+    `emb_ivf_incremental_topk`): the store is df-cap-free here (the cap
+    is the SELF-join's scale guard; a bipartite probe's candidate count
+    is already bounded by the banding) and frozen at build — intra-batch
     duplicates and batch-vs-batch pairs are the NEXT rebuild's problem,
-    exactly like IVF compaction. The oracle replays the corpus-wide
-    banding restricted to cross pairs, so the driver checks
-    incremental(store, batch) ≡ full-recompute-cross-slice — the
+    exactly like an IVF index between retrainings. The oracle replays
+    the corpus-wide banding restricted to cross pairs, so the driver
+    checks incremental(store, batch) ≡ full-recompute-cross-slice — the
     maintenance identity.
 
     Scale: the store is the artifact (≈ one 8-byte hash per corpus
@@ -13285,383 +12893,6 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpath, spath = _lsh_store_paths(spark, sf_dir)
     return _incremental_probe(
         new, spark.read.parquet(bpath), spark.read.parquet(spath)
-    )
-
-
-def _sign_words(df: DataFrame) -> DataFrame:
-    """1-bit (sign) quantization of the 64-dim embedding into TWO 32-bit
-    words carried as BIGINTs (w0 = dims 0-31, w1 = dims 32-63) — two
-    words instead of one so no value ever touches the BIGINT sign bit:
-    the packing is pure non-negative integer arithmetic on both engines
-    (shiftleft sums here ≡ DuckDB ``1::BIGINT << i`` sums), with none of
-    the 2⁶³ wraparound a single 64-bit word would need. The bit rule is
-    strictly-positive (``> 0``): float→double widening is exact, so the
-    comparison is engine-portable."""
-    word = (
-        "aggregate(transform(sequence(0, 31),"
-        " i -> CASE WHEN embedding[i{off}] > 0"
-        " THEN shiftleft(CAST(1 AS BIGINT), i) ELSE CAST(0 AS BIGINT)"
-        " END), CAST(0 AS BIGINT), (a, x) -> a + x)"
-    )
-    return df.select(
-        "vec_id",
-        F.expr(word.format(off="")).alias("w0"),
-        F.expr(word.format(off="+32")).alias("w1"),
-    )
-
-
-@staged_query(
-    "emb_sign_hamming_recall",
-    # both rankings engine-replayed exactly: the sign words are integer
-    # sums of power-of-two terms (bit-identical across engines — the
-    # strictly-positive rule on exactly-widened doubles), Hamming is
-    # bit_count(xor) per word, ties broken by neighbor id; the exact
-    # ranking is the emb_cosine_topk device (_cos_sql rounded score, id
-    # tiebreak); recall@10 in basis points is n·1000 — no division
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-    sg AS (SELECT vec_id,
-             CAST(sum(CASE WHEN v[i+1] > 0 THEN 1::BIGINT << i
-                      ELSE 0 END) AS BIGINT) w0,
-             CAST(sum(CASE WHEN v[i+33] > 0 THEN 1::BIGINT << i
-                      ELSE 0 END) AS BIGINT) w1
-           FROM e, unnest(range(0, 32)) r(i) GROUP BY vec_id),
-    q AS (SELECT vec_id qid, v FROM e WHERE vec_id < 10),
-    c AS (SELECT vec_id nid, v FROM e WHERE vec_id >= 10),
-    fr AS (SELECT qid, nid FROM (
-             SELECT q.qid, c.nid, row_number() OVER (PARTITION BY q.qid
-                    ORDER BY floor(list_dot_product(q.v,c.v)
-                        / (sqrt(list_dot_product(q.v,q.v))
-                           * sqrt(list_dot_product(c.v,c.v)))
-                        * 1000000 + 0.5) / 1000000 DESC, c.nid) rn
-             FROM q, c) WHERE rn <= 10),
-    hr AS (SELECT qid, nid FROM (
-             SELECT a.vec_id qid, b.vec_id nid, row_number() OVER (
-                    PARTITION BY a.vec_id
-                    ORDER BY bit_count(xor(a.w0, b.w0))
-                           + bit_count(xor(a.w1, b.w1)), b.vec_id) rn
-             FROM sg a JOIN sg b ON a.vec_id < 10 AND b.vec_id >= 10)
-           WHERE rn <= 10),
-    ov AS (SELECT fr.qid, CAST(count(*) AS BIGINT) n FROM fr
-           JOIN hr ON fr.qid = hr.qid AND fr.nid = hr.nid GROUP BY fr.qid)
-    SELECT qs.qid AS query_id,
-           CAST(COALESCE(ov.n, 0) AS BIGINT) AS n_overlap,
-           CAST(COALESCE(ov.n, 0) * 1000 AS BIGINT) AS recall_x1e4
-    FROM (SELECT DISTINCT qid FROM q) qs LEFT JOIN ov ON ov.qid = qs.qid
-    """,
-)
-def emb_sign_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-BIT (sign) quantization recall — the fourth member of the
-    lossy-compression self-eval family (`emb_quantize_int8` = 8-bit,
-    `emb_pq_recall` = product codes, `emb_matryoshka_prefix_recall` =
-    truncated dims; this = the extreme 64×-compression point every
-    binary-embedding serving stack ships): each vector collapses to its
-    64 sign bits packed as two 32-bit words, candidates rank by Hamming
-    distance (XOR + popcount — integer-exact, engine-portable), and the
-    entry reports per query how many of the exact-cosine top-10 the
-    sign-bit top-10 recovers (recall@10 = n_overlap·1000 bp, no
-    division). Sign bits are invariant under any positive per-vector
-    scaling — exactly the invariance cosine has — which is why this
-    1-bit code preserves angular neighborhoods at all (the independent
-    test pins both the invariance and a full numpy replay).
-
-    Scale: the sign pass moves 8 BYTES per vector (64× less than the
-    float[64] corpus) and Hamming is SIMD popcount — the designed
-    candidate generator in front of a full-precision rerank; here the
-    query side (|Q| = 10) broadcasts and the corpus is scanned once per
-    ranking. Sublinear candidate generation at 100 TB bands the 64 bits
-    into 4×16-bit bucket keys exactly like `dedup_simhash` — the
-    relational tail is already in the catalog.
-
-    Both rankings and the overlap are deterministic: Hamming ties break
-    on neighbor id, the exact side is the `emb_cosine_topk` device
-    (rounded score + id tiebreak)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    qw = _sign_words(q).select(
-        F.col("vec_id").alias("qid"),
-        F.col("w0").alias("qw0"),
-        F.col("w1").alias("qw1"),
-    )
-    cw = _sign_words(c)
-    wb = Window.partitionBy("qid").orderBy("ham", "vec_id")
-    approx = (
-        cw.crossJoin(F.broadcast(qw))
-        .select(
-            "qid",
-            "vec_id",
-            (
-                F.expr("bit_count(w0 ^ qw0)") + F.expr("bit_count(w1 ^ qw1)")
-            ).alias("ham"),
-        )
-        .withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= 10)
-        .select(F.col("qid").alias("query_id"), F.col("vec_id").alias("neighbor_id"))
-    )
-    full = similarity.cosine_topk(q, c, k=10).select("query_id", "neighbor_id")
-    ov = (
-        full.join(F.broadcast(approx), ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_overlap"))
-    )
-    return (
-        q.select(F.col("vec_id").alias("query_id"))
-        .join(F.broadcast(ov), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_overlap", F.lit(0).cast("long")).alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0).cast("long")) * 1000)
-            .cast("long")
-            .alias("recall_x1e4"),
-        )
-    )
-
-
-def _tdiv(a: int, b: int) -> int:
-    """Truncate-toward-zero integer division for b > 0 — the exact
-    semantics BOTH engines share (Spark DIV and DuckDB // truncate
-    toward zero; Python's // floors toward −inf, which diverges on
-    negative numerators — the power-iteration rescale divides signed
-    components, so the replay must truncate, not floor)."""
-    return -((-a) // b) if a < 0 else a // b
-
-
-def _cov_frames(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The corpus-sized half of `emb_cov_top_eigen`: milli-quantized
-    column sums (posexplode agg, 64 rows) and the integer Gram matrix
-    (Arrow-batched mapInPandas BLAS partials, 4096 rows) — split out so
-    the plan shape is pinnable in tests."""
-    import numpy as np
-    import pandas as pd
-
-    qrows = emb.select(
-        F.posexplode("embedding").alias("i", "x")
-    ).select(
-        "i",
-        F.expr(
-            "CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
-        ).alias("qi"),
-    )
-    svec = qrows.groupBy("i").agg(F.sum("qi").alias("si"))
-
-    def gram(batches):
-        acc = np.zeros((64, 64), dtype=np.int64)
-        seen = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            seen = True
-            q = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                * 1000.0
-                + 0.5
-            ).astype(np.int64)
-            acc += q.T @ q
-        if not seen:
-            return
-        ii, jj = np.indices((64, 64))
-        yield pd.DataFrame(
-            {"i": ii.ravel(), "j": jj.ravel(), "p": acc.ravel()}
-        )
-
-    gdf = (
-        emb.select("embedding")
-        .mapInPandas(gram, "i int, j int, p long")
-        .groupBy("i", "j")
-        .agg(F.sum("p").alias("sij"))
-    )
-    return svec, gdf
-
-
-@staged_query(
-    "emb_cov_top_eigen",
-    # top covariance eigenvalue via 3 unrolled power-iteration steps on
-    # the INTEGER matrix M = N·Σqqᵀ − ssᵀ (= N²·Cov of the milli-unit
-    # quantized embeddings — exact, no floored means): q = floor(x·10³
-    # + 0.5) per element makes every corpus sum an order-free integer
-    # (a float Σ over N rows would differ between engines' partial-sum
-    # orders); each step rescales by greatest(max|w| // 1000, 1) —
-    # trunc-toward-zero on SIGNED components, identical on both
-    # engines; Rayleigh λ̂ = (vᵀMv // vᵀv) // N², energy share
-    # (vᵀMv // vᵀv)·10⁴ // trace(M); M = 0 (all vectors identical →
-    # den = 0) and the empty corpus emit NULL per the r13 guard device
-    oracle="""
-    WITH q AS (SELECT vec_id, i,
-                      CAST(floor(embedding[i]::DOUBLE * 1000 + 0.5) AS BIGINT) qi
-               FROM embeddings, range(1, 65) r(i)),
-    n AS (SELECT CAST(count(*) AS BIGINT) nn FROM embeddings),
-    s AS (SELECT i, CAST(sum(qi) AS HUGEINT) si FROM q GROUP BY i),
-    g AS (SELECT a.i, b.i AS j, CAST(sum(a.qi * b.qi) AS HUGEINT) sij
-          FROM q a JOIN q b ON a.vec_id = b.vec_id GROUP BY a.i, b.i),
-    m AS (SELECT g.i, g.j, nn * g.sij - sa.si * sb.si AS mv
-          FROM g CROSS JOIN n
-          JOIN s sa ON sa.i = g.i JOIN s sb ON sb.i = g.j),
-    tr AS (SELECT CAST(sum(mv) AS HUGEINT) t FROM m WHERE i = j),
-    w1 AS (SELECT i, CAST(sum(mv) AS HUGEINT) w FROM m GROUP BY i),
-    c1 AS (SELECT greatest(max(abs(w)) // 1000, 1) sc FROM w1),
-    v1 AS (SELECT i, w // sc AS v FROM w1, c1),
-    w2 AS (SELECT m.i, CAST(sum(m.mv * v1.v) AS HUGEINT) w
-           FROM m JOIN v1 ON v1.i = m.j GROUP BY m.i),
-    c2 AS (SELECT greatest(max(abs(w)) // 1000, 1) sc FROM w2),
-    v2 AS (SELECT i, w // sc AS v FROM w2, c2),
-    w3 AS (SELECT m.i, CAST(sum(m.mv * v2.v) AS HUGEINT) w
-           FROM m JOIN v2 ON v2.i = m.j GROUP BY m.i),
-    c3 AS (SELECT greatest(max(abs(w)) // 1000, 1) sc FROM w3),
-    v3 AS (SELECT i, w // sc AS v FROM w3, c3),
-    w4 AS (SELECT m.i, CAST(sum(m.mv * v3.v) AS HUGEINT) w
-           FROM m JOIN v3 ON v3.i = m.j GROUP BY m.i),
-    ray AS (SELECT CAST(sum(v3.v * w4.w) AS HUGEINT) num,
-                   CAST(sum(v3.v * v3.v) AS HUGEINT) den
-            FROM v3 JOIN w4 ON w4.i = v3.i)
-    SELECT nn AS n_vecs,
-           CAST(CASE WHEN den > 0 THEN (num // den) // (nn * nn)
-                END AS BIGINT) AS top_eigen_e6,
-           CAST(CASE WHEN nn > 0 THEN t // (nn * nn)
-                END AS BIGINT) AS trace_e6,
-           CAST(CASE WHEN den > 0 AND t > 0
-                THEN ((num // den) * 10000) // t
-                END AS BIGINT) AS top_energy_bp
-    FROM n LEFT JOIN ray ON TRUE LEFT JOIN tr ON TRUE
-    """,
-)
-def emb_cov_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-collapse screen: the top eigenvalue of the corpus
-    covariance and its share of total variance — anisotropy/"dimension
-    collapse" is the classic failure of a degrading embedding model
-    (all vectors drift into a cone; one direction swallows the energy),
-    and top-eigen share is its standard detector next to the per-axis
-    `emb_dim_stats`. Everything is integer-exact: elements quantize to
-    milli-units (q = floor(x·10³ + 0.5) — float32→float64 widening is
-    exact and the single multiply-add is the same IEEE op on every
-    engine; the oracle casts embedding[i]::DOUBLE BEFORE the multiply
-    for exactly this reason — DuckDB would otherwise promote the
-    FLOAT[] element to f32 arithmetic and quantize a few elements ±1
-    off the f64 grid, the r14 advisory's latent divergence), so
-    M = N·Σqqᵀ − ssᵀ = N²·Cov(q) is an exact 64×64 integer
-    matrix whose corpus sums are ORDER-FREE (a float Σ over N rows
-    would differ across engines' partial-sum orders — the hazard the
-    quantize-first design removes). Three power-iteration steps from
-    the all-ones vector run on the bounded 64×64 grid with a
-    trunc-toward-zero rescale (greatest(max|w| // 1000, 1)) per step —
-    Spark DIV, DuckDB //, and the driver's `_tdiv` all truncate toward
-    zero on the signed components, replayed identically; the Rayleigh
-    quotient then reports λ̂ and its trace share through the documented
-    staged divisions. M = 0 (all vectors identical) or an empty corpus
-    yield NULL per the r13 guard device. λ̂ is a ≤-λ_max estimate
-    (Rayleigh), tight when one direction dominates — exactly the
-    regime the screen exists to flag.
-
-    Scale: the ONLY corpus-sized work is one Arrow-batched mapInPandas
-    pass computing per-partition integer Gram partials with a BLAS
-    matmul (Qᵀ Q per batch — the sanctioned dense-linear-algebra path;
-    4096-row partials per partition, map-side combinable) plus one
-    posexplode agg for the 64 column sums; the 64×64 collect is the
-    bounded-collect class (corpus-independent, like `_kmeans16`
-    centroids) and the iteration is driver-side O(d²) arithmetic on
-    exact Python ints. Headroom: |q| ≤ 10³ ⇒ |M| ≤ 2N²·10⁶ — BIGINT
-    partials to N ≈ 3·10⁶ per partition and DECIMAL/HUGEINT/Python-int
-    everywhere after; at larger N shard the Gram into more partitions
-    (partials stay int64-safe per batch) — the driver never sees more
-    than 4096 cells."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    svec, gdf = _cov_frames(emb)
-    # bounded collects: 64 column sums + the 64×64 Gram (corpus-
-    # independent — the _kmeans16 centroid class) + one count
-    n = emb.count()
-    s = [0] * 64
-    for r in svec.collect():
-        s[r["i"]] = r["si"]
-    gm = {(r["i"], r["j"]): r["sij"] for r in gdf.collect()}
-    out_schema = (
-        "n_vecs long, top_eigen_e6 long, trace_e6 long, top_energy_bp long"
-    )
-    if n == 0:
-        return spark.createDataFrame(
-            [(0, None, None, None)], out_schema
-        )
-    m = [
-        [n * gm.get((i, j), 0) - s[i] * s[j] for j in range(64)]
-        for i in range(64)
-    ]
-    tr = sum(m[i][i] for i in range(64))
-    v = [1] * 64
-    for _ in range(3):
-        w = [sum(m[i][j] * v[j] for j in range(64)) for i in range(64)]
-        sc = max(max(abs(x) for x in w) // 1000, 1)
-        v = [_tdiv(x, sc) for x in w]
-    den = sum(x * x for x in v)
-    if den == 0:
-        return spark.createDataFrame(
-            [(n, None, _tdiv(tr, n * n) if n > 0 else None, None)],
-            out_schema,
-        )
-    w4 = [sum(m[i][j] * v[j] for j in range(64)) for i in range(64)]
-    num = sum(v[i] * w4[i] for i in range(64))
-    r1 = num // den  # num ≥ 0 (M is PSD), so trunc ≡ floor
-    return spark.createDataFrame(
-        [(
-            n,
-            r1 // (n * n),
-            tr // (n * n),
-            (r1 * 10000) // tr if tr > 0 else None,
-        )],
-        out_schema,
-    )
-
-
-@staged_query(
-    "emb_sign_bit_balance",
-    # sign comparison is the ONLY per-element op (no arithmetic at all,
-    # so no f32/f64 promotion hazard — the r14 cov_top_eigen lesson);
-    # grouped rows always have n_vecs >= 1, so the share division needs
-    # no zero guard; the empty corpus emits zero rows on both engines
-    oracle="""
-    WITH d AS (SELECT r.i, CASE WHEN embedding[r.i] > 0 THEN 1 ELSE 0 END p
-               FROM embeddings, range(1, 65) r(i)),
-    per AS (SELECT i, CAST(count(*) AS BIGINT) n_vecs,
-                   CAST(sum(p) AS BIGINT) n_pos
-            FROM d GROUP BY i)
-    SELECT CAST(i AS BIGINT) AS dim, n_vecs, n_pos,
-           CAST(n_pos * 10000 // n_vecs AS BIGINT) AS pos_share_bp,
-           (n_pos * 10000 // n_vecs) BETWEEN 2000 AND 8000 AS balanced
-    FROM per
-    """,
-)
-def emb_sign_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension sign balance of the embedding corpus: for each of
-    the 64 dimensions, how many vectors are positive there, the positive
-    share in basis points, and a balanced flag (share within
-    [2000, 8000]) — the health check BEHIND the 1-bit family
-    (emb_sign_hamming_recall quantizes to sign bits; a dimension whose
-    sign is 95 % constant carries ~0 bits of Hamming information, and a
-    batch of dead/saturated dimensions silently halves effective
-    resolution). Per-element work is ONE float comparison — no
-    arithmetic, so no f32-vs-f64 promotion hazard on either engine —
-    and the share is an all-positive integer floor division.
-
-    Scale: posexplode + a 64-key grouped count — partial aggregation
-    collapses each partition to <= 64 rows before the one tiny shuffle;
-    the plan never materializes anything data-sized and the output is
-    exactly 64 rows at any corpus size."""
-    emb = _t(spark, sf_dir, "embeddings")
-    d = emb.select(F.posexplode("embedding").alias("pos", "x"))
-    per = d.groupBy("pos").agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"),
-        F.coalesce(F.sum(F.when(F.col("x") > 0, 1)), F.lit(0))
-        .cast("long")
-        .alias("n_pos"),
-    )
-    return per.select(
-        (F.col("pos") + 1).cast("long").alias("dim"),
-        "n_vecs",
-        "n_pos",
-        F.expr("CAST(n_pos * 10000 DIV n_vecs AS BIGINT)").alias(
-            "pos_share_bp"
-        ),
-        F.expr(
-            "(n_pos * 10000 DIV n_vecs) BETWEEN 2000 AND 8000"
-        ).alias("balanced"),
     )
 
 
@@ -13724,97 +12955,6 @@ def tf_resource_naming_convention(spark: SparkSession, sf_dir: str) -> DataFrame
             F.lit("needs_attention")
         ),
     )
-
-
-# per-element milli-quantize in f64 (the c62fc0b device: cast each
-# FLOAT element to DOUBLE before any arithmetic, never DuckDB's f32
-# promotion), then an exact integer Σq² per vector — order-free, no
-# float sum anywhere; log2 buckets via length(bin(n))-1 (an exact
-# integer log₂); list_sum of an EMPTY list is NULL in DuckDB where
-# Spark's aggregate seed gives 0, hence the coalesce
-_NORM_BUCKETS_SQL = """
-    WITH q AS (SELECT vec_id,
-                 CAST(coalesce(list_sum(list_transform(
-                        list_transform(embedding,
-                          x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5)
-                               AS BIGINT)),
-                        y -> y * y)), 0) AS BIGINT) norm2
-               FROM embeddings),
-    b AS (SELECT CAST(length(bin(norm2)) - 1 AS BIGINT) bucket, norm2
-          FROM q),
-    g AS (SELECT bucket, CAST(count(*) AS BIGINT) n_vecs,
-                 CAST(min(norm2) AS BIGINT) min_norm2,
-                 CAST(max(norm2) AS BIGINT) max_norm2
-          FROM b GROUP BY 1),
-    t AS (SELECT g.*, CAST(sum(n_vecs) OVER () AS BIGINT) tot FROM g)
-    SELECT bucket, n_vecs, min_norm2, max_norm2,
-           CAST(n_vecs * 10000 // tot AS BIGINT) AS share_bp
-    FROM t
-"""
-
-
-def _norm_bucket_report(g: DataFrame) -> DataFrame:
-    """Share roll-up of `emb_norm_buckets` from a (bucket, n_vecs,
-    min_norm2, max_norm2) grid frame; the window runs over the post-agg
-    bucket spine."""
-    t = g.withColumn(
-        "tot", F.sum("n_vecs").over(Window.partitionBy()).cast("long")
-    )
-    return t.select(
-        "bucket",
-        "n_vecs",
-        "min_norm2",
-        "max_norm2",
-        F.expr("CAST(n_vecs * 10000 DIV tot AS BIGINT)").alias("share_bp"),
-    )
-
-
-def _norm_bucket_grid(vecs: DataFrame) -> DataFrame:
-    """(bucket, n_vecs, min_norm2, max_norm2) grid from an embedding
-    frame — the exact-integer milli-quantize fold + bin-length bucket."""
-    q = vecs.select(
-        F.expr(
-            "aggregate(transform(embedding,"
-            " x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)),"
-            " 0L, (acc, y) -> acc + y * y)"
-        ).alias("norm2")
-    )
-    b = q.select(
-        F.expr("CAST(length(bin(norm2)) - 1 AS BIGINT)").alias("bucket"),
-        "norm2",
-    )
-    return b.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"),
-        F.min("norm2").cast("long").alias("min_norm2"),
-        F.max("norm2").cast("long").alias("max_norm2"),
-    )
-
-
-@staged_query("emb_norm_buckets", oracle=_NORM_BUCKETS_SQL)
-def emb_norm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector-norm distribution of the embedding corpus in exact log₂
-    buckets — the scale-drift screen next to `emb_sign_bit_balance`
-    (direction health) and `emb_cov_top_eigen` (anisotropy): an
-    embedding batch whose norms jump a bucket between snapshots signals
-    an encoder change, a normalization bug, or a truncated-write
-    corruption long before cosine-ranking metrics move (cosine is
-    norm-invariant, so topk entries are BLIND to exactly this failure).
-    Per vector: norm² in milli-units² as an exact integer (each FLOAT
-    element cast to DOUBLE, floor-quantized to milli, squared and
-    summed — order-free integer arithmetic, so no engine-side float-sum
-    divergence), bucketed by ⌊log₂ norm²⌋ via the length(bin(n))−1
-    device; per bucket: vector count, min/max norm², and the corpus
-    share in basis points (all-positive floor division).
-
-    Scale: the norm is a per-row O(dim) JVM higher-order-function fold
-    (transform + aggregate — no Python, no explode, no shuffle);
-    buckets are a grouped agg with ≤ ~45 possible keys (norm² < 2⁴⁵ at
-    this dimension/scale), partial-agg collapsed before the one tiny
-    exchange; the share window runs over the post-agg bucket frame
-    (post-agg-tiny-frame exemption) and the output is bucket-count
-    rows at any corpus size."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return _norm_bucket_report(_norm_bucket_grid(emb))
 
 
 @staged_query(

@@ -72,3 +72,21 @@ def test_every_staged_entry_is_benched_at_sf01():
     assert not missing, (
         f"staged entries absent from bench.py HEADLINE/EXTENDED: {missing}"
     )
+
+
+def test_docs_name_only_live_or_staged_entries():
+    """Every backticked entry-like name in the operator docs, prose
+    included, must be a live or staged entry: deleting an entry without
+    its mentions fails here, while the row check above covers only the
+    table rows."""
+    known = set(QUERIES) | set(STAGED_QUERIES)
+    for doc in (DOC, DOC.with_name("ORACLE_DEVICES.md")):
+        names = set(
+            re.findall(
+                r"`((?:q|emb|docs|dedup|media|stream|tf)_[a-z0-9_]+)`",
+                doc.read_text(),
+            )
+        )
+        assert names, f"no entry names found in {doc.name}"
+        stale = sorted(names - known)
+        assert not stale, f"{doc.name} names unknown entries: {stale}"

@@ -50,7 +50,6 @@ BUILT_ONCE = [
     ("emb_two_level_topk", "two_level", similarity, "kmeans_two_level", 1),
     ("emb_ivf_incremental_topk", "ivf_incr_base", similarity, "kmeans_lloyd", 1),
     ("docs_perplexity_buckets", "ppl_scores", text, "bigram_logprob", 1),
-    ("emb_ivf_compaction", "ivf_compact", similarity, "ivf_save", 1),
     ("dedup_incremental_batch", "lsh_store", state, "temp_root", 1),
 ]
 # other entries that must serve from the same state without building it
@@ -190,7 +189,6 @@ def test_registry_holds_nothing_in_the_cache_manager(spark):
     state_entries = [c[0] for c in BUILT_ONCE] + [
         "emb_ivf_pq_topk",
         "emb_cluster_balanced_sample",
-        "emb_centroid_drift",
         "dedup_minhash_lsh",
         "stream_foreachbatch_sink",
     ]

@@ -1062,20 +1062,6 @@ def test_bpe_merge_pairs_vocab_sized_takeordered(spark):
 # ---- round-9 pins: r13-wave starter entries
 
 
-def test_pq_recall_no_cartesian_single_cogroup(spark):
-    # ground truth = ONE blocked-matmul cogroup; the approx side rides
-    # the session-trained PQ (its only nested-loop node is the broadcast
-    # LUT scoring emb_pq_topk also carries); the recall comparison joins
-    # two |Q|·k pair sets — SMJ is the right at-scale shape there
-    # (|Q| unbounded in production), cartesian never is
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_pq_recall"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert plan.count("FlatMapCoGroupsInPandas") == 1
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
-
-
 def test_undeclared_references_broadcast_anti_joins(spark):
     # dangling = token scan ∖ declared names: every anti-join must
     # broadcast its metadata-sized declaration side (Spark may split the
@@ -1089,18 +1075,6 @@ def test_undeclared_references_broadcast_anti_joins(spark):
     bhj = [l for l in plan.splitlines() if "BroadcastHashJoin" in l]
     assert bhj and all("LeftAnti" in l for l in bhj)
 
-
-def test_centroid_drift_broadcast_only_two_scans(spark):
-    # two frozen-centroid assignment passes (one pruned scan each), the
-    # bucket fan-back joins broadcast (k-row sides) — no SMJ, no
-    # cartesian, no pairwise structure anywhere
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_centroid_drift"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("Scan parquet") == 2
 
 def test_required_providers_audit_shuffle_free(spark):
     # settings blocks are config metadata: the audit must stay an
@@ -1197,7 +1171,7 @@ def test_perplexity_buckets_no_global_sort(spark):
 def test_recall_curve_broadcast_and_localized_truth(spark):
     # three curve points share ONE ground truth, materialized by the
     # bounded-collect device (NOT .persist(): a persisted plan would
-    # plan-match emb_pq_recall's identical cosine_topk subtree via the
+    # plan-match emb_ivf_recall's identical cosine_topk subtree via the
     # cache manager and rewrite THAT entry's pinned plan); semi-joins
     # broadcast — unknown-size top-k stats would otherwise pick SMJ —
     # and the brute-force cogroup must be absent from the final plan
@@ -1240,33 +1214,6 @@ def test_alias_orphans_single_broadcast_join(spark):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 1
-
-
-def test_ivf_delete_prunes_partitions_and_pushes_tombstone(spark):
-    # the tombstoned probe must keep BOTH prunings stacked: the probed
-    # bucket set as PartitionFilters AND the delete predicate pushed to
-    # the store scan — a delete that un-prunes the index is a rebuild
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_ivf_delete_maintenance"](spark, SF))
-    assert "CartesianProduct" not in plan
-    scan_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert any("bucket" in l and "IN" in l for l in scan_lines), scan_lines
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert any("vec_id" in l for l in pushed), pushed
-
-
-def test_knn_label_vote_broadcasts_topk_side(spark):
-    # the |Q|·k frames broadcast into the corpus-side scans (label
-    # attach + true-label attach) — an SMJ means a tiny frame shuffled
-    # the corpus; the vote window is query-keyed over the top-k frame
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_knn_label_vote"](spark, SF))
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "Exchange SinglePartition" not in plan
 
 
 def test_count_foreach_expansion_shuffle_free(spark):
@@ -1356,18 +1303,6 @@ def test_markov_stationary_localized_broadcast_iterations(spark):
     )
 
 
-def test_ivf_compaction_pruned_probe_no_tombstone_filter(spark):
-    # the compacted store serves with static bucket pruning and NO
-    # tombstone predicate — compaction converted the per-probe filter
-    # into a one-time IO pass; deleted ids are physically absent
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_ivf_compaction"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "PartitionFilters: [bucket" in plan or "bucket#" in plan
-    assert "vec_id % 8" not in plan  # the tombstone predicate is GONE
-
-
 def test_unused_data_sources_single_broadcast_join(spark):
     # the _unused_decls_frame contract: one regexp projection over the
     # parsed wide frame, one small distinct-and-count, ONE broadcast
@@ -1436,62 +1371,6 @@ def test_incremental_batch_probes_store_no_corpus_retokenize(spark):
     assert 1 <= len(text_scans) <= 2
 
 
-def test_sign_hamming_broadcast_query_side_no_cartesian(spark):
-    # the sign pass is a JVM-side projection (two shiftleft sums, no
-    # Python); the Hamming ranking broadcasts the 10-row query side
-    # (BNLJ over the corpus words, never CartesianProduct); the exact
-    # side is ONE blocked-matmul cogroup pass; overlap + fan-back joins
-    # broadcast
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_sign_hamming_recall"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert plan.count("FlatMapCoGroupsInPandas") == 1
-    assert "BroadcastNestedLoopJoin" in plan
-
-
-def test_cov_gram_mapinpandas_pruned_scan(spark):
-    # the only corpus-sized work in emb_cov_top_eigen: the Gram pass is
-    # ONE Arrow-batched mapInPandas (sanctioned dense-linear-algebra
-    # path) over a scan pruned to the embedding column, combined with a
-    # 4096-key agg; the column-sum leg is a JVM-side posexplode agg —
-    # no row-at-a-time Python, no cartesian anywhere
-    import re
-
-    from steampipe_plugin_terraform_spark.catalog import _cov_frames, _t
-
-    emb = _t(spark, SF, "embeddings").select("vec_id", "embedding")
-    svec, gdf = _cov_frames(emb)
-    gplan = _plan_df(gdf)
-    assert "MapInPandas" in gplan
-    assert "BatchEvalPython" not in gplan
-    assert "CartesianProduct" not in gplan
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", gplan)
-    assert len(scans) == 1
-    cols = [c.split("#")[0] for c in scans[0].split(",") if c]
-    assert set(cols) <= {"embedding"}, cols
-    splan = _plan_df(svec)
-    assert "BatchEvalPython" not in splan and "MapInPandas" not in splan
-
-
-def test_sign_bit_balance_partial_agg_64_keys(spark):
-    # posexplode feeding a 64-key grouped count: exactly one key shuffle
-    # (partial aggregation collapses each partition to <= 64 rows first)
-    # and NO global single-partition stage — the output is the grouped
-    # frame itself
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_sign_bit_balance"](spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Exchange SinglePartition" not in plan
-    assert "Generate" in plan  # the posexplode
-    assert "HashAggregate" in plan or "SortAggregate" in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython", "Window"):
-        assert node not in plan
-
-
 def test_naming_convention_shuffle_free(spark):
     # resource metadata lint: one projection over the parsed wide frame
     # — no exchange, no join (the MapInPandas is the HCL parse itself)
@@ -1502,23 +1381,6 @@ def test_naming_convention_shuffle_free(spark):
     for node in ("SortMergeJoin", "BroadcastHashJoin",
                  "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert node not in plan
-
-
-def test_norm_buckets_fold_no_shuffle_before_spine_agg(spark):
-    # the norm fold is a JVM higher-order projection: NO Generate (no
-    # explode), no Python; one bucket-keyed exchange (partial-agg
-    # collapsed) + the share window's single-partition stage over the
-    # post-agg bucket frame; the scan prunes to the embedding column
-    from steampipe_plugin_terraform_spark.catalog import STAGED_QUERIES
-
-    plan = _plan_df(STAGED_QUERIES["emb_norm_buckets"](spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Exchange SinglePartition") == 1
-    assert plan.count("Window") == 1
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                 "BatchEvalPython", "Generate", "MapInPandas"):
-        assert node not in plan
-    assert "ReadSchema: struct<embedding:array<float>>" in plan
 
 
 def test_variable_type_mismatch_shuffle_free(spark):

@@ -5,7 +5,7 @@ that does NOT share machinery with its DuckDB oracle. Three kinds here:
 - pure-Python references (chi2, BPE pairs, streaming top-k closure):
   the statistic recomputed from the parquet with Python ints /
   collections.Counter — no Spark expressions, no SQL, exact arithmetic;
-- internal-consistency properties (centroid drift, PQ recall):
+- internal-consistency properties (cluster quality, ANN recall curve):
   relations between output columns that must hold by construction,
   recomputed in Python from the entry's own rows;
 - engine identities (stream_state_serial_watch ≡ the batch answer).
@@ -126,37 +126,6 @@ def test_stream_hourly_topk_pure_python_reference(spark):
         for r in _staged(spark, "stream_hourly_topk_types").collect()
     }
     assert got == expected
-
-
-def test_pq_recall_granularity_and_bounds(spark):
-    """emb_pq_recall: the ground-truth side is 10 queries x top-5 = 50
-    pairs, so recall_x1e4 = hits * 10000 // 50 is an exact multiple of
-    200 in [0, 10000], and at most 10 queries can have hits."""
-    row = _staged(spark, "emb_pq_recall").collect()
-    assert len(row) == 1
-    r = row[0]
-    assert 0 <= r["recall_x1e4"] <= 10000 and r["recall_x1e4"] % 200 == 0
-    assert 0 <= r["n_queries_with_hits"] <= 10
-
-
-def test_centroid_drift_internal_consistency(spark):
-    """emb_centroid_drift: shares must be floor(n * 10000 / total) of
-    the entry's own population columns, drift = |share diff|, and both
-    populations must sum to the slice totals (every vector lands in
-    exactly one bucket; empty buckets emitted as zeros)."""
-    rows = _staged(spark, "emb_centroid_drift").collect()
-    n_ref_tot = sum(r["n_ref"] for r in rows)
-    n_cur_tot = sum(r["n_cur"] for r in rows)
-    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet", columns=["vec_id"])
-    ids = [v for v in emb["vec_id"].to_pylist() if v >= 10]
-    assert n_ref_tot == sum(1 for v in ids if v % 2 == 0)
-    assert n_cur_tot == sum(1 for v in ids if v % 2 == 1)
-    for r in rows:
-        assert r["share_ref_x1e4"] == r["n_ref"] * 10000 // n_ref_tot
-        assert r["share_cur_x1e4"] == r["n_cur"] * 10000 // n_cur_tot
-        assert r["drift_x1e4"] == abs(
-            r["share_cur_x1e4"] - r["share_ref_x1e4"]
-        )
 
 
 def test_state_lineage_pure_python_reference(spark):
@@ -886,67 +855,6 @@ def test_provider_alias_orphans_pure_python_reference(spark):
     assert got == want
 
 
-def test_ivf_delete_commutes_with_probe(spark):
-    """emb_ivf_delete_maintenance internal consistency: tombstone-then-
-    probe (the entry) must equal probe-then-tombstone — the FULL ranking
-    over the undeleted store, deleted ids dropped and re-ranked in
-    Python. Also pins the erasure guarantee: no deleted id ever
-    surfaces. Shares the probe operator but not the Lloyd-replay oracle."""
-    from steampipe_plugin_terraform_spark import catalog as cat
-    from steampipe_plugin_terraform_spark.operators import similarity
-
-    loaded, cents = similarity.ivf_load(
-        spark, cat._ivf_store_path(spark, SF_DIR)
-    )
-    emb = cat._t(spark, SF_DIR, "embeddings")
-    full = similarity.ivf_topk(
-        emb.filter("vec_id < 10"), loaded, cents, k=10**6, nprobe=8
-    ).collect()
-    per_q = collections.defaultdict(list)
-    for r in full:
-        if r["neighbor_id"] % 8 != 3:
-            per_q[r["query_id"]].append((-r["cosine"], r["neighbor_id"]))
-    want = set()
-    for qid, rows in per_q.items():
-        for rank, (negcos, nid) in enumerate(sorted(rows)[:5], start=1):
-            want.add((qid, nid, -negcos, rank))
-    got = {
-        (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in _staged(spark, "emb_ivf_delete_maintenance").collect()
-    }
-    assert not {g for g in got if g[1] % 8 == 3}
-    assert got == want
-
-
-def test_knn_label_vote_matches_promoted_ranking(spark):
-    """emb_knn_label_vote cross-entry identity: its vote, recomputed in
-    Python from the PROMOTED emb_cosine_topk entry's neighbor sets plus
-    the parquet labels, must match row for row — the vote logic is
-    checked against a driver-validated ranking it does not share."""
-    emb = pq.read_table(
-        f"{SF_DIR}/embeddings.parquet", columns=["vec_id", "label"]
-    )
-    labels = dict(zip(emb["vec_id"].to_pylist(), emb["label"].to_pylist()))
-    topk = collections.defaultdict(list)
-    for r in _staged(spark, "emb_cosine_topk").collect():
-        topk[r["query_id"]].append(r["neighbor_id"])
-    want = {}
-    for qid, nids in topk.items():
-        votes = collections.Counter(labels[n] for n in nids)
-        lab, cnt = sorted(votes.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        want[qid] = (labels[qid], lab, cnt, int(lab == labels[qid]))
-    got = {
-        r["query_id"]: (
-            r["true_label"],
-            r["voted_label"],
-            r["n_votes"],
-            r["correct"],
-        )
-        for r in _staged(spark, "emb_knn_label_vote").collect()
-    }
-    assert got == want
-
-
 def test_count_foreach_expansion_pure_python_reference(spark):
     """tf_count_foreach_expansion vs a regex scanner over the corpus:
     count/for_each meta-args re-read from the block text with crude
@@ -1209,40 +1117,6 @@ def test_markov_stationary_pure_python_reference(spark):
     assert got == pi
 
 
-def test_ivf_compaction_identity_and_erasure(spark):
-    """emb_ivf_compaction: (a) ≡ emb_ivf_delete_maintenance row for row
-    (compaction is invisible to queries — the triad's closing
-    identity), (b) erasure: no tombstoned id ever surfaces, (c) the
-    compacted store PHYSICALLY holds exactly the survivor set (the
-    bytes are gone, not merely filtered)."""
-    from steampipe_plugin_terraform_spark.catalog import (
-        _ivf_compacted_path,
-        _ivf_store_path,
-    )
-
-    compacted = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in _staged(spark, "emb_ivf_compaction").collect()
-    }
-    filtered = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in _staged(spark, "emb_ivf_delete_maintenance").collect()
-    }
-    assert compacted == filtered
-    assert all(nid % 8 != 3 for nid, _ in compacted.values())
-    old = {
-        r["vec_id"]
-        for r in spark.read.parquet(_ivf_store_path(spark, SF_DIR)).collect()
-    }
-    new = {
-        r["vec_id"]
-        for r in spark.read.parquet(
-            _ivf_compacted_path(spark, SF_DIR)
-        ).collect()
-    }
-    assert new == {v for v in old if v % 8 != 3}
-
-
 def test_unused_data_sources_pure_python_reference(spark):
     """tf_unused_data_sources vs a regex scan over the corpus: declared
     (type, name) pairs vs data.<type>.<name> traversals in non-data
@@ -1444,130 +1318,6 @@ def test_incremental_batch_pure_python_and_cross_entry(spark):
     assert mine == promoted_cross
 
 
-def test_sign_hamming_numpy_replay_and_scale_invariance(spark):
-    """emb_sign_hamming_recall two ways: (a) full numpy replay — sign
-    words, Hamming top-10 with (distance, id) tie-break, exact cosine
-    top-10 with the rounded-score + id device, per-query overlap — must
-    match the entry rows exactly; (b) the invariance claim: scaling
-    every vector by a positive constant changes no sign word, so the
-    replayed Hamming ranking is identical on the scaled corpus (the
-    same invariance cosine has — the reason a 1-bit code preserves
-    angular neighborhoods)."""
-    import math
-
-    import numpy as np
-
-    t = pq.read_table(f"{SF_DIR}/embeddings.parquet").to_pandas()
-    ids = t["vec_id"].to_numpy()
-    vecs = np.stack(t["embedding"].to_numpy()).astype(np.float64)
-
-    def words(m):
-        bits = m > 0
-        w0 = (bits[:, :32] * (1 << np.arange(32, dtype=np.int64))).sum(1)
-        w1 = (bits[:, 32:64] * (1 << np.arange(32, dtype=np.int64))).sum(1)
-        return w0.astype(np.int64), w1.astype(np.int64)
-
-    w0, w1 = words(vecs)
-    s0, s1 = words(vecs * 2.5)  # positive scaling flips no sign bit
-    assert (w0 == s0).all() and (w1 == s1).all()
-
-    qm = ids < 10
-    cm = ~qm
-
-    def hamming_top10(qi):
-        h = [
-            (
-                int(bin(int(w0[qi]) ^ int(w0[ci])).count("1"))
-                + int(bin(int(w1[qi]) ^ int(w1[ci])).count("1")),
-                int(ids[ci]),
-            )
-            for ci in np.where(cm)[0]
-        ]
-        return {nid for _h, nid in sorted(h)[:10]}
-
-    def cosine_top10(qi):
-        qv = vecs[qi]
-        scored = []
-        for ci in np.where(cm)[0]:
-            cv = vecs[ci]
-            cos = float(qv @ cv) / (
-                math.sqrt(float(qv @ qv)) * math.sqrt(float(cv @ cv))
-            )
-            snapped = math.floor(cos * 1000000 + 0.5) / 1000000
-            scored.append((-snapped, int(ids[ci])))
-        return {nid for _s, nid in sorted(scored)[:10]}
-
-    want = {}
-    for qi in np.where(qm)[0]:
-        n = len(hamming_top10(qi) & cosine_top10(qi))
-        want[int(ids[qi])] = (n, n * 1000)
-    got = {
-        r["query_id"]: (r["n_overlap"], r["recall_x1e4"])
-        for r in _staged(spark, "emb_sign_hamming_recall").collect()
-    }
-    assert got == want
-
-
-def test_cov_top_eigen_numpy_spectrum_bounds(spark):
-    """emb_cov_top_eigen vs numpy.linalg.eigvalsh on the FLOAT
-    covariance — machinery-free invariants: the Rayleigh estimate can
-    never exceed the true top eigenvalue (mathematical bound, up to
-    milli-quantization slack), the integer trace must agree with the
-    float trace to quantization error, and the energy share must be a
-    valid basis-point fraction consistent with the other two columns."""
-    import numpy as np
-
-    t = pq.read_table(f"{SF_DIR}/embeddings.parquet", columns=["embedding"])
-    x = np.stack(t["embedding"].to_pylist()).astype(np.float64)
-    cov = np.cov(x.T, bias=True)
-    ev = np.linalg.eigvalsh(cov)
-    lam_max_e6 = ev[-1] * 1e6
-    trace_e6_f = ev.sum() * 1e6
-    rows = _staged(spark, "emb_cov_top_eigen").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["n_vecs"] == len(x)
-    # Rayleigh ≤ λ_max (allow milli-quantization slack: rounding each
-    # element to the 1e-3 grid perturbs the spectrum by O(64·δ) with
-    # δ = 5e-4 in original units → ≤ ~100 on the e6 scale)
-    assert r["top_eigen_e6"] <= lam_max_e6 + 100
-    # empirical-corpus pin: 3 power steps from the ones vector land
-    # well above the mean eigenvalue on this spectrum (18.5k vs 15.6k
-    # at sf0.1-shaped data) — a collapse of this margin means the
-    # iteration or the rescale broke
-    assert r["top_eigen_e6"] >= 0.9 * ev.mean() * 1e6
-    assert abs(r["trace_e6"] - trace_e6_f) <= 0.01 * trace_e6_f
-    assert 0 < r["top_energy_bp"] <= 10_000
-    # cross-column identity on the snapped grid: energy ≈ λ̂/trace
-    approx_bp = r["top_eigen_e6"] * 10_000 // max(r["trace_e6"], 1)
-    assert abs(r["top_energy_bp"] - approx_bp) <= 2
-
-
-def test_sign_bit_balance_numpy_reference(spark):
-    """emb_sign_bit_balance vs a numpy replay (sign counting per
-    dimension), plus the inclusive-boundary pin of the balanced band:
-    2000 and 8000 are balanced, 1999/8001 are not — BETWEEN is closed
-    on both ends on both engines."""
-    import numpy as np
-
-    tab = pq.read_table(f"{SF_DIR}/embeddings.parquet", columns=["embedding"])
-    m = np.stack(tab["embedding"].to_numpy())
-    n = m.shape[0]
-    pos = (m > 0).sum(axis=0)
-    rows = {r["dim"]: r for r in _staged(spark, "emb_sign_bit_balance").collect()}
-    assert sorted(rows) == list(range(1, 65))
-    for d in range(64):
-        r = rows[d + 1]
-        assert r["n_vecs"] == n
-        assert r["n_pos"] == int(pos[d])
-        share = int(pos[d]) * 10000 // n
-        assert r["pos_share_bp"] == share
-        assert r["balanced"] == (2000 <= share <= 8000)
-    # boundary pin (pure arithmetic, engine-free)
-    assert 2000 <= 2000 <= 8000 and 2000 <= 8000 <= 8000
-    assert not (2000 <= 1999 <= 8000) and not (2000 <= 8001 <= 8000)
-
-
 def test_naming_convention_pure_python_reference(spark):
     """tf_resource_naming_convention vs a regex scanner over the fixture
     corpus — both lint axes re-derived without the HCL parser or the
@@ -1640,38 +1390,6 @@ def test_tokenize_device_three_engine_agreement(spark):
     assert {i: toks for i, toks in enumerate(py)} == dict(got)
 
 
-def test_norm_buckets_numpy_reference(spark):
-    """emb_norm_buckets vs a numpy replay of the milli-quantize →
-    integer Σq² → ⌊log₂⌋ bucket chain, exact at every column."""
-    import numpy as np
-
-    tab = pq.read_table(f"{SF_DIR}/embeddings.parquet", columns=["embedding"])
-    m = np.stack(tab["embedding"].to_numpy()).astype(np.float64)
-    q = np.floor(m * 1000.0 + 0.5).astype(np.int64)
-    norm2 = (q * q).sum(axis=1)
-    buckets = collections.defaultdict(list)
-    for v in norm2.tolist():
-        buckets[max(int(v).bit_length() - 1, 0)].append(int(v))
-    tot = len(norm2)
-    rows = {r["bucket"]: r for r in _staged(spark, "emb_norm_buckets").collect()}
-    assert sorted(rows) == sorted(buckets)
-    for b, vals in buckets.items():
-        r = rows[b]
-        assert r["n_vecs"] == len(vals)
-        assert r["min_norm2"] == min(vals)
-        assert r["max_norm2"] == max(vals)
-        assert r["share_bp"] == len(vals) * 10000 // tot
-
-
-def test_norm_buckets_bit_length_identity():
-    """The length(bin(n))−1 bucket equals int.bit_length()−1 for every
-    positive int, and 0 maps to bucket 0 — the device's boundary pin
-    (engine-free arithmetic)."""
-    for v in (1, 2, 3, 4, 7, 8, 1023, 1024, 2**40 - 1, 2**40):
-        assert len(bin(v)) - 2 - 1 == v.bit_length() - 1
-    assert len(bin(0)) - 2 - 1 == 0  # '0b0' → length 1 → bucket 0
-
-
 def test_variable_type_mismatch_json_semantic_reference(spark):
     """tf_variable_type_mismatch vs a json.loads-based re-derivation
     over the fixture corpus: the default's KIND comes from actually
@@ -1737,64 +1455,10 @@ def test_variable_type_mismatch_json_semantic_reference(spark):
     }
 
 
-def test_milli_quantize_device_three_engine_agreement(spark):
-    """The f64 milli-quantize device behind emb_norm_buckets /
-    emb_cov_top_eigen (CAST float→DOUBLE, floor(x·1000 + 0.5), BIGINT)
-    fuzzed across Spark, DuckDB, and numpy on one seeded 400-value
-    float32 corpus spanning signs, subnormal-ish magnitudes, exact
-    halves, and the f32-vs-f64 promotion hazard band: the quantized
-    integer must agree exactly on all three engines — the c62fc0b
-    lesson (quantizing in DuckDB's f32 promotion split two sf0.1
-    elements) as a standing regression test."""
-    import random
-    import struct
-
-    import duckdb
-    import numpy as np
-
-    rng = random.Random(2026)
-    vals = [0.0, -0.0, 0.0005, -0.0005, 0.0015, 1.0615, -1.0615]
-    for _ in range(393):
-        v = struct.unpack(
-            "f", struct.pack("f", rng.uniform(-4.0, 4.0))
-        )[0]
-        vals.append(v)
-
-    f32 = np.array(vals, dtype=np.float32)
-    want = np.floor(f32.astype(np.float64) * 1000.0 + 0.5).astype(
-        np.int64
-    ).tolist()
-
-    con = duckdb.connect()
-    duck = [
-        con.execute(
-            "SELECT CAST(floor(CAST(CAST(? AS FLOAT) AS DOUBLE)"
-            " * 1000 + 0.5) AS BIGINT)", [float(v)]
-        ).fetchone()[0]
-        for v in f32.tolist()
-    ]
-    con.close()
-    assert duck == want
-
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(f32.tolist())],
-        "i long, x float",
-    )
-    got = {
-        r["i"]: r["q"]
-        for r in df.select(
-            "i",
-            F.expr(
-                "CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
-            ).alias("q"),
-        ).collect()
-    }
-    assert [got[i] for i in range(len(want))] == want
-
-
 def test_bin_length_bucket_device_agreement(spark):
-    """The length(bin(n))−1 log₂-bucket device (emb_norm_buckets)
-    checked on every power-of-two boundary up to 2⁶²
+    """The length(bin(n))−1 log₂-bucket device (``sketch.logbucket_expr``
+    and docs_length_buckets' ``length(bin(n_tok))``) checked on every
+    power-of-two boundary up to 2⁶²
     plus 0, across Spark, DuckDB, and int.bit_length(): off-by-one at
     a boundary would silently merge adjacent buckets."""
     import duckdb
