@@ -8979,9 +8979,8 @@ def tf_untagged_resources(spark: SparkSession, sf_dir: str) -> DataFrame:
 # them (sf0.001, and sf0.01 under SPARK_GRAFT_TEST_SF_DIR),
 # tests/test_plan_shapes.py pins their plans and the anti-pattern scan
 # covers them. No new drafts are added. Promotion =
-# change ``@staged_query`` to ``@query``, add the name to the FRONT of
-# ``__spark_entry__._VALIDATE_FIRST`` (enforced by tests/test_rotation)
-# and move its docs/OPERATORS.md row into the main table.
+# change ``@staged_query`` to ``@query`` and move its docs/OPERATORS.md
+# row into the main table; never driver-checked, it leads queries().
 # ---------------------------------------------------------------------------
 
 STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

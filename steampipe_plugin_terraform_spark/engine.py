@@ -228,7 +228,6 @@ class TerraformEngine:
         self._views_json_as: str | None = None
         self.watcher = None
         self._watch_thread = None
-        self._watch_stop = None
         if watch:
             self.start_watch(watch_interval)
 
@@ -242,12 +241,11 @@ class TerraformEngine:
         Mirrors the reference SDK's automatic fsnotify watch on
         ``steampipe:"watch"``-tagged config fields: added / modified /
         deleted files trigger an incremental ``refresh`` (only changed files
-        re-parse) and registered views re-register. Poll-based (see
-        ``TerraformWatcher``), driver-only, daemon thread — a failed refresh
-        leaves the snapshot untouched so the delta retries next tick, and
-        the watcher records it in ``last_error`` and
-        ``consecutive_failures`` (reset by the next successful poll).
-        Returns the watcher; idempotent while already running.
+        re-parse) and registered views re-register. Poll-based and
+        driver-only: a daemon thread runs ``TerraformWatcher.run``, which
+        records a failed poll in the watcher's ``last_error`` and
+        ``consecutive_failures`` and keeps watching. Returns the watcher;
+        idempotent while already running.
         """
         import threading
 
@@ -256,23 +254,8 @@ class TerraformEngine:
         if self._watch_thread is not None:
             return self.watcher
         watcher = self.watcher = TerraformWatcher(self)
-        stop = self._watch_stop = threading.Event()
-
-        # closure holds the Event and watcher directly: stop_watch() nulls
-        # the attributes after a join timeout, and a loop reading them would
-        # die on AttributeError mid-poll instead of exiting cleanly
-        def _loop() -> None:
-            while not stop.wait(interval):
-                try:
-                    watcher.poll()
-                except Exception as e:  # keep watching; poll retries the delta
-                    watcher.last_error = e
-                    watcher.consecutive_failures += 1
-                else:
-                    watcher.consecutive_failures = 0
-
         self._watch_thread = threading.Thread(
-            target=_loop, daemon=True, name="terraform-watch"
+            target=watcher.run, args=(interval,), daemon=True, name="terraform-watch"
         )
         self._watch_thread.start()
         return self.watcher
@@ -281,10 +264,9 @@ class TerraformEngine:
         """Stop the background watch thread (no-op if not watching)."""
         if self._watch_thread is None:
             return
-        self._watch_stop.set()
+        self.watcher.stop()
         self._watch_thread.join(timeout=30)
         self._watch_thread = None
-        self._watch_stop = None
         self.watcher = None  # public handle must not read as active
 
     # -- connection-config constructors (connection_config.go, terraform.spc) --

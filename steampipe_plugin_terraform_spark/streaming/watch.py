@@ -18,7 +18,7 @@ the reference's parseMutex.
 from __future__ import annotations
 
 import os
-import time
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,7 +77,8 @@ class TerraformWatcher:
     def __init__(self, engine):
         self.engine = engine
         self._snap = self._scan()
-        # health of the background loop (``engine.start_watch``)
+        self._stop = threading.Event()
+        # health of the poll loop (``run``)
         self.last_error: Exception | None = None
         self.consecutive_failures = 0
 
@@ -109,14 +110,25 @@ class TerraformWatcher:
             self._snap = new
         return changed
 
-    def run(self, interval: float = 1.0, max_ticks: int | None = None) -> None:
-        """Blocking poll loop (the long-running watch connection). Bounded
-        by ``max_ticks`` for tests; Ctrl-C to stop interactively."""
-        ticks = 0
-        while max_ticks is None or ticks < max_ticks:
-            self.poll()
-            ticks += 1
-            time.sleep(interval)
+    def run(self, interval: float = 1.0) -> None:
+        """Blocking poll loop (the long-running watch connection), one
+        ``poll`` every ``interval`` seconds until ``stop()`` (Ctrl-C
+        interactively); ``engine.start_watch`` runs it on a thread. A failed
+        poll keeps the loop alive (the snapshot stays old, so the delta
+        retries next tick) and is recorded in ``last_error`` and
+        ``consecutive_failures``, which the next successful poll resets."""
+        while not self._stop.wait(interval):
+            try:
+                self.poll()
+            except Exception as e:
+                self.last_error = e
+                self.consecutive_failures += 1
+            else:
+                self.consecutive_failures = 0
+
+    def stop(self) -> None:
+        """End ``run`` after the tick in progress."""
+        self._stop.set()
 
 
 def canonical_batch_writer(store_path: str, checkpoint: str):

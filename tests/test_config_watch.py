@@ -240,11 +240,12 @@ def test_watch_flag_autostarts_watcher(spark, tmp_path):
 
 
 def test_watch_loop_records_failures_and_recovers(spark, tmp_path, monkeypatch):
-    """A poll that raises keeps the background loop alive and is visible on
-    the watcher: ``last_error`` holds the exception and
-    ``consecutive_failures`` counts it until the next successful poll."""
+    """A poll that raises keeps the poll loop alive and is visible on the
+    watcher: ``last_error`` holds the exception and ``consecutive_failures``
+    counts it until the next successful poll. Checked in the foreground
+    (``TerraformWatcher.run``, as the README runs it) and in the background
+    (``engine.start_watch`` runs the same loop on a thread)."""
     import threading
-    import time
 
     (tmp_path / "a.tf").write_text('resource "r" "x" { n = 1 }\n')
     seen, done = [], threading.Event()
@@ -253,21 +254,35 @@ def test_watch_loop_records_failures_and_recovers(spark, tmp_path, monkeypatch):
         seen.append((self.consecutive_failures, self.last_error))
         if len(seen) <= 2:
             raise RuntimeError(f"boom {len(seen)}")
+        self.stop()
         done.set()
         return set()
 
     monkeypatch.setattr(TerraformWatcher, "poll", poll)
     eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
-    watcher = eng.start_watch(interval=0.01)
-    try:
-        assert done.wait(30), "loop stopped polling after a failure"
-        deadline = time.time() + 30
-        while watcher.consecutive_failures and time.time() < deadline:
-            time.sleep(0.01)
-    finally:
-        eng.stop_watch()
-    assert seen[0] == (0, None)
-    assert seen[1][0] == 1 and str(seen[1][1]) == "boom 1"
-    assert seen[2][0] == 2 and str(seen[2][1]) == "boom 2"
-    assert watcher.consecutive_failures == 0, "a successful poll resets the count"
-    assert str(watcher.last_error) == "boom 2"
+    for background in (False, True):
+        seen.clear()
+        done.clear()
+        if background:
+            watcher = eng.start_watch(interval=0.01)
+            thread = eng._watch_thread
+            try:
+                assert done.wait(30), "loop stopped polling after a failure"
+            finally:
+                eng.stop_watch()
+            assert not thread.is_alive()
+        else:
+            watcher = TerraformWatcher(eng)
+            guard = threading.Timer(30, watcher.stop)
+            guard.start()
+            try:
+                watcher.run(interval=0.01)  # the third poll stops it
+            finally:
+                guard.cancel()
+            assert done.is_set(), "loop stopped polling after a failure"
+        assert seen[0] == (0, None)
+        assert seen[1][0] == 1 and str(seen[1][1]) == "boom 1"
+        assert seen[2][0] == 2 and str(seen[2][1]) == "boom 2"
+        assert len(seen) == 3
+        assert watcher.consecutive_failures == 0, "a successful poll resets the count"
+        assert str(watcher.last_error) == "boom 2"

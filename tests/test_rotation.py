@@ -1,75 +1,55 @@
-"""Mechanize the driver-window rotation invariant (r7 verdict item #2).
+"""The driver-window rotation invariant, checked against the derived order.
 
 The driver's correctness gate checks the first 50 ``queries()`` entries
-each round; ``__spark_entry__._VALIDATE_FIRST`` hand-orders the catalog so
-that window lands on the right entries. Before this test, the invariant
-("never-driver-checked entries occupy the window front; no entry's last
-driver row falls outside the rotation horizon") lived in a comment — one
-mis-ordered edit would silently waste driver slots. These tests parse the
-committed ``CORRECTNESS_r*.json`` history and fail the suite instead.
+each round. ``__spark_entry__.validation_order`` derives that order from the
+committed ``CORRECTNESS_r*.json`` history, so the invariant ("never-checked
+entries occupy the window front; no entry's last green driver row falls
+outside the rotation horizon") holds by construction. These tests check it
+on the committed history and on simulated future rounds.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import re
-from pathlib import Path
 
 import pytest
 
 import __spark_entry__ as entry_mod
+from __spark_entry__ import is_green, validation_order
 
-REPO = Path(__file__).resolve().parent.parent
 WINDOW = 50  # driver checks the first 50 queries() entries
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+RED = {"rows_match": False, "schema_match": True, "hash_match": False, "err": None}
 
 
-def _history() -> dict[int, dict]:
-    """round number -> parsed CORRECTNESS_r{N}.json."""
-    out = {}
-    for p in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
-        if not m:
-            continue
-        out[int(m.group(1))] = json.loads(p.read_text())
-    return out
-
-
-def _is_green(row: dict) -> bool:
-    """A driver row counts as green if the full compare passed, or if the
-    entry is rows-only by design (no oracle) and the Spark side produced
-    a row count. A red row is 'checked' but does not reset the horizon."""
-    if row.get("rows_match") is True:
-        return bool(row.get("schema_match")) and bool(row.get("hash_match"))
-    return row.get("err") == "no_oracle" and row.get("spark_rows") is not None
+def _stale(order: list[str], history: dict[int, dict]) -> list[tuple[str, int | None]]:
+    """Entries whose effective driver round (the upcoming round if they sit
+    in the next window, else their last green row) falls outside the
+    rotation horizon ceil(catalog/window) of the upcoming round. A
+    never-checked entry outside the upcoming window always counts: it has
+    no effective round at all."""
+    last_green: dict[str, int] = {}
+    for rnd, rows in history.items():
+        for name, row in rows.items():
+            if is_green(row):
+                last_green[name] = max(last_green.get(name, 0), rnd)
+    upcoming = max(history, default=0) + 1
+    floor_round = upcoming - math.ceil(len(order) / WINDOW) + 1
+    window = set(order[:WINDOW])
+    stale = []
+    for name in order:
+        eff = upcoming if name in window else last_green.get(name)
+        if eff is None or eff < floor_round:
+            stale.append((name, eff))
+    return stale
 
 
 @pytest.fixture(scope="module")
 def state():
-    hist = _history()
+    hist = entry_mod.correctness_history()
     assert hist, "no CORRECTNESS_r*.json committed — cannot audit rotation"
-    order = list(entry_mod.queries())
-    checked: set[str] = set()
-    last_green: dict[str, int] = {}
-    for rnd in sorted(hist):
-        for name, row in hist[rnd].items():
-            checked.add(name)
-            if _is_green(row):
-                last_green[name] = max(last_green.get(name, 0), rnd)
-    return {
-        "order": order,
-        "checked": checked,
-        "last_green": last_green,
-        "upcoming": max(hist) + 1,
-    }
-
-
-def test_validate_first_is_complete_and_unique(state):
-    vf = entry_mod._VALIDATE_FIRST
-    assert len(vf) == len(set(vf)), "duplicate entry in _VALIDATE_FIRST"
-    assert set(vf) == set(state["order"]), (
-        "_VALIDATE_FIRST must list every catalog entry exactly once"
-    )
+    checked = {name for rows in hist.values() for name in rows}
+    return {"order": list(entry_mod.queries()), "checked": checked, "history": hist}
 
 
 def test_never_checked_entries_sort_before_checked(state):
@@ -88,22 +68,50 @@ def test_never_checked_entries_sort_before_checked(state):
 
 
 def test_horizon_holds(state):
-    """Every entry's effective driver round (its scheduled upcoming round
-    if it sits in the next window, else its last green row) must fall
-    within the rotation horizon ceil(catalog/window) of the upcoming
-    round. A never-checked entry outside the upcoming window always
-    fails: it has no effective round at all."""
-    order, last_green = state["order"], state["last_green"]
-    upcoming = state["upcoming"]
-    horizon = math.ceil(len(order) / WINDOW)
-    window = set(order[:WINDOW])
-    floor_round = upcoming - horizon + 1
-    stale = []
-    for name in order:
-        eff = upcoming if name in window else last_green.get(name)
-        if eff is None or eff < floor_round:
-            stale.append((name, eff))
-    assert not stale, (
-        f"entries outside the {horizon}-round horizon (need round >= "
-        f"{floor_round}, or a slot in the upcoming window): {stale}"
-    )
+    """Every entry is green within the horizon or holds a slot in the
+    upcoming window."""
+    stale = _stale(state["order"], state["history"])
+    assert not stale, f"entries outside the rotation horizon: {stale}"
+
+
+def test_derived_window_rotates_within_horizon(state, monkeypatch):
+    """Replay the committed history, then let the driver check the window
+    queries() gives for 12 more rounds, every entry of it coming back green:
+    the horizon holds after each round and the window moves on. The edge
+    cases of the rule are checked on the pure function and through
+    queries()."""
+    names = sorted(entry_mod.QUERIES)
+    assert set(state["order"]) == set(names) and len(state["order"]) == len(names)
+    assert set(entry_mod._CHANGED) <= set(names), "_CHANGED names unknown entries"
+
+    history = dict(state["history"])
+    monkeypatch.setattr(entry_mod, "correctness_history", lambda: history)
+    seen_windows = []
+    for _ in range(12):
+        order = list(entry_mod.queries())
+        assert not _stale(order, history), f"horizon broken before round {max(history) + 1}"
+        window = order[:WINDOW]
+        assert window not in seen_windows, "the window did not rotate"
+        seen_windows.append(window)
+        history[max(history) + 1] = {name: GREEN for name in window}
+    assert not _stale(list(entry_mod.queries()), history)
+
+    # an empty history: every entry never checked, so name order
+    history.clear()
+    assert list(entry_mod.queries()) == names
+
+    # a red row does not renew an entry's round; rows but no green one is round 0
+    a, b, c = "a", "b", "c"
+    hist = {1: {a: GREEN, b: GREEN, c: GREEN}, 2: {b: GREEN}, 3: {a: RED}}
+    assert validation_order([a, b, c], hist) == [a, c, b]
+    assert validation_order([a, b, c], {1: {a: GREEN, b: GREEN, c: RED}}) == [c, a, b]
+
+    # a history row for a deleted entry is ignored
+    assert validation_order([b, c], {1: {a: GREEN, b: GREEN}, 2: {c: GREEN}}) == [b, c]
+
+    # a _CHANGED name sorts first, ahead of never-checked ones
+    assert validation_order([a, b, c], {1: {c: GREEN}}, changed=(c,)) == [c, a, b]
+    history.update(state["history"])
+    last = list(entry_mod.queries())[-1]
+    monkeypatch.setattr(entry_mod, "_CHANGED", (last,))
+    assert list(entry_mod.queries())[0] == last
