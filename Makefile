@@ -1,6 +1,6 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test test-ids test-order parity-sf001 parity-sf01 bench loc surface perf-ingest perf-query perf-catalog perf-cold perf-pairs
+.PHONY: test test-ids test-order parity-sf001 parity-sf01 bench loc surface plans perf-ingest perf-query perf-catalog perf-cold perf-pairs
 
 # The ROADMAP Tier-1 verify command, verbatim.
 test:
@@ -43,6 +43,12 @@ loc:
 # diffs empty against the parent's output.
 surface:
 	@python3 tools/surface.py
+
+# One `<name> <sha256>` line per live and staged entry: the digest of its
+# executed plan at sf0.001 on local[4], process-specific ids masked. A change
+# that keeps the plans diffs empty against the parent's output.
+plans:
+	@python3 tools/plans.py
 
 # Terraform ingest benchmark at one seed: end-to-end metrics untraced, then
 # the per-layer split traced (see perfbench/run.py).

@@ -9,7 +9,10 @@ driver's order-insensitive value-hash comparison is deterministic:
   columns built from exact rationals use floor(x*10^d+0.5)/10^d (ties are
   REACHABLE there), while FP-accumulated money sums keep round() — a tie
   needs the shortest-repr double to end exactly at the rounding digit,
-  which repeated sweeps show does not occur in this fixed corpus
+  which repeated sweeps show does not occur in this fixed corpus. The
+  Spark side writes that snap only through ``rounding.py`` (and cents as
+  its un-divided ``units`` cast to BIGINT); the oracles keep the literal
+  text on purpose, so one bug cannot pass on both sides
 - top-k cuts rank on the ROUNDED score with a unique-id tiebreaker so
   floating-point last-ulp differences can never select different rows
 - integer-derived ratios (jaccard) are bit-identical across engines
@@ -32,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import state
+from . import rounding, state
 from .operators import (
     cluster,
     dedup,
@@ -348,9 +351,9 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile (t-digest), engine-specific like approx_distinct."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
-        F.expr("floor(percentile(value, 0.5) * 10000 + 0.5) / 10000").alias("p50"),
-        F.expr("floor(percentile(value, 0.9) * 10000 + 0.5) / 10000").alias("p90"),
-        F.expr("floor(percentile(value, 0.99) * 10000 + 0.5) / 10000").alias("p99"),
+        F.expr(rounding.snap_sql("percentile(value, 0.5)", 4)).alias("p50"),
+        F.expr(rounding.snap_sql("percentile(value, 0.9)", 4)).alias("p90"),
+        F.expr(rounding.snap_sql("percentile(value, 0.99)", 4)).alias("p99"),
     )
 
 
@@ -795,9 +798,12 @@ def q_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     return joined.agg(
         F.expr(
-            "floor(100.0 * sum(CASE WHEN p_type = 'ECONOMY'"
-            " THEN l_extendedprice * (1 - l_discount) ELSE 0 END)"
-            " / sum(l_extendedprice * (1 - l_discount)) * 10000 + 0.5) / 10000"
+            rounding.snap_sql(
+                "100.0 * sum(CASE WHEN p_type = 'ECONOMY'"
+                " THEN l_extendedprice * (1 - l_discount) ELSE 0 END)"
+                " / sum(l_extendedprice * (1 - l_discount))",
+                4,
+            )
         ).alias("economy_revenue_pct")
     )
 
@@ -829,7 +835,7 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_quantity") < F.col("half_avg_qty"))
         .join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
-        .agg(F.expr("floor(sum(l_extendedprice) * 100 + 0.5) / 100").alias("small_qty_revenue"))
+        .agg(F.expr(rounding.snap_sql("sum(l_extendedprice)", 2)).alias("small_qty_revenue"))
     )
 
 
@@ -947,7 +953,7 @@ def q_customer_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     cv = (
         _t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
-        .agg(F.floor(F.sum("o_totalprice") * 100 + 0.5).cast("long").alias("vc"))
+        .agg(rounding.units(F.sum("o_totalprice"), 2).cast("long").alias("vc"))
     )
     w_cum = (
         Window.orderBy(F.col("vc").desc(), "o_custkey")
@@ -1007,8 +1013,8 @@ def q_customer_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cv = (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_acctbal")
-        .agg(F.floor(F.sum("o_totalprice") * 100 + 0.5).cast("long").alias("rev_c"))
-        .withColumn("bal_c", F.floor(F.col("c_acctbal") * 100 + 0.5).cast("long"))
+        .agg(rounding.units(F.sum("o_totalprice"), 2).cast("long").alias("rev_c"))
+        .withColumn("bal_c", rounding.units(F.col("c_acctbal"), 2).cast("long"))
     )
     w = (
         Window.orderBy(F.col("bal_c").desc())
@@ -1194,7 +1200,7 @@ def q_events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vc"),
+        rounding.units(F.col("value"), 2).cast("long").alias("vc"),
     )
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     # ts may be TIMESTAMP_NTZ (current testdata generation); the cast is
@@ -1210,15 +1216,11 @@ def q_events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.sum("dt").alias("span_us"),
-            (
-                F.floor(
-                    F.sum(F.col("vc") * F.col("dt")).cast("double")
-                    / F.sum("dt").cast("double")
-                    / 100.0
-                    * 10000
-                    + 0.5
-                )
-                / 10000
+            rounding.snap(
+                F.sum(F.col("vc") * F.col("dt")).cast("double")
+                / F.sum("dt").cast("double")
+                / 100.0,
+                4,
             ).alias("twa"),
         )
     )
@@ -1550,7 +1552,7 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantiles at other q just change the inequality constant."""
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("price_c"),
+        rounding.units(F.col("l_extendedprice"), 2).cast("long").alias("price_c"),
         F.col("l_quantity").cast("long").alias("w"),
         "l_orderkey",
         "l_linenumber",
@@ -1608,7 +1610,7 @@ def q_orders_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partitioned bucketing pass — the entry pins the exact
     semantics the two-phase rewrite must reproduce)."""
     o = _t(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("price_c"),
+        rounding.units(F.col("o_totalprice"), 2).cast("long").alias("price_c"),
         "o_orderkey",
     )
     b = o.select(
@@ -1726,14 +1728,8 @@ def q_basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     x = pa.select(F.col("p_brand").alias("brand1"), F.col("na").alias("n1"))
     y = pa.select(F.col("p_brand").alias("brand2"), F.col("na").alias("n2"))
-    lift = (
-        F.floor(
-            (F.col("n_both") * F.col("n_orders")).cast("double")
-            / (F.col("n1") * F.col("n2"))
-            * 10000
-            + 0.5
-        )
-        / 10000
+    lift = rounding.snap(
+        (F.col("n_both") * F.col("n_orders")).cast("double") / (F.col("n1") * F.col("n2")), 4
     )
     return (
         pr.join(F.broadcast(x), "brand1")
@@ -1940,7 +1936,7 @@ def q_events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.filter(F.col("rn") == F.expr("(n_pairs + 1) DIV 2")).select(
         "event_type",
         "n_pairs",
-        (F.floor(F.col("slope") * 1000000 + 0.5) / 1000000).alias("sen_slope"),
+        rounding.snap(F.col("slope"), 6).alias("sen_slope"),
     )
 
 
@@ -2340,7 +2336,7 @@ def q_events_autocorr24(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.select(
         "event_type",
         F.col("n").alias("n_pairs"),
-        (F.floor(num / den * 1000000 + 0.5) / 1000000).alias("r24"),
+        rounding.snap(num / den, 6).alias("r24"),
     )
 
 
@@ -2385,7 +2381,7 @@ def q_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.select(
         "user_id",
         F.col("n").alias("n_events"),
-        (F.floor(ent * 10000 + 0.5) / 10000).alias("entropy_nats"),
+        rounding.snap(ent, 4).alias("entropy_nats"),
     )
 
 
@@ -2431,7 +2427,7 @@ def q_customer_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias("r")
+            F.sum(rounding.units(F.col("o_totalprice"), 2).cast("long")).alias("r")
         )
     )
     rk = cr.select(
@@ -2452,7 +2448,7 @@ def q_customer_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return a.select(
         F.col("n").alias("n_customers"),
-        (F.floor(gini * 1000000 + 0.5) / 1000000).alias("gini"),
+        rounding.snap(gini, 6).alias("gini"),
     )
 
 
@@ -2498,7 +2494,7 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("o_orderdate").alias("last_order"),
             F.count("*").alias("freq"),
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias(
+            F.sum(rounding.units(F.col("o_totalprice"), 2).cast("long")).alias(
                 "money_c"
             ),
         )
@@ -2563,7 +2559,7 @@ def q_nation_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias(
+            F.sum(rounding.units(F.col("o_totalprice"), 2).cast("long")).alias(
                 "rev_c"
             )
         )
@@ -3075,7 +3071,7 @@ def q_events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "user_id",
             "ts",
-            F.expr("floor((avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)) * 10000 + 0.5) / 10000").alias("mavg7"),
+            F.expr(rounding.snap_sql("avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)", 4)).alias("mavg7"),
         )
     )
 
@@ -3110,10 +3106,12 @@ def q_events_trailing_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
             "RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)"
         ).alias("n_30m"),
         F.expr(
-            "floor(sum(value) OVER (PARTITION BY user_id "
-            "ORDER BY unix_micros(CAST(ts AS TIMESTAMP)) "
-            "RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW) "
-            "* 10000 + 0.5) / 10000"
+            rounding.snap_sql(
+                "sum(value) OVER (PARTITION BY user_id "
+                "ORDER BY unix_micros(CAST(ts AS TIMESTAMP)) "
+                "RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)",
+                4,
+            )
         ).alias("sum_30m"),
     )
 
@@ -3137,12 +3135,11 @@ def q_stats_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     All four are single-pass streaming aggregates (partial+final) in both
     engines; quantized like the other FP aggregates."""
     li = _t(spark, sf_dir, "lineitem")
-    q = lambda c, d: F.floor(c * (10 ** d) + F.lit(0.5)) / (10 ** d)
     return li.groupBy("l_returnflag").agg(
-        q(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
-        q(F.var_samp("l_discount"), 6).alias("var_disc"),
-        q(F.corr("l_quantity", "l_extendedprice"), 4).alias("corr_qty_price"),
-        q(F.covar_samp("l_quantity", "l_discount"), 4).alias("cov_qty_disc"),
+        rounding.snap(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
+        rounding.snap(F.var_samp("l_discount"), 6).alias("var_disc"),
+        rounding.snap(F.corr("l_quantity", "l_extendedprice"), 4).alias("corr_qty_price"),
+        rounding.snap(F.covar_samp("l_quantity", "l_discount"), 4).alias("cov_qty_disc"),
         F.count("*").alias("n"),
     )
 
@@ -3177,7 +3174,7 @@ def q_orders_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     would need a global unbounded window: one partition holding every
     row, the exact scale-killer the two-pass form avoids."""
     c = _t(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents")
+        rounding.units(F.col("o_totalprice"), 2).cast("long").alias("cents")
     )
     b = c.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
     # `div` is true integer division (DuckDB's `//`) — Spark's `/` would be
@@ -3349,8 +3346,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("o_year").agg(
         F.expr(
-            "floor(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END)"
-            " / sum(volume) * 1000000 + 0.5) / 1000000"
+            rounding.snap_sql(
+                "sum(CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END) / sum(volume)", 6
+            )
         ).alias("mkt_share")
     )
 
@@ -3612,7 +3610,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the balance filter has cut the probe side."""
     c = _t(spark, sf_dir, "customer")
     thr = c.filter(F.col("c_acctbal") > 0.0).agg(
-        ((F.floor(F.avg("c_acctbal") * 100 + 0.5) + 0.5) / 100).alias("t")
+        ((rounding.units(F.avg("c_acctbal"), 2) + 0.5) / 100).alias("t")
     )
     o = _t(spark, sf_dir, "orders").select("o_custkey")
     return (
@@ -3650,7 +3648,7 @@ def q_events_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hourly layer is the materialized table; every coarser granularity
     (day/week/month) re-aggregates |hours|·|types| tiny rows instead of
     rescanning the fact table. The hourly value partial is snapped to
-    integer cents (the repo's portable floor(x*100+0.5) grid), so the
+    integer cents (the portable grid, ``rounding.units``), so the
     daily layer sums exact BIGINTs — associative and engine-portable, no
     FP reassociation between the two grains — and the oracle replays the
     SAME two-level structure (hourly CTE summed to daily) rather than a
@@ -3660,7 +3658,7 @@ def q_events_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(
         F.count("*").alias("n"),
-        F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("sv_cents"),
+        rounding.units(F.sum("value"), 2).cast("long").alias("sv_cents"),
     )
     return (
         hourly.groupBy(F.date_trunc("day", "hour").alias("day"), "event_type")
@@ -3978,7 +3976,7 @@ def q_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_orders"),
             (
-                F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")) / 100.0
+                F.sum(rounding.units(F.col("o_totalprice"), 2).cast("long")) / 100.0
             ).alias("revenue"),
         )
     )
@@ -4063,10 +4061,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("2000-09-01").cast("date"))
     )
     revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        (
-            F.floor(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100 + 0.5)
-            / 100
-        ).alias("total_revenue")
+        rounding.snap(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+            "total_revenue"
+        )
     )
     w = Window.orderBy(F.col("total_revenue").desc())
     top = revenue.withColumn("rnk", F.rank().over(w)).filter(F.col("rnk") == 1)
@@ -4225,10 +4222,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s_eu, li.l_suppkey == s_eu.s_suppkey)
         .groupBy("p_partkey", "s_suppkey", "s_name", "n_name")
         .agg(
-            (
-                F.floor(F.avg(F.col("l_extendedprice") / F.col("l_quantity")) * 100 + 0.5)
-                / 100
-            ).alias("supply_cost")
+            rounding.snap(F.avg(F.col("l_extendedprice") / F.col("l_quantity")), 2).alias(
+                "supply_cost"
+            )
         )
     )
     w = Window.partitionBy("p_partkey")
@@ -4287,9 +4283,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(s, li.l_suppkey == s.s_suppkey)
         .groupBy("l_partkey")
         .agg(
-            F.floor(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100 + 0.5
-            )
+            rounding.units(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
             .cast("long")
             .alias("vc")
         )
@@ -5096,7 +5090,7 @@ def docs_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents").select("doc_id", "lang"),
         "lang",
         "doc_id",
-        lambda n: F.ceil(F.floor(F.pow(n, F.lit(0.7)) * 1e9 + 0.5) / 1e9),
+        lambda n: F.ceil(rounding.snap(F.pow(n, F.lit(0.7)), 9)),
     )
 
 
@@ -5132,12 +5126,7 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10).cast(
         "long"
     )
-    priority = (
-        F.floor(
-            F.log((u + 1) / F.lit(float(16**12))) / F.col("n_chars") * 1e9 + 0.5
-        )
-        / 1e9
-    )
+    priority = rounding.snap(F.log((u + 1) / F.lit(float(16**12))) / F.col("n_chars"), 9)
     return (
         doc.withColumn("priority", priority)
         .orderBy(F.col("priority").desc(), "doc_id")
@@ -5667,7 +5656,7 @@ def docs_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by exact 5-gram Jaccard (shared-shingle candidates)."""
     pairs = dedup.shingle_jaccard_pairs(_t(spark, sf_dir, "documents"), n=5, threshold=0.6)
-    return pairs.select("id_a", "id_b", F.expr("floor(jaccard * 10000 + 0.5) / 10000").alias("jaccard"))
+    return pairs.select("id_a", "id_b", F.expr(rounding.snap_sql("jaccard", 4)).alias("jaccard"))
 
 
 @query(
@@ -5815,7 +5804,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), n=5, num_hashes=8, bands=4, threshold=0.8
     )
-    return pairs.select("id_a", "id_b", F.expr("floor(jaccard * 10000 + 0.5) / 10000").alias("jaccard"))
+    return pairs.select("id_a", "id_b", F.expr(rounding.snap_sql("jaccard", 4)).alias("jaccard"))
 
 
 # SimHash oracle: replicates the WHOLE portable pipeline (md5-digit token
@@ -6124,7 +6113,7 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode("embedding").alias("dim", "v")
     )
     x = e.select(
-        "dim", F.floor(F.col("v").cast("double") * 1000000 + 0.5).cast("long").alias("vq")
+        "dim", rounding.units(F.col("v").cast("double"), 6).cast("long").alias("vq")
     )
     a = x.groupBy("dim").agg(
         F.count("*").alias("n"),
@@ -8078,7 +8067,7 @@ def q_orders_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.expr(
         "CAST(conv(substring(md5(concat_ws('|', CAST(o_orderkey AS STRING), "
         "CAST(o_custkey AS STRING), "
-        "CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS STRING), "
+        f"CAST(CAST({rounding.units_sql('o_totalprice', 2)} AS BIGINT) AS STRING), "
         "CAST(o_orderdate AS STRING))), 1, 12), 16, 10) AS DECIMAL(38,0))"
     )
     return (
@@ -8768,7 +8757,7 @@ def q_orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     om = od.select(
         "o_custkey",
         F.date_trunc("month", "o_orderdate").alias("m"),
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias("cents"),
+        F.expr(f"CAST({rounding.units_sql('o_totalprice', 2)} AS BIGINT)").alias("cents"),
     )
     j = om.join(fo, "o_custkey").select(
         "m0",
@@ -9323,7 +9312,7 @@ def q_quantile_logsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation IS the per-partition sketch build + merge."""
     li = _t(spark, sf_dir, "lineitem")
     cents = li.select(
-        F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").alias("v")
+        F.expr(f"CAST({rounding.units_sql('l_extendedprice', 2)} AS BIGINT)").alias("v")
     )
     sk = sketch.logsketch(cents, "v", m=5)
     return sketch.logsketch_quantiles(sk, [50, 90, 99]).select(
@@ -9591,7 +9580,7 @@ def q_logsketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     two map-side partial aggregations is sketch-sized."""
     orders = _t(spark, sf_dir, "orders")
     cents = orders.select(
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias("v"),
+        F.expr(f"CAST({rounding.units_sql('o_totalprice', 2)} AS BIGINT)").alias("v"),
         "o_orderdate",
     )
     cut = "1995-01-01"
@@ -9642,7 +9631,7 @@ def q_events_type_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     cents = ev.select(
         "event_type",
-        F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("v"),
+        F.expr(f"CAST({rounding.units_sql('value', 2)} AS BIGINT)").alias("v"),
     )
     sk = sketch.logsketch_by(cents, "v", ["event_type"], m=5)
     return sketch.logsketch_quantiles_by(sk, ["event_type"], [50, 90, 99]).select(
@@ -9684,7 +9673,7 @@ def stream_quantile_logsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging across restarts by re-summing."""
     from .streaming.events import read_events_stream
 
-    lb = sketch.logbucket_expr("CAST(floor(value * 100 + 0.5) AS BIGINT)", 5)
+    lb = sketch.logbucket_expr(f"CAST({rounding.units_sql('value', 2)} AS BIGINT)", 5)
     buckets = read_events_stream(spark, sf_dir).select(F.expr(lb).alias("lb"))
     sk = _drain_memory_sink(
         spark,
@@ -10102,7 +10091,7 @@ def _incremental_rollup_frame(orders: DataFrame, batch_pred) -> DataFrame:
     keyed = orders.select(
         "o_custkey",
         F.date_trunc("month", F.col("o_orderdate")).alias("order_month"),
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
+        F.expr(f"CAST({rounding.units_sql('o_totalprice', 2)} AS BIGINT)").alias(
             "cents"
         ),
         batch_pred.alias("is_batch"),
@@ -11482,9 +11471,7 @@ def _ppl_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         lp = text.bigram_logprob(_t(spark, sf_dir, "documents"))
         return lp.select(
             "doc_id",
-            F.expr(
-                "CAST(floor(-mean_logprob * 10000 + 0.5) AS BIGINT)"
-            ).alias("nll_e4"),
+            F.expr(f"CAST({rounding.units_sql('-mean_logprob', 4)} AS BIGINT)").alias("nll_e4"),
         ).localCheckpoint(eager=True)
 
     return state.get(spark, "ppl_scores", state.corpus_digest(sf_dir), build)
@@ -12700,8 +12687,7 @@ def q_supplier_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_suppkey")
         .agg(
             F.expr(
-                "CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5)"
-                " AS BIGINT)) AS BIGINT)"
+                f"CAST(sum(CAST({rounding.units_sql('l_extendedprice', 2)} AS BIGINT)) AS BIGINT)"
             ).alias("rev")
         )
     )

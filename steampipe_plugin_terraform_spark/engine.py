@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .parallel import slices
-from .sources.discover import discover_files, file_size, pack_by_size
+from .sources.discover import apply_s3a_auth, discover_files, file_size, pack_by_size
 from .tfcore.rows import WIDE_COLUMNS, build_rows_for_file
 
 _LONG_COLS = {"count", "start_line", "end_line"}
@@ -211,15 +211,7 @@ class TerraformEngine:
             raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
         self.spark = spark
         self._source_lists = (tuple(config_paths), tuple(plan_paths), tuple(state_paths), path_qual)
-        auth: dict[str, str] = {}
-        self.files = discover_files(
-            config_paths, plan_paths, state_paths, path_qual, auth_sink=auth
-        )
-        if auth:  # per-path ?aws_profile=/?region= → per-bucket S3A confs,
-            # applied before the first read (reference docs/index.md:227-268)
-            from .sources.discover import apply_s3a_auth
-
-            apply_s3a_auth(spark, auth)
+        self._discover()
         self.on_error = on_error
         self._cache = cache
         self._canonical_path: str | None = None  # set by load_canonical
@@ -381,15 +373,18 @@ class TerraformEngine:
         if self._views_json_as is not None:
             self.register_views(json_as=self._views_json_as)
 
+    def _discover(self) -> None:
+        """List the source files into ``self.files``. Per-path
+        ?aws_profile=/?region= become per-bucket S3A confs, applied before
+        the next read (reference docs/index.md:227-268)."""
+        auth: dict[str, str] = {}
+        self.files = discover_files(*self._source_lists, auth_sink=auth)
+        if auth:
+            apply_s3a_auth(self.spark, auth)
+
     def _refresh_sources(self, changed_paths) -> None:
         old = self._wide
-        cfg, plan, state, qual = self._source_lists
-        auth: dict[str, str] = {}
-        self.files = discover_files(cfg, plan, state, qual, auth_sink=auth)
-        if auth:
-            from .sources.discover import apply_s3a_auth
-
-            apply_s3a_auth(self.spark, auth)
+        self._discover()
         _reset_listing_cache(self.spark)
         changed = (
             None

@@ -38,13 +38,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import rounding
+
 
 def _star_round(edges: DataFrame, large: bool, dedup_output: bool = True) -> DataFrame:
     """One large-star or small-star round over an undirected edge list with
     columns (u, v). Returns a (u, v) edge list with u != v, deduplicated
     unless ``dedup_output=False`` — a large-star round feeding straight
     into a small-star round skips its distinct (one exchange fewer per
-    iteration, r15 guide §2.4): small-star's collect_set/min aggregation
+    iteration): small-star's collect_set/min aggregation
     dedups neighbor multisets anyway, so duplicate (a, m) rows cannot
     change its output, only ride one shuffle (where map-side partial
     collect_set already collapses them)."""
@@ -100,17 +102,14 @@ def connected_components(
     for _ in range(max_rounds):
         after_large = _star_round(edges, large=True, dedup_output=False)
         after_small = _star_round(after_large, large=False).localCheckpoint(eager=True)
-        # fixpoint test in ONE job (r15; was a count job per round plus a
-        # conditional exceptAll job — two scheduling round-trips on a
-        # pair-graph that is tiny relative to the corpus): small-star
-        # output is a distinct canonically-oriented (u > v) set, so
-        # set-equality with the previous round is exactly "no one-sided
-        # row in a full outer join on (u, v)". Duplicate rows that the
-        # greatest/least canonicalization of a first-round directed edge
-        # list can create on the prev side cannot flip the test — a key
-        # is one-sided or it is not — they can only let it converge one
-        # (provably no-op) round earlier than the old count-then-diff
-        # test. Both sides are localCheckpointed, so the test job reads
+        # fixpoint test in ONE job: small-star output is a distinct
+        # canonically-oriented (u > v) set, so set-equality with the
+        # previous round is exactly "no one-sided row in a full outer join
+        # on (u, v)". Duplicate rows that the greatest/least
+        # canonicalization of a first-round directed edge list can create
+        # on the prev side cannot flip the test — a key is one-sided or it
+        # is not — at most they let it converge one (provably no-op) round
+        # earlier. Both sides are localCheckpointed, so the test job reads
         # materialized partitions, not lineage.
         canon_prev = edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         mismatch = (
@@ -196,7 +195,6 @@ def pagerank_fixed(
 
     Returns (node, pr) for every node appearing as src or dst.
     """
-    q = 10.0 ** digits
     teleport = f"{1.0 - damping:g}"
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     out = e.groupBy("src").agg(F.count("*").alias("__odeg"))
@@ -219,7 +217,7 @@ def pagerank_fixed(
             .select(
                 "node",
                 F.expr(
-                    f"floor(({teleport} + {damping:g} * COALESCE(s, 0.0)) * {q:g} + 0.5) / {q:g}"
+                    rounding.snap_sql(f"{teleport} + {damping:g} * COALESCE(s, 0.0)", digits)
                 ).alias("pr"),
             )
             .localCheckpoint(eager=True)

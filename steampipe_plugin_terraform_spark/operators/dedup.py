@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .. import state
+from .. import rounding, state
 from ..parallel import spread
 
 
@@ -192,13 +192,10 @@ def _shared_pairs_with_sizes(sh: DataFrame, df_max: int | None) -> DataFrame:
     The sizes ride the posting lists (``_hashed_shingles`` carries n_sh
     per row — a per-doc constant): the pair groupBy keys on
     (id_a, id_b, n_a, n_b), which groups exactly like (id_a, id_b) since
-    n_* are functionally dependent on the ids. r15 restructure (guide
-    §2.4): this replaced a separate sizes aggregation joined on after
-    pair counting — two joins and one groupBy exchange fewer, and the
-    corpus is tokenized/hashed ONCE instead of twice (the sizes subtree
-    could not share the posting subtree's exchange). The df cap is still
-    the posting-list size filter; n_sh still counts EVERY shingle (the
-    cap drops lists, never the denominators)."""
+    n_* are functionally dependent on the ids. So no sizes aggregation is
+    joined on after pair counting, and the corpus is tokenized and hashed
+    once. The df cap is the posting-list size filter; n_sh counts EVERY
+    shingle (the cap drops lists, never the denominators)."""
     cap = "true" if df_max is None else f"size(ids) <= {int(df_max)}"
     return (
         sh.groupBy("h")
@@ -255,25 +252,16 @@ def tfidf_cosine_pairs(
     the only shuffles are groupBy(id, h), the df window on h, groupBy(id),
     groupBy(h), and the final groupBy(pair) — all on uniform hashed keys.
 
-    r15 restructure (guide §2.4 / §1.2 step 1): the previous shape —
-    ``kept = tf JOIN dfreq`` with ``norms`` joined back onto the pair
-    dots twice — planned with ZERO exchange reuse: dfreq and norms are
-    small post-aggregation frames, so the planner broadcast them, and a
-    broadcast build side DUPLICATES its whole subtree instead of reusing
-    a shuffle (9 documents scans, 6 n-gram tokenize passes and 6 tf
-    aggregations for one invocation; plans/r15/
-    dedup_tfidf_cosine_pairs_before.txt). Now (a) the document frequency
-    comes from a count window over h on the tf rows — no dfreq join to
-    duplicate ``tf`` into, and (b) each doc's norm ``nr`` rides the
+    No small frame is joined back: the planner would broadcast it, and a
+    broadcast build side duplicates its whole subtree instead of reusing
+    a shuffle. So (a) the document frequency comes from a count window
+    over h on the tf rows, and (b) each doc's norm ``nr`` rides the
     posting rows as a per-doc constant (the ``_shared_pairs_with_sizes``
-    n_sh device): one groupBy(id) collects the doc's (h, w) terms
-    together with nr, the re-exploded postings carry nr into the pair
-    lists, and the dot groupBy keys on (id_a, id_b, na, nb) — grouping
-    exactly like (id_a, id_b) since the norms are functionally dependent
-    on the ids. One scan, one tokenize pass, zero joins; per-term w is
-    the identical IEEE expression, and the dot/norm sums stay on the
-    same 1e-6 snapped grid (the only order-sensitive step, exactly as
-    before the restructure).
+    n_sh device): one groupBy(id) collects the doc's (h, w) terms with
+    nr, the re-exploded postings carry nr into the pair lists, and the
+    dot groupBy keys on (id_a, id_b, na, nb), which groups exactly like
+    (id_a, id_b). One scan, one tokenize pass, zero joins; the dot/norm
+    sums are the only order-sensitive step, snapped to the 1e-6 grid.
 
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine snapped to 1e-6.
     """
@@ -332,7 +320,7 @@ def tfidf_cosine_pairs(
         .select(
             "id_a",
             "id_b",
-            F.expr("floor(dot / (na * nb) * 1000000 + 0.5) / 1000000").alias("cosine"),
+            F.expr(rounding.snap_sql("dot / (na * nb)", 6)).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -453,12 +441,9 @@ def _minhash_posting_base(
     (identical formula to ``_hashed_shingles``: xxhash64 of the 5-long
     token-hash slice), ``n_sh`` the doc's distinct-shingle count.
 
-    r16 (guide §1.2 step 1 / §5, verdict item 2): one dedup_minhash_lsh
-    invocation evaluated THREE corpus tokenize passes at runtime — the
-    string-shingle pass under the signature aggregate plus two
-    hashed-shingle passes inside the verify-set build (overcap broadcast
-    build + probe side, which exchange reuse cannot fold across the
-    broadcast boundary) — and six statically. This frame is
+    Without it the signature aggregate and the verify-set build (an
+    overcap broadcast build plus its probe side, which exchange reuse
+    cannot fold across) would each tokenize the corpus. This frame is
     localCheckpoint-materialized (static reuse sites: signature agg +
     overcap agg + sets agg, the latter two ×2 in the declared plan = 5,
     clearing the ≥4 break-even) so every consumer reads the materialized
@@ -535,9 +520,9 @@ def minhash_lsh_pairs(
     shuffle exchanges on both sides instead, the exchange-reuse rule
     materializes each heavy subtree once.
 
-    r16: signature AND verify sets both read the single
-    ``_minhash_posting_base`` checkpoint — one corpus scan + one
-    tokenize pass per invocation instead of three (see its docstring).
+    Signature and verify sets both read the one
+    ``_minhash_posting_base`` checkpoint: one corpus scan and one
+    tokenize pass per invocation (see its docstring).
     """
     base = _minhash_posting_base(df, id_col, text_col, n)
     aggs = [

@@ -38,7 +38,8 @@ def pack_greedy(
     import pandas as pd
 
     budget_ = int(budget)
-    cols = {id_col, group_col, order_col, weight_col}
+    # deduped in the caller's order: a set's order follows PYTHONHASHSEED
+    cols = dict.fromkeys((id_col, group_col, order_col, weight_col))
 
     prepared = df.select(*cols).withColumn(
         "shard", (F.col(id_col) % F.lit(shards)).cast("int")

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import rounding
 from ..parallel import plan_bytes, slices, spread
 
 
@@ -79,8 +80,6 @@ def cosine_topk(
     """
     import numpy as np
 
-    scale = 10 ** round_digits if round_digits is not None else None
-
     # replicate queries to every block via explode — no join, no broadcast,
     # whole-stage codegen (queries are the small side by contract)
     q_rep = queries.select(
@@ -106,8 +105,8 @@ def cosine_topk(
         S = (Q @ C.T) / np.outer(
             np.sqrt((Q * Q).sum(axis=1)), np.sqrt((C * C).sum(axis=1))
         )
-        if scale is not None:
-            S = np.floor(S * scale + 0.5) / scale
+        if round_digits is not None:
+            S = rounding.snap_np(S, round_digits)
         melt = pd.DataFrame(
             {
                 "query_id": np.repeat(qids, len(nids)),
@@ -237,8 +236,6 @@ def kmeans_lloyd(
             "to train_cap centroids. Raise train_cap or use kmeans_two_level "
             "(the design point for k past broadcast-comfortable sizes)."
         )
-    qd = 10.0 ** dist_digits
-    qm = 10.0 ** mean_digits
     spark = df.sparkSession
     id_type = dict(df.dtypes)[id_col]
     vec_type = dict(df.dtypes)[vec_col]
@@ -278,7 +275,7 @@ def kmeans_lloyd(
                     continue
                 V = np.stack(pdf["v"].to_numpy()).astype("float64")
                 D = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cb.T) + c2[None, :]
-                D = np.floor(D * qd + 0.5) / qd
+                D = rounding.snap_np(D, dist_digits)
                 # np.argmin returns the FIRST minimum → smallest cid, the
                 # same tiebreak as SQL's ORDER BY qdist, cid
                 yield pd.DataFrame(
@@ -312,7 +309,7 @@ def kmeans_lloyd(
         )
         newC = C.copy()
         for r in means:
-            newC[r.bucket] = np.floor(np.asarray(r.mv, dtype="float64") * qm + 0.5) / qm
+            newC[r.bucket] = rounding.snap_np(np.asarray(r.mv, dtype="float64"), mean_digits)
         C = newC
     if persisted is not None:
         persisted.unpersist()
@@ -345,7 +342,6 @@ def assign_to_centroids(
     Returns (id_col, vec_col, bucket int); no shuffle, no driver data."""
     import numpy as np
 
-    qd = 10.0 ** dist_digits
     spark = df.sparkSession
     id_type = dict(df.dtypes)[id_col]
     vec_type = dict(df.dtypes)[vec_col]
@@ -364,7 +360,7 @@ def assign_to_centroids(
             # training path's transform(vec, x -> CAST(x AS DOUBLE))
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             D = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cb.T) + c2[None, :]
-            D = np.floor(D * qd + 0.5) / qd
+            D = rounding.snap_np(D, dist_digits)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -419,8 +415,6 @@ def kmeans_two_level(
     """
     import numpy as np
 
-    qd = 10.0 ** dist_digits
-    qm = 10.0 ** mean_digits
     id_type = dict(df.dtypes)[id_col]
 
     level1, l1_centroids = kmeans_lloyd(
@@ -447,7 +441,7 @@ def kmeans_two_level(
         def assign(Cm):
             c2 = (Cm * Cm).sum(axis=1)
             D = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cm.T) + c2[None, :]
-            D = np.floor(D * qd + 0.5) / qd
+            D = rounding.snap_np(D, dist_digits)
             return np.argmin(D, axis=1)  # first min == smallest cid
 
         for _ in range(iters):
@@ -464,7 +458,7 @@ def kmeans_two_level(
                 # the exposure is one boundary per grid cell, identical to
                 # every other snapped mean in this module.
                 m = V[b == cid].mean(axis=0)
-                newC[cid] = np.floor(m * qm + 0.5) / qm
+                newC[cid] = rounding.snap_np(m, mean_digits)
             C = newC
         b = assign(C)
         member = pd.DataFrame(
@@ -529,7 +523,7 @@ def two_level_topk(
     # stage 1: route to nprobe1 level-1 cells
     s1 = q.crossJoin(F.broadcast(l1)).withColumn(
         "cos1",
-        F.floor(_dot("qv", "c1") / (_norm("qv") * _norm("c1")) * 1e6 + 0.5) / 1e6,
+        rounding.snap(_dot("qv", "c1") / (_norm("qv") * _norm("c1")), 6),
     )
     w1 = Window.partitionBy("query_id").orderBy(F.col("cos1").desc(), F.col("cell1"))
     p1 = (
@@ -540,10 +534,7 @@ def two_level_topk(
     # stage 2: rank only the probed cells' sub-centroids
     s2 = p1.join(F.broadcast(centroids), "cell1").withColumn(
         "cos2",
-        F.floor(
-            _dot("qv", "centroid") / (_norm("qv") * _norm("centroid")) * 1e6 + 0.5
-        )
-        / 1e6,
+        rounding.snap(_dot("qv", "centroid") / (_norm("qv") * _norm("centroid")), 6),
     )
     w2 = Window.partitionBy("query_id", "cell1").orderBy(
         F.col("cos2").desc(), F.col("cell2")
@@ -560,7 +551,7 @@ def two_level_topk(
     )
     scored = cand.withColumn(
         "cosine",
-        F.floor(_dot("qv", "cv") / (_norm("qv") * _norm("cv")) * 1e6 + 0.5) / 1e6,
+        rounding.snap(_dot("qv", "cv") / (_norm("qv") * _norm("cv")), 6),
     )
     wf = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -657,7 +648,7 @@ def ivf_topk(
             # quantize + stable sort: the probed bucket SET is then
             # engine-deterministic (rank by rounded cosine desc, cid asc —
             # replayable in the SQL oracle), not an ulp coin-flip
-            S = np.floor((Qn @ Cn_b.T) * 1e6 + 0.5) / 1e6
+            S = rounding.snap_np(Qn @ Cn_b.T, 6)
             order = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
             out = pdf.loc[pdf.index.repeat(n_probe)].reset_index(drop=True)
             out["bucket"] = order.ravel()
@@ -675,7 +666,7 @@ def ivf_topk(
         "query_id", "qv", F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
     scored = cand.withColumn("cosine", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
-    scored = scored.withColumn("cosine", F.expr("floor(cosine * 1000000 + 0.5) / 1000000"))
+    scored = scored.withColumn("cosine", F.expr(rounding.snap_sql("cosine", 6)))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -731,7 +722,7 @@ def ivf_topk_curve(
             n_probe = min(np_max, Cn_b.shape[0])
             # same quantize + stable sort as ivf_topk — the prefix property
             # above is exactly this determinism
-            S = np.floor((Qn @ Cn_b.T) * 1e6 + 0.5) / 1e6
+            S = rounding.snap_np(Qn @ Cn_b.T, 6)
             order = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
             out = pdf.loc[pdf.index.repeat(n_probe)].reset_index(drop=True)
             out["bucket"] = order.ravel()
@@ -757,7 +748,7 @@ def ivf_topk_curve(
         F.col(vec_col).alias("cv"),
     )
     scored = cand.withColumn("cosine", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
-    scored = scored.withColumn("cosine", F.expr("floor(cosine * 1000000 + 0.5) / 1000000"))
+    scored = scored.withColumn("cosine", F.expr(rounding.snap_sql("cosine", 6)))
     w = (
         Window.partitionBy("query_id")
         .orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
@@ -834,7 +825,6 @@ def pq_codebooks_encode(
     dsub = dim // m
     if dsub * m != dim:
         raise ValueError(f"dim ({dim}) must be divisible by m ({m})")
-    qd, qm = 1e4, 1e6
     spark = df.sparkSession
     id_type = dict(df.dtypes)[id_col]
 
@@ -874,7 +864,7 @@ def pq_codebooks_encode(
                     Vj = V[:, j * dsub : (j + 1) * dsub]
                     c2 = (Cj * Cj).sum(axis=1)
                     D = (Vj * Vj).sum(axis=1)[:, None] - 2.0 * (Vj @ Cj.T) + c2[None, :]
-                    D = np.floor(D * qd + 0.5) / qd
+                    D = rounding.snap_np(D, 4)
                     out[f"code{j}"] = np.argmin(D, axis=1).astype("int32")
                 yield pd.DataFrame(out)
 
@@ -903,7 +893,7 @@ def pq_codebooks_encode(
         newC = [Cj.copy() for Cj in C]
         for r in means:
             j = r.pos // dsub
-            newC[j][r.bucket][r.pos % dsub] = np.floor(r.mval * qm + 0.5) / qm
+            newC[j][r.bucket][r.pos % dsub] = rounding.snap_np(r.mval, 6)
         C = newC
     if persisted is not None:
         persisted.unpersist()
@@ -954,7 +944,6 @@ def pq_topk(
 
     spark = corpus.sparkSession
     dsub = dim // m
-    qd = 10.0 ** dist_digits
     id_type = dict(corpus.dtypes)[id_col]
     codes, books = trained or pq_codebooks_encode(
         corpus, id_col, vec_col, dim=dim, m=m, k=k, iters=iters
@@ -969,7 +958,7 @@ def pq_topk(
             qs = qv[j * dsub : (j + 1) * dsub]
             C = np.asarray(books[j], dtype="float64")
             d = (qs * qs).sum() - 2.0 * (C @ qs) + (C * C).sum(axis=1)
-            luts.append([float(x) for x in np.floor(d * qd + 0.5) / qd])
+            luts.append([float(x) for x in rounding.snap_np(d, dist_digits)])
         data.append((r[id_col], *luts))
     lut_schema = f"qid {id_type}, " + ", ".join(
         f"lut{j} array<double>" for j in range(m)
@@ -1038,8 +1027,6 @@ def ivf_pq_topk(
     spark = assigned.sparkSession
     m = len(books)
     dsub = len(books[0][0])
-    qd = 10.0 ** dist_digits
-    qc = 10.0 ** cos_digits
     id_type = dict(assigned.dtypes)[id_col]
 
     C = np.asarray(centroids, dtype="float64")
@@ -1050,7 +1037,7 @@ def ivf_pq_topk(
         qv = np.asarray(r[vec_col], dtype="float64")
         qn = np.sqrt((qv * qv).sum())
         # identical formula to _cos_sql: dot / (sqrt(aa)*sqrt(bb)), snapped
-        cos = np.floor((C @ qv) / (qn * cn) * qc + 0.5) / qc
+        cos = rounding.snap_np((C @ qv) / (qn * cn), cos_digits)
         # rank DESC with centroid-id tiebreak: argsort on (-cos, cid)
         order = np.lexsort((np.arange(len(C)), -cos))[:nprobe]
         probe_rows.extend((r[id_col], int(b)) for b in order)
@@ -1059,7 +1046,7 @@ def ivf_pq_topk(
             qs = qv[j * dsub : (j + 1) * dsub]
             Cj = np.asarray(books[j], dtype="float64")
             d = (qs * qs).sum() - 2.0 * (Cj @ qs) + (Cj * Cj).sum(axis=1)
-            luts.append([float(x) for x in np.floor(d * qd + 0.5) / qd])
+            luts.append([float(x) for x in rounding.snap_np(d, dist_digits)])
         lut_rows.append((r[id_col], *luts))
     probe_df = spark.createDataFrame(
         probe_rows, schema=f"qid {id_type}, bucket int"
@@ -1178,7 +1165,7 @@ def cosine_near_dup_pairs(
             # normalize orientation (block id ordering ≠ vector id ordering)
             ia, ib = np.minimum(ia, ib), np.maximum(ia, ib)
         return pd.DataFrame(
-            {"id_a": ia, "id_b": ib, "cosine": np.floor(vals * 1e6 + 0.5) / 1e6}
+            {"id_a": ia, "id_b": ib, "cosine": rounding.snap_np(vals, 6)}
         )
 
     return (
@@ -1266,7 +1253,7 @@ def random_projection(
     dim: int = 64,
     out_dim: int = 8,
     seed: int = 42,
-    grid: float = 1e6,
+    digits: int = 6,
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection to ``out_dim`` coordinates.
 
@@ -1276,7 +1263,7 @@ def random_projection(
     of sign bits — the dimensionality-reduction front end for downstream
     clustering/ANN when 64⊸8 preserves pairwise distances within the JL
     bound. Output is long form (id, dim_idx, coord), coord snapped to the
-    1/grid grid (floor(x*grid+0.5)/grid) so cross-engine summation-order
+    10^-digits grid (``rounding.snap_np``) so cross-engine summation-order
     ulps cannot change the value.
 
     Scale: one Arrow-batched BLAS matmul per batch against the broadcast
@@ -1301,7 +1288,7 @@ def random_projection(
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             R = (V @ P.T) / np.sqrt(float(P.shape[0]))
-            R = np.floor(R * grid + 0.5) / grid
+            R = rounding.snap_np(R, digits)
             k = P.shape[0]
             yield pd.DataFrame(
                 {
@@ -1340,7 +1327,7 @@ def lsh_cosine_topk(
         F.broadcast(qs)
         .join(cs, "bucket")
         .withColumn("cosine", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
-        .withColumn("cosine", F.expr("floor(cosine * 1000000 + 0.5) / 1000000"))
+        .withColumn("cosine", F.expr(rounding.snap_sql("cosine", 6)))
     )
     # rank on the ROUNDED score + id (repo determinism convention)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
@@ -1414,8 +1401,6 @@ def group_centroids(
     correctness gate; callers wanting arrays regroup with
     ``array_sort(collect_list(struct(pos, mean_val)))``.
     """
-    from .text import pround
-
     ex = df.select(
         F.col(group_col).alias("grp"),
         F.posexplode(F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))")).alias("pos", "x"),
@@ -1426,7 +1411,7 @@ def group_centroids(
         .select(
             F.col("grp").alias(group_col),
             F.col("pos").cast("int"),
-            F.expr(pround("m", digits)).alias("mean_val"),
+            F.expr(rounding.snap_sql("m", digits)).alias("mean_val"),
             F.col("n").cast("long").alias("n_vecs"),
         )
     )
@@ -1476,7 +1461,6 @@ def semantic_dedup(
     # dedup / sampling / curation entries is free correctness-wise)
     assigned, _ = assignment or kmeans_lloyd(df, id_col, vec_col, k=k, iters=iters)
     id_type = dict(df.dtypes)[id_col]
-    qc = 10.0 ** cos_digits
 
     def cluster_dups(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
@@ -1485,7 +1469,7 @@ def semantic_dedup(
         ids = pdf["__id"].to_numpy()[order]
         V = np.stack(pdf["__v"].to_numpy())[order].astype("float64")
         N = V / np.sqrt((V * V).sum(axis=1))[:, None]
-        S = np.floor(N @ N.T * qc + 0.5) / qc
+        S = rounding.snap_np(N @ N.T, cos_digits)
         iu, ju = np.triu_indices(len(ids), 1)
         dup = np.unique(ids[ju[S[iu, ju] >= threshold]])
         return pd.DataFrame({"dup_id": dup})
@@ -1545,7 +1529,6 @@ def hard_negatives(
 
     id_type = dict(assigned.dtypes)[id_col]
     label_type = dict(assigned.dtypes)[label_col]
-    qc = 10.0 ** cos_digits
 
     def cluster_negatives(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -1566,7 +1549,7 @@ def hard_negatives(
         nrm = np.sqrt((V * V).sum(axis=1))
         valid = nrm > 0.0
         N = V / np.where(valid, nrm, 1.0)[:, None]
-        S = np.floor(N @ N.T * qc + 0.5) / qc
+        S = rounding.snap_np(N @ N.T, cos_digits)
         S[~valid, :] = -np.inf
         S[:, ~valid] = -np.inf
         S[labels[:, None] == labels[None, :]] = -np.inf  # incl. diagonal
@@ -1659,7 +1642,7 @@ def nearest_centroid_confusion(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    scale: int = 1_000_000,
+    digits: int = 6,
     offset: int = 10_000_000,
 ) -> DataFrame:
     """Nearest-centroid classification self-evaluation: assign every
@@ -1668,7 +1651,7 @@ def nearest_centroid_confusion(
     audit of embedding pipelines (off-diagonal mass = label noise or
     entangled classes), ENTIRELY in integer arithmetic:
 
-    - coordinates quantize to the 1/``scale`` grid (xq = ⌊x·scale+½⌋);
+    - coordinates quantize to the 10^-``digits`` grid (xq = ⌊x·10^digits+½⌋);
     - the centroid coordinate is the integer mean ⌊Σxq / n⌋ computed as
       ``(Σxq + n·offset) DIV n − offset`` — the offset keeps the
       numerator positive, where integer division is truncation==floor in
@@ -1690,7 +1673,7 @@ def nearest_centroid_confusion(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),
         F.posexplode(vec_col).alias("pos", "xv"),
-    ).withColumn("xq", F.expr(f"CAST(floor(CAST(xv AS DOUBLE) * {scale} + 0.5) AS BIGINT)"))
+    ).withColumn("xq", F.expr(f"CAST({rounding.units_sql('CAST(xv AS DOUBLE)', digits)} AS BIGINT)"))
     cent = (
         x.groupBy(F.col("label").alias("clabel"), "pos")
         .agg(F.sum("xq").alias("s"), F.count("*").alias("n"))
@@ -1718,7 +1701,7 @@ def intra_class_outliers(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    scale: int = 1_000_000,
+    digits: int = 6,
     offset: int = 10_000_000,
 ) -> DataFrame:
     """Noisy-label mining: vectors whose squared distance to their OWN
@@ -1745,7 +1728,7 @@ def intra_class_outliers(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),
         F.posexplode(vec_col).alias("pos", "xv"),
-    ).withColumn("xq", F.expr(f"CAST(floor(CAST(xv AS DOUBLE) * {scale} + 0.5) AS BIGINT)"))
+    ).withColumn("xq", F.expr(f"CAST({rounding.units_sql('CAST(xv AS DOUBLE)', digits)} AS BIGINT)"))
     cent = (
         x.groupBy("label", "pos")
         .agg(F.sum("xq").alias("sx"), F.count("*").alias("nx"))
@@ -1817,9 +1800,7 @@ def mmr_select(
     ).select(
         "query_id",
         "neighbor_id",
-        F.expr("CAST(floor(cosine * 1000000 + 0.5) AS BIGINT)").alias(
-            "rel_e6"
-        ),
+        F.expr(f"CAST({rounding.units_sql('cosine', 6)} AS BIGINT)").alias("rel_e6"),
     )
     cvec = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
@@ -1831,9 +1812,7 @@ def mmr_select(
         pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
         V = np.stack(pdf["cv"].to_numpy()).astype("float64")
         norms = np.sqrt((V * V).sum(axis=1))
-        sim_e6 = np.floor(
-            (V @ V.T) / np.outer(norms, norms) * 1e6 + 0.5
-        ).astype("int64")
+        sim_e6 = rounding.units_np((V @ V.T) / np.outer(norms, norms), 6).astype("int64")
         rel = pdf["rel_e6"].to_numpy().astype("int64")
         nid = pdf["neighbor_id"].to_numpy()
         qid = int(pdf["query_id"].iloc[0])
@@ -1914,10 +1893,8 @@ def cluster_quality(
         return f"aggregate(zip_with({a},{b},(x,y)->x*y), 0D, (s,x)->s+x)"
 
     def _d2e4(a: str, b: str) -> str:
-        return (
-            f"CAST(floor(({_dot_txt(a, a)} - 2*{_dot_txt(a, b)} "
-            f"+ {_dot_txt(b, b)}) * 10000 + 0.5) AS BIGINT)"
-        )
+        d2 = f"{_dot_txt(a, a)} - 2*{_dot_txt(a, b)} + {_dot_txt(b, b)}"
+        return f"CAST({rounding.units_sql(d2, 4)} AS BIGINT)"
 
     per_vec = (
         assigned.select(

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import rounding
 from ..parallel import spread
 
 # tiny per-language stopword profiles for the heuristic language scorer
@@ -31,32 +32,21 @@ def _in_list(col: str, words: tuple) -> str:
     return f"size(filter(split({col}, ' '), w -> w in ({quoted})))"
 
 
-def pround(sql: str, digits: int) -> str:
-    """Engine-portable fixed-point rounding: floor(x·10^d + 0.5)/10^d.
-
-    Spark's round() goes through exact BigDecimal HALF_UP while DuckDB
-    rounds the double numerically — they disagree on exact-rational ties
-    (e.g. 0.37625 → 0.3763 vs 0.3762). This formula is pure IEEE double
-    arithmetic, so any engine computes the identical bits."""
-    scale = 10 ** digits
-    return f"floor(({sql}) * {scale} + 0.5) / {scale}"
-
-
 def n_tokens_expr(text_col: str = "text") -> Column:
     return F.expr(f"CAST(size(split({text_col}, ' ')) AS BIGINT)")
 
 
 def stopword_ratio_expr(text_col: str = "text", digits: int = 4) -> Column:
     toks = f"split({text_col}, ' ')"
-    return F.expr(pround(f"{_in_list(text_col, STOPWORDS)} / size({toks})", digits))
+    return F.expr(rounding.snap_sql(f"{_in_list(text_col, STOPWORDS)} / size({toks})", digits))
 
 
 def quality_expr(text_col: str = "text") -> Column:
     """score = 0.5 · min(n_tokens/100, 1) + 0.5 · min(stopword_ratio·5, 1)."""
     toks = f"split({text_col}, ' ')"
-    sw = pround(f"{_in_list(text_col, STOPWORDS)} / size({toks})", 4)
+    sw = rounding.snap_sql(f"{_in_list(text_col, STOPWORDS)} / size({toks})", 4)
     return F.expr(
-        pround(f"0.5 * least(size({toks}) / 100.0, 1.0) + 0.5 * least(({sw}) * 5.0, 1.0)", 4)
+        rounding.snap_sql(f"0.5 * least(size({toks}) / 100.0, 1.0) + 0.5 * least(({sw}) * 5.0, 1.0)", 4)
     )
 
 
@@ -85,7 +75,7 @@ def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         F.col(id_col),
         n_tokens_expr(text_col).alias("n_tokens"),
         F.expr(f"CAST({nchars} AS BIGINT)").alias("n_chars_nospace"),
-        F.expr(pround(f"{nchars} / size({toks})", 4)).alias("avg_token_len"),
+        F.expr(rounding.snap_sql(f"{nchars} / size({toks})", 4)).alias("avg_token_len"),
         stopword_ratio_expr(text_col).alias("stopword_ratio"),
     )
 
@@ -141,9 +131,7 @@ def zscore_by_group(
             # and dodge `z IS NULL` filters
             z = pd.array([None] * len(x), dtype="Float64")
         else:
-            import numpy as np
-
-            z = np.floor((x - x.mean()) / sd * 10000 + 0.5) / 10000
+            z = rounding.snap_np((x - x.mean()) / sd, 4)
         return pd.DataFrame({id_col: pdf[id_col], group_col: pdf[group_col], "z": z})
 
     return df.groupBy(group_col).applyInPandas(norm, schema=out_schema)
@@ -174,22 +162,14 @@ def winnow_fingerprints(
 
     Returns (id, n_fps, min_fp).
     """
-    # STAGED projections (r15, two stages): hash each k-gram ONCE into a
-    # stored array column `__gr`, take the window minima into a stored
-    # `__w`, then answer both outputs in-row from `__w` — O(len) md5
-    # calls per doc instead of the previous direct-from-text form's
-    # O(len·w) (each k-gram was re-hashed by every window covering it;
-    # w=4 → ~4× the md5 work), and ZERO shuffle (the previous
-    # explode + groupBy(id) distinct-aggregate re-keyed ~len rows of
-    # 32-char hashes per doc just to compute a per-doc reduction).
-    # Both stage splits survive the optimizer because CollapseProject
-    # never re-inlines an expensive alias with multiple consumers:
-    # `__gr` is referenced twice (size + slice), `__w` twice
-    # (array_distinct + array_min). A SINGLE-select form cannot do
-    # this: inlining the k-gram transform into the window lambda is
-    # O(len²) md5 — measured 30× slower. Measured at sf0.1 (quiet
-    # samples): 1.03 s (old) → 0.89 s (staged grams, still exploded)
-    # → 0.51 s (this form).
+    # Staged projections: hash each k-gram ONCE into a stored array
+    # column `__gr`, take the window minima into a stored `__w`, then
+    # answer both outputs in-row from `__w` — O(len) md5 calls per doc
+    # (hashing per window would be O(len·w)) and no shuffle. Both stages
+    # survive the optimizer because CollapseProject never re-inlines an
+    # expensive alias with multiple consumers: `__gr` is referenced twice
+    # (size + slice), `__w` twice (array_distinct + array_min). Inlining
+    # the k-gram transform into the window lambda is O(len²) md5.
     grams = (
         f"transform(sequence(1, length({text_col}) - {k - 1}),"
         f" i -> md5(substring({text_col}, i, {k})))"
@@ -312,14 +292,11 @@ def repetition_signals(
         "  greatest(acc.best, IF(g <=> acc.prev, acc.run + 1, CAST(1 AS BIGINT))) AS best, "
         "  acc.nd + IF(g <=> acc.prev, CAST(0 AS BIGINT), CAST(1 AS BIGINT)) AS nd))"
     )
-    # STAGED projections (r15): the original single-select formula inlined
-    # the tokenize+hash+sort `grams` expression into every consumer (~7
-    # evaluations per row — the scan twice, size() five times). Storing
-    # grams, then the scan struct + size, as intermediate columns evaluates
-    # each ONCE per row; CollapseProject keeps the stages separate because
-    # an expensive alias referenced more than once is never re-inlined
-    # (struct-field reads of the stored scan are cheap). Same expressions,
-    # same values — only the evaluation count changes. The gated
+    # Staged projections: storing grams, then the scan struct + size, as
+    # intermediate columns evaluates each ONCE per row (inlined, `grams`
+    # would run ~7 times); CollapseProject keeps the stages separate
+    # because an expensive alias referenced more than once is never
+    # re-inlined (struct-field reads of the stored scan are cheap). The gated
     # repartition is the per-row-work spread (parallel.spread): this
     # operator is zero-shuffle, so nothing downstream would otherwise
     # parallelize a single-split input.
@@ -335,12 +312,12 @@ def repetition_signals(
             "n_ngrams",
             F.expr(
                 "CASE WHEN n_ngrams > 0 THEN "
-                + pround("CAST(__sc.best AS DOUBLE) / n_ngrams", 4)
+                + rounding.snap_sql("CAST(__sc.best AS DOUBLE) / n_ngrams", 4)
                 + " END"
             ).alias("top_ngram_frac"),
             F.expr(
                 "CASE WHEN n_ngrams > 0 THEN "
-                + pround("CAST(1 AS DOUBLE) - CAST(__sc.nd AS DOUBLE) / n_ngrams", 4)
+                + rounding.snap_sql("CAST(1 AS DOUBLE) - CAST(__sc.nd AS DOUBLE) / n_ngrams", 4)
                 + " END"
             ).alias("dup_ngram_frac"),
         )
@@ -417,18 +394,14 @@ def unigram_logprob(
     join) and averages per doc. The corpus total rides along as a literal
     aggregate, not a driver-side collect.
     """
-    # r16 (guide §2.4, the bigram_logprob device): the corpus total was
-    # a 1-row aggregate over a SECOND evaluation of the vocab subtree
-    # (scan + tokenize + agg); it now rides the vocab-sized frame as a
-    # whole-frame window — one evaluation, no crossJoin.
-    from pyspark.sql.window import Window as _W
-
+    # the corpus total rides the vocab-sized frame as a whole-frame
+    # window: one evaluation of the vocab subtree, no crossJoin
     tok = df.select(F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("t"))
     vocab = tok.groupBy("t").agg(F.count("*").alias("cnt"))
     vocab = vocab.withColumn(
         "tot",
         F.sum("cnt").over(
-            _W.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
+            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ),
     )
     scored = tok.join(vocab, "t")
@@ -441,7 +414,7 @@ def unigram_logprob(
         .select(
             F.col("id").alias(id_col),
             F.col("n_tokens").cast("long"),
-            F.expr(pround("mlp", digits)).alias("mean_logprob"),
+            F.expr(rounding.snap_sql("mlp", digits)).alias("mean_logprob"),
         )
     )
 
@@ -488,24 +461,18 @@ def bigram_logprob(
             )
         ).alias("p"),
     ).select("id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    # r16 (guide §2.4): the context totals were a separate groupBy over
-    # bg joined back on (a second evaluation of the whole bigram
-    # subtree), and the corpus total a 1-row aggregate over a second
-    # evaluation of the unigram subtree. Both now ride their frames as
-    # windows — cc = sum(bc) over the w1 partition of the vocab-sized
-    # bigram table, tot = a whole-frame sum over the vocab-sized unigram
-    # table (both the documented post-agg-tiny-frame exemption) — two
-    # joins and two subtree evaluations fewer; plan scans 5 → 3.
-    from pyspark.sql.window import Window as _W
-
+    # the totals ride their vocab-sized frames as windows (the post-agg
+    # tiny-frame exemption): cc = sum(bc) over the w1 partition of the
+    # bigram table, tot = a whole-frame sum over the unigram table, so no
+    # subtree is evaluated twice
     bg = pairs.groupBy("w1", "w2").agg(F.count("*").alias("bc"))
-    bg = bg.withColumn("cc", F.sum("bc").over(_W.partitionBy("w1")))
+    bg = bg.withColumn("cc", F.sum("bc").over(Window.partitionBy("w1")))
     tok = df.select(F.explode(F.split(F.col(text_col), " ")).alias("t"))
     uni = tok.groupBy("t").agg(F.count("*").alias("uc"))
     uni = uni.withColumn(
         "tot",
         F.sum("uc").over(
-            _W.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
+            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ),
     )
     scored = pairs.join(bg, ["w1", "w2"]).join(
@@ -520,7 +487,7 @@ def bigram_logprob(
         .select(
             F.col("id").alias(id_col),
             F.col("n_bigrams").cast("long"),
-            F.expr(pround("mlp", digits)).alias("mean_logprob"),
+            F.expr(rounding.snap_sql("mlp", digits)).alias("mean_logprob"),
         )
     )
 
@@ -558,26 +525,21 @@ def source_mix(
             F.avg("q").alias("mq"),
         )
     )
-    # r16 (guide §2.4): the normalizer was a 1-row aggregate over a
-    # SECOND evaluation of the per-source frame (another corpus
-    # scan+agg); it now rides the |sources|-row report as a whole-frame
-    # window. Same doubles summed in a possibly different order — the
-    # weight column is snapped on the pround grid, and both sweeps stay
-    # green (the sum is over ≤|sources| IEEE doubles).
-    from pyspark.sql.window import Window as _W
-
+    # the normalizer rides the |sources|-row report as a whole-frame
+    # window; its ≤|sources| doubles may sum in any order, as the weight
+    # column is snapped
     per = per.withColumn(
         "tot_sqrt",
         F.sum(F.sqrt(F.expr("CAST(n_tokens AS DOUBLE)"))).over(
-            _W.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
+            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ),
     )
     return per.select(
         "source",
         F.col("n_docs").cast("long"),
         F.col("n_tokens").cast("long"),
-        F.expr(pround("mq", 4)).alias("mean_quality"),
-        F.expr(pround("sqrt(CAST(n_tokens AS DOUBLE)) / tot_sqrt", digits)).alias("mix_weight"),
+        F.expr(rounding.snap_sql("mq", 4)).alias("mean_quality"),
+        F.expr(rounding.snap_sql("sqrt(CAST(n_tokens AS DOUBLE)) / tot_sqrt", digits)).alias("mix_weight"),
     )
 
 
@@ -692,8 +654,6 @@ def bm25_topk(
         .withColumn("s4", F.expr("(2 * num * 10000 + den) DIV (2 * den)"))
     )
     per_doc = scored.groupBy("id").agg(F.sum("s4").cast("long").alias("score_x1e4"))
-    from pyspark.sql.window import Window
-
     # orderBy+limit compiles to TakeOrderedAndProject (per-partition top-k,
     # merged on one reducer over k rows) — not a global sort; the window
     # that assigns ranks then runs over just k rows.

@@ -22,6 +22,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import rounding
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -48,11 +50,8 @@ def _update(
         n += len(pdf)
         total += float(pdf["value"].sum())
     state.update((n, total))
-    import math
-
-    # portable fixed-point rounding (Python round() is ties-to-even,
-    # diverging from the DuckDB oracle / Spark F.round on tie values)
-    tv = math.floor(total * 100 + 0.5) / 100
+    # Python round() is ties-to-even, diverging from the DuckDB oracle
+    tv = rounding.snap_np(total, 2)
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [tv]})
 
 

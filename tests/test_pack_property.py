@@ -51,3 +51,27 @@ def test_pack_invariants(spark, rows, budget):
         for a, b in zip(stream, stream[1:]):
             if b["seq_id"] == a["seq_id"] + 1:
                 assert totals[a["seq_id"]] + b["weight"] > budget
+
+
+
+def test_pack_selects_columns_in_caller_order_under_any_hash_seed():
+    """The selected columns, and so the plan, keep the caller's order under
+    any PYTHONHASHSEED. pack_greedy runs on a stub recording select()."""
+    import json, os, subprocess, sys  # noqa: E401
+
+    probe = (
+        "import json, types\n"
+        "from steampipe_plugin_terraform_spark.operators import pack\n"
+        "class Stub:\n"
+        "    __getattr__ = lambda self, name: lambda *a, **k: self\n"
+        "    __mod__ = lambda self, other: self\n"
+        "    select = lambda self, *cols: print(json.dumps(cols)) or self\n"
+        "pack.F = types.SimpleNamespace(col=lambda c: Stub(), lit=lambda v: Stub())\n"
+        "pack.pack_greedy(Stub(), budget=256, weight_col='n_tok', group_col='lang', shards=4)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for seed in range(8):
+        env = {**os.environ, "PYTHONHASHSEED": str(seed), "PYTHONPATH": root}
+        out = subprocess.run([sys.executable, "-c", probe], env=env, capture_output=True,
+                             text=True, check=True).stdout
+        assert json.loads(out) == ["doc_id", "lang", "n_tok"], f"PYTHONHASHSEED={seed}"

@@ -1,6 +1,5 @@
-"""Independent (non-oracle) checks for the r12/r13 staged waves — the
-r9 verdict's hardening item: every staged entry gets at least one check
-that does NOT share machinery with its DuckDB oracle. Three kinds here:
+"""Independent references: checks of catalog entries, live and staged,
+that do NOT share machinery with their DuckDB oracles. Three kinds here:
 
 - pure-Python references (chi2, BPE pairs, streaming top-k closure):
   the statistic recomputed from the parquet with Python ints /
