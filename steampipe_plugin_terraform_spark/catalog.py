@@ -8288,11 +8288,9 @@ def stream_record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user record-high detection — the anomaly/alerting shape of
     keyed stateful streaming: each user's running maximum lives in ONE
     double of keyed state; an event emits only when it STRICTLY beats
-    it. Runs on applyInPandasWithState here; the Spark 4
-    transformWithStateInPandas variant with a typed ValueState handle
-    (`streaming/stateful.record_breaking_events`) is semantics-identical
-    and covered by an import-gated test (its driver worker needs
-    google.protobuf, which this container does not ship).
+    it. Runs on applyInPandasWithState
+    (`streaming/stateful.record_breaking_events_awps`), which works on
+    every platform Spark runs on.
 
     Scale: state is 8 bytes per user regardless of event volume; the
     only shuffle is the groupBy(user_id) into the stateful operator."""
@@ -9854,8 +9852,8 @@ def docs_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     modulus slice here is corpus-proportional purely so every SF
     exercises the same plan. No df-cap: 7-gram collisions across
     unrelated docs are rare by construction; a production corpus with
-    boilerplate stop-phrases would add the jaccard entries'
-    _cap_document_frequency on the TRAIN side."""
+    boilerplate stop-phrases would add the jaccard entries' posting-list
+    df cap (dedup._shared_pairs_with_sizes) on the TRAIN side."""
     docs = _t(spark, sf_dir, "documents")
     sh = dedup._hashed_shingles(docs, "doc_id", "text", 7)
     bs = sh.filter(F.col("id") % 31 == 0).withColumnRenamed("id", "bench_id")

@@ -108,32 +108,6 @@ def _hashed_shingles(
     )
 
 
-def _cap_document_frequency(sh: DataFrame, df_max: int | None, key: str = "h") -> DataFrame:
-    """Drop shingles whose document frequency exceeds ``df_max`` before any
-    shingle join.
-
-    A boilerplate shingle shared by N docs contributes N² rows to a
-    shared-shingle join — one ubiquitous license-header 5-gram at corpus
-    scale is a quadratic hot key (SCALE.md). Capping df bounds the join at
-    |shingles|·df_max while leaving honest near-dup signals intact: a
-    shingle in >df_max docs identifies nothing. Pairs whose overlap is ONLY
-    boilerplate stop surfacing, and Jaccard of surviving pairs can
-    underestimate by the dropped shingles — the standard posting-list cap
-    semantics. ``None`` disables.
-
-    Implemented as a partial-aggregated count of the over-cap keys followed
-    by an anti-join: the over-cap key set is tiny by construction (at most
-    |rows|/df_max distinct values, realistically a handful of boilerplate
-    shingles), so AQE plans the anti-join as a broadcast. This replaced a
-    count-window variant whose per-key sort of the full posting list
-    measured ~3× slower at sf0.1.
-    """
-    if df_max is None:
-        return sh
-    overcap = sh.groupBy(key).agg(F.count("*").alias("__df")).filter(F.col("__df") > df_max).select(key)
-    return sh.join(overcap, key, "left_anti")
-
-
 def exact_dedup(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
     """Keep the first row per key group (deterministic via order_by).
 
@@ -165,7 +139,7 @@ def shingle_jaccard_pairs(
     keys instead of a self-join (two exchanges of the posting list) plus a
     separate df-cap pass. The df cap is the posting-list size filter, so a
     boilerplate shingle cannot make pair generation quadratic on a hot key
-    (see ``_cap_document_frequency`` for the semantics); sizes/denominators
+    (see ``_shared_pairs_with_sizes`` for the semantics); sizes/denominators
     still count every shingle, so surviving pairs' Jaccard is exact up to
     the dropped-boilerplate overlap.
 
@@ -194,8 +168,13 @@ def _shared_pairs_with_sizes(sh: DataFrame, df_max: int | None) -> DataFrame:
     (id_a, id_b, n_a, n_b), which groups exactly like (id_a, id_b) since
     n_* are functionally dependent on the ids. So no sizes aggregation is
     joined on after pair counting, and the corpus is tokenized and hashed
-    once. The df cap is the posting-list size filter; n_sh counts EVERY
-    shingle (the cap drops lists, never the denominators)."""
+    once. The df cap is the posting-list size filter: a boilerplate
+    shingle shared by N docs would emit N² pairs — one ubiquitous
+    license-header 5-gram at corpus scale is a quadratic hot key
+    (SCALE.md) — while a shingle in more than ``df_max`` docs identifies
+    nothing. Pairs whose overlap is ONLY boilerplate stop surfacing, the
+    standard posting-list cap semantics; ``None`` disables. n_sh counts
+    EVERY shingle (the cap drops lists, never the denominators)."""
     cap = "true" if df_max is None else f"size(ids) <= {int(df_max)}"
     return (
         sh.groupBy("h")
@@ -246,7 +225,7 @@ def tfidf_cosine_pairs(
 
     Scale: the df cap bounds every posting list at df_max before pair
     emission — one boilerplate n-gram cannot go quadratic (see
-    ``_cap_document_frequency`` semantics; here the cap also drops the
+    ``_shared_pairs_with_sizes`` semantics; here the cap also drops the
     term from norms on BOTH sides, keeping cosine consistent). Pair
     emission is chunked by anchor exactly like ``shingle_jaccard_pairs``;
     the only shuffles are groupBy(id, h), the df window on h, groupBy(id),
@@ -509,7 +488,7 @@ def minhash_lsh_pairs(
     shingle self-join at all (an explode+equi-join verify variant measured
     ~4× slower at sf0.1: it reshuffles the full posting list per side).
     ``df_max`` still caps shingle document frequency in the shared counts
-    (boilerplate shingles identify nothing — see ``_cap_document_frequency``);
+    (boilerplate shingles identify nothing — see ``_shared_pairs_with_sizes``);
     the size denominators count every shingle. Returns (id_a, id_b, jaccard).
 
     Join strategy (round 6): the band self-join and both verify joins are

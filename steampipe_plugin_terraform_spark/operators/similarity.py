@@ -27,6 +27,7 @@ from __future__ import annotations
 import hashlib
 import struct
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -50,6 +51,25 @@ def _corpus_blocks(df: DataFrame, id_col: str, num_blocks: int) -> "Column":
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).cast("int")
 
 
+def _snapped_cosine(pairs: DataFrame) -> DataFrame:
+    """Add ``cosine`` = qv·cv / (|qv|·|cv|) snapped to the 1e-6 grid."""
+    scored = pairs.withColumn("cosine", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
+    return scored.withColumn("cosine", F.expr(rounding.snap_sql("cosine", 6)))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k under the strict total order (cosine DESC,
+    neighbor_id ASC): ranking on the ROUNDED score with the id tiebreak
+    keeps floating-point last-ulp differences between engines from
+    flipping a rank. Returns (query_id, neighbor_id, cosine, rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -69,17 +89,12 @@ def cosine_topk(
     path — interpreted zip_with/aggregate lambdas measured ~30× slower)
     and emits only its LOCAL top-k per query under the global total order,
     so the final rank window shuffles |Q|·num_blocks·k rows instead of
-    the |Q|·|C| cartesian (the round-1 bottleneck). Local top-k under the
-    same strict total order (rounded score desc, id asc) is a superset of
-    each block's contribution to the global top-k, so the result is exact.
+    the |Q|·|C| cartesian. Local top-k under the same strict total order
+    (rounded score desc, id asc) is a superset of each block's
+    contribution to the global top-k, so the result is exact.
 
-    Returns (query_id, neighbor_id, cosine, rank). Ordering is made
-    engine-deterministic by ranking on the ROUNDED score with the neighbor
-    id as tiebreaker (floating-point last-ulp differences between engines
-    cannot flip the rank).
+    Returns (query_id, neighbor_id, cosine, rank), ranked by ``_top_k``.
     """
-    import numpy as np
-
     # replicate queries to every block via explode — no join, no broadcast,
     # whole-stage codegen (queries are the small side by contract)
     q_rep = queries.select(
@@ -127,46 +142,150 @@ def cosine_topk(
         .cogroup(c_blk.groupby("blk"))
         .applyInPandas(block_topk, "query_id long, neighbor_id long, cosine double")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(local, k)
 
 
-def build_ivf(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    seed: int = 42,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer: k-means centroids + per-vector bucket column.
-
-    The returned assignment DataFrame is the write-once index — at scale,
-    persist it partitioned by ``bucket`` so probes prune partitions. Uses
-    spark.ml KMeans (distributed Lloyd iterations) with a fixed seed.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = df.select(id_col, vec_col).withColumn(
-        "__v", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="__v", predictionCol="bucket").fit(base)
-    assigned = model.transform(base).select(id_col, vec_col, "bucket")
-    centroids = [c.tolist() for c in model.clusterCenters()]
-    return assigned, centroids
-
-
-# Training-sample cap shared by kmeans_lloyd / pq_codebooks_encode and
-# mirrored by the oracle's `tr` CTE (catalog._lloyd_parts) — the three MUST
-# stay in lockstep. 65536 exceeds every test corpus (≤ 2000 vectors), so
-# the cap is a provable no-op at every tested SF; at scale it bounds the
-# per-iteration assignment to cap·k·d FLOPs and the training scan to cap
-# rows, independent of corpus size (the round-6 review's Lloyd finding).
+# Training-sample cap of the Lloyd trainer (_lloyd_subspaces), mirrored by
+# the oracle's `tr` CTE (catalog._lloyd_parts) — the two MUST stay in
+# lockstep. 65536 exceeds every test corpus (≤ 2000 vectors), so the cap is
+# a provable no-op at every tested SF; at scale it bounds the per-iteration
+# assignment to cap·k·d FLOPs and the training scan to cap rows,
+# independent of corpus size.
 TRAIN_CAP = 65536
+
+
+def _nearest(V, C, digits: int):
+    """Row-wise nearest centroid: argmin over the squared distances
+    |v|² - 2v·c + |c|² (one BLAS matmul) snapped to the 10^-``digits``
+    grid, which absorbs summation-order ulp differences between BLAS and a
+    SQL engine's sequential fold. np.argmin returns the FIRST minimum →
+    smallest cid, the same tiebreak as SQL's ORDER BY qdist, cid."""
+    D = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + (C * C).sum(axis=1)[None, :]
+    return np.argmin(rounding.snap_np(D, digits), axis=1)
+
+
+def _encode(df: DataFrame, books, dsub: int, dist_digits: int) -> DataFrame:
+    """(id, v, code0..code{m-1}) for ``df``'s (id, v array<double>) rows:
+    code j is the nearest codeword (``_nearest``) of subspace j's slice of
+    ``v``, one Arrow-batched mapInPandas with the codebooks broadcast."""
+    bc = df.sparkSession.sparkContext.broadcast(books)
+
+    def go(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["v"].to_numpy()).astype("float64")
+            out = {"id": pdf["id"], "v": pdf["v"]}
+            for j, Cj in enumerate(bc.value):
+                Vj = V[:, j * dsub : (j + 1) * dsub]
+                out[f"code{j}"] = _nearest(Vj, Cj, dist_digits).astype("int32")
+            yield pd.DataFrame(out)
+
+    codes = ", ".join(f"code{j} int" for j in range(len(books)))
+    return df.mapInPandas(go, f"id {dict(df.dtypes)['id']}, v array<double>, {codes}")
+
+
+def _lloyd_subspaces(
+    base: DataFrame,
+    m: int,
+    k: int,
+    iters: int,
+    dist_digits: int,
+    mean_digits: int,
+    train_cap: int | None,
+) -> list:
+    """The one deterministic Lloyd trainer: k-means run jointly in each of
+    the ``m`` contiguous subspaces of ``base``'s (id, v array<double>)
+    vectors. m = 1 is the IVF coarse quantizer (``kmeans_lloyd``); m > 1
+    trains the PQ codebooks (``pq_codebooks_encode``) — product
+    quantization is k-means once per subspace. Every step is defined so a
+    SQL engine can replay it bit-for-bit (catalog._lloyd_parts):
+
+    - training set: the ``train_cap`` vectors with smallest ``(md5(id),
+      id)`` — a distributed TakeOrdered, persisted across the iteration
+      loop and released in a ``finally``. The cap is a no-op below
+      ``train_cap`` rows (every tested SF) and at scale bounds training to
+      cap·k·d FLOPs per iteration instead of N·k·d (see TRAIN_CAP).
+    - init: the k training vectors with smallest ``(md5(id), id)`` (a
+      prefix of the same ordering, so seeds ⊂ sample by construction);
+      cid = rank in that order, and subspace j's seeds are slice j of the
+      same k vectors. Because seeds are drawn FROM the capped sample,
+      ``k`` cannot exceed ``train_cap`` — the sample would silently
+      truncate the codebook to train_cap centroids while the caller (and
+      the oracle's ``ksel`` CTE) still believed in k, so this raises
+      instead. With the √N cap (``catalog._effective_k``) k passes 65536
+      only around N ≈ 4.3e9 vectors: use ``kmeans_two_level`` there
+      (SCALE.md "IVF at 100 TB").
+    - assignment: one Arrow-batched mapInPandas per iteration scores every
+      subspace with ``_nearest`` (``dist_digits`` grid, smallest-cid
+      tiebreak).
+    - update: element-wise means via posexplode + groupBy(subspace,
+      bucket, pos) — map-side combined, so the shuffle carries k·dim
+      partial rows regardless of training-set size — re-packed JVM-side
+      into m·k rows of dsub-arrays (collect_list sorted by pos) so the
+      driver collects m·k ROWS, not k·dim; QUANTIZED to ``mean_digits``.
+      Empty clusters keep their previous centroid.
+
+    The driver holds only the k×dim centroid state between iterations;
+    vectors never leave the executors. Returns the m codebooks as k×dsub
+    numpy arrays (fewer than k rows when the input has fewer vectors).
+    """
+    if train_cap is not None and k > train_cap:
+        raise ValueError(
+            f"k={k} exceeds train_cap={train_cap}: seeds are a prefix of the "
+            "capped training sample, so the codebook would silently truncate "
+            "to train_cap centroids. Raise train_cap or use kmeans_two_level "
+            "(the design point for k past broadcast-comfortable sizes)."
+        )
+    train = base.withColumn("__mk", F.md5(F.col("id").cast("string")))
+    persisted = None
+    try:
+        if train_cap is not None:
+            # The global limit lands the sample in ONE partition — re-spread
+            # it by id hash (deterministic) so the 1 + iters training passes
+            # stay executor-parallel; persisted so they don't re-sort the
+            # corpus (at scale: one sort + one tiny shuffle, then cap-row
+            # cached scans)
+            n_part = max(2, base.sparkSession.sparkContext.defaultParallelism)
+            train = train.orderBy("__mk", "id").limit(int(train_cap)).repartition(n_part, "id")
+            persisted = train.persist()
+        seeds = train.orderBy("__mk", "id").limit(k).select("v").collect()
+        width = len(seeds[0].v) if seeds else 0
+        S = np.asarray([r.v for r in seeds], dtype="float64").reshape(len(seeds), width)
+        dsub = width // m
+        C = [S[:, j * dsub : (j + 1) * dsub].copy() for j in range(m)]
+        codes = [f"code{j}" for j in range(m)]
+        # a position's subspace and its bucket, that subspace's code; at
+        # m = 1 the literal subspace drops out of the grouping keys
+        sub, bucket = F.lit(m - 1), F.col(codes[-1])
+        for j in reversed(range(m - 1)):
+            first = F.col("pos") < (j + 1) * dsub
+            sub = F.when(first, j).otherwise(sub)
+            bucket = F.when(first, F.col(codes[j])).otherwise(bucket)
+        for _ in range(iters):
+            # two-stage mean: (subspace, bucket, pos) partials map-side
+            # combine, then an m·k-row re-pack into dsub-arrays
+            means = (
+                _encode(train, C, dsub, dist_digits)
+                .select(F.posexplode("v").alias("pos", "x"), *codes)
+                .groupBy(sub.alias("sub"), bucket.alias("bucket"), "pos")
+                .agg(F.avg("x").alias("m"))
+                .groupBy("sub", "bucket")
+                .agg(
+                    F.expr(
+                        "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
+                    ).alias("mv")
+                )
+                .collect()
+            )
+            for r in means:
+                C[r.sub][r.bucket] = rounding.snap_np(np.asarray(r.mv, dtype="float64"), mean_digits)
+    finally:
+        if persisted is not None:
+            persisted.unpersist()
+    return C
 
 
 def kmeans_lloyd(
@@ -180,140 +299,21 @@ def kmeans_lloyd(
     train_cap: int | None = TRAIN_CAP,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic distributed Lloyd k-means — the engine-PORTABLE coarse
-    quantizer behind the oracle-checked IVF entries.
+    quantizer behind the oracle-checked IVF entries: ``_lloyd_subspaces``
+    with m = 1 (its docstring has the sample, seed, assignment and update
+    rules the DuckDB oracle replays), then one full-corpus assignment.
 
-    Every step is defined so a SQL engine can replay it bit-for-bit:
-
-    - training set: the ``train_cap`` corpus vectors with smallest
-      ``(md5(id), id)`` — a distributed TakeOrdered, persisted across the
-      iteration loop. Init, every assignment round, and every mean run on
-      this sample; only the FINAL assignment scans the full corpus. The
-      cap is a no-op below ``train_cap`` rows (every tested SF) and at
-      scale bounds training to cap·k·d FLOPs per iteration instead of
-      N·k·d (see TRAIN_CAP).
-    - init: the k training vectors with smallest ``(md5(id), id)`` (a
-      prefix of the same ordering, so seeds ⊂ sample by construction);
-      cid = rank in that order. Because seeds are drawn FROM the capped
-      sample, ``k`` cannot exceed ``train_cap`` — the sample would
-      silently truncate the codebook to train_cap centroids while the
-      caller (and the oracle's ``ksel`` CTE) still believed in k, so this
-      raises instead. With the √N cap (``catalog._effective_k``) k passes
-      65536 only around N ≈ 4.3e9 vectors, which is past this function's
-      design point anyway: use ``kmeans_two_level`` there (SCALE.md
-      "IVF at 100 TB").
-    - assignment: argmin over squared distances QUANTIZED to
-      ``dist_digits`` with centroid-id tiebreak. Distances are computed
-      |v|² - 2v·c + |c|² with one BLAS matmul per Arrow batch (the
-      sanctioned dense-linear-algebra path); the quantization grid absorbs
-      summation-order ulp differences between BLAS and a SQL engine's
-      sequential fold.
-    - update: element-wise means via posexplode + groupBy(bucket, pos) —
-      map-side combined, so the shuffle carries k·dim partial rows
-      regardless of training-set size — re-packed JVM-side into k rows of
-      dim-arrays (collect_list sorted by pos) so the driver collects k
-      ROWS, not k·dim; QUANTIZED to ``mean_digits``. Empty clusters keep
-      their previous centroid.
-
-    The driver holds only the k×dim centroid matrix between iterations
-    (the IVF contract); vectors never leave the executors. With the
-    sqrt-N cap on k (catalog._effective_k) that matrix is ≤ √N·dim
-    doubles; past broadcast-comfortable sizes the design point is a
-    two-level coarse quantizer (SCALE.md "IVF at 100 TB"). Returns
-    (assigned (id, vec, bucket) DataFrame, final centroids).
-
-    vs ``build_ivf`` (spark.ml KMeans): ML's kmeans|| init converges a
-    little faster, but its cluster shapes are engine-opaque; this
-    quantizer trades one or two extra Lloyd rounds for end-to-end
-    replayability (the DuckDB oracle replays init, every assignment, and
-    every mean).
+    With the sqrt-N cap on k (catalog._effective_k) the k×dim centroid
+    matrix is ≤ √N·dim doubles; past broadcast-comfortable sizes the
+    design point is a two-level coarse quantizer (SCALE.md "IVF at 100
+    TB"). Returns (assigned (id, vec, bucket) DataFrame, final centroids).
     """
-    import numpy as np
-
-    if train_cap is not None and k > train_cap:
-        raise ValueError(
-            f"k={k} exceeds train_cap={train_cap}: seeds are a prefix of the "
-            "capped training sample, so the codebook would silently truncate "
-            "to train_cap centroids. Raise train_cap or use kmeans_two_level "
-            "(the design point for k past broadcast-comfortable sizes)."
-        )
-    spark = df.sparkSession
-    id_type = dict(df.dtypes)[id_col]
-    vec_type = dict(df.dtypes)[vec_col]
-
     base = df.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
         F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
     )
-    ranked = base.withColumn("__mk", F.md5(F.col("id").cast("string")))
-    persisted = None
-    if train_cap is not None:
-        # TakeOrdered prefix of the same (md5, id) order the seeds use.
-        # The global limit lands the sample in ONE partition — re-spread
-        # it by id hash (deterministic) so the 1 + iters training passes
-        # stay executor-parallel; persisted so they don't re-sort the
-        # corpus (at scale: one sort + one tiny shuffle, then cap-row
-        # cached scans)
-        n_part = max(2, spark.sparkContext.defaultParallelism)
-        train = ranked.orderBy("__mk", "id").limit(int(train_cap)).repartition(n_part, "id")
-        persisted = train.persist()
-    else:
-        train = ranked
-    seeds = train.orderBy("__mk", "id").limit(k).select("v").collect()
-    C = np.asarray([r.v for r in seeds], dtype="float64")
-
-    def assigner(Cm):
-        bc = spark.sparkContext.broadcast(Cm)
-
-        def go(batches):
-            import pandas as pd
-
-            Cb = bc.value
-            c2 = (Cb * Cb).sum(axis=1)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy()).astype("float64")
-                D = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cb.T) + c2[None, :]
-                D = rounding.snap_np(D, dist_digits)
-                # np.argmin returns the FIRST minimum → smallest cid, the
-                # same tiebreak as SQL's ORDER BY qdist, cid
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "vec": pdf["vec"],
-                        "v": pdf["v"],
-                        "bucket": np.argmin(D, axis=1).astype("int32"),
-                    }
-                )
-
-        return go
-
-    schema = f"id {id_type}, vec {vec_type}, v array<double>, bucket int"
-    for _ in range(iters):
-        assigned = train.mapInPandas(assigner(C), schema)
-        # two-stage mean: (bucket, pos) partials map-side combine, then a
-        # k-row re-pack into dim-arrays so the driver collects k ROWS of
-        # arrays, not k·dim scalar rows
-        means = (
-            assigned.select("bucket", F.posexplode("v").alias("pos", "x"))
-            .groupBy("bucket", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("bucket")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
-                ).alias("mv")
-            )
-            .collect()
-        )
-        newC = C.copy()
-        for r in means:
-            newC[r.bucket] = rounding.snap_np(np.asarray(r.mv, dtype="float64"), mean_digits)
-        C = newC
-    if persisted is not None:
-        persisted.unpersist()
-    centroids = [row.tolist() for row in C]
+    (C,) = _lloyd_subspaces(base, 1, k, iters, dist_digits, mean_digits, train_cap)
+    centroids = C.tolist()
     # the final full-corpus assignment IS assign_to_centroids — sharing
     # the implementation is what makes the incremental-ingest identity
     # (assign a later batch to these frozen centroids ≡ the assignment a
@@ -340,8 +340,6 @@ def assign_to_centroids(
     retraining — per-row independent, so batch-assign ∪ stored
     assignments ≡ a full re-assignment against the same centroids.
     Returns (id_col, vec_col, bucket int); no shuffle, no driver data."""
-    import numpy as np
-
     spark = df.sparkSession
     id_type = dict(df.dtypes)[id_col]
     vec_type = dict(df.dtypes)[vec_col]
@@ -351,21 +349,17 @@ def assign_to_centroids(
     def go(batches):
         import pandas as pd
 
-        Cb = bc.value
-        c2 = (Cb * Cb).sum(axis=1)
         for pdf in batches:
             if not len(pdf):
                 continue
             # float32 → float64 widening is exact, so this matches the
             # training path's transform(vec, x -> CAST(x AS DOUBLE))
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            D = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cb.T) + c2[None, :]
-            D = rounding.snap_np(D, dist_digits)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
                     vec_col: pdf[vec_col],
-                    "bucket": np.argmin(D, axis=1).astype("int32"),
+                    "bucket": _nearest(V, bc.value, dist_digits).astype("int32"),
                 }
             )
 
@@ -413,8 +407,6 @@ def kmeans_two_level(
     l1_centroids — the k1 level-1 centroids (the two-stage probe's first
     routing table, see ``two_level_topk``).
     """
-    import numpy as np
-
     id_type = dict(df.dtypes)[id_col]
 
     level1, l1_centroids = kmeans_lloyd(
@@ -438,14 +430,8 @@ def kmeans_two_level(
         k_eff = min(k2, len(V))
         C = V[:k_eff].copy()  # md5-rank seeds = first rows of the sort
 
-        def assign(Cm):
-            c2 = (Cm * Cm).sum(axis=1)
-            D = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cm.T) + c2[None, :]
-            D = rounding.snap_np(D, dist_digits)
-            return np.argmin(D, axis=1)  # first min == smallest cid
-
         for _ in range(iters):
-            b = assign(C)
+            b = _nearest(V, C, dist_digits)
             newC = C.copy()
             for cid in np.unique(b):
                 # Same accepted cross-engine boundary risk as the level-1
@@ -460,7 +446,7 @@ def kmeans_two_level(
                 m = V[b == cid].mean(axis=0)
                 newC[cid] = rounding.snap_np(m, mean_digits)
             C = newC
-        b = assign(C)
+        b = _nearest(V, C, dist_digits)
         member = pd.DataFrame(
             {"id": ids, "cell1": cell1, "cell2": b.astype("int32"), "centroid": None}
         )
@@ -553,14 +539,7 @@ def two_level_topk(
         "cosine",
         rounding.snap(_dot("qv", "cv") / (_norm("qv") * _norm("cv")), 6),
     )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wf).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def ivf_save(
@@ -575,7 +554,7 @@ def ivf_save(
     (``<path>_centroids``).
 
     This is the billion-vector serving shape: build once with
-    ``build_ivf``, save, then every query session calls ``ivf_load`` +
+    ``kmeans_lloyd``, save, then every query session calls ``ivf_load`` +
     ``ivf_topk`` and reads only the probed partitions.
     """
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
@@ -603,6 +582,49 @@ def ivf_load(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     return assigned, centroids
 
 
+def _probed(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    nprobe: int,
+    ppos: bool,
+) -> DataFrame:
+    """(query_id, qv, bucket[, ppos]) for each query's ``nprobe`` nearest
+    buckets by cosine, ``ppos`` being the bucket's probe position. Cosines
+    are quantized to 1e-6 and stable-sorted, so the probed bucket LIST is
+    engine-deterministic (rounded cosine desc, cid asc — replayable in the
+    SQL oracle), not an ulp coin-flip, and the list at a smaller nprobe is
+    a prefix of the list at a larger one."""
+    C = np.asarray(centroids, dtype="float64")
+    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    bc = queries.sparkSession.sparkContext.broadcast(Cn)
+
+    def probe(batches):
+        import pandas as pd
+
+        Cn_b = bc.value
+        # clamp: probing more buckets than exist is just a full probe
+        n_probe = min(nprobe, Cn_b.shape[0])
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Q = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+            Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+            S = rounding.snap_np(Qn @ Cn_b.T, 6)
+            order = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
+            out = pdf.loc[pdf.index.repeat(n_probe)].reset_index(drop=True)
+            cols = {"query_id": out[id_col], "qv": out[vec_col], "bucket": order.ravel()}
+            if ppos:
+                cols["ppos"] = np.tile(np.arange(n_probe, dtype="int32"), len(pdf))
+            yield pd.DataFrame(cols)
+
+    schema = f"query_id long, qv {dict(queries.dtypes)[vec_col]}, bucket int"
+    return queries.select(id_col, vec_col).mapInPandas(
+        probe, schema + (", ppos int" if ppos else "")
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     assigned: DataFrame,
@@ -628,51 +650,14 @@ def ivf_topk(
 
     Returns (query_id, neighbor_id, cosine, rank).
     """
-    import numpy as np
-
-    C = np.asarray(centroids, dtype="float64")
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    bc = queries.sparkSession.sparkContext.broadcast(Cn)
-
-    def probe(batches):
-        import pandas as pd
-
-        Cn_b = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-            # clamp: probing more buckets than exist is just a full probe
-            n_probe = min(nprobe, Cn_b.shape[0])
-            # quantize + stable sort: the probed bucket SET is then
-            # engine-deterministic (rank by rounded cosine desc, cid asc —
-            # replayable in the SQL oracle), not an ulp coin-flip
-            S = rounding.snap_np(Qn @ Cn_b.T, 6)
-            order = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
-            out = pdf.loc[pdf.index.repeat(n_probe)].reset_index(drop=True)
-            out["bucket"] = order.ravel()
-            yield pd.DataFrame(
-                {"query_id": out[id_col], "qv": out[vec_col], "bucket": out["bucket"]}
-            )
-
-    probed = queries.select(id_col, vec_col).mapInPandas(
-        probe, f"query_id long, qv {dict(queries.dtypes)[vec_col]}, bucket int"
-    )
+    probed = _probed(queries, centroids, id_col, vec_col, nprobe, ppos=False)
     if static_prune:
         buckets = [int(r.bucket) for r in probed.select("bucket").distinct().collect()]
         assigned = assigned.filter(F.col("bucket").isin(buckets))
     cand = F.broadcast(probed).join(assigned, "bucket").select(
         "query_id", "qv", F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    scored = cand.withColumn("cosine", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
-    scored = scored.withColumn("cosine", F.expr(rounding.snap_sql("cosine", 6)))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(_snapped_cosine(cand), k)
 
 
 def ivf_topk_curve(
@@ -702,44 +687,8 @@ def ivf_topk_curve(
     the points run as separate pipelines (guide §2.4: one exchange serving
     every consumer keyed the same way).
     """
-    import numpy as np
-
     nps = sorted({int(x) for x in nprobes})
-    np_max = nps[-1]
-    C = np.asarray(centroids, dtype="float64")
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    bc = queries.sparkSession.sparkContext.broadcast(Cn)
-
-    def probe(batches):
-        import pandas as pd
-
-        Cn_b = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-            n_probe = min(np_max, Cn_b.shape[0])
-            # same quantize + stable sort as ivf_topk — the prefix property
-            # above is exactly this determinism
-            S = rounding.snap_np(Qn @ Cn_b.T, 6)
-            order = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
-            out = pdf.loc[pdf.index.repeat(n_probe)].reset_index(drop=True)
-            out["bucket"] = order.ravel()
-            out["ppos"] = np.tile(np.arange(n_probe, dtype="int32"), len(pdf))
-            yield pd.DataFrame(
-                {
-                    "query_id": out[id_col],
-                    "qv": out[vec_col],
-                    "bucket": out["bucket"],
-                    "ppos": out["ppos"],
-                }
-            )
-
-    probed = queries.select(id_col, vec_col).mapInPandas(
-        probe,
-        f"query_id long, qv {dict(queries.dtypes)[vec_col]}, bucket int, ppos int",
-    )
+    probed = _probed(queries, centroids, id_col, vec_col, nps[-1], ppos=True)
     cand = F.broadcast(probed).join(assigned, "bucket").select(
         "query_id",
         "qv",
@@ -747,8 +696,7 @@ def ivf_topk_curve(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
     )
-    scored = cand.withColumn("cosine", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
-    scored = scored.withColumn("cosine", F.expr(rounding.snap_sql("cosine", 6)))
+    scored = _snapped_cosine(cand)
     w = (
         Window.partitionBy("query_id")
         .orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
@@ -807,100 +755,74 @@ def pq_codebooks_encode(
     4×4 = 2 bytes) instead of dim×4 bytes; the codebooks are m·k·(dim/m)
     floats of driver state, same bounded-state shape as IVF centroids.
 
-    All m subspaces train JOINTLY in one Lloyd loop: one seed TakeOrdered,
-    one assignment mapInPandas and one partial-aggregated mean collect per
-    iteration cover every subspace (a per-subspace ``kmeans_lloyd`` loop
-    computes the IDENTICAL result — same md5-ordered seed ids, same
-    1e-4/1e-6 grids, same first-min tiebreak — but pays m× the Spark job
-    rounds and an m-way encode join; measured 4× slower at sf0.1). The
-    per-subspace math matches ``kmeans_lloyd`` step for step, which is
+    All m subspaces train JOINTLY in ``_lloyd_subspaces``, the trainer
+    behind ``kmeans_lloyd``: one seed TakeOrdered, one assignment
+    mapInPandas and one mean collect per iteration cover every subspace,
+    and codebook j is exactly what ``kmeans_lloyd`` trains on subspace j's
+    slice (same md5-ordered seed ids, same 1e-4/1e-6 grids, same first-min
+    tiebreak — test_similarity pins it with the cap binding), which is
     what the SQL oracle replays.
 
     Scale: one narrow projection, k·dim driver state, the mean shuffle
-    carries k·dim partial rows per subspace regardless of corpus size.
+    carries k·dim partial rows regardless of corpus size.
     Returns (codes DataFrame (id, code0..code{m-1}), list of m codebooks).
     """
-    import numpy as np
-
     dsub = dim // m
     if dsub * m != dim:
         raise ValueError(f"dim ({dim}) must be divisible by m ({m})")
-    spark = df.sparkSession
-    id_type = dict(df.dtypes)[id_col]
-
     base = df.select(
         F.col(id_col).alias("id"),
         F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
     )
-    # same sample + seed rule as kmeans_lloyd: training runs on the
-    # train_cap vectors with smallest (md5(id), id); every subspace's
-    # seed j is the slice of the same first-k rows of that order
-    ranked = base.withColumn("__mk", F.md5(F.col("id").cast("string")))
-    persisted = None
-    if train_cap is not None:
-        # same single-partition-limit re-spread as kmeans_lloyd
-        n_part = max(2, spark.sparkContext.defaultParallelism)
-        train = ranked.orderBy("__mk", "id").limit(int(train_cap)).repartition(n_part, "id")
-        persisted = train.persist()
-    else:
-        train = ranked
-    seeds = train.orderBy("__mk", "id").limit(k).select("v").collect()
-    S = np.asarray([r.v for r in seeds], dtype="float64")
-    C = [S[:, j * dsub : (j + 1) * dsub].copy() for j in range(m)]
-
-    def assigner(Cs):
-        bc = spark.sparkContext.broadcast(Cs)
-
-        def go(batches):
-            import pandas as pd
-
-            Cb = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy()).astype("float64")
-                out = {"id": pdf["id"], "v": pdf["v"]}
-                for j, Cj in enumerate(Cb):
-                    Vj = V[:, j * dsub : (j + 1) * dsub]
-                    c2 = (Cj * Cj).sum(axis=1)
-                    D = (Vj * Vj).sum(axis=1)[:, None] - 2.0 * (Vj @ Cj.T) + c2[None, :]
-                    D = rounding.snap_np(D, 4)
-                    out[f"code{j}"] = np.argmin(D, axis=1).astype("int32")
-                yield pd.DataFrame(out)
-
-        return go
-
-    code_cols = ", ".join(f"code{j} int" for j in range(m))
-    schema = f"id {id_type}, v array<double>, {code_cols}"
-    for _ in range(iters):
-        assigned = train.mapInPandas(assigner(C), schema)
-        # one long-form mean over ALL subspaces: bucket = the position's
-        # subspace code; groups are (pos, bucket) — k·dim partial rows
-        bucket_of_pos = "CASE " + " ".join(
-            f"WHEN pos >= {j * dsub} AND pos < {(j + 1) * dsub} THEN code{j}"
-            for j in range(m)
-        ) + " END"
-        means = (
-            assigned.select(
-                F.posexplode("v").alias("pos", "x"),
-                *[F.col(f"code{j}") for j in range(m)],
-            )
-            .select("pos", "x", F.expr(bucket_of_pos).alias("bucket"))
-            .groupBy("pos", "bucket")
-            .agg(F.avg("x").alias("mval"))
-            .collect()
-        )
-        newC = [Cj.copy() for Cj in C]
-        for r in means:
-            j = r.pos // dsub
-            newC[j][r.bucket][r.pos % dsub] = rounding.snap_np(r.mval, 6)
-        C = newC
-    if persisted is not None:
-        persisted.unpersist()
-    codes = base.mapInPandas(assigner(C), schema).select(
+    C = _lloyd_subspaces(base, m, k, iters, 4, 6, train_cap)
+    codes = _encode(base, C, dsub, 4).select(
         F.col("id").alias(id_col), *[f"code{j}" for j in range(m)]
     )
     return codes, [Cj.tolist() for Cj in C]
+
+
+def _adc_luts(spark, q_rows, id_col: str, id_type: str, vec_col: str, books, digits: int):
+    """Per-query ADC lookup tables as a (qid, lut0..lut{m-1}) DataFrame
+    from the collected query rows (|Q| bounded by contract): cell c of
+    ``lut{j}`` is |q_j|² − 2·q_j·c + |c|² for subspace j's codeword c,
+    snapped to the ``digits`` grid — the Lloyd assigner's formula and grid,
+    so a SQL engine joining the replayed centroid tables computes the
+    identical cells. Also returns the left-associative ADC sum expression
+    ``lut0[code0] + … + lut{m-1}[code{m-1}]`` over the codes columns.
+    """
+    m = len(books)
+    dsub = len(books[0][0])
+    Cs = [np.asarray(book, dtype="float64") for book in books]
+    rows = []
+    for r in q_rows:
+        qv = np.asarray(r[vec_col], dtype="float64")
+        luts = []
+        for j, C in enumerate(Cs):
+            qs = qv[j * dsub : (j + 1) * dsub]
+            d = (qs * qs).sum() - 2.0 * (C @ qs) + (C * C).sum(axis=1)
+            luts.append([float(x) for x in rounding.snap_np(d, digits)])
+        rows.append((r[id_col], *luts))
+    schema = f"qid {id_type}, " + ", ".join(f"lut{j} array<double>" for j in range(m))
+    # Spark [] on arrays is 0-based — codes are 0-based cids, direct index
+    adc = " + ".join(f"lut{j}[code{j}]" for j in range(m))
+    return spark.createDataFrame(rows, schema=schema), adc
+
+
+def _adc_top_k(scored: DataFrame, topk: int) -> DataFrame:
+    """Per-query top-k of (qid, nid, adc_dist) rows ranked (distance, id),
+    so grid ties cannot reorder across engines. Returns (query_id,
+    neighbor_id, adc_dist, rank)."""
+    w = Window.partitionBy("qid").orderBy("adc_dist", "nid")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
+        .select(
+            F.col("qid").alias("query_id"),
+            F.col("nid").alias("neighbor_id"),
+            "adc_dist",
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
 
 
 def pq_topk(
@@ -940,49 +862,19 @@ def pq_topk(
 
     Returns (query_id, neighbor_id, adc_dist, rank), rank <= topk.
     """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    dsub = dim // m
-    id_type = dict(corpus.dtypes)[id_col]
     codes, books = trained or pq_codebooks_encode(
         corpus, id_col, vec_col, dim=dim, m=m, k=k, iters=iters
     )
-
     q_rows = queries.select(id_col, vec_col).collect()  # |Q| bounded by contract
-    data = []
-    for r in q_rows:
-        qv = np.asarray(r[vec_col], dtype="float64")
-        luts = []
-        for j in range(m):
-            qs = qv[j * dsub : (j + 1) * dsub]
-            C = np.asarray(books[j], dtype="float64")
-            d = (qs * qs).sum() - 2.0 * (C @ qs) + (C * C).sum(axis=1)
-            luts.append([float(x) for x in rounding.snap_np(d, dist_digits)])
-        data.append((r[id_col], *luts))
-    lut_schema = f"qid {id_type}, " + ", ".join(
-        f"lut{j} array<double>" for j in range(m)
+    qdf, adc = _adc_luts(
+        corpus.sparkSession, q_rows, id_col, dict(corpus.dtypes)[id_col], vec_col, books, dist_digits
     )
-    qdf = spark.createDataFrame(data, schema=lut_schema)
-
-    # Spark [] on arrays is 0-based — codes are 0-based cids, direct index
-    adc = " + ".join(f"lut{j}[code{j}]" for j in range(m))
     scored = codes.crossJoin(F.broadcast(qdf)).select(
         "qid",
         F.col(id_col).alias("nid"),
         F.expr(adc).alias("adc_dist"),
     )
-    w = Window.partitionBy("qid").orderBy("adc_dist", "nid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "adc_dist",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _adc_top_k(scored, topk)
 
 
 def ivf_pq_topk(
@@ -1022,16 +914,12 @@ def ivf_pq_topk(
 
     Returns (query_id, neighbor_id, adc_dist, rank), rank <= topk.
     """
-    import numpy as np
-
     spark = assigned.sparkSession
-    m = len(books)
-    dsub = len(books[0][0])
     id_type = dict(assigned.dtypes)[id_col]
 
     C = np.asarray(centroids, dtype="float64")
     q_rows = queries.select(id_col, vec_col).collect()  # |Q| bounded by contract
-    probe_rows, lut_rows = [], []
+    probe_rows = []
     cn = np.sqrt((C * C).sum(axis=1))
     for r in q_rows:
         qv = np.asarray(r[vec_col], dtype="float64")
@@ -1041,22 +929,10 @@ def ivf_pq_topk(
         # rank DESC with centroid-id tiebreak: argsort on (-cos, cid)
         order = np.lexsort((np.arange(len(C)), -cos))[:nprobe]
         probe_rows.extend((r[id_col], int(b)) for b in order)
-        luts = []
-        for j in range(m):
-            qs = qv[j * dsub : (j + 1) * dsub]
-            Cj = np.asarray(books[j], dtype="float64")
-            d = (qs * qs).sum() - 2.0 * (Cj @ qs) + (Cj * Cj).sum(axis=1)
-            luts.append([float(x) for x in rounding.snap_np(d, dist_digits)])
-        lut_rows.append((r[id_col], *luts))
     probe_df = spark.createDataFrame(
         probe_rows, schema=f"qid {id_type}, bucket int"
     )
-    lut_schema = f"qid {id_type}, " + ", ".join(
-        f"lut{j} array<double>" for j in range(m)
-    )
-    qdf = spark.createDataFrame(lut_rows, schema=lut_schema)
-
-    adc = " + ".join(f"lut{j}[code{j}]" for j in range(m))
+    qdf, adc = _adc_luts(spark, q_rows, id_col, id_type, vec_col, books, dist_digits)
     cand = (
         assigned.select(F.col(id_col), "bucket")
         .join(F.broadcast(probe_df), "bucket")
@@ -1065,17 +941,7 @@ def ivf_pq_topk(
         .join(F.broadcast(qdf), "qid")
         .select("qid", F.col(id_col).alias("nid"), F.expr(adc).alias("adc_dist"))
     )
-    w = Window.partitionBy("qid").orderBy("adc_dist", "nid")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "adc_dist",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _adc_top_k(cand, topk)
 
 
 def cosine_near_dup_pairs(
@@ -1216,8 +1082,6 @@ def lsh_bucket_signatures(
     grid cell (10⁶× the boundary density, strictly more coin-flip
     exposure). The DuckDB oracle replays the same raw ``>= 0``.
     """
-    import numpy as np
-
     planes = np.asarray(_hyperplanes(dim, num_planes, seed), dtype="float64")
     bc = df.sparkSession.sparkContext.broadcast(planes)
     vec_type = dict(df.dtypes)[vec_col]
@@ -1271,8 +1135,6 @@ def random_projection(
     out_dim rows per vector but each row is 3 scalars (vs the dim-wide
     input), so the stage SHRINKS bytes for out_dim < dim/3.
     """
-    import numpy as np
-
     planes = np.asarray(_hyperplanes(dim, out_dim, seed), dtype="float64")
     bc = df.sparkSession.sparkContext.broadcast(planes)
     id_type = dict(df.dtypes)[id_col]
@@ -1323,19 +1185,7 @@ def lsh_cosine_topk(
     """
     qs = lsh_bucket_signatures(queries, id_col, vec_col, dim, num_planes, seed).withColumnRenamed("id", "query_id").withColumnRenamed("v", "qv")
     cs = lsh_bucket_signatures(corpus, id_col, vec_col, dim, num_planes, seed).withColumnRenamed("id", "neighbor_id").withColumnRenamed("v", "cv")
-    scored = (
-        F.broadcast(qs)
-        .join(cs, "bucket")
-        .withColumn("cosine", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
-        .withColumn("cosine", F.expr(rounding.snap_sql("cosine", 6)))
-    )
-    # rank on the ROUNDED score + id (repo determinism convention)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(_snapped_cosine(F.broadcast(qs).join(cs, "bucket")), k)
 
 
 def quantize_int8(
@@ -1453,7 +1303,6 @@ def semantic_dedup(
     (by bucket); the dup-id set is |dups| ids, broadcast back. Returns
     (id, bucket, is_dup).
     """
-    import numpy as np
     import pandas as pd
 
     # `assignment`: optionally reuse a precomputed kmeans_lloyd result (the
@@ -1524,7 +1373,6 @@ def hard_negatives(
     SCALE.md); one bucket shuffle, no all-pairs, nothing on the driver.
     Returns (id, label, neg_id, neg_label, cosine).
     """
-    import numpy as np
     import pandas as pd
 
     id_type = dict(assigned.dtypes)[id_col]
@@ -1792,7 +1640,6 @@ def mmr_select(
     construction. Returns (query_id, select_order, neighbor_id,
     mmr_score_x1e7).
     """
-    import numpy as np
     import pandas as pd
 
     cand = cosine_topk(

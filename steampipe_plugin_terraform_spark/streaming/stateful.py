@@ -66,18 +66,7 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
 # Per-user record-high detection: the second custom stateful operator.
-# Two implementations with IDENTICAL semantics:
-#  - record_breaking_events_awps: applyInPandasWithState (used by the
-#    catalog entry — runs anywhere);
-#  - record_breaking_events: Spark 4 transformWithStateInPandas (typed
-#    ValueState handle, RocksDB-backed) — the successor API; its driver
-#    worker imports google.protobuf, which this container does not ship,
-#    so it is exercised by an import-gated test and documented as the
-#    scale path where protobuf is available.
-# ---------------------------------------------------------------------------
-
 RECORD_HIGH_OUTPUT = StructType(
     [
         StructField("event_id", LongType()),
@@ -85,54 +74,6 @@ RECORD_HIGH_OUTPUT = StructType(
         StructField("value", DoubleType()),
     ]
 )
-
-
-try:  # Spark 4 only; the module must import on any version
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _SP
-except ImportError:  # pragma: no cover - env ships Spark 4
-    _SP = object
-
-
-class RecordHighProcessor(_SP):
-    """Per-user record-breaking detection: emit an event iff its value
-    STRICTLY exceeds the user's running maximum so far; state is one
-    double per user in a ValueState handle.
-
-    Rows within a micro-batch are sorted by (ts, event_id) before the
-    scan, so emission is deterministic under any arrival interleaving
-    inside a batch; across batches the state carries the max forward.
-    The batch oracle is the strictly-before running-max window — value
-    comparisons only, no FP arithmetic, so results are bit-identical.
-    """
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import DoubleType as _D
-        from pyspark.sql.types import StructField as _F
-        from pyspark.sql.types import StructType as _S
-
-        self._max = handle.getValueState("running_max", _S([_F("mx", _D())]))
-
-    def handleInputRows(self, key, rows, timerValues):
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        cur = self._max.get()[0] if self._max.exists() else None
-        out_id, out_val = [], []
-        for eid, val in zip(pdf["event_id"], pdf["value"]):
-            if cur is None or val > cur:
-                out_id.append(int(eid))
-                out_val.append(float(val))
-                cur = float(val)
-        if cur is not None:
-            self._max.update((float(cur),))
-        if out_id:
-            yield pd.DataFrame(
-                {"event_id": out_id, "user_id": int(key[0]), "value": out_val}
-            )
-
-    def close(self) -> None:
-        pass
-
-
 RECORD_HIGH_STATE = StructType([StructField("mx", DoubleType())])
 
 
@@ -160,8 +101,12 @@ def _record_high_update(
 
 
 def record_breaking_events_awps(events: DataFrame) -> DataFrame:
-    """Per-user record highs via applyInPandasWithState (portable path:
-    same emission rule and state as the transformWithState variant)."""
+    """Per-user record highs via applyInPandasWithState: an event emits iff
+    its value STRICTLY exceeds the user's running maximum so far; state is
+    one double per user. Rows within a micro-batch are sorted by (ts,
+    event_id) before the scan, so emission is deterministic under any
+    arrival interleaving inside a batch; across batches the state carries
+    the max forward."""
     return (
         events.select("event_id", "ts", "user_id", "value")
         .groupBy("user_id")
@@ -171,20 +116,5 @@ def record_breaking_events_awps(events: DataFrame) -> DataFrame:
             stateStructType=RECORD_HIGH_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def record_breaking_events(events: DataFrame) -> DataFrame:
-    """Streaming per-user record highs via transformWithStateInPandas."""
-    proc = RecordHighProcessor()
-    return (
-        events.select("event_id", "ts", "user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=RECORD_HIGH_OUTPUT,
-            outputMode="Append",
-            timeMode="None",
         )
     )

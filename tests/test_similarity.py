@@ -4,9 +4,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from steampipe_plugin_terraform_spark.operators.similarity import (
-    build_ivf,
     cosine_topk,
     ivf_topk,
+    kmeans_lloyd,
     lsh_cosine_topk,
 )
 
@@ -30,7 +30,7 @@ def _pairs(df):
 def test_ivf_full_probe_equals_brute_force(spark, split):
     queries, corpus = split
     exact = cosine_topk(queries, corpus, k=5)
-    assigned, centroids = build_ivf(corpus, n_centroids=8)
+    assigned, centroids = kmeans_lloyd(corpus, k=8)
     ivf_all = ivf_topk(queries, assigned, centroids, k=5, nprobe=8)
     assert _pairs(ivf_all) == _pairs(exact)
     # identical rounded scores, not just the same ids
@@ -42,7 +42,7 @@ def test_ivf_full_probe_equals_brute_force(spark, split):
 def test_ivf_partial_probe_recall(spark, split):
     queries, corpus = split
     exact = _pairs(cosine_topk(queries, corpus, k=5))
-    assigned, centroids = build_ivf(corpus, n_centroids=8)
+    assigned, centroids = kmeans_lloyd(corpus, k=8)
     approx = _pairs(ivf_topk(queries, assigned, centroids, k=5, nprobe=4))
     recall = len(exact & approx) / len(exact)
     # random embeddings cluster weakly; half the buckets should still
@@ -51,15 +51,15 @@ def test_ivf_partial_probe_recall(spark, split):
 
 
 def test_ivf_topk_curve_matches_pointwise(spark, split):
-    # r15 fusion pin: every (nprobe, query, neighbor, cosine, rank) row of
-    # the one-pass curve equals the unfused ivf_topk run at that nprobe —
-    # the prefix-subset + running-count-rank argument made executable
+    # every (nprobe, query, neighbor, cosine, rank) row of the one-pass
+    # curve equals the unfused ivf_topk run at that nprobe — the
+    # prefix-subset + running-count-rank argument made executable
     from steampipe_plugin_terraform_spark.operators.similarity import (
         ivf_topk_curve,
     )
 
     queries, corpus = split
-    assigned, centroids = build_ivf(corpus, n_centroids=8)
+    assigned, centroids = kmeans_lloyd(corpus, k=8)
     curve = ivf_topk_curve(
         queries, assigned, centroids, k=5, nprobes=(1, 2, 4)
     ).collect()
@@ -93,7 +93,6 @@ def test_lsh_topk_shape_and_bucket_pruning(spark, split):
 
 def test_ivf_store_roundtrip_and_pruning(spark, tmp_path):
     from steampipe_plugin_terraform_spark.operators.similarity import (
-        build_ivf,
         ivf_load,
         ivf_save,
         ivf_topk,
@@ -101,7 +100,7 @@ def test_ivf_store_roundtrip_and_pruning(spark, tmp_path):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.limit(5)
-    assigned, cents = build_ivf(emb, n_centroids=8)
+    assigned, cents = kmeans_lloyd(emb, k=8)
     path = str(tmp_path / "ivf")
     ivf_save(assigned, cents, path)
     loaded, c2 = ivf_load(spark, path)
@@ -184,3 +183,47 @@ def test_nearest_centroid_confusion_separable_and_noisy(spark):
     )
     got = {(r.label, r.assigned): r.n for r in nearest_centroid_confusion(noisy).collect()}
     assert got[(0, 1)] == 1 and got[(1, 1)] == 10
+
+
+def test_pq_capped_codebooks_equal_per_subspace_lloyd(spark, emb):
+    """PQ is k-means run once per subspace: with the training cap BINDING
+    (32 of the corpus' vectors), codebook j of the joint PQ trainer equals
+    the centroids ``kmeans_lloyd`` trains on subspace j's slice alone —
+    same md5-rank sample, same seed ids, same 1e-4/1e-6 grids."""
+    from steampipe_plugin_terraform_spark.operators import similarity
+
+    assert emb.count() > 32
+    _, books = similarity.pq_codebooks_encode(
+        emb, dim=64, m=4, k=16, iters=2, train_cap=32
+    )
+    for j in range(4):
+        sub = emb.select(
+            "vec_id", F.slice("embedding", j * 16 + 1, 16).alias("embedding")
+        )
+        _, cents = similarity.kmeans_lloyd(sub, k=16, iters=2, train_cap=32)
+        assert books[j] == cents, f"subspace {j}"
+
+
+@pytest.mark.parametrize("trainer", ["kmeans_lloyd", "pq_codebooks_encode"])
+def test_failed_lloyd_iteration_leaks_no_cache(spark, emb, monkeypatch, trainer):
+    """The training sample is persisted across the Lloyd loop; an iteration
+    that raises must still release it, or the sample stays in the cache
+    manager and can plan-match inside later queries."""
+    from steampipe_plugin_terraform_spark import rounding
+    from steampipe_plugin_terraform_spark.operators import similarity
+
+    def boom(*a, **k):
+        raise RuntimeError("means step failed")
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    # executors import their own rounding module; only the driver-side
+    # means step sees the patch
+    monkeypatch.setattr(rounding, "snap_np", boom)
+    try:
+        with pytest.raises(RuntimeError, match="means step failed"):
+            getattr(similarity, trainer)(emb, k=4, iters=1)
+        assert persistent().size() <= before
+    finally:
+        monkeypatch.undo()
+        spark.catalog.clearCache()

@@ -339,89 +339,13 @@ def test_progress_recorder_observes_drain(spark):
     assert last < first
 
 
-def test_transform_with_state_variant_gated(spark, tmp_path):
-    """The Spark 4 transformWithStateInPandas record-high variant: runs
-    (and must agree with the portable applyInPandasWithState path) where
-    its driver worker's protobuf dependency exists; skipped where not."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf not shipped in this container")
-    from steampipe_plugin_terraform_spark.session import ROCKSDB_STATE_PROVIDER
-    from steampipe_plugin_terraform_spark.streaming.events import read_events_stream
-    from steampipe_plugin_terraform_spark.streaming.stateful import (
-        record_breaking_events,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_PROVIDER
-    )
-    try:
-        q = (
-            record_breaking_events(read_events_stream(spark, "/root/testdata/sf0.001"))
-            .writeStream.format("memory")
-            .queryName("__tws_record_highs")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-        got = {
-            (r.event_id, r.user_id, r.value)
-            for r in spark.table("__tws_record_highs").collect()
-        }
-        from steampipe_plugin_terraform_spark.catalog import QUERIES
-
-        want = {
-            (r.event_id, r.user_id, r.value)
-            for r in QUERIES["stream_record_highs"](
-                spark, "/root/testdata/sf0.001"
-            ).collect()
-        }
-        assert got == want
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-class _FakeValueState:
-    """Stubbed TWS ValueState handle: exists()/get()/update() with the
-    tuple-row convention of the real runtime."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, row):
-        self._v = tuple(row)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        self.states[name] = _FakeValueState()
-        return self.states[name]
-
-
 def test_record_high_processor_logic_with_stubbed_runtime():
-    """transformWithStateInPandas can't run in this container (its driver
-    worker imports google.protobuf), so exercise RecordHighProcessor's
-    handle logic directly against a stubbed runtime: state carried across
-    micro-batches, intra-batch (ts, event_id) ordering, strict-> emission,
-    and exact agreement with the portable applyInPandasWithState updater
-    on the same batch sequence."""
+    """The record-high updater against a stubbed GroupState: state carried
+    across micro-batches, intra-batch (ts, event_id) ordering and strict->
+    emission."""
     import pandas as pd
 
     from steampipe_plugin_terraform_spark.streaming.stateful import (
-        RecordHighProcessor,
         _record_high_update,
     )
 
@@ -436,23 +360,6 @@ def test_record_high_processor_logic_with_stubbed_runtime():
         pd.DataFrame({"event_id": [6], "ts": [60], "user_id": [7], "value": [6.0]}),
     ]
 
-    proc = RecordHighProcessor()
-    handle = _FakeHandle()
-    proc.init(handle)
-    tws_emitted = []
-    for b in batches:
-        for out in proc.handleInputRows((7,), [b], None):
-            tws_emitted += list(zip(out["event_id"], out["value"]))
-    proc.close()
-
-    # event 1 (first seen after sort), event 3 (5.0 > 1.0; event 2 tied
-    # at 5.0 but sorted earlier, so 2 emits and 3 does not)... the sort
-    # makes it deterministic: 1 -> emit, 2 (5.0) -> emit, 3 (5.0) -> tie
-    assert tws_emitted == [(1, 1.0), (2, 5.0), (5, 6.0)]
-    assert handle.states["running_max"].get() == (6.0,)
-
-    # the portable AWPS updater must emit the identical sequence given
-    # the same batches through a stubbed GroupState
     class _FakeGroupState:
         def __init__(self):
             self._v = None
@@ -473,5 +380,7 @@ def test_record_high_processor_logic_with_stubbed_runtime():
     for b in batches:
         for out in _record_high_update((7,), [b], gs):
             awps_emitted += list(zip(out["event_id"], out["value"]))
-    assert awps_emitted == tws_emitted
+    # sorted by ts: 1 (1.0) emits, 2 (5.0) emits, 3 (5.0) ties and does
+    # not; 5 (6.0) breaks the carried max; 6 (6.0) ties
+    assert awps_emitted == [(1, 1.0), (2, 5.0), (5, 6.0)]
     assert gs.get == (6.0,)
