@@ -21,9 +21,15 @@ executors, tested on local[N]):
    ``WHERE path = ...`` filter on any view prunes like the reference's
    pushed qual. A small frame is one partition: each query, one task.
 
-The wide frame is persisted on first materialization so repeat queries skip
-the parse (the SDK-cache analog, go.mod:23,35 — but correct by construction
-since our tables derive from one lineage).
+The wide frame is a ``localCheckpoint``, filled by its first action, so
+repeat queries skip the parse (the SDK-cache analog, go.mod:23,35 — but
+correct by construction since our tables derive from one lineage). Like
+every store of session state (``state.py``), it never enters Spark's cache
+manager: views scan its blocks as ``Scan ExistingRDD``, with no per-query
+cached-scan stage. An incremental refresh checkpoints the next generation
+from the current one, so a view's plan is one node deep after any number
+of watch ticks. A frame stays readable through one refresh; the
+generation before it is released then.
 
 The first ingest of a session pays for little besides the parse itself:
 ``get_spark``'s Python workers fork from ``daemon.py`` with pyspark (from
@@ -37,7 +43,6 @@ from __future__ import annotations
 
 import os
 import sys
-import uuid
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,7 +73,6 @@ _FILES_SCHEMA = T.StructType([
     T.StructField("path", T.StringType()),
     T.StructField("content", T.BinaryType()),
     T.StructField("file_kind", T.StringType()),
-    T.StructField("build", T.StringType()),
 ])
 
 # Column projections per table, in the reference's declared order
@@ -216,6 +220,10 @@ class TerraformEngine:
         self._cache = cache
         self._canonical_path: str | None = None  # set by load_canonical
         self._wide: DataFrame | None = None
+        # checkpoint RDDs of the current generation and the one before it
+        self._held: list = []
+        # (wide frame, {(table, json_as): projection}) for the current frame
+        self._projections: tuple = (None, {})
         self._slices = 1  # local parse slices of the last full build
         self._views_json_as: str | None = None
         self.watcher = None
@@ -314,12 +322,9 @@ class TerraformEngine:
         cut = min(len(local), self.spark.sparkContext.defaultParallelism)
         n = slices(self.spark, sum(s for _, _, s in local), cut)
         rows = [f for b in pack_by_size(local, n, size=lambda f: f[2], slices=cut) for f in b]
-        # cached plans match by content: a per-build id stops a re-read of
-        # changed files being served an older cached parse of the same paths
         table = pa.table({"path": [p for p, _, _ in rows], "content": pa.nulls(len(rows), pa.binary()),
-                          "file_kind": [k for _, k, _ in rows], "build": [uuid.uuid4().hex] * len(rows)})
-        out = self.spark.createDataFrame(table, _FILES_SCHEMA)
-        out = out.drop("build").coalesce(n)
+                          "file_kind": [k for _, k, _ in rows]})
+        out = self.spark.createDataFrame(table, _FILES_SCHEMA).coalesce(n)
         for kind in ("config", "plan", "state"):
             paths = [p for p, k in files if k == kind and "://" in p]
             if paths:
@@ -334,14 +339,26 @@ class TerraformEngine:
         return files_df.mapInPandas(_make_parse_fn(self.on_error), schema=WIDE_SCHEMA)
 
     def wide(self) -> DataFrame:
-        """The canonical wide DataFrame all seven tables derive from."""
+        """The canonical wide DataFrame all seven tables derive from. A
+        cached engine checkpoints it lazily: the first action parses and
+        stores the rows. The frame stays readable through one ``refresh``."""
         if self._wide is None:
             files_df, self._slices = self._files_df(self.files)
             df = self._parse(files_df)
             if self._cache:
-                df = df.persist()
+                df = df.localCheckpoint(eager=False)
+                self._hold(df)
             self._wide = df
         return self._wide
+
+    def _hold(self, df: DataFrame) -> None:
+        """Keep checkpointed ``df`` as the newest generation and release the
+        one two before it: the generation just before ``df`` stays, so a
+        query planned before the tick can still read its rows."""
+        # a checkpointed frame's plan is one LogicalRDD over the stored RDD
+        self._held.append(df._jdf.queryExecution().analyzed().rdd())
+        while len(self._held) > 2:
+            self._held.pop(0).unpersist(False)
 
     def refresh(self, changed_paths=None) -> None:
         """Re-discover sources and bring the wide frame up to date — the
@@ -351,12 +368,15 @@ class TerraformEngine:
         ``changed_paths``: optional iterable of local file paths known to
         have been added/modified/deleted (e.g. from TerraformWatcher). When
         given and a cached wide frame exists, ONLY those files re-parse:
-        surviving rows are kept from cache, so a one-file edit in a
-        million-file corpus costs one parse + a cheap cached filter, not a
-        full re-scan. Changed files are read inside the parse task, as on
-        ingest, so no ``refreshByPath`` is needed (it would drop the cached
-        wide frame we are reusing). A changed REMOTE object, or
-        ``changed_paths=None``, falls back to a full lazy rebuild.
+        surviving rows are kept from the current checkpoint, and the next
+        generation is checkpointed eagerly from them, so a one-file edit in
+        a million-file corpus costs one parse + a filter of stored rows, not
+        a full re-scan, and the plan does not grow tick over tick. Changed
+        files are read inside the parse task, as on ingest, so no
+        ``refreshByPath`` is needed. A changed REMOTE object, or
+        ``changed_paths=None``, falls back to a full lazy rebuild. Either
+        way the generation being replaced stays readable until the next
+        refresh, and the one before it is released.
 
         An engine from ``load_canonical`` has no source lists: it re-reads
         its store instead, picking up rows a ``watch_to_canonical`` drain
@@ -401,19 +421,19 @@ class TerraformEngine:
             pass  # nothing materialized yet; next wide() sees the new list
         elif not incremental:
             # no cache to reuse rows from (or remote change we can't stat) —
-            # full lazy rebuild, like the reference's re-scan
+            # full lazy rebuild, like the reference's re-scan; wide()'s next
+            # generation releases the one before `old`
             self._wide = None
-            old.unpersist()
         else:
             keep = old.filter(~F.col("path").isin(list(changed)))
             reparse = [(p, k) for p, k in self.files if p in changed]
             # a changed file that vanished since discovery parses to zero
             # rows, which is right: its old rows are already out of `keep`
             df = keep.unionByName(self._parse(self._files_df(reparse)[0])) if reparse else keep
-            df = df.coalesce(self._slices).persist()  # bounded: the build's slices
-            df.count()  # materialize from the old cache BEFORE dropping it
+            # bounded: the build's slices; stored from `old` while it is held
+            df = df.coalesce(self._slices).localCheckpoint(eager=True)
+            self._hold(df)
             self._wide = df
-            old.unpersist()
 
     # -- public surface --
 
@@ -429,13 +449,22 @@ class TerraformEngine:
             raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
         if json_as not in ("string", "variant"):
             raise ValueError(f"json_as must be 'string' or 'variant', got {json_as!r}")
-        cols = [
-            F.parse_json(F.col(c)).alias(c)
-            if json_as == "variant" and c in JSON_COLUMNS
-            else F.col(c)
-            for c in TABLE_COLUMNS[name]
-        ]
-        df = self.wide().filter(F.col("tf_table") == name).select(*cols)
+        # a projection is built once per generation: each column costs the
+        # driver a JVM round trip, more than a small query runs for
+        wide = self.wide()
+        owner, built = self._projections
+        if owner is not wide:
+            built = {}
+            self._projections = (wide, built)
+        df = built.get((name, json_as))
+        if df is None:
+            cols = [
+                F.parse_json(F.col(c)).alias(c)
+                if json_as == "variant" and c in JSON_COLUMNS
+                else F.col(c)
+                for c in TABLE_COLUMNS[name]
+            ]
+            df = built[name, json_as] = wide.filter(F.col("tf_table") == name).select(*cols)
         if path is not None:
             if "://" not in path:
                 # same normalization as discovery, so relative/~ quals match
@@ -454,9 +483,14 @@ class TerraformEngine:
             df.createOrReplaceTempView(name)
 
     def unpersist(self) -> None:
-        if self._wide is not None:
-            self._wide.unpersist()
+        """Release every checkpoint generation. Frames and views taken from
+        them can no longer be read; the next ``wide()`` parses again. An
+        engine that holds none (``cache=False``, ``load_canonical``) keeps
+        its frame."""
+        if self._held:
             self._wide = None
+        while self._held:
+            self._held.pop().unpersist(False)
 
     # -- canonical store (parse once, persist forever) --
 

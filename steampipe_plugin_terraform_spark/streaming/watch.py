@@ -8,7 +8,8 @@ modified/deleted-file re-read is not a file source concept, so
 ``TerraformWatcher`` supplies that half: a driver-side mtime/size poller
 that re-discovers the engine's glob lists and triggers an INCREMENTAL
 ``engine.refresh(changed)`` — only changed files re-parse; unchanged rows
-stay cached (SURVEY §2.8, §7.4 risk 6).
+are read from the current checkpoint generation into the next one (SURVEY
+§2.8, §7.4 risk 6).
 
 Scale: the stream stays narrow (text wholetext → mapInPandas parse), so
 watch-mode throughput is bounded by executor count, not a driver mutex like
@@ -71,7 +72,11 @@ class TerraformWatcher:
     Scale: the poll itself is driver-only and proportional to the file
     *count*, not data size; the refresh re-parses only the changed files
     (``engine.refresh(changed)``), so steady-state watch cost is
-    O(changed files) cluster work per tick.
+    O(changed files) cluster work per tick. Each tick checkpoints a new
+    generation of the engine's wide frame, so a view's plan stays the same
+    size however long the watch runs. A query planned before a tick still
+    reads the generation it was planned on; one planned two ticks back
+    cannot, as that generation has been released.
     """
 
     def __init__(self, engine):

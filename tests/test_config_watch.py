@@ -286,3 +286,76 @@ def test_watch_loop_records_failures_and_recovers(spark, tmp_path, monkeypatch):
         assert len(seen) == 3
         assert watcher.consecutive_failures == 0, "a successful poll resets the count"
         assert str(watcher.last_error) == "boom 2"
+
+
+def _plan_nodes(plan) -> int:
+    kids = plan.children()
+    return 1 + sum(_plan_nodes(kids.apply(i)) for i in range(kids.size()))
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _modify(path, i: int) -> str:
+    path.write_text(f'resource "t" "{path.stem}" {{ x = {i} }}\n')
+    return str(path)
+
+
+def test_refresh_keeps_the_view_plan_flat(spark, tmp_path):
+    """Each incremental refresh checkpoints the next generation from the
+    current one, so the analyzed plan of a registered view does not grow
+    tick over tick (a growing lineage eventually overflows the stack when
+    a task deserializes it)."""
+    for name in ("a", "b", "c"):
+        _modify(tmp_path / f"{name}.tf", 0)
+    eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
+    eng.register_views()
+    try:
+        sizes = []
+        for i in range(1, 7):
+            eng.refresh([_modify(tmp_path / "b.tf", i)])
+            plan = spark.table("terraform_resource")._jdf.queryExecution().analyzed()
+            sizes.append(_plan_nodes(plan))
+        assert sizes[0] == sizes[-1], sizes
+        df = spark.sql("select type, count(*) from terraform_resource group by type")
+        assert df.collect()[0][1] == 3
+        # served from the checkpoint's blocks, not from a cached relation
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" in plan
+        assert "InMemoryTableScan" not in plan and "TableCacheQueryStage" not in plan
+    finally:
+        eng.unpersist()
+
+
+def test_checkpoint_generations_lifetime(spark, tmp_path):
+    """At most two generations hold blocks: the current one and the one
+    before it, which a frame taken before a refresh still reads. unpersist()
+    releases both; engines without a checkpoint release nothing."""
+    for name in ("a", "b"):
+        _modify(tmp_path / f"{name}.tf", 0)
+    base = _persistent_rdds(spark)
+    eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")])
+    assert eng.table("terraform_resource").count() == 2
+    for i in range(1, 6):
+        eng.refresh([_modify(tmp_path / "b.tf", i)])
+        assert len(_persistent_rdds(spark) - base) <= 2
+    before = eng.table("terraform_resource")
+    rows = sorted(map(tuple, before.collect()))
+    eng.refresh([_modify(tmp_path / "a.tf", 9)])
+    assert sorted(map(tuple, before.collect())) == rows
+    assert eng.table("terraform_resource").filter("arguments like '%9%'").count() == 1
+    eng.unpersist()
+    assert _persistent_rdds(spark) - base == set()
+
+    uncached = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")], cache=False)
+    store = str(tmp_path / "store")
+    uncached.save_canonical(store)
+    loaded = TerraformEngine.load_canonical(spark, store)
+    for eng in (uncached, loaded):
+        held = _persistent_rdds(spark)
+        assert eng.table("terraform_resource").count() == 2
+        eng.refresh([_modify(tmp_path / "b.tf", 10)] if eng is uncached else None)
+        eng.unpersist()
+        assert eng.table("terraform_resource").count() == 2
+        assert _persistent_rdds(spark) == held

@@ -10,10 +10,14 @@ files the ``.gitignore`` lets through). Pair ``i`` runs seed ``seed + i``
 on both sides, the base first on even pairs and the change first on odd
 ones, so a box that drifts during the run weighs on both sides alike.
 
-Prints one line per run (its end-to-end metrics, ``failed`` and the
-session and warm-up CPU), then for each end-to-end metric of
-``BENCHMARK.json`` both sides' median and quartiles and how many pairs the
-change won. Run it solo: another process on the box inflates samples.
+Prints one line per run (its end-to-end metrics, ``failed``, the session
+and warm-up CPU, and the timed operations' CPU outside and inside the
+driver JVM's JIT compiler threads, ``ops_cpu`` and ``ops_jit``), then for
+each end-to-end metric of ``BENCHMARK.json`` and each of those CPU figures
+both sides' median and quartiles and how many pairs the change won.
+``op_cpu_ms`` leaves the JIT threads out, so a change that moves compile
+work shows only in ``ops_jit``. Run it solo: another process on the box
+inflates samples.
 """
 
 from __future__ import annotations
@@ -28,6 +32,8 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# CPU-s figures of a run's phases_s, summarized next to the end-to-end metrics
+_PHASES = ("session_cpu", "warmup_cpu", "ops_cpu", "ops_jit")
 
 
 def _git(*args: str, **kw) -> str:
@@ -68,7 +74,7 @@ def _run(copy: str, workload: str, seed: int, seconds: float) -> dict:
     with open(os.path.join(copy, "perfbench", "work", "results", f"{workload}-s{seed}-t0.json")) as f:
         phases = json.load(f)["phases_s"]
     return {"failed": line["failed"], **{k: v["value"] for k, v in line["metrics"].items()},
-            "session_cpu": phases["session_cpu"], "warmup_cpu": phases["warmup_cpu"]}
+            **{k: phases[k] for k in _PHASES}}
 
 
 def _quartiles(values: list[float]) -> tuple[float, float, float]:
@@ -98,7 +104,7 @@ def main(argv=None) -> int:
                 print(f"pair {i} seed {seed} {side:6}", json.dumps(r), flush=True)
 
     names = [(m["name"], m["better"]) for m in spec["end_to_end"]]
-    for name, better in [*names, ("session_cpu", "lower"), ("warmup_cpu", "lower")]:
+    for name, better in [*names, *((p, "lower") for p in _PHASES)]:
         sides = {s: [r[name] for r in runs[s]] for s in runs}
         wins = sum((c < b) if better == "lower" else (c > b)
                    for b, c in zip(sides["base"], sides["change"]))
